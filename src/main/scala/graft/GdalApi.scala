@@ -162,7 +162,9 @@ object GdalWrite {
       scanned = len
     }
     countNewUtf8()
-    val it = df.queryExecution.toRdd.toLocalIterator // InternalRow stream
+    // the scan reuses one row object per partition: copy each row before
+    // a partition is collected, or every feature repeats its last row
+    val it = df.queryExecution.toRdd.map(_.copy()).toLocalIterator
     while (it.hasNext) {
       if (n > 0) sb.write(",")
       sb.write("\n")

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -257,7 +257,8 @@ case class StDistance(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 case class StBuffer(left: Expression, right: Expression)
-  extends BinarySpatial {
+  extends BinarySpatial with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
   protected def fn: String = "buffer"
   override def dataType: DataType = BinaryType
   override def prettyName: String = "st_buffer"
@@ -267,7 +268,8 @@ case class StBuffer(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 case class StSimplify(left: Expression, right: Expression)
-  extends BinarySpatial {
+  extends BinarySpatial with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
   protected def fn: String = "simplify"
   override def dataType: DataType = BinaryType
   override def prettyName: String = "st_simplify"

@@ -12,6 +12,20 @@ object FeatureIterator {
     }
 }
 
+/** Each feature's property (name, type) pairs, in document order — the
+  * schema-inference view of a file — with the same resource hook as
+  * [[FeatureIterator]]. */
+trait TypeIterator extends Iterator[SchemaInference.FeatureTypes] with AutoCloseable
+
+object TypeIterator {
+  def apply(it: Iterator[SchemaInference.FeatureTypes], closer: () => Unit = () => ()): TypeIterator =
+    new TypeIterator {
+      override def hasNext: Boolean = it.hasNext
+      override def next(): SchemaInference.FeatureTypes = it.next()
+      override def close(): Unit = closer()
+    }
+}
+
 /** A contiguous record range of one file — the input-partition unit.
   * `startRecord = 0 && numRecords = -1` means the whole file. Formats
   * that split by byte position (single-file GeoJSON) also carry the
@@ -29,6 +43,16 @@ trait FeatureFormat extends Serializable {
   def extensions: Seq[String]
   /** Open one file and stream its features in document order. */
   def open(path: String, opts: GdalOptions): FeatureIterator
+
+  /** The property types of the features [[open]] yields, in the same
+    * order: what schema inference reads on a schemaless load. A format
+    * whose `open` applies `opts.bbox` must apply it here too. The default
+    * types the values `open` decodes; a format that can tell types without
+    * decoding values or geometry overrides it. */
+  def openTypes(path: String, opts: GdalOptions): TypeIterator = {
+    val it = open(path, opts)
+    TypeIterator(it.map(SchemaInference.typesOf), () => it.close())
+  }
 
   /** Plan record-range splits for one file. Default: the whole file as a
     * single partition. Formats with an index (shapefile .shx) override to
@@ -135,7 +159,7 @@ object FeatureFormat {
     * erroring `maxFeatures` on the raw index, `offset` skip, truncating
     * `limit` (we use rows-after-offset semantics per SURVEY.md §2.3 L2).
     */
-  def window(it: Iterator[RawFeature], opts: GdalOptions): Iterator[RawFeature] = {
+  def window[A](it: Iterator[A], opts: GdalOptions): Iterator[A] = {
     var raw = 0L
     val guarded = it.map { f =>
       opts.maxFeatures.foreach { cap => if (raw >= cap) throw new GraftError.FeatureLimitReached(cap) }

@@ -41,9 +41,18 @@ abstract class FeatureSourceProvider extends TableProvider with DataSourceRegist
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = GdalOptions(options)
     val files = FeatureFormat.expand(pathsOf(options), format)
-    val its = files.map(f => format.open(f, opts))
-    try SchemaInference.infer(its.iterator.flatMap(it => FeatureFormat.window(it, opts)), opts)
-    finally its.foreach(it => try it.close() catch { case _: Throwable => () })
+    // one file open at a time; files past `inferLimit` are never opened
+    var current: TypeIterator = null
+    def closeCurrent(): Unit = if (current != null) {
+      try current.close() catch { case _: Throwable => () }
+      current = null
+    }
+    try SchemaInference.inferTypes(files.iterator.flatMap { f =>
+      closeCurrent()
+      current = format.openTypes(f, opts)
+      FeatureFormat.window(current, opts)
+    }, opts)
+    finally closeCurrent()
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -200,19 +209,22 @@ class FeaturePartitionReader(
   }
   private val windowed = FeatureFormat.window(boxed, opts)
   private val schemaNames = schema.fieldNames.toSet
+  // every prop the filters name, read in one walk over a row's props
+  private val filterProps = new FirstValues(filters.toSeq.flatMap(_.references).map(FilterEval.unquote))
   private val filtered =
     if (filters.isEmpty) windowed
     else windowed.filter { f =>
+      val firsts = filterProps.read(f.props)
       def get(name: String): Option[Any] =
         if (opts.fidColumnName.contains(name)) Some(f.fid)
         // the geometry column lives on the feature, not in props — without
         // this arm it resolved through the absent-field rule to Some(null)
         // and IsNotNull(geometry) pruned EVERY row
         else if (name == opts.geometryColumnName) Some(f.geomWkb)
-        else f.props.collectFirst { case (n, v) if n == name => v } match {
-          case some @ Some(_) => some
-          case None if schemaNames.contains(name) => Some(null) // absent field = null
-          case None => None // unknown column: keep row, residual decides
+        else firsts(filterProps.slotOf(name)) match {
+          case FirstValues.Absent if schemaNames.contains(name) => Some(null) // absent field = null
+          case FirstValues.Absent => None // unknown column: keep row, residual decides
+          case v => Some(v)
         }
       filters.forall(FilterEval.eval(_, get))
     }

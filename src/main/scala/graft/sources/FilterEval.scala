@@ -37,7 +37,7 @@ object FilterEval {
     }
   }
 
-  private def unquote(name: String): String =
+  private[sources] def unquote(name: String): String =
     if (name.length >= 2 && name.head == '`' && name.last == '`')
       name.substring(1, name.length - 1).replace("``", "`")
     else name

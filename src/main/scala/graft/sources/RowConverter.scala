@@ -30,12 +30,15 @@ final class RowConverter(
       (2, prop, f.dataType)
     }
   }
+  private val props = new FirstValues(fields.toSeq.collect { case (2, prop, _) => prop })
+  private val slots = fields.map { case (tag, name, _) => if (tag == 2) props.slotOf(name) else -1 }
 
   def convert(f: RawFeature): InternalRow = {
+    val firsts = props.read(f.props)
     val values = new Array[Any](fields.length)
     var i = 0
     while (i < fields.length) {
-      val (tag, name, dt) = fields(i)
+      val (tag, _, dt) = fields(i)
       values(i) = tag match {
         case 0 => f.fid
         case 1 =>
@@ -45,9 +48,10 @@ final class RowConverter(
             case "wkt" => UTF8String.fromString(GeomCodec.wkbToWkt(f.geomWkb))
             case "geojson" => UTF8String.fromString(GeomCodec.wkbToGeoJson(f.geomWkb))
           }
-        case _ =>
-          val v = f.props.collectFirst { case (n, value) if n == name => value }.orNull
-          toCatalyst(v, dt)
+        case _ => firsts(slots(i)) match {
+          case FirstValues.Absent => null
+          case v => toCatalyst(v, dt)
+        }
       }
       i += 1
     }
@@ -72,4 +76,31 @@ final class RowConverter(
     case (other, StringType) => UTF8String.fromString(other.toString)
     case _ => null // type clash beyond widening → null (nullable column)
   }
+}
+
+/** The value of each name's first occurrence among a feature's props,
+  * found in one walk over the props — linear in row width however many
+  * names are asked for. A name the feature lacks reads as [[FirstValues.Absent]]. */
+final class FirstValues(names: Seq[String]) extends Serializable {
+  private val slot: Map[String, Int] = names.distinct.zipWithIndex.toMap
+
+  /** The index `read` fills for `name`; -1 for a name not asked for. */
+  def slotOf(name: String): Int = slot.getOrElse(name, -1)
+
+  def read(props: IndexedSeq[(String, Any)]): Array[Any] = {
+    val out = new Array[Any](slot.size)
+    java.util.Arrays.fill(out.asInstanceOf[Array[AnyRef]], FirstValues.Absent)
+    var left = slot.size
+    val it = props.iterator
+    while (left > 0 && it.hasNext) {
+      val (name, v) = it.next()
+      val i = slotOf(name)
+      if (i >= 0 && (out(i).asInstanceOf[AnyRef] eq FirstValues.Absent)) { out(i) = v; left -= 1 }
+    }
+    out
+  }
+}
+
+object FirstValues {
+  case object Absent
 }

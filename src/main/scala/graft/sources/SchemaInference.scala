@@ -32,7 +32,11 @@ final case class RawFeature(
   */
 object SchemaInference {
 
-  private def typeOf(v: Any): DataType = v match {
+  /** One feature's property (name, type) pairs in document order — all
+    * inference needs of a feature. A null value types as `NullType`. */
+  type FeatureTypes = IndexedSeq[(String, DataType)]
+
+  def typeOf(v: Any): DataType = v match {
     case null => NullType
     case _: Int => IntegerType
     case _: Long => LongType
@@ -48,6 +52,8 @@ object SchemaInference {
     case _ => StringType
   }
 
+  def typesOf(f: RawFeature): FeatureTypes = f.props.map { case (n, v) => (n, typeOf(v)) }
+
   private def widen(a: DataType, b: DataType): DataType = (a, b) match {
     case (x, y) if x == y => x
     case (NullType, y) => y
@@ -59,26 +65,58 @@ object SchemaInference {
     case _ => StringType
   }
 
-  def infer(features: Iterator[RawFeature], opts: GdalOptions): StructType = {
+  /** Feature types for a format whose columns each carry one type in the
+    * file header (DBF, FlatGeobuf). A header-typed column cannot widen, so
+    * its cells are tested only until the first non-null one settles it;
+    * from then on every feature reports it with its header type, which
+    * leaves the inferred schema unchanged. The first `offset` features
+    * of a file, which the window drops unread, must not go through
+    * [[next]]: they settle nothing. */
+  final class HeaderTypes(columns: IndexedSeq[(String, DataType)]) {
+    private val nulls = columns.map { case (n, _) => (n, NullType) }
+    private val settled = new Array[Boolean](columns.length)
+    private var unsettled = columns.length
+
+    /** One feature that has a value slot for every column; `present(c)`
+      * is asked only of columns not yet settled. */
+    def next(present: Int => Boolean): FeatureTypes =
+      if (unsettled == 0) columns
+      else {
+        val out = new Array[(String, DataType)](columns.length)
+        var c = 0
+        while (c < columns.length) {
+          if (!settled(c) && present(c)) { settled(c) = true; unsettled -= 1 }
+          out(c) = if (settled(c)) columns(c) else nulls(c)
+          c += 1
+        }
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+      }
+  }
+
+  def infer(features: Iterator[RawFeature], opts: GdalOptions): StructType =
+    inferTypes(features.map(typesOf), opts)
+
+  def inferTypes(features: Iterator[FeatureTypes], opts: GdalOptions): StructType = {
     val order = mutable.ArrayBuffer[String]()
-    val types = mutable.HashMap[String, DataType]()
+    val types = new java.util.HashMap[String, DataType]()
     var n = 0L
-    while (features.hasNext && n < opts.inferLimit) {
-      val f = features.next()
-      for ((name, value) <- f.props) {
-        if (!types.contains(name)) order += name
-        val t = typeOf(value)
-        types(name) = types.get(name).map(widen(_, t)).getOrElse(t)
+    while (n < opts.inferLimit && features.hasNext) {
+      val it = features.next().iterator
+      while (it.hasNext) {
+        val (name, t) = it.next()
+        val seen = types.get(name)
+        if (seen == null) { order += name; types.put(name, t) }
+        else if (seen != t) types.put(name, widen(seen, t))
       }
       n += 1
     }
     val geomName = opts.geometryColumnName
     val reserved = Set(geomName) ++ opts.fidColumnName
     val dataFields = order.toSeq
-      .filter(name => types(name) != NullType) // rule 4: all-null dropped
+      .filter(name => types.get(name) != NullType) // rule 4: all-null dropped
       .map { name =>
         val out = if (reserved.contains(name)) s"${name}_original" else name // rule 5
-        StructField(out, types(name), nullable = true)
+        StructField(out, types.get(name), nullable = true)
       }
     val geomType = if (opts.geometryFormat == "wkb") BinaryType else StringType
     val fidField = opts.fidColumnName.map(StructField(_, LongType, nullable = true)).toSeq

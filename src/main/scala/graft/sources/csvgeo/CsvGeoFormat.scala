@@ -1,6 +1,9 @@
 package graft.sources.csvgeo
 
+import scala.collection.immutable.ArraySeq
 import scala.io.Source
+
+import org.apache.spark.sql.types.{DataType, NullType, StringType}
 
 import graft.geom.GeomCodec
 import graft.sources._
@@ -48,6 +51,36 @@ class CsvGeoFormat extends FeatureFormat {
       RawFeature(idx, geom, props)
     }
     FeatureIterator(it, () => src.close())
+  }
+
+  /** Types from the cells' emptiness alone: every filled cell is a
+    * string, so no WKT or lon/lat is decoded.
+    * With `autodetectTypes` the cells are parsed and typed by [[detect]]. */
+  override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
+    val src = Source.fromFile(path, "UTF-8")
+    val lines = src.getLines()
+    if (!lines.hasNext) { src.close(); return TypeIterator(Iterator.empty) }
+    val header = parseLine(lines.next())
+    val geomIdx = findIdx(header, Seq(opts.geometryColumnName, "wkt*", "*_wkt"))
+    val cols = header.indices.filter(i => !geomIdx.contains(i)).toArray
+    val strings = cols.map(i => (header(i), StringType))
+    val nulls = cols.map(i => (header(i), NullType))
+    val it = lines.filter(_.nonEmpty).map { line =>
+      val cells = parseLine(line)
+      val out = new Array[(String, DataType)](cols.length)
+      var k = 0
+      while (k < cols.length) {
+        val i = cols(k)
+        val raw = if (i < cells.length) cells(i) else ""
+        out(k) =
+          if (raw.isEmpty) nulls(k)
+          else if (opts.autodetectTypes) (header(i), SchemaInference.typeOf(detect(raw)))
+          else strings(k)
+        k += 1
+      }
+      ArraySeq.unsafeWrapArray(out): SchemaInference.FeatureTypes
+    }
+    TypeIterator(it, () => src.close())
   }
 
   private def detect(s: String): Any =

@@ -340,6 +340,41 @@ object FgbCodec {
     out
   }
 
+  /** The Spark type of the values [[unpackProperties]] decodes for a
+    * column type; NullType for a type it cannot decode. */
+  def sparkType(colType: Int): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    colType match {
+      case CtBool => BooleanType
+      case CtInt => IntegerType
+      case CtLong => LongType
+      case CtDouble => DoubleType
+      case CtString => StringType
+      case _ => NullType
+    }
+  }
+
+  /** Which columns packed properties hold a value for — the walk of
+    * [[unpackProperties]] that skips each value instead of decoding it. */
+  def presentColumns(columns: Seq[FgbColumn], bytes: Array[Byte],
+      off: Int, len: Int): Array[Boolean] = {
+    val out = new Array[Boolean](columns.length)
+    val bb = ByteBuffer.wrap(bytes, off, len).order(ByteOrder.LITTLE_ENDIAN)
+    while (bb.remaining() >= 2) {
+      val i = bb.getShort() & 0xFFFF
+      val skip = columns(i).colType match {
+        case CtBool => 1
+        case CtInt => 4
+        case CtLong | CtDouble => 8
+        case CtString => bb.getInt()
+        case other => throw new IllegalStateException(s"unsupported FGB column type $other")
+      }
+      bb.position(bb.position() + skip)
+      out(i) = true
+    }
+    out
+  }
+
   // -------------------------------------------------------- header write
 
   def writeHeader(name: String, geometryType: Int, columns: Seq[FgbColumn],

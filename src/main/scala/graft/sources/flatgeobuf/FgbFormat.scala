@@ -97,6 +97,49 @@ class FgbFormat extends FeatureFormat {
     featureIterator(in, header, firstFid = 0L, maxCount = -1L, bbox = opts.bbox)
   }
 
+  /** Types from the header columns plus a presence-only walk of each
+    * feature's property buffer, until every column is settled (see
+    * [[SchemaInference.HeaderTypes]]); geometry is never decoded. With a
+    * bbox the packed R-tree picks the features, as it does for the scan;
+    * a file without an index falls back to [[open]]'s envelope test. */
+  override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
+    val (header, featuresStart) = headerInfo(path)
+    val runs: Seq[(Long, Long)] = opts.bbox match {
+      case None => Seq((featuresStart, -1L))
+      case Some(_) => planSplits(path, opts) match {
+        case Seq(SplitSpec(_, 0L, -1L, _, _)) => return super.openTypes(path, opts)
+        case splits => splits.map(sp => (sp.byteStart, sp.numRecords))
+      }
+    }
+    val types = new SchemaInference.HeaderTypes(
+      header.columns.map(c => (c.name, FgbCodec.sparkType(c.colType))).toIndexedSeq)
+    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path), 1 << 16))
+    var pos = 0L
+    var unread = opts.offset // the window drops these before inference reads them
+    def next(): SchemaInference.FeatureTypes = {
+      val bytes = try readPrefixed(in) catch { case _: EOFException => null }
+      if (bytes == null) null
+      else {
+        pos += 4L + bytes.length
+        if (unread > 0) { unread -= 1; IndexedSeq.empty }
+        else FgbCodec.rootTable(bytes).vector(1) match {
+          case null => IndexedSeq.empty
+          case (start, len) =>
+            lazy val present = FgbCodec.presentColumns(header.columns, bytes, start, len)
+            types.next(present(_))
+        }
+      }
+    }
+    val it = runs.iterator.flatMap { case (start, count) =>
+      var toSkip = start - pos
+      while (toSkip > 0) toSkip -= in.skip(toSkip)
+      pos = start
+      val run = Iterator.continually(next()).takeWhile(_ != null)
+      if (count < 0) run else run.take(count.toInt)
+    }
+    TypeIterator(it, () => in.close())
+  }
+
   /** Decode size-prefixed features from the current stream position.
     * `bbox` applies GDAL spatial-filter semantics: non-intersecting (and
     * geometry-less) features are skipped but still advance the FID. */

@@ -75,6 +75,17 @@ class GeoJsonFormat extends FeatureFormat {
     featureIterator(parser, seekFeatures(parser), 0L)
   }
 
+  /** Types from a token walk (see [[GeoJsonTypes]]): no trees, no
+    * geometry decode. `open` applies no bbox, so neither does this. */
+  override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
+    val parser = GeoJsonTypes.factory.createParser(new File(path))
+    val inFeatures = seekFeatures(parser)
+    val it = Iterator.continually(
+      if (inFeatures && parser.nextToken() == JsonToken.START_OBJECT) GeoJsonTypes.feature(parser)
+      else null).takeWhile(_ != null)
+    TypeIterator(it, () => parser.close())
+  }
+
   /** One big FeatureCollection file no longer serializes the whole scan:
     * the driver token-scans the file once (skipChildren — no trees),
     * records each feature's byte span, and groups features into

@@ -3,6 +3,7 @@ package graft.sources.geojson
 import java.io.{BufferedReader, FileInputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.core.JsonToken
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -19,18 +20,38 @@ class GeoJsonSeqFormat extends FeatureFormat {
 
   override def open(path: String, opts: GdalOptions): FeatureIterator = {
     val mapper = new ObjectMapper
-    val in = new BufferedReader(
-      new InputStreamReader(new FileInputStream(path), StandardCharsets.UTF_8))
+    val in = reader(path)
     var idx = -1L
-    val it = Iterator.continually(in.readLine()).takeWhile(_ != null)
-      .map(_.replace("", "").trim) // RFC 8142 record separator
-      .filter(_.nonEmpty)
-      .map { line =>
-        idx += 1
-        GeoJsonSeqFormat.parseFeatureLine(mapper, line, idx)
-      }
+    val it = lines(in).map { line =>
+      idx += 1
+      GeoJsonSeqFormat.parseFeatureLine(mapper, line, idx)
+    }
     FeatureIterator(it, () => in.close())
   }
+
+  /** Types from a token walk of each line (see [[GeoJsonTypes]]): no
+    * trees, no geometry decode. */
+  override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
+    val in = reader(path)
+    val it = lines(in).map { line =>
+      val p = GeoJsonTypes.factory.createParser(line)
+      try {
+        if (p.nextToken() != JsonToken.START_OBJECT)
+          throw new IllegalArgumentException(s"$path: not a GeoJSON Feature object: $line")
+        GeoJsonTypes.feature(p)
+      } finally p.close()
+    }
+    TypeIterator(it, () => in.close())
+  }
+
+  private def reader(path: String): BufferedReader = new BufferedReader(
+    new InputStreamReader(new FileInputStream(path), StandardCharsets.UTF_8))
+
+  /** The non-blank lines, one feature each. */
+  private def lines(in: BufferedReader): Iterator[String] =
+    Iterator.continually(in.readLine()).takeWhile(_ != null)
+      .map(_.replace("\u001e", "").trim) // RFC 8142 record separator
+      .filter(_.nonEmpty)
 }
 
 object GeoJsonSeqFormat {

@@ -81,6 +81,32 @@ class ShapefileFormat extends FeatureFormat {
     FeatureIterator(it)
   }
 
+  /** Types from the DBF alone: header types, with each column's cells
+    * parsed only until its first non-null one (see
+    * [[SchemaInference.HeaderTypes]]). The features are the .shp records,
+    * as in [[open]]: walked for their record boxes, never parsed. */
+  override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
+    val shpPath =
+      if (path.toLowerCase.endsWith(".zip")) unzipToTemp(path)
+      else path
+    val dbfPath = shpPath.replaceAll("\\.shp$", ".dbf")
+    if (!new File(dbfPath).exists) return super.openTypes(shpPath, opts)
+
+    val shp = Shp.rawRecords(shpPath)
+    val dbf = new Dbf.Reader(dbfPath, 0L, -1L)
+    val types = new SchemaInference.HeaderTypes(
+      dbf.fields.map(f => (f.name, Dbf.sparkType(f))))
+    var unread = opts.offset // the window drops these before inference reads them
+    val it = shp.flatMap { case (_, content) =>
+      val rec = if (dbf.hasNext) dbf.next() else null
+      if (opts.bbox.exists(q => !Shp.boxIntersects(content, q))) None
+      else if (unread > 0) { unread -= 1; Some(IndexedSeq.empty) }
+      else if (rec == null) Some(IndexedSeq.empty)
+      else Some(types.next(c => !dbf.deleted(rec) && dbf.cell(rec, c) != null))
+    }
+    TypeIterator(it, () => { dbf.close(); shp.close() })
+  }
+
   /** Zipped shapefile: extract members to a temp dir, return the .shp. */
   private def unzipToTemp(zipPath: String): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_shp_").toFile

@@ -20,12 +20,12 @@ object Shp {
     * little-endian-ordered at position 0, ready for [[parseShape]] or the
     * positionless [[boxIntersects]] peek. */
   def rawRecords(path: String, startByte: Long = 100L,
-      maxRecords: Long = -1L): Iterator[(Int, ByteBuffer)] = {
+      maxRecords: Long = -1L): Iterator[(Int, ByteBuffer)] with AutoCloseable = {
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path)))
     var toSkip = startByte // header is 100 bytes; splits pass .shx offsets
     while (toSkip > 0) toSkip -= in.skip(toSkip)
     var remaining = maxRecords
-    new Iterator[(Int, ByteBuffer)] {
+    new Iterator[(Int, ByteBuffer)] with AutoCloseable {
       private var nextRec: (Int, ByteBuffer) = advance()
 
       private def advance(): (Int, ByteBuffer) =
@@ -45,6 +45,7 @@ object Shp {
       override def next(): (Int, ByteBuffer) = {
         val r = nextRec; nextRec = advance(); r
       }
+      override def close(): Unit = in.close()
     }
   }
 

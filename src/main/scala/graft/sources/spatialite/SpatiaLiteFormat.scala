@@ -1,5 +1,9 @@
 package graft.sources.spatialite
 
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.types.{DataType, LongType, NullType}
+
 import graft.sources._
 
 /** Shared machinery for SQLite-container vector formats (SpatiaLite,
@@ -15,7 +19,14 @@ import graft.sources._
 abstract class SqliteVectorFormat extends FeatureFormat {
 
   protected case class Layer(table: String, geomCol: Option[String], rootPage: Int,
-      cols: Seq[(String, Boolean)])
+      cols: Seq[(String, Boolean)]) {
+    /** Position of the geometry column among `cols`. */
+    def geomIdx: Option[Int] = geomCol.flatMap(g =>
+      cols.indexWhere(_._1.equalsIgnoreCase(g)) match {
+        case -1 => None
+        case i => Some(i)
+      })
+  }
 
   /** The container's layer list, in deterministic order. */
   protected def discoverLayers(f: SqliteFile): Seq[Layer]
@@ -40,11 +51,7 @@ abstract class SqliteVectorFormat extends FeatureFormat {
 
   private def rowsOf(f: SqliteFile, layer: Layer,
       roots: Seq[Int]): Iterator[RawFeature] = {
-    val geomIdx = layer.geomCol.flatMap(g =>
-      layer.cols.indexWhere(_._1.equalsIgnoreCase(g)) match {
-        case -1 => None
-        case i => Some(i)
-      })
+    val geomIdx = layer.geomIdx
     roots.iterator.flatMap(f.scanCells).map { case (rowid, payload) =>
       val vals = f.decodeRecord(payload)
       val props = layer.cols.indices.flatMap { i =>
@@ -73,6 +80,30 @@ abstract class SqliteVectorFormat extends FeatureFormat {
     val f = new SqliteFile(path)
     val layer = selectLayer(f, path, opts)
     FeatureIterator(rowsOf(f, layer, Seq(layer.rootPage)), () => f.close())
+  }
+
+  /** Types from the record headers' serial types alone — the storage
+    * class of each cell — with no text or blob decoded. */
+  override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
+    val f = new SqliteFile(path)
+    val layer = selectLayer(f, path, opts)
+    val cols = layer.cols.toIndexedSeq
+    val props = cols.indices.filterNot(layer.geomIdx.contains).toArray
+    val it = f.scanSerialTypes(layer.rootPage).map { serials =>
+      val out = new Array[(String, DataType)](props.length)
+      var k = 0
+      while (k < props.length) {
+        val i = props(k)
+        val (name, isIpk) = cols(i)
+        out(k) = (name,
+          if (isIpk) LongType
+          else if (i < serials.length) SqliteFile.valueType(serials(i))
+          else NullType)
+        k += 1
+      }
+      ArraySeq.unsafeWrapArray(out): SchemaInference.FeatureTypes
+    }
+    TypeIterator(it, () => f.close())
   }
 
   /** One split per top-level b-tree child of the layer's root (leaf root

@@ -83,10 +83,18 @@ final class SqliteFile(path: String) extends AutoCloseable {
 
   /** Stream (rowid, payload) of every leaf cell under `root`, in key
     * order. Payloads spanning overflow chains are reassembled. */
-  def scanCells(root: Int): Iterator[(Long, Array[Byte])] = new Iterator[(Long, Array[Byte])] {
+  def scanCells(root: Int): Iterator[(Long, Array[Byte])] = scanLeaves(root)(readLeafCell)
+
+  /** Stream the serial types of every leaf cell's record under `root`, in
+    * key order: the record header alone, read from the cell's local
+    * payload, so no text or blob is decoded and overflow pages are read
+    * only when the header itself spills onto them. */
+  def scanSerialTypes(root: Int): Iterator[Array[Long]] = scanLeaves(root)(readLeafSerialTypes)
+
+  private def scanLeaves[A](root: Int)(readCell: (Array[Byte], Int) => A): Iterator[A] = new Iterator[A] {
     // DFS over page numbers; leaves yield their cells in order.
     private var stack = List(root)
-    private var current: Iterator[(Long, Array[Byte])] = Iterator.empty
+    private var current: Iterator[A] = Iterator.empty
 
     private def advance(): Unit = {
       while (!current.hasNext && stack.nonEmpty) {
@@ -100,7 +108,7 @@ final class SqliteFile(path: String) extends AutoCloseable {
             val nCells = ((p(base + 3) & 0xFF) << 8) | (p(base + 4) & 0xFF)
             current = (0 until nCells).iterator.map { i =>
               val cp = ((p(base + 8 + 2 * i) & 0xFF) << 8) | (p(base + 8 + 2 * i + 1) & 0xFF)
-              readLeafCell(p, cp)
+              readCell(p, cp)
             }
           case t => throw new IllegalStateException(
             s"$path page $pageNo: unexpected b-tree page type 0x${t.toHexString}")
@@ -109,7 +117,7 @@ final class SqliteFile(path: String) extends AutoCloseable {
     }
 
     override def hasNext: Boolean = { advance(); current.hasNext }
-    override def next(): (Long, Array[Byte]) = { advance(); current.next() }
+    override def next(): A = { advance(); current.next() }
   }
 
   /** Decode one table-leaf cell (payload length, rowid, payload with
@@ -120,15 +128,12 @@ final class SqliteFile(path: String) extends AutoCloseable {
     val (rowid, n2) = varint(p, cellOff + n1)
     val bodyOff = cellOff + n1 + n2
     val u = usable
-    val maxLocal = u - 35
-    if (payloadLen <= maxLocal) {
+    val local = localPayload(payloadLen)
+    if (local == payloadLen) {
       val out = new Array[Byte](payloadLen)
       System.arraycopy(p, bodyOff, out, 0, payloadLen)
       (rowid, out)
     } else {
-      val minLocal = (u - 12) * 32 / 255 - 23
-      val k = minLocal + (payloadLen - minLocal) % (u - 4)
-      val local = if (k <= maxLocal) k else minLocal
       val out = new Array[Byte](payloadLen)
       System.arraycopy(p, bodyOff, out, 0, local)
       var got = local
@@ -145,25 +150,53 @@ final class SqliteFile(path: String) extends AutoCloseable {
     }
   }
 
+  /** Bytes of a table-leaf payload stored on the leaf page itself (the
+    * documented local-payload formula); the rest sits on overflow pages. */
+  private def localPayload(payloadLen: Int): Int = {
+    val u = usable
+    val maxLocal = u - 35
+    if (payloadLen <= maxLocal) payloadLen
+    else {
+      val minLocal = (u - 12) * 32 / 255 - 23
+      val k = minLocal + (payloadLen - minLocal) % (u - 4)
+      if (k <= maxLocal) k else minLocal
+    }
+  }
+
+  private def readLeafSerialTypes(p: Array[Byte], cellOff: Int): Array[Long] = {
+    val (payloadLen, n1) = varint(p, cellOff)
+    val (_, n2) = varint(p, cellOff + n1)
+    val bodyOff = cellOff + n1 + n2
+    val (headerLen, _) = varint(p, bodyOff)
+    if (headerLen <= localPayload(payloadLen.toInt)) serialTypes(p, bodyOff)
+    else serialTypes(readLeafCell(p, cellOff)._2, 0)
+  }
+
   // ------------------------------------------------------- record codec
+
+  /** The serial types of the record header at `off`. */
+  private def serialTypes(b: Array[Byte], off: Int): Array[Long] = {
+    val (headerLen, n0) = varint(b, off)
+    val types = scala.collection.mutable.ArrayBuilder.make[Long]
+    var at = off + n0
+    while (at < off + headerLen) {
+      val (t, n) = varint(b, at)
+      types += t
+      at += n
+    }
+    types.result()
+  }
 
   /** Decode a record payload into column values: null, Long, Double,
     * String, or Array[Byte]. */
   def decodeRecord(payload: Array[Byte]): IndexedSeq[Any] = {
-    val (headerLen, n0) = varint(payload, 0)
-    val types = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var off = n0
-    while (off < headerLen) {
-      val (t, n) = varint(payload, off)
-      types += t
-      off += n
-    }
-    var body = headerLen.toInt
-    types.map { t =>
+    val types = serialTypes(payload, 0)
+    var body = varint(payload, 0)._1.toInt
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(types).map { t =>
       val (value, size) = decodeValue(payload, body, t)
       body += size
       value
-    }.toIndexedSeq
+    }
   }
 
   private def decodeValue(b: Array[Byte], off: Int, serial: Long): (Any, Int) = serial match {
@@ -208,6 +241,19 @@ final class SqliteFile(path: String) extends AutoCloseable {
 }
 
 object SqliteFile {
+  /** The Spark type of the value [[SqliteFile.decodeRecord]] gives for a serial type. */
+  def valueType(serial: Long): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    serial match {
+      case 0 => NullType
+      case 7 => DoubleType
+      case t if t >= 1 && t <= 9 => LongType
+      case t if t >= 12 && t % 2 == 0 => BinaryType
+      case t if t >= 13 => StringType
+      case t => throw new IllegalStateException(s"reserved serial type $t")
+    }
+  }
+
   /** Column names of a CREATE TABLE statement, in declaration order, with
     * a flag for INTEGER PRIMARY KEY (whose values live in the rowid). A
     * pragmatic parser: top-level comma split inside the outer parens,

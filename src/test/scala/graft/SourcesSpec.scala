@@ -265,6 +265,13 @@ class SourcesSpec extends AnyFunSuite {
     assert(round.schema.fieldNames.toSeq === Seq("name", "iso_3166_2", "geometry"))
   }
 
+  test("geojson toBytes writes every row of every partition once") {
+    val pts = spark.range(0, 12, 1, 3).selectExpr("id AS n", "st_point(CAST(id AS DOUBLE), 1.0D) AS geometry")
+    assert(pts.rdd.getNumPartitions === 3)
+    val back = GdalRead.fromBytes(spark, GdalWrite.toBytes(pts, format = "geojson"), Some("pts.geojson"))
+    assert(back.select("n").collect().map(_.getInt(0)).sorted.toSeq === (0 until 12))
+  }
+
   test("toBytes gates driver memory on the plan-stats estimate before any compute") {
     // a fact-table-sized plan must fail LOUDLY at plan time, not OOM the
     // driver: spark.range(2^28) estimates > 1 GiB without executing, and

@@ -31,6 +31,26 @@ class SpatialFnsSpec extends AnyFunSuite {
     assert(math.abs(rows.getDouble(10) - math.Pi) < 0.05)
   }
 
+  test("st_buffer and st_simplify cast decimal and int literals to double") {
+    val consts = spark.sql(
+      """SELECT
+        | st_area(st_buffer(st_point(0.0D, 0.0D), 0.05)) AS dec_buf,
+        | st_area(st_buffer(st_point(0.0D, 0.0D), 1)) AS int_buf,
+        | st_npoints(st_simplify(st_geomfromwkt('LINESTRING (0 0, 1 0.01, 2 0)'), 0.1)) AS dec_simp,
+        | st_npoints(st_simplify(st_geomfromwkt('LINESTRING (0 0, 1 0.01, 2 0)'), 1)) AS int_simp
+        |""".stripMargin).head
+    assert(math.abs(consts.getDouble(0) - math.Pi * 0.0025) < 0.0001)
+    assert(math.abs(consts.getDouble(1) - math.Pi) < 0.05)
+    assert(consts.getInt(2) === 2 && consts.getInt(3) === 2)
+    // the same calls over a column, through generated code
+    val perRow = spark.range(3).selectExpr(
+      "st_area(st_buffer(st_point(CAST(id AS DOUBLE), 0.0D), 0.05)) AS a",
+      "st_npoints(st_simplify(st_geomfromwkt('LINESTRING (0 0, 1 0.01, 2 0)'), id + 1)) AS n")
+      .collect()
+    assert(perRow.forall(r => math.abs(r.getDouble(0) - math.Pi * 0.0025) < 0.0001))
+    assert(perRow.forall(_.getInt(1) === 2))
+  }
+
   test("spatial join: states containing city points") {
     val states = spark.read.format("geojson")
       .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
