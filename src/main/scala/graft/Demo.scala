@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** End-to-end demo of the GDAL-parity surface: the reference README's
   * examples (read, SQL filter, geometry projections, bytes round-trip)
   * re-expressed against this engine. Run:
-  * `sbt "runMain graft.Demo /root/reference/test_data"` */
+  * `sbt "runMain graft.Demo [fixtureDir]"` (default: the committed
+  * fixtures, [[Fixtures.dir]]) */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val fixtures = args.headOption.getOrElse("/root/reference/test_data")
+    val fixtures = args.headOption.getOrElse(Fixtures.dir)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

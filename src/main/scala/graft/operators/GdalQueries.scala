@@ -5,18 +5,20 @@ import graft.functions.GraftFunctions
 import Util.Q
 
 /** The GDAL-parity source surface as driver-visible query entries (S1-S6,
-  * P2, §2.7 of SURVEY.md). These read the reference's own fixtures through
-  * our DSv2 sources and geometry expressions. No DuckDB oracle exists for
-  * them (DuckDB here has no spatial/GDAL support), so they take the
-  * rows-only check; their value-level correctness is asserted in
-  * SourcesSpec/ArrowMultimodalSpec. */
+  * P2, §2.7 of SURVEY.md). These read the committed GDAL fixtures
+  * ([[graft.Fixtures]]; FIXTURES.md §A) through our DSv2 sources and
+  * geometry expressions. DuckDB here has no spatial/GDAL support, so each
+  * entry's oracle is DuckDB re-reading the same fixture or written files
+  * (read_json/read_csv/read_parquet), or a golden CSV from an independent
+  * Python parse of the fixture (tools/make_golden_*.py); value-level
+  * assertions also live in SourcesSpec/ArrowMultimodalSpec. */
 object GdalQueries {
-  private val fixtures = "/root/reference/test_data"
+  private val fixtures = graft.Fixtures.dir
   // declared before the oracle map that interpolates them (object init order)
-  private val golden = "/root/repo/src/test/resources/golden/stations.csv"
-  private val goldenStates = "/root/repo/src/test/resources/golden/us_states_geom.csv"
-  private val goldenGridJoin = "/root/repo/src/test/resources/golden/us_states_gridjoin.csv"
-  private val goldenComuni = "/root/repo/src/test/resources/golden/comuni.csv"
+  private val golden = s"${graft.Fixtures.golden}/stations.csv"
+  private val goldenStates = s"${graft.Fixtures.golden}/us_states_geom.csv"
+  private val goldenGridJoin = s"${graft.Fixtures.golden}/us_states_gridjoin.csv"
+  private val goldenComuni = s"${graft.Fixtures.golden}/comuni.csv"
 
   /** Deterministic GML twin of the stations shapefile, written once per
     * JVM (so the `gdal_read_gml` entry times only the StAX read) through
@@ -151,7 +153,7 @@ object GdalQueries {
         .orderBy(col("Country"))
     }),
 
-    // Cross-format conversion: the reference's own shapefile fixture
+    // Cross-format conversion: the stations shapefile fixture
     // written as FlatGeobuf through our writer, read back through our
     // reader — pins both halves of the format every round.
     // Spatial-filter pushdown: st_intersects_bbox over an indexed
@@ -343,7 +345,7 @@ object GdalQueries {
     }))
 
   /** DuckDB oracles for the source entries whose outputs DuckDB can
-    * reproduce WITHOUT spatial support: it re-reads the same reference
+    * reproduce WITHOUT spatial support: it re-reads the same committed
     * fixture files through read_json/read_csv, so the whole DSv2 read
     * path (schema inference, property conversion, null handling) is
     * hash-checked, not just row-counted. */
@@ -366,21 +368,21 @@ object GdalQueries {
         |ORDER BY name, wkb_hex""".stripMargin,
 
     "gdal_read_geojson_attrs" ->
-      """SELECT f->>'$.properties.name' AS name,
-        |       f->>'$.properties.iso_3166_2' AS iso_3166_2,
-        |       f->>'$.properties.postal' AS postal
-        |FROM (SELECT unnest(features) AS f
-        |      FROM read_json('/root/reference/test_data/us_states.feature_collection.implicit_4326.json',
-        |                     columns={'features':'JSON[]'}))
-        |ORDER BY name""".stripMargin,
+      s"""SELECT f->>'$$.properties.name' AS name,
+         |       f->>'$$.properties.iso_3166_2' AS iso_3166_2,
+         |       f->>'$$.properties.postal' AS postal
+         |FROM (SELECT unnest(features) AS f
+         |      FROM read_json('$fixtures/us_states.feature_collection.implicit_4326.json',
+         |                     columns={'features':'JSON[]'}))
+         |ORDER BY name""".stripMargin,
 
     // The geometry column round-trips the CSV lon/lat through WKB and
     // back out via st_x/st_y — IEEE doubles are exact, so DuckDB's
     // direct CSV parse must agree bit-for-bit.
     "gdal_read_csvgeo" ->
-      """SELECT Country, CAST(Longitude AS DOUBLE) AS lon, CAST(Latitude AS DOUBLE) AS lat
-        |FROM read_csv('/root/reference/test_data/lat_lon_countries.csv', header=true)
-        |ORDER BY Country""".stripMargin,
+      s"""SELECT Country, CAST(Longitude AS DOUBLE) AS lon, CAST(Latitude AS DOUBLE) AS lat
+         |FROM read_csv('$fixtures/lat_lon_countries.csv', header=true)
+         |ORDER BY Country""".stripMargin,
 
     // webmercator twin: the identical λ·(π/180)·R and ln tan(φ·π/360 +
     // π/4)·R chains with the SAME Scala-printed double constants.
@@ -390,7 +392,7 @@ object GdalQueries {
          |  ROUND(CAST(Longitude AS DOUBLE) * ${math.Pi / 180.0} * 6378137.0, 3) + 0.0 AS x_3857,
          |  ROUND(ln(tan(CAST(Latitude AS DOUBLE) * ${math.Pi / 360.0} +
          |    ${math.Pi / 4.0})) * 6378137.0, 3) + 0.0 AS y_3857
-         |FROM read_csv('/root/reference/test_data/lat_lon_countries.csv', header=true)
+         |FROM read_csv('$fixtures/lat_lon_countries.csv', header=true)
          |WHERE abs(CAST(Latitude AS DOUBLE)) < 89.9999
          |ORDER BY Country""".stripMargin,
 

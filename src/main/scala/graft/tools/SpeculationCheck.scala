@@ -44,7 +44,7 @@ object SpeculationCheck {
     })
 
     val src = spark.read.format("geojson")
-      .load("/root/reference/test_data/us_states.feature_collection.implicit_4326.json")
+      .load(s"${graft.Fixtures.dir}/us_states.feature_collection.implicit_4326.json")
     val schema = src.schema
     val expected = src.selectExpr("NAME").collect().map(_.getString(0)).sorted
     // 8 partitions; partition 0's first attempt stalls INSIDE the write

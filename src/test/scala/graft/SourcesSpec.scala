@@ -221,7 +221,7 @@ class SourcesSpec extends AnyFunSuite {
     val df = spark.read.format("spatialite")
       .load(s"$fixtures/test_spatialite.sqlite")
     // root of comuni is an interior page — each top-level child subtree is
-    // its own InputPartition (7 for this fixture), rows identical.
+    // its own InputPartition (9 for this fixture), rows identical.
     assert(df.rdd.getNumPartitions > 1)
     assert(df.select("code").collect().map(_.getLong(0)).sorted.toSeq ===
       spark.read.format("spatialite").option("layerName", "comuni")

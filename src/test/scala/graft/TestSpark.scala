@@ -17,7 +17,7 @@ object TestSpark {
     s
   }
 
-  val fixtures = "/root/reference/test_data"
+  val fixtures = graft.Fixtures.dir
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }

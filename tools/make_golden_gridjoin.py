@@ -12,7 +12,7 @@ Dev-side tool; never runs in the library."""
 import json, csv
 
 fc = json.load(open(
-    '/root/reference/test_data/us_states.feature_collection.implicit_4326.json'))
+    'src/test/resources/fixtures/us_states.feature_collection.implicit_4326.json'))
 
 def pip_ring(x, y, ring):
     inside = False

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Golden pin of the SpatiaLite comuni read: Python's STDLIB sqlite3
-opens the reference database and a from-the-spec SpatiaLite geometry
+opens the fixture database and a from-the-spec SpatiaLite geometry
 blob parse (0x00 / endian / srid / MBR / 0x7C / class, 0x69 entity
 markers, ring coordinate arrays) recomputes per row the geometry type,
 total vertex count, and area-weighted centroid — sharing no code with
@@ -67,7 +67,7 @@ def r1(x):  # HALF_UP like Spark round(x, 1), not Python's banker's
     return float(Decimal(repr(x)).quantize(Decimal('0.1'), rounding=ROUND_HALF_UP))
 
 
-con = sqlite3.connect('/root/reference/test_data/test_spatialite.sqlite')
+con = sqlite3.connect('src/test/resources/fixtures/test_spatialite.sqlite')
 with open('src/test/resources/golden/comuni.csv', 'w', newline='') as f:
     w = csv.writer(f, quoting=csv.QUOTE_ALL)
     w.writerow(['fid', 'code', 'name', 'gtype', 'npoints', 'cx', 'cy'])

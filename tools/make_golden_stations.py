@@ -1,13 +1,13 @@
 #!/usr/bin/env python3
-"""Regenerates src/test/resources/golden/stations.csv from the reference
-stations shapefile using plain struct unpacking — deliberately sharing NO
+"""Regenerates src/test/resources/golden/stations.csv from the stations
+shapefile fixture using plain struct unpacking — deliberately sharing NO
 code with the Scala shapefile reader, so the CSV is an engine-independent
 pin of the fixture. DuckDB oracles re-read this CSV to hash-check the
 Spark shapefile/FGB/GML read paths (dev-side tool; never runs in the
 library)."""
 import struct, csv
 
-dbf = open('/root/reference/test_data/stations.dbf', 'rb').read()
+dbf = open('src/test/resources/fixtures/stations.dbf', 'rb').read()
 nrec = struct.unpack('<I', dbf[4:8])[0]
 hdrlen = struct.unpack('<H', dbf[8:10])[0]
 reclen = struct.unpack('<H', dbf[10:12])[0]
@@ -27,7 +27,7 @@ for i in range(nrec):
         p += flen
     attrs.append(vals)
 
-shp = open('/root/reference/test_data/stations.shp', 'rb').read()
+shp = open('src/test/resources/fixtures/stations.shp', 'rb').read()
 assert struct.unpack('<i', shp[32:36])[0] == 1  # Point type
 pts, p = [], 100
 while p < len(shp):

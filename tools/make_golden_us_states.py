@@ -9,7 +9,7 @@ the library."""
 import json, csv
 
 fc = json.load(open(
-    '/root/reference/test_data/us_states.feature_collection.implicit_4326.json'))
+    'src/test/resources/fixtures/us_states.feature_collection.implicit_4326.json'))
 
 def count_coords(geom):
     t, c = geom['type'], geom['coordinates']
