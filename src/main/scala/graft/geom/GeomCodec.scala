@@ -30,12 +30,77 @@ object GeomCodec {
   def toWkt(g: Geometry): String = wktWriter.get.write(g)
 
   def wkbToWkt(bytes: Array[Byte]): String = toWkt(fromWkb(bytes))
-  def wktToWkb(s: String): Array[Byte] = toWkb(fromWkt(s))
+  /** A 2-D `POINT (x y)` is decoded here, without JTS's tokenizer, into
+    * the bytes JTS gives; any other text (`POINT Z`, `POINT EMPTY`, other
+    * types, unusual spacing or number forms) goes to JTS. */
+  def wktToWkb(s: String): Array[Byte] = {
+    val wkb = pointWktToWkb(s)
+    if (wkb != null) wkb else toWkb(fromWkt(s))
+  }
   def wkbToGeoJson(bytes: Array[Byte]): String = toGeoJson(fromWkb(bytes))
   def geoJsonToWkb(s: String): Array[Byte] = toWkb(fromGeoJson(s))
 
+  /** The WKB of a 2-D point, as JTS's default `WKBWriter` writes it:
+    * big-endian, type 1, then x and y. */
   def point(lon: Double, lat: Double): Array[Byte] =
-    toWkb(factory.createPoint(new Coordinate(lon, lat)))
+    java.nio.ByteBuffer.allocate(21).put(0.toByte).putInt(1)
+      .putLong(java.lang.Double.doubleToLongBits(lon))
+      .putLong(java.lang.Double.doubleToLongBits(lat))
+      .array()
+
+  /** [[point]] of `POINT (x y)` in any letter case, with spaces, tabs or
+    * line breaks around the tokens and plain decimal numbers (optional
+    * sign, fraction and exponent); null for any other text. */
+  private def pointWktToWkb(s: String): Array[Byte] = {
+    var i = skipSpace(s, 0)
+    if (!s.regionMatches(true, i, "POINT", 0, 5)) return null
+    i = skipSpace(s, i + 5)
+    if (i >= s.length || s.charAt(i) != '(') return null
+    val xStart = skipSpace(s, i + 1)
+    val xEnd = numberEnd(s, xStart)
+    if (xEnd < 0) return null
+    val yStart = skipSpace(s, xEnd)
+    if (yStart == xEnd) return null
+    val yEnd = numberEnd(s, yStart)
+    if (yEnd < 0) return null
+    i = skipSpace(s, yEnd)
+    if (i >= s.length || s.charAt(i) != ')' || skipSpace(s, i + 1) != s.length) return null
+    point(java.lang.Double.parseDouble(s.substring(xStart, xEnd)),
+      java.lang.Double.parseDouble(s.substring(yStart, yEnd)))
+  }
+
+  private def skipSpace(s: String, from: Int): Int = {
+    var i = from
+    while (i < s.length && (s.charAt(i) match {
+      case ' ' | '\t' | '\n' | '\r' => true
+      case _ => false
+    })) i += 1
+    i
+  }
+
+  /** End of the number `[+-]?(d+(.d*)?|.d+)([eE][+-]?d+)?` at `from`;
+    * -1 if none starts there. */
+  private def numberEnd(s: String, from: Int): Int = {
+    def digits(at: Int): Int = {
+      var i = at
+      while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
+      i
+    }
+    def sign(at: Int): Int =
+      if (at < s.length && (s.charAt(at) == '+' || s.charAt(at) == '-')) at + 1 else at
+    val intStart = sign(from)
+    val intEnd = digits(intStart)
+    var i = intEnd
+    if (i < s.length && s.charAt(i) == '.') i = digits(i + 1)
+    if (intEnd == intStart && i <= intEnd + 1) return -1 // no digit before or after the point
+    if (i < s.length && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
+      val expStart = sign(i + 1)
+      val expEnd = digits(expStart)
+      if (expEnd == expStart) return -1
+      i = expEnd
+    }
+    i
+  }
 
   // ---------------------------------------------------------------- GeoJSON
 
@@ -121,6 +186,14 @@ object GeomCodec {
   }
 
   def fromGeoJson(s: String): Geometry = fromGeoJsonNode(mapper.readTree(s))
+
+  /** `toWkb(fromGeoJsonNode(node))`; a Point goes straight to [[point]],
+    * which writes the same 2-D bytes (a Z ordinate is dropped either way). */
+  def geoJsonNodeToWkb(node: JsonNode): Array[Byte] =
+    if (node.get("type").asText == "Point") {
+      val c = readCoord(node.get("coordinates"))
+      point(c.x, c.y)
+    } else toWkb(fromGeoJsonNode(node))
 
   def fromGeoJsonNode(node: JsonNode): Geometry = {
     val typ = node.get("type").asText

@@ -34,6 +34,7 @@ object GdalQueries {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_q_stations_gml_${ProcessHandle.current().pid()}"
     if (!gmlFixtureDone) gmlFixtureLock.synchronized {
       if (!gmlFixtureDone) {
+        graft.TempDirs.deleteAtExit(new java.io.File(path))
         GraftFunctions.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .orderBy(col("name"), col("x"))
@@ -168,7 +169,7 @@ object GdalQueries {
     // same inclusive bbox fully oracles the R-tree-pruned read.
     "gdal_read_fgb_bbox" -> ((s, _) => {
       GraftFunctions.register(s)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_fgbbox_").toString
+      val out = graft.TempDirs.untilExit("graft_q_fgbbox_").toString
       s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .write.format("flatgeobuf").mode("overwrite").save(out)
       s.read.format("flatgeobuf").load(out)
@@ -209,7 +210,7 @@ object GdalQueries {
     // coordinates, putting both halves of the format under the hash gate.
     "gdal_convert_shapefile_to_fgb" -> ((s, _) => {
       GraftFunctions.register(s)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_fgb_").toString
+      val out = graft.TempDirs.untilExit("graft_q_fgb_").toString
       s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .write.format("flatgeobuf").mode("overwrite").save(out)
       s.read.format("flatgeobuf").load(out)
@@ -333,7 +334,7 @@ object GdalQueries {
     // in partition-write order, which the golden file cannot know).
     "gdal_convert_shapefile_to_gpkg" -> ((s, _) => {
       GraftFunctions.register(s)
-      val out = java.nio.file.Files.createTempDirectory("graft_q_gpkg_").toString
+      val out = graft.TempDirs.untilExit("graft_q_gpkg_").toString
       s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .write.format("gpkg").option("layerName", "stations")
         .mode("overwrite").save(out)

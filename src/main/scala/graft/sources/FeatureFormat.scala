@@ -37,6 +37,12 @@ case class SplitSpec(path: String, startRecord: Long, numRecords: Long,
   * per-driver read loop seam (`df_from_layer`, reference src/lib.rs:332-485).
   * Implementations must be Serializable (shipped to executors inside the
   * reader factory).
+  *
+  * The per-row work downstream of a reader is linear in row width when the
+  * reader keeps each file's props in a stable order under the same name
+  * instances (see [[RawFeature]]); [[open]] and [[openTypes]] should build
+  * each row's props straight into an array, with no per-row collections
+  * or parse trees beyond what the values need.
   */
 trait FeatureFormat extends Serializable {
   /** File extensions this format claims (for directory expansion). */

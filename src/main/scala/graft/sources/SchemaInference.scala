@@ -7,7 +7,15 @@ import org.apache.spark.sql.types._
   * (null when absent/empty — reference src/lib.rs:386-388), and named
   * property values in document order. Values are one of: null, Int, Long,
   * Double, Boolean, String, java.sql.Date, java.sql.Timestamp,
-  * Seq[Int|Long|Double|String]. */
+  * Seq[Int|Long|Double|String].
+  *
+  * Readers should give every feature of a file its props in one stable
+  * order, using the same `String` instance for a name each time (a header
+  * or column array, the parser's canonical names): row conversion, scan
+  * filters and schema inference then find each name's slot by position,
+  * with no hashing ([[NameSlots]]). Props in any other order, repeated,
+  * missing or under equal but distinct strings still give the same rows
+  * and schemas, only slower. */
 final case class RawFeature(
     fid: Long,
     geomWkb: Array[Byte],
@@ -97,26 +105,31 @@ object SchemaInference {
     inferTypes(features.map(typesOf), opts)
 
   def inferTypes(features: Iterator[FeatureTypes], opts: GdalOptions): StructType = {
+    // slot s holds the s-th name seen and its type so far
+    val slots = NameSlots.growing()
     val order = mutable.ArrayBuffer[String]()
-    val types = new java.util.HashMap[String, DataType]()
+    val types = mutable.ArrayBuffer[DataType]()
     var n = 0L
     while (n < opts.inferLimit && features.hasNext) {
       val it = features.next().iterator
+      var pos = 0
       while (it.hasNext) {
         val (name, t) = it.next()
-        val seen = types.get(name)
-        if (seen == null) { order += name; types.put(name, t) }
-        else if (seen != t) types.put(name, widen(seen, t))
+        val s = slots.slotAt(pos, name)
+        if (s == types.length) { order += name; types += t }
+        else if (types(s) != t) types(s) = widen(types(s), t)
+        pos += 1
       }
       n += 1
     }
     val geomName = opts.geometryColumnName
     val reserved = Set(geomName) ++ opts.fidColumnName
-    val dataFields = order.toSeq
-      .filter(name => types.get(name) != NullType) // rule 4: all-null dropped
-      .map { name =>
+    val dataFields = order.indices
+      .filter(s => types(s) != NullType) // rule 4: all-null dropped
+      .map { s =>
+        val name = order(s)
         val out = if (reserved.contains(name)) s"${name}_original" else name // rule 5
-        StructField(out, types.get(name), nullable = true)
+        StructField(out, types(s), nullable = true)
       }
     val geomType = if (opts.geometryFormat == "wkb") BinaryType else StringType
     val fidField = opts.fidColumnName.map(StructField(_, LongType, nullable = true)).toSeq

@@ -28,27 +28,30 @@ class CsvGeoFormat extends FeatureFormat {
     // WKT geometry column (GDAL GEOM_POSSIBLE_NAMES analog) — also what our
     // csvgeo writer emits, so write→read round-trips.
     val geomIdx = findIdx(header, Seq(opts.geometryColumnName, "wkt*", "*_wkt"))
+    val cols = propColumns(header, geomIdx)
+    val names = cols.map(header(_))
 
     var idx = -1L
     val it = lines.filter(_.nonEmpty).map { line =>
       idx += 1
       val cells = parseLine(line)
       def cellAt(i: Int): String = if (i < cells.length) cells(i) else ""
-      val geom = geomIdx match {
-        case Some(gi) if cellAt(gi).nonEmpty =>
-          try GeomCodec.wktToWkb(cells(gi)) catch { case _: Exception => null }
-        case _ => (xIdx, yIdx) match {
-          case (Some(xi), Some(yi)) =>
-            try GeomCodec.point(cellAt(xi).toDouble, cellAt(yi).toDouble)
-            catch { case _: NumberFormatException => null }
-          case _ => null
-        }
+      val geom =
+        if (geomIdx >= 0 && cellAt(geomIdx).nonEmpty)
+          try GeomCodec.wktToWkb(cells(geomIdx)) catch { case _: Exception => null }
+        else if (xIdx >= 0 && yIdx >= 0)
+          try GeomCodec.point(cellAt(xIdx).toDouble, cellAt(yIdx).toDouble)
+          catch { case _: NumberFormatException => null }
+        else null
+      val props = new Array[(String, Any)](cols.length)
+      var k = 0
+      while (k < cols.length) {
+        val raw = cellAt(cols(k))
+        props(k) = (names(k),
+          if (raw.isEmpty) null else if (opts.autodetectTypes) detect(raw) else raw)
+        k += 1
       }
-      val props = header.indices.filter(i => !geomIdx.contains(i)).map { i =>
-        val raw = cellAt(i)
-        header(i) -> (if (raw.isEmpty) null else if (opts.autodetectTypes) detect(raw) else raw)
-      }
-      RawFeature(idx, geom, props)
+      RawFeature(idx, geom, ArraySeq.unsafeWrapArray(props))
     }
     FeatureIterator(it, () => src.close())
   }
@@ -61,8 +64,7 @@ class CsvGeoFormat extends FeatureFormat {
     val lines = src.getLines()
     if (!lines.hasNext) { src.close(); return TypeIterator(Iterator.empty) }
     val header = parseLine(lines.next())
-    val geomIdx = findIdx(header, Seq(opts.geometryColumnName, "wkt*", "*_wkt"))
-    val cols = header.indices.filter(i => !geomIdx.contains(i)).toArray
+    val cols = propColumns(header, findIdx(header, Seq(opts.geometryColumnName, "wkt*", "*_wkt")))
     val strings = cols.map(i => (header(i), StringType))
     val nulls = cols.map(i => (header(i), NullType))
     val it = lines.filter(_.nonEmpty).map { line =>
@@ -91,34 +93,47 @@ class CsvGeoFormat extends FeatureFormat {
         catch { case _: NumberFormatException => s }
     }
 
-  private def findIdx(header: IndexedSeq[String], globs: Seq[String]): Option[Int] = {
+  /** The first column whose name matches one of `globs`; -1 for none. */
+  private def findIdx(header: Array[String], globs: Seq[String]): Int = {
     val regexes = globs.map(g =>
       ("(?i)^" + java.util.regex.Pattern.quote(g).replace("*", "\\E.*\\Q") + "$").r)
-    header.indices.find(i => regexes.exists(_.findFirstIn(header(i)).isDefined))
+    header.indexWhere(h => regexes.exists(_.findFirstIn(h).isDefined))
   }
 
-  /** RFC-4180-ish line parse: commas, double quotes, escaped quotes. */
-  private def parseLine(line: String): IndexedSeq[String] = {
+  /** The columns read as props: all but the WKT geometry column. */
+  private def propColumns(header: Array[String], geomIdx: Int): Array[Int] =
+    header.indices.filter(_ != geomIdx).toArray
+
+  /** RFC-4180-ish line parse: commas, double quotes, escaped quotes. A
+    * cell with no quote is a substring of the line; a cell with one is
+    * built char by char. */
+  private def parseLine(line: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer[String]()
-    val sb = new StringBuilder
-    var inQuotes = false
+    val n = line.length
+    var sb: java.lang.StringBuilder = null
     var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      if (inQuotes) {
-        if (c == '"') {
-          if (i + 1 < line.length && line.charAt(i + 1) == '"') { sb.append('"'); i += 1 }
-          else inQuotes = false
-        } else sb.append(c)
-      } else c match {
-        case '"' => inQuotes = true
-        case ',' => out += sb.toString; sb.clear()
-        case _ => sb.append(c)
+    while (true) {
+      val start = i
+      while (i < n && line.charAt(i) != ',' && line.charAt(i) != '"') i += 1
+      if (i == n || line.charAt(i) == ',') out += line.substring(start, i)
+      else {
+        if (sb == null) sb = new java.lang.StringBuilder else sb.setLength(0)
+        sb.append(line, start, i)
+        var inQuotes = false
+        while (i < n && (inQuotes || line.charAt(i) != ',')) {
+          val c = line.charAt(i)
+          if (c == '"') {
+            if (inQuotes && i + 1 < n && line.charAt(i + 1) == '"') { sb.append('"'); i += 1 }
+            else inQuotes = !inQuotes
+          } else sb.append(c)
+          i += 1
+        }
+        out += sb.toString
       }
-      i += 1
+      if (i == n) return out.toArray
+      i += 1 // the comma
     }
-    out += sb.toString
-    out.toIndexedSeq
+    out.toArray
   }
 }
 

@@ -2,16 +2,14 @@ package graft.sources.geojson
 
 import java.io.File
 import com.fasterxml.jackson.core.JsonToken
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
 
-import graft.geom.GeomCodec
 import graft.sources._
 
 /** Streaming GeoJSON FeatureCollection reader (reference read path for the
   * GeoJSON driver — S1/S3, reference src/lib.rs:294-312, 332-485). The
-  * parser streams the top-level `features` array and materializes one small
-  * tree per feature, so memory is O(feature), not O(file).
+  * parser streams the top-level `features` array and decodes each feature
+  * off its tokens ([[GeoJsonFeatures]]), so memory is O(feature), not
+  * O(file).
   *
   * Property typing follows the §1.4 inference contract: JSON ints →
   * Int/Long by magnitude, floats → Double, nested objects → their JSON
@@ -19,6 +17,8 @@ import graft.sources._
   * `unimplemented!` — src/unprocessed_series.rs:172 — we support them).
   */
 class GeoJsonFormat extends FeatureFormat {
+  private def factory = GeoJsonFeatures.mapper.getFactory
+
   override def extensions: Seq[String] = Seq(".json", ".geojson")
 
   /** Advance `parser` into the top-level "features" array (or a bare
@@ -45,43 +45,47 @@ class GeoJsonFormat extends FeatureFormat {
   }
 
   /** Stream RawFeatures off a parser positioned inside a features array.
-    * `firstIdx` seeds the default-FID counter (split-stable). */
+    * `firstIdx` seeds the default-FID counter (split-stable). Each feature's
+    * tokens are read one feature ahead; its geometry is decoded when it is
+    * returned. */
   private def featureIterator(parser: com.fasterxml.jackson.core.JsonParser,
       inFeatures: Boolean, firstIdx: Long): FeatureIterator = {
+    val features = new GeoJsonFeatures
     var idx = firstIdx - 1
     val it = new Iterator[RawFeature] {
-      private var nextNode: ObjectNode = advance()
+      private var pending: GeoJsonFeatures.Tokens = advance()
 
-      private def advance(): ObjectNode =
+      private def advance(): GeoJsonFeatures.Tokens =
         if (!inFeatures) null
         else parser.nextToken() match {
-          case JsonToken.START_OBJECT => parser.readValueAsTree[ObjectNode]()
+          case JsonToken.START_OBJECT => features.read(parser)
           case _ => null // END_ARRAY or EOF
         }
 
-      override def hasNext: Boolean = nextNode != null
+      override def hasNext: Boolean = pending != null
       override def next(): RawFeature = {
-        val node = nextNode
-        nextNode = advance()
+        val tokens = pending
+        pending = advance()
         idx += 1
-        toFeature(node, idx)
+        tokens.feature(idx)
       }
     }
     FeatureIterator(it, () => parser.close())
   }
 
   override def open(path: String, opts: GdalOptions): FeatureIterator = {
-    val parser = new ObjectMapper().getFactory.createParser(new File(path))
+    val parser = factory.createParser(new File(path))
     featureIterator(parser, seekFeatures(parser), 0L)
   }
 
   /** Types from a token walk (see [[GeoJsonTypes]]): no trees, no
     * geometry decode. `open` applies no bbox, so neither does this. */
   override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
-    val parser = GeoJsonTypes.factory.createParser(new File(path))
+    val parser = factory.createParser(new File(path))
     val inFeatures = seekFeatures(parser)
+    val types = new GeoJsonTypes
     val it = Iterator.continually(
-      if (inFeatures && parser.nextToken() == JsonToken.START_OBJECT) GeoJsonTypes.feature(parser)
+      if (inFeatures && parser.nextToken() == JsonToken.START_OBJECT) types.feature(parser)
       else null).takeWhile(_ != null)
     TypeIterator(it, () => parser.close())
   }
@@ -98,7 +102,7 @@ class GeoJsonFormat extends FeatureFormat {
     val minSplittable = 8L << 20
     val targetBytes = 32L << 20
     if (f.length < minSplittable) return Seq(SplitSpec(path, 0L, -1L))
-    val parser = new ObjectMapper().getFactory.createParser(f)
+    val parser = factory.createParser(f)
     try {
       if (!seekFeatures(parser)) return Seq(SplitSpec(path, 0L, -1L))
       val splits = scala.collection.mutable.ArrayBuffer.empty[SplitSpec]
@@ -139,38 +143,12 @@ class GeoJsonFormat extends FeatureFormat {
           new java.io.ByteArrayInputStream("[".getBytes),
           bounded,
           new java.io.ByteArrayInputStream("]".getBytes))))
-      val parser = new ObjectMapper().getFactory.createParser(stream)
+      val parser = factory.createParser(stream)
       val in = parser.nextToken() == JsonToken.START_ARRAY
       featureIterator(parser, in, spec.startRecord)
     }
   }
 
-  private def toFeature(node: ObjectNode, idx: Long): RawFeature = {
-    val fid = Option(node.get("id")).filter(_.canConvertToLong).map(_.asLong).getOrElse(idx)
-    val geom = Option(node.get("geometry")).filter(!_.isNull)
-      .map(g => GeomCodec.toWkb(GeomCodec.fromGeoJsonNode(g))).orNull
-    val props = Option(node.get("properties")).filter(_.isObject) match {
-      case Some(p) =>
-        val it = p.fields()
-        val buf = scala.collection.mutable.ArrayBuffer[(String, Any)]()
-        while (it.hasNext) {
-          val e = it.next()
-          buf += e.getKey -> jsonValue(e.getValue)
-        }
-        buf.toIndexedSeq
-      case None => IndexedSeq.empty
-    }
-    RawFeature(fid, geom, props)
-  }
-
-  private def jsonValue(n: JsonNode): Any =
-    if (n == null || n.isNull) null
-    else if (n.isIntegralNumber) { if (n.canConvertToInt) n.asInt else n.asLong }
-    else if (n.isNumber) n.asDouble
-    else if (n.isBoolean) n.asBoolean
-    else if (n.isTextual) n.asText
-    else if (n.isArray) (0 until n.size).map(i => jsonValue(n.get(i)))
-    else n.toString // nested object → its JSON text
 }
 
 /** Reads at most `limit` bytes of `in`, then reports EOF (split ranges). */

@@ -1,8 +1,6 @@
 package graft.sources.geojson
 
-import scala.collection.immutable.ArraySeq
-
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import org.apache.spark.sql.types._
 
 import graft.sources.SchemaInference.FeatureTypes
@@ -11,10 +9,13 @@ import graft.sources.SchemaInference.FeatureTypes
   * tokens: a property's type comes from its token alone (`getNumberType`
   * tells Int from Long), geometry and nested objects are passed over with
   * `skipChildren`, and no tree is built. Each type is the one
-  * [[graft.sources.SchemaInference.typeOf]] gives the value the tree
-  * readers decode, duplicate keys included. */
-private[geojson] object GeoJsonTypes {
-  val factory = new JsonFactory()
+  * [[graft.sources.SchemaInference.typeOf]] gives the value
+  * [[GeoJsonFeatures]] decodes, duplicate keys included. One per reader;
+  * not thread-safe. */
+private[geojson] final class GeoJsonTypes {
+  import GeoJsonTypes.valueType
+
+  private val members = new Members[DataType]
 
   /** Types of the Feature object `p` stands on (START_OBJECT); leaves `p`
     * on its END_OBJECT. */
@@ -22,7 +23,8 @@ private[geojson] object GeoJsonTypes {
     var props: FeatureTypes = IndexedSeq.empty
     while (p.nextToken() == JsonToken.FIELD_NAME) {
       val key = p.currentName
-      if (p.nextToken() == JsonToken.START_OBJECT && key == "properties") props = properties(p)
+      if (p.nextToken() == JsonToken.START_OBJECT && key == "properties")
+        props = members.read(p)(valueType)
       else {
         if (key == "properties") props = IndexedSeq.empty
         p.skipChildren()
@@ -30,22 +32,9 @@ private[geojson] object GeoJsonTypes {
     }
     props
   }
+}
 
-  private def properties(p: JsonParser): FeatureTypes = {
-    // like a Jackson tree, a key that repeats keeps its first position
-    // and takes its last value
-    val types = new java.util.LinkedHashMap[String, DataType]()
-    while (p.nextToken() == JsonToken.FIELD_NAME) {
-      val name = p.currentName
-      p.nextToken()
-      types.put(name, valueType(p))
-    }
-    val out = new Array[(String, DataType)](types.size)
-    var i = 0
-    types.forEach { (name, t) => out(i) = (name, t); i += 1 }
-    ArraySeq.unsafeWrapArray(out)
-  }
-
+private[geojson] object GeoJsonTypes {
   /** Type of the value whose first token `p` stands on; leaves `p` on
     * the value's last token. */
   def valueType(p: JsonParser): DataType = p.currentToken match {

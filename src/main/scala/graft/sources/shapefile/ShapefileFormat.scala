@@ -3,6 +3,9 @@ package graft.sources.shapefile
 import java.io.{File, FileOutputStream}
 import java.util.zip.ZipInputStream
 
+import scala.collection.immutable.ArraySeq
+
+import graft.TempDirs
 import graft.geom.GeomCodec
 import graft.sources._
 
@@ -48,87 +51,104 @@ class ShapefileFormat extends FeatureFormat {
 
   private def openRange(path: String, startRec: Long, numRec: Long,
       startByte: Long = 100L,
-      bbox: Option[graft.sources.flatgeobuf.FgbIndex.Box] = None): FeatureIterator = {
-    val shpPath =
-      if (path.toLowerCase.endsWith(".zip")) unzipToTemp(path)
-      else path
-    val dbfPath = shpPath.replaceAll("\\.shp$", ".dbf")
+      bbox: Option[graft.sources.flatgeobuf.FgbIndex.Box] = None): FeatureIterator =
+    if (isZip(path)) {
+      val dir = unzipToTemp(path)
+      val it = try openRange(shpIn(dir, path), startRec, -1L, bbox = bbox)
+      catch { case e: Throwable => TempDirs.deleteTree(dir); throw e }
+      FeatureIterator(it, () => try it.close() finally TempDirs.deleteTree(dir))
+    } else {
+      val dbfPath = path.replaceAll("\\.shp$", ".dbf")
+      val raw = Shp.rawRecords(path, startByte, numRec)
+      val dbf =
+        try if (new File(dbfPath).exists) new Dbf.Reader(dbfPath, startRec, numRec) else null
+        catch { case e: Throwable => raw.close(); throw e }
+      val names = if (dbf == null) Array.empty[String] else dbf.fields.map(_.name).toArray
 
-    val raw = Shp.rawRecords(shpPath, if (shpPath == path) startByte else 100L,
-      if (shpPath == path) numRec else -1L)
-    val dbf =
-      if (new File(dbfPath).exists)
-        Some(Dbf.read(dbfPath, if (shpPath == path) startRec else 0L,
-          if (shpPath == path) numRec else -1L))
-      else None
-    val fieldNames = dbf.map(_.fields.map(_.name)).getOrElse(Vector.empty)
-
-    // the DBF row is consumed for every .shp record — bbox skipping must
-    // keep the two streams aligned and the FID = file record index
-    var idx = startRec - 1
-    val it = raw.flatMap { case (_, content) =>
-      idx += 1
-      val attrs: IndexedSeq[(String, Any)] = dbf match {
-        case Some(t) if t.records.hasNext => fieldNames.zip(t.records.next())
-        case _ => IndexedSeq.empty
+      // the DBF row is consumed for every .shp record — bbox skipping must
+      // keep the two streams aligned and the FID = file record index
+      var idx = startRec - 1
+      val it = raw.flatMap { case (_, content) =>
+        idx += 1
+        val rec = if (dbf != null && dbf.hasNext) dbf.next() else null
+        if (bbox.exists(q => !Shp.boxIntersects(content, q))) None
+        else {
+          val attrs: IndexedSeq[(String, Any)] =
+            if (rec == null) IndexedSeq.empty
+            else {
+              val deleted = dbf.deleted(rec)
+              val props = new Array[(String, Any)](names.length)
+              var c = 0
+              while (c < names.length) {
+                props(c) = (names(c), if (deleted) null else dbf.cell(rec, c))
+                c += 1
+              }
+              ArraySeq.unsafeWrapArray(props)
+            }
+          val geom = Shp.parseShape(content)
+          Some(RawFeature(idx, if (geom == null) null else GeomCodec.toWkb(geom), attrs))
+        }
       }
-      if (bbox.exists(q => !Shp.boxIntersects(content, q))) None
-      else {
-        val geom = Shp.parseShape(content)
-        Some(RawFeature(idx, if (geom == null) null else GeomCodec.toWkb(geom), attrs))
-      }
+      FeatureIterator(it, () => try raw.close() finally if (dbf != null) dbf.close())
     }
-    FeatureIterator(it)
-  }
 
   /** Types from the DBF alone: header types, with each column's cells
     * parsed only until its first non-null one (see
     * [[SchemaInference.HeaderTypes]]). The features are the .shp records,
     * as in [[open]]: walked for their record boxes, never parsed. */
-  override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
-    val shpPath =
-      if (path.toLowerCase.endsWith(".zip")) unzipToTemp(path)
-      else path
-    val dbfPath = shpPath.replaceAll("\\.shp$", ".dbf")
-    if (!new File(dbfPath).exists) return super.openTypes(shpPath, opts)
+  override def openTypes(path: String, opts: GdalOptions): TypeIterator =
+    if (isZip(path)) {
+      val dir = unzipToTemp(path)
+      val it = try openTypes(shpIn(dir, path), opts)
+      catch { case e: Throwable => TempDirs.deleteTree(dir); throw e }
+      TypeIterator(it, () => try it.close() finally TempDirs.deleteTree(dir))
+    } else {
+      val dbfPath = path.replaceAll("\\.shp$", ".dbf")
+      if (!new File(dbfPath).exists) return super.openTypes(path, opts)
 
-    val shp = Shp.rawRecords(shpPath)
-    val dbf = new Dbf.Reader(dbfPath, 0L, -1L)
-    val types = new SchemaInference.HeaderTypes(
-      dbf.fields.map(f => (f.name, Dbf.sparkType(f))))
-    var unread = opts.offset // the window drops these before inference reads them
-    val it = shp.flatMap { case (_, content) =>
-      val rec = if (dbf.hasNext) dbf.next() else null
-      if (opts.bbox.exists(q => !Shp.boxIntersects(content, q))) None
-      else if (unread > 0) { unread -= 1; Some(IndexedSeq.empty) }
-      else if (rec == null) Some(IndexedSeq.empty)
-      else Some(types.next(c => !dbf.deleted(rec) && dbf.cell(rec, c) != null))
+      val shp = Shp.rawRecords(path)
+      val dbf = new Dbf.Reader(dbfPath, 0L, -1L)
+      val types = new SchemaInference.HeaderTypes(
+        dbf.fields.map(f => (f.name, Dbf.sparkType(f))))
+      var unread = opts.offset // the window drops these before inference reads them
+      val it = shp.flatMap { case (_, content) =>
+        val rec = if (dbf.hasNext) dbf.next() else null
+        if (opts.bbox.exists(q => !Shp.boxIntersects(content, q))) None
+        else if (unread > 0) { unread -= 1; Some(IndexedSeq.empty) }
+        else if (rec == null) Some(IndexedSeq.empty)
+        else Some(types.next(c => !dbf.deleted(rec) && dbf.cell(rec, c) != null))
+      }
+      TypeIterator(it, () => { dbf.close(); shp.close() })
     }
-    TypeIterator(it, () => { dbf.close(); shp.close() })
-  }
 
-  /** Zipped shapefile: extract members to a temp dir, return the .shp. */
-  private def unzipToTemp(zipPath: String): String = {
+  private def isZip(path: String): Boolean = path.toLowerCase.endsWith(".zip")
+
+  /** Zipped shapefile: extract its members into a new temp dir, which the
+    * caller deletes when done with it (when the iterator over its .shp
+    * closes, or at once if opening fails). */
+  private def unzipToTemp(zipPath: String): File = {
     val dir = java.nio.file.Files.createTempDirectory("graft_shp_").toFile
-    dir.deleteOnExit()
     val zin = new ZipInputStream(new java.io.FileInputStream(zipPath))
     try {
       var entry = zin.getNextEntry
       while (entry != null) {
         if (!entry.isDirectory) {
-          val out = new File(dir, new File(entry.getName).getName)
-          out.deleteOnExit()
-          val os = new FileOutputStream(out)
+          val os = new FileOutputStream(new File(dir, new File(entry.getName).getName))
           try zin.transferTo(os) finally os.close()
         }
         zin.closeEntry()
         entry = zin.getNextEntry
       }
-    } finally zin.close()
+    } catch { case e: Throwable => TempDirs.deleteTree(dir); throw e }
+    finally zin.close()
+    dir
+  }
+
+  /** The .shp member of an extracted zip. */
+  private def shpIn(dir: File, zipPath: String): String =
     dir.listFiles().find(_.getName.toLowerCase.endsWith(".shp"))
       .getOrElse(throw new IllegalArgumentException(s"No .shp member in $zipPath"))
       .getAbsolutePath
-  }
 }
 
 /** `spark.read.format("shapefile")` / `df.write.format("shapefile")` */

@@ -19,13 +19,9 @@ import graft.sources._
 abstract class SqliteVectorFormat extends FeatureFormat {
 
   protected case class Layer(table: String, geomCol: Option[String], rootPage: Int,
-      cols: Seq[(String, Boolean)]) {
-    /** Position of the geometry column among `cols`. */
-    def geomIdx: Option[Int] = geomCol.flatMap(g =>
-      cols.indexWhere(_._1.equalsIgnoreCase(g)) match {
-        case -1 => None
-        case i => Some(i)
-      })
+      cols: IndexedSeq[(String, Boolean)]) {
+    /** Position of the geometry column among `cols`; -1 for none. */
+    def geomIdx: Int = geomCol.fold(-1)(g => cols.indexWhere(_._1.equalsIgnoreCase(g)))
   }
 
   /** The container's layer list, in deterministic order. */
@@ -49,30 +45,33 @@ abstract class SqliteVectorFormat extends FeatureFormat {
     }
   }
 
+  /** Each row's props in column order (the geometry column left out),
+    * under the layer's own name instances; a record shorter than the
+    * column list reads null for the missing cells. */
   private def rowsOf(f: SqliteFile, layer: Layer,
       roots: Seq[Int]): Iterator[RawFeature] = {
+    val names = layer.cols.map(_._1).toArray
+    val ipk = layer.cols.map(_._2).toArray
     val geomIdx = layer.geomIdx
+    val width = if (geomIdx >= 0) names.length - 1 else names.length
     roots.iterator.flatMap(f.scanCells).map { case (rowid, payload) =>
-      val vals = f.decodeRecord(payload)
-      val props = layer.cols.indices.flatMap { i =>
-        val (name, isIpk) = layer.cols(i)
-        if (geomIdx.contains(i)) None
-        else {
-          val v = if (isIpk) rowid
-          else if (i < vals.length) vals(i) match {
-            case b: Array[Byte] => b // non-geometry blob → BinaryType column
-            case other => other
-          }
-          else null
-          Some(name -> v)
+      val vals = f.decodeValues(payload)
+      val props = new Array[(String, Any)](width)
+      var i = 0
+      var k = 0
+      while (i < names.length) {
+        if (i != geomIdx) {
+          // a non-geometry blob stays a BinaryType value
+          props(k) = (names(i), if (ipk(i)) rowid else if (i < vals.length) vals(i) else null)
+          k += 1
         }
+        i += 1
       }
-      val wkb = geomIdx.flatMap(i =>
-        if (i < vals.length) vals(i) match {
-          case b: Array[Byte] => Option(blobToWkb(b))
-          case _ => None
-        } else None).orNull
-      RawFeature(rowid, wkb, props)
+      val wkb = if (geomIdx >= 0 && geomIdx < vals.length) vals(geomIdx) match {
+        case b: Array[Byte] => blobToWkb(b)
+        case _ => null
+      } else null
+      RawFeature(rowid, wkb, ArraySeq.unsafeWrapArray(props))
     }
   }
 
@@ -87,8 +86,8 @@ abstract class SqliteVectorFormat extends FeatureFormat {
   override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
     val f = new SqliteFile(path)
     val layer = selectLayer(f, path, opts)
-    val cols = layer.cols.toIndexedSeq
-    val props = cols.indices.filterNot(layer.geomIdx.contains).toArray
+    val cols = layer.cols
+    val props = cols.indices.filter(_ != layer.geomIdx).toArray
     val it = f.scanSerialTypes(layer.rootPage).map { serials =>
       val out = new Array[(String, DataType)](props.length)
       var k = 0

@@ -48,17 +48,24 @@ final class SqliteFile(path: String) extends AutoCloseable {
 
   // ------------------------------------------------------------- varints
 
-  /** Decode a varint at `off`; returns (value, bytesConsumed). */
-  private def varint(b: Array[Byte], off: Int): (Long, Int) = {
+  /** The value of the varint at `off`. */
+  private def varintValue(b: Array[Byte], off: Int): Long = {
     var v = 0L
     var i = 0
     while (i < 8) {
       val x = b(off + i)
       v = (v << 7) | (x & 0x7F)
-      if ((x & 0x80) == 0) return (v, i + 1)
+      if ((x & 0x80) == 0) return v
       i += 1
     }
-    ((v << 8) | (b(off + 8) & 0xFF), 9)
+    (v << 8) | (b(off + 8) & 0xFF)
+  }
+
+  /** The bytes the varint at `off` takes (1 to 9). */
+  private def varintLen(b: Array[Byte], off: Int): Int = {
+    var i = 0
+    while (i < 8 && (b(off + i) & 0x80) != 0) i += 1
+    i + 1
   }
 
   // ------------------------------------------------------- b-tree walk
@@ -123,10 +130,10 @@ final class SqliteFile(path: String) extends AutoCloseable {
   /** Decode one table-leaf cell (payload length, rowid, payload with
     * overflow reassembly per the documented local-payload formula). */
   private def readLeafCell(p: Array[Byte], cellOff: Int): (Long, Array[Byte]) = {
-    val (payloadLen0, n1) = varint(p, cellOff)
-    val payloadLen = payloadLen0.toInt
-    val (rowid, n2) = varint(p, cellOff + n1)
-    val bodyOff = cellOff + n1 + n2
+    val payloadLen = varintValue(p, cellOff).toInt
+    val n1 = varintLen(p, cellOff)
+    val rowid = varintValue(p, cellOff + n1)
+    val bodyOff = cellOff + n1 + varintLen(p, cellOff + n1)
     val u = usable
     val local = localPayload(payloadLen)
     if (local == payloadLen) {
@@ -164,11 +171,10 @@ final class SqliteFile(path: String) extends AutoCloseable {
   }
 
   private def readLeafSerialTypes(p: Array[Byte], cellOff: Int): Array[Long] = {
-    val (payloadLen, n1) = varint(p, cellOff)
-    val (_, n2) = varint(p, cellOff + n1)
-    val bodyOff = cellOff + n1 + n2
-    val (headerLen, _) = varint(p, bodyOff)
-    if (headerLen <= localPayload(payloadLen.toInt)) serialTypes(p, bodyOff)
+    val payloadLen = varintValue(p, cellOff).toInt
+    val n1 = varintLen(p, cellOff)
+    val bodyOff = cellOff + n1 + varintLen(p, cellOff + n1)
+    if (varintValue(p, bodyOff) <= localPayload(payloadLen)) serialTypes(p, bodyOff)
     else serialTypes(readLeafCell(p, cellOff)._2, 0)
   }
 
@@ -176,51 +182,67 @@ final class SqliteFile(path: String) extends AutoCloseable {
 
   /** The serial types of the record header at `off`. */
   private def serialTypes(b: Array[Byte], off: Int): Array[Long] = {
-    val (headerLen, n0) = varint(b, off)
-    val types = scala.collection.mutable.ArrayBuilder.make[Long]
-    var at = off + n0
-    while (at < off + headerLen) {
-      val (t, n) = varint(b, at)
-      types += t
-      at += n
-    }
-    types.result()
+    val end = off + varintValue(b, off)
+    val start = off + varintLen(b, off)
+    var n = 0
+    var at = start
+    while (at < end) { at += varintLen(b, at); n += 1 }
+    val types = new Array[Long](n)
+    at = start
+    var i = 0
+    while (i < n) { types(i) = varintValue(b, at); at += varintLen(b, at); i += 1 }
+    types
   }
 
   /** Decode a record payload into column values: null, Long, Double,
     * String, or Array[Byte]. */
-  def decodeRecord(payload: Array[Byte]): IndexedSeq[Any] = {
+  def decodeRecord(payload: Array[Byte]): IndexedSeq[Any] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(decodeValues(payload))
+
+  /** [[decodeRecord]] into a fresh array: one pass over the header's
+    * serial types and the body. */
+  def decodeValues(payload: Array[Byte]): Array[Any] = {
     val types = serialTypes(payload, 0)
-    var body = varint(payload, 0)._1.toInt
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(types).map { t =>
-      val (value, size) = decodeValue(payload, body, t)
-      body += size
-      value
+    val out = new Array[Any](types.length)
+    var body = varintValue(payload, 0).toInt
+    var i = 0
+    while (i < types.length) {
+      out(i) = decodeValue(payload, body, types(i))
+      body += valueSize(types(i))
+      i += 1
     }
+    out
   }
 
-  private def decodeValue(b: Array[Byte], off: Int, serial: Long): (Any, Int) = serial match {
-    case 0 => (null, 0)
-    case 1 => (b(off).toLong, 1)
-    case 2 => (((b(off) << 8) | (b(off + 1) & 0xFF)).toLong, 2)
-    case 3 => (((b(off) << 16) | ((b(off + 1) & 0xFF) << 8) | (b(off + 2) & 0xFF)).toLong, 3)
-    case 4 => (int32(b, off).toLong, 4)
-    case 5 => ((int32(b, off).toLong << 16) | (((b(off + 4) & 0xFF) << 8) | (b(off + 5) & 0xFF)).toLong, 6)
-    case 6 => ((int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL), 8)
+  private def decodeValue(b: Array[Byte], off: Int, serial: Long): Any = serial match {
+    case 0 => null
+    case 1 => b(off).toLong
+    case 2 => ((b(off) << 8) | (b(off + 1) & 0xFF)).toLong
+    case 3 => ((b(off) << 16) | ((b(off + 1) & 0xFF) << 8) | (b(off + 2) & 0xFF)).toLong
+    case 4 => int32(b, off).toLong
+    case 5 => (int32(b, off).toLong << 16) | (((b(off + 4) & 0xFF) << 8) | (b(off + 5) & 0xFF)).toLong
+    case 6 => (int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL)
     case 7 =>
-      (java.lang.Double.longBitsToDouble(
-        (int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL)), 8)
-    case 8 => (0L, 0)
-    case 9 => (1L, 0)
+      java.lang.Double.longBitsToDouble(
+        (int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL))
+    case 8 => 0L
+    case 9 => 1L
     case t if t >= 12 && t % 2 == 0 =>
       val len = ((t - 12) / 2).toInt
       val out = new Array[Byte](len)
       System.arraycopy(b, off, out, 0, len)
-      (out, len)
-    case t if t >= 13 =>
-      val len = ((t - 13) / 2).toInt
-      (new String(b, off, len, "UTF-8"), len)
+      out
+    case t if t >= 13 => new String(b, off, ((t - 13) / 2).toInt, "UTF-8")
     case t => throw new IllegalStateException(s"reserved serial type $t")
+  }
+
+  /** Body bytes of a value of serial type `serial`. */
+  private def valueSize(serial: Long): Int = serial match {
+    case 5 => 6
+    case 6 | 7 => 8
+    case t if t >= 1 && t <= 4 => t.toInt
+    case t if t >= 12 => ((t - 12) / 2).toInt
+    case _ => 0
   }
 
   // ------------------------------------------------------- master table
@@ -258,7 +280,7 @@ object SqliteFile {
     * a flag for INTEGER PRIMARY KEY (whose values live in the rowid). A
     * pragmatic parser: top-level comma split inside the outer parens,
     * first identifier per definition, table constraints skipped. */
-  def columnsOf(createSql: String): Seq[(String, Boolean)] = {
+  def columnsOf(createSql: String): IndexedSeq[(String, Boolean)] = {
     val open = createSql.indexOf('(')
     val close = createSql.lastIndexOf(')')
     require(open >= 0 && close > open, s"cannot parse: $createSql")
@@ -293,6 +315,6 @@ object SqliteFile {
         val isIpk = d.toLowerCase.replaceAll("\\s+", " ")
           .contains("integer primary key")
         (name, isIpk)
-      }.toSeq
+      }.toIndexedSeq
   }
 }
