@@ -6,7 +6,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{GdalOptions, GeometryColumn, GraftError, WritableFeatureSourceProvider}
 import graft.sources.geojson.GeoJsonRowSerializer
 
 /** Byte-level entry points mirroring the reference's `df_from_bytes` /
@@ -112,16 +112,18 @@ object GdalWrite {
   private def toBytesCapped(df: DataFrame, options: Map[String, String],
       format: String, cap: Long): Array[Byte] = format.toLowerCase match {
     case "geojson" => geoJsonBytes(df, options, cap)
-    case "csvgeo" | "csv" => fileBytes(df, "csvgeo", ".csv", options, zip = false, cap)
-    case "shapefile" | "shp" | "shp.zip" => fileBytes(df, "shapefile", ".shp", options, zip = true, cap)
-    case "flatgeobuf" | "fgb" => fileBytes(df, "flatgeobuf", ".fgb", options, zip = false, cap)
-    case "spatialite" | "sqlite" => fileBytes(df, "spatialite", ".sqlite", options, zip = false, cap)
-    case "gpkg" | "geopackage" => fileBytes(df, "gpkg", ".gpkg", options, zip = false, cap)
-    case "kml" => fileBytes(df, "kml", ".kml", options, zip = false, cap)
-    case "gml" => fileBytes(df, "gml", ".gml", options, zip = false, cap)
-    case "gpx" => fileBytes(df, "gpx", ".gpx", options, zip = false, cap)
+    case "csvgeo" | "csv" => fileBytes(df, new sources.csvgeo.CsvGeoSourceProvider, options, cap)
+    case "shapefile" | "shp" | "shp.zip" =>
+      fileBytes(df, new sources.shapefile.ShapefileSourceProvider, options, cap)
+    case "flatgeobuf" | "fgb" => fileBytes(df, new sources.flatgeobuf.FgbSourceProvider, options, cap)
+    case "spatialite" | "sqlite" =>
+      fileBytes(df, new sources.spatialite.SpatiaLiteSourceProvider, options, cap)
+    case "gpkg" | "geopackage" => fileBytes(df, new sources.gpkg.GpkgSourceProvider, options, cap)
+    case "kml" => fileBytes(df, new sources.xml.KmlSourceProvider, options, cap)
+    case "gml" => fileBytes(df, new sources.xml.GmlSourceProvider, options, cap)
+    case "gpx" => fileBytes(df, new sources.xml.GpxSourceProvider, options, cap)
     case "geojsonseq" | "geojsonl" | "ndjson" =>
-      fileBytes(df, "geojsonseq", ".geojsonl", options, zip = false, cap)
+      fileBytes(df, new sources.geojson.GeoJsonSeqSourceProvider, options, cap)
     case "arrow" | "ipc" =>
       if (df.isEmpty) throw new GraftError.EmptyDataframe
       graft.sources.arrow.ArrowWrite.toBytes(df)
@@ -134,7 +136,7 @@ object GdalWrite {
       cap: Long): Array[Byte] = {
     val opts = GdalOptions.from(options)
     val schema = df.schema
-    val geomIdx = GeoJsonRowSerializer.geometryIndex(schema, opts)
+    val geometry = GeometryColumn(schema, opts)
     val sb = new java.io.StringWriter
     sb.write("""{"type":"FeatureCollection","features":[""")
     var n = 0L
@@ -168,7 +170,7 @@ object GdalWrite {
     while (it.hasNext) {
       if (n > 0) sb.write(",")
       sb.write("\n")
-      GeoJsonRowSerializer.writeFeature(it.next(), schema, geomIdx, opts, sb)
+      GeoJsonRowSerializer.writeFeature(it.next(), schema, geometry, sb)
       n += 1
       countNewUtf8()
       if (utf8 > cap)
@@ -182,9 +184,6 @@ object GdalWrite {
     sb.toString.getBytes(StandardCharsets.UTF_8)
   }
 
-  /** Route through the (tested) DSv2 writer into a temp dir, then return
-    * the single produced file's bytes — zipped with its sidecars for
-    * shapefile. */
   private def dirBytes(f: File): Long = {
     val kids = f.listFiles()
     if (kids == null) 0L
@@ -192,9 +191,14 @@ object GdalWrite {
       acc + (if (k.isDirectory) dirBytes(k) else k.length()))
   }
 
-  private def fileBytes(df: DataFrame, fmt: String, mainExt: String,
-      options: Map[String, String], zip: Boolean, cap: Long): Array[Byte] = {
+  /** Route through the (tested) DSv2 writer into a temp dir, then return
+    * the single produced part's main file — zipped with its sidecars when
+    * the sink's part has more than one file (shapefile). */
+  private def fileBytes(df: DataFrame, provider: WritableFeatureSourceProvider,
+      options: Map[String, String], cap: Long): Array[Byte] = {
     if (df.isEmpty) throw new GraftError.EmptyDataframe
+    val fmt = provider.shortName()
+    val mainExt = provider.sink.extensions.head
     val dir = Files.createTempDirectory("graft_bytes_out_").toFile
     try {
       // Plan-gate-exempt shapes (joins/aggregates — no credible size
@@ -237,7 +241,7 @@ object GdalWrite {
       val total = produced.map(_.length).sum
       if (total > cap)
         throw new GraftError.DriverBytesTooLarge(BigInt(total), cap)
-      if (!zip) {
+      if (provider.sink.extensions.size == 1) {
         val main = produced.find(_.getName.endsWith(mainExt)).getOrElse(
           throw new IllegalStateException(s"$fmt writer produced no $mainExt file"))
         Files.readAllBytes(main.toPath)
@@ -255,9 +259,6 @@ object GdalWrite {
         zos.close()
         bos.toByteArray
       }
-    } finally {
-      dir.listFiles().foreach(_.delete())
-      dir.delete()
-    }
+    } finally TempDirs.deleteTree(dir)
   }
 }

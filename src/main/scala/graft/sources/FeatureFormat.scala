@@ -78,88 +78,6 @@ trait FeatureFormat extends Serializable {
   def handlesBbox: Boolean = false
 }
 
-/** Append-a-layer support for the file-per-partition writers (reference
-  * `gdal_layer_from_df` adds a named layer to an existing dataset,
-  * src/lib.rs:499). Overwrite keeps the classic `part-NNNNN` names; append
-  * writes `${layerName}-NNNNN` files next to the existing ones and
-  * refuses to clobber a layer that is already present. */
-/** Task-attempt file isolation shared by every single-file-per-partition
-  * writer: each attempt streams into its own hidden
-  * `.<final>.t<taskId>.inprogress` sibling (an extension no format's
-  * discovery matches), promoted to the final name only on task commit —
-  * a speculative duplicate or failed/retried attempt can neither
-  * interleave bytes with the winner nor leave a truncated file a later
-  * read would parse. */
-/** Carried by every task-commit message: the final file(s) the task
-  * promoted. Job commit re-verifies their existence via
-  * [[AttemptFile.verifyCommitted]], closing the narrow delete-then-retry
-  * window in [[AttemptFile.promote]]: a zombie attempt killed between its
-  * fallback `delete(final)` and `rename` removes the winner's file, and
-  * without this check the job would report success over a dataset missing
-  * a whole partition. */
-trait CommittedFiles { def committedPaths: Seq[String] }
-
-object AttemptFile {
-  def temp(finalFile: java.io.File, taskId: Long): java.io.File =
-    new java.io.File(finalFile.getParentFile,
-      s".${finalFile.getName}.t$taskId.inprogress")
-
-  /** Job-commit existence check over the paths the task commits reported.
-    * Runs on the driver after ALL tasks finished — any file a committed
-    * task promoted that is no longer present means a task-commit race
-    * (or external deletion) lost data, and the job must fail loudly
-    * rather than publish a partial dataset. */
-  def verifyCommitted(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val missing = messages.toSeq
-      .collect { case c: CommittedFiles => c.committedPaths }
-      .flatten.distinct
-      .filterNot(p => new java.io.File(p).exists())
-    if (missing.nonEmpty)
-      throw new java.io.IOException(
-        "job commit: task-committed file(s) missing: " + missing.sorted.mkString(", ") +
-        " (task-commit race or external deletion); failing the job instead of " +
-        "publishing a dataset with lost partitions")
-  }
-
-  /** Last committer wins; a failed rename aborts the task loudly.
-    * Rename FIRST (POSIX renameTo overwrites the destination atomically,
-    * so the common path never opens a window where the final file is
-    * absent); only on a failed rename (non-POSIX semantics) fall back to
-    * delete-then-retry — a zombie attempt killed inside that narrow
-    * fallback is detectable because its own rename never lands. */
-  def promote(tmp: java.io.File, finalFile: java.io.File): Unit = {
-    if (!tmp.renameTo(finalFile)) {
-      if (finalFile.exists()) finalFile.delete()
-      if (!tmp.renameTo(finalFile))
-        throw new java.io.IOException(
-          s"task commit rename failed: $tmp -> $finalFile")
-    }
-  }
-
-  /** Overwrite-mode cleanup of debris from crashed prior jobs (only on
-    * truncate — a concurrent append job's in-flight attempts must not be
-    * swept). */
-  def cleanDebris(dir: java.io.File): Unit =
-    Option(dir.listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".inprogress")).foreach(_.delete())
-}
-
-object LayerWrite {
-  def stem(dir: java.io.File, opts: GdalOptions, truncate: Boolean): String =
-    if (truncate) "part"
-    else {
-      val s = opts.layerName.getOrElse("layer")
-      val taken = Option(dir.listFiles()).toSeq.flatten.exists { f =>
-        val n = f.getName
-        n.startsWith(s + "-") || n.startsWith(s + ".")
-      }
-      if (taken) throw new IllegalArgumentException(
-        s"layer '$s' already exists in $dir — pass a fresh layerName to add another layer")
-      s
-    }
-}
-
 object FeatureFormat {
   /** The reference's scan-time feature windowing (src/lib.rs:360-375):
     * erroring `maxFeatures` on the raw index, `offset` skip, truncating

@@ -68,11 +68,11 @@ abstract class FeatureSourceProvider extends TableProvider with DataSourceRegist
   * single `path` and the multi-path `paths` read forms (DataFrameReader
   * `.load(a, b, …)` arrives as a `paths` JSON array, not `path`) while
   * tolerating not-yet-existing write targets. Formats only supply their
-  * table constructor — the previous per-format copies of this logic had
+  * [[FeatureSink]] — the previous per-format copies of this logic had
   * each regressed to `path`-only, silently planning zero files for
   * multi-path loads. */
 abstract class WritableFeatureSourceProvider extends FeatureSourceProvider {
-  protected def newTable(schema: StructType, files: Seq[String], opts: GdalOptions): Table
+  def sink: FeatureSink
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
@@ -82,7 +82,7 @@ abstract class WritableFeatureSourceProvider extends FeatureSourceProvider {
         FeatureFormat.expand(Seq(p), format)
       else Seq(p) // write target may not exist yet
     }
-    newTable(schema, files, GdalOptions(cis))
+    new WritableFeatureTable(shortName, schema, files, GdalOptions(cis), format, sink)
   }
 }
 

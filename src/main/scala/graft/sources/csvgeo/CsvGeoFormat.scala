@@ -141,20 +141,5 @@ class CsvGeoFormat extends FeatureFormat {
 class CsvGeoSourceProvider extends WritableFeatureSourceProvider {
   override def shortName(): String = "csvgeo"
   override def format: FeatureFormat = new CsvGeoFormat
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new CsvGeoTable(schema, files, opts, format)
-}
-
-class CsvGeoTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("csvgeo", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new CsvGeoWriteBuilder(info)
+  override def sink: FeatureSink = CsvGeoSink
 }

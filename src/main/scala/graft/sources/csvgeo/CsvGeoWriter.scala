@@ -1,89 +1,33 @@
 package graft.sources.csvgeo
 
-import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter}
-import java.nio.charset.StandardCharsets
-import java.util
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
 import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter, TextPart}
 
 /** CSV-geo write path (GDAL CSV driver's `GEOMETRY=AS_WKT` convention):
   * per-partition `part-NNNNN.csv` files, geometry serialized as WKT in its
   * own column, other values CSV-quoted; Date/Timestamp as ISO strings.
   * A geometry column is required (reference CannotFindGeometryColumn
   * semantics, src/error.rs:52-54) but may be entirely null per row. */
-class CsvGeoWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("csvgeo write requires a path"))
-      new CsvGeoBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
+object CsvGeoSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".csv")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter =
+    new TextPart(part.files(0), schema.fieldNames.map(quote).mkString(",") + "\n", "") {
+      override def write(row: InternalRow): Unit = {
+        val cells = schema.fields.indices.map { i =>
+          if (row.isNullAt(i)) ""
+          else if (i == geometry.index) quote(GeomCodec.toWkt(geometry.read(row)))
+          else cell(row, i, schema.fields(i).dataType)
+        }
+        out.write(cells.mkString(","))
+        out.write("\n")
+        n += 1
+      }
     }
-  }
-}
-
-case class CsvGeoCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class CsvGeoBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".csv")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    if (!schema.fieldNames.contains(opts.geometryColumnName))
-      throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    new CsvGeoWriterFactory(path, graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    val total = messages.map { case CsvGeoCommit(n, _) => n }.sum
-    if (total == 0L) throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class CsvGeoWriterFactory(path: String, stem: String, schema: StructType, opts: GdalOptions)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new CsvGeoDataWriter(new File(path, f"$stem%s-$partitionId%05d.csv"), schema, opts, taskId)
-}
-
-class CsvGeoDataWriter(file: File, schema: StructType, opts: GdalOptions,
-    taskId: Long)
-  extends DataWriter[InternalRow] {
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-  private val out = new BufferedWriter(
-    new OutputStreamWriter(new FileOutputStream(tmp), StandardCharsets.UTF_8))
-  private var n = 0L
-  out.write(schema.fieldNames.map(quote).mkString(","))
-  out.write("\n")
-
-  override def write(row: InternalRow): Unit = {
-    val cells = schema.fields.indices.map { i =>
-      if (row.isNullAt(i)) ""
-      else if (i == geomIdx) quote(geomWkt(row, i))
-      else cell(row, i, schema.fields(i).dataType)
-    }
-    out.write(cells.mkString(","))
-    out.write("\n")
-    n += 1
-  }
-
-  private def geomWkt(row: InternalRow, i: Int): String = schema.fields(i).dataType match {
-    case BinaryType => GeomCodec.wkbToWkt(row.getBinary(i))
-    case StringType => row.getUTF8String(i).toString // already WKT/GeoJSON text
-    case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-  }
 
   private def cell(row: InternalRow, i: Int, dt: DataType): String = dt match {
     case IntegerType => row.getInt(i).toString
@@ -101,12 +45,4 @@ class CsvGeoDataWriter(file: File, schema: StructType, opts: GdalOptions,
     if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
       "\"" + s.replace("\"", "\"\"") + "\""
     else s
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    CsvGeoCommit(n, Seq(file.getAbsolutePath))
-  }
-  override def abort(): Unit = { out.close(); tmp.delete(); () }
-  override def close(): Unit = ()
 }

@@ -215,20 +215,5 @@ class FgbFormat extends FeatureFormat {
 class FgbSourceProvider extends WritableFeatureSourceProvider {
   override def shortName(): String = "flatgeobuf"
   override def format: FeatureFormat = new FgbFormat
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new FgbTable(schema, files, opts, format)
-}
-
-class FgbTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("flatgeobuf", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new FgbWriteBuilder(info)
+  override def sink: FeatureSink = FgbSink
 }

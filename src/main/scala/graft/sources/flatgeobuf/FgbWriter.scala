@@ -1,13 +1,11 @@
 package graft.sources.flatgeobuf
 
-import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.io.{BufferedOutputStream, FileOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter}
 
 /** FlatGeobuf write path: per-partition `part-NNNNN.fgb` (magic +
   * size-prefixed header + packed Hilbert R-tree + size-prefixed features
@@ -15,60 +13,19 @@ import graft.sources.{GdalOptions, GraftError}
   * geometry-less features fall back to index_node_size = 0 (no index).
   * Property columns: Int/Long/Double/Boolean/String; other types go
   * through their string form. */
-class FgbWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("flatgeobuf write requires a path"))
-      new FgbBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
-    }
-  }
+object FgbSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".fgb")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter = new FgbPart(part, schema, geometry, opts)
 }
 
-case class FgbCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class FgbBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".fgb")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    val gi = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (gi < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(gi).dataType match {
-      case BinaryType | StringType => ()
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
-    new FgbWriterFactory(path, graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    if (messages.map { case FgbCommit(n, _) => n }.sum == 0L)
-      throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class FgbWriterFactory(path: String, stem: String, schema: StructType, opts: GdalOptions)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new FgbDataWriter(new File(path, f"$stem%s-$partitionId%05d.fgb"), schema, opts, taskId)
-}
-
-class FgbDataWriter(file: File, schema: StructType, opts: GdalOptions,
-    taskId: Long)
-  extends DataWriter[InternalRow] {
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
+private final class FgbPart(part: Part, schema: StructType, geometry: GeometryColumn,
+    opts: GdalOptions) extends PartWriter {
   import FgbCodec._
 
   private val FgbIndexNodeSize = 16 // spec default
 
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
-  private val propFields = schema.fields.zipWithIndex.filter(_._2 != geomIdx)
+  private val propFields = schema.fields.zipWithIndex.filter(_._2 != geometry.index)
   private val columns = propFields.map { case (f, _) =>
     FgbColumn(f.name, f.dataType match {
       case IntegerType => CtInt
@@ -89,12 +46,7 @@ class FgbDataWriter(file: File, schema: StructType, opts: GdalOptions,
   private var allHaveGeometry = true
 
   override def write(row: InternalRow): Unit = {
-    val geom =
-      if (row.isNullAt(geomIdx)) null
-      else schema.fields(geomIdx).dataType match {
-        case BinaryType => GeomCodec.fromWkb(row.getBinary(geomIdx))
-        case _ => GeomCodec.fromWkt(row.getUTF8String(geomIdx).toString)
-      }
+    val geom = geometry.read(row)
     val values = propFields.map { case (f, i) =>
       if (row.isNullAt(i)) null
       else f.dataType match {
@@ -116,7 +68,8 @@ class FgbDataWriter(file: File, schema: StructType, opts: GdalOptions,
     n += 1
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def rows: Long = n
+  override def finish(): Unit = {
     // The packed Hilbert R-tree needs a bbox per feature; a file with any
     // geometry-less feature falls back to the index-less layout
     // (index_node_size = 0), which the spec allows and every reader honors.
@@ -136,10 +89,10 @@ class FgbDataWriter(file: File, schema: StructType, opts: GdalOptions,
     }.getOrElse(GtUnknown)
     val extent =
       if (withIndex) Some(boxes.reduce(_ expand _)) else None // spec field 1
-    val out = new BufferedOutputStream(new FileOutputStream(tmp), 1 << 16)
+    val out = new BufferedOutputStream(new FileOutputStream(part.files(0)), 1 << 16)
     try {
       out.write(Magic)
-      out.write(writeHeader(file.getName.stripSuffix(".fgb"), headerType, columns, n,
+      out.write(writeHeader(part.name, headerType, columns, n,
         if (withIndex) FgbIndexNodeSize else 0, extent))
       if (withIndex) {
         // spec clustering: features stored in Hilbert order of bbox center
@@ -151,9 +104,5 @@ class FgbDataWriter(file: File, schema: StructType, opts: GdalOptions,
         sorted.foreach(out.write)
       } else features.foreach(out.write)
     } finally out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    FgbCommit(n, Seq(file.getAbsolutePath))
   }
-  override def abort(): Unit = { tmp.delete(); () }
-  override def close(): Unit = ()
 }

@@ -199,85 +199,18 @@ object GeoJsonSeqFormat {
 class GeoJsonSeqSourceProvider extends WritableFeatureSourceProvider {
   override def shortName(): String = "geojsonseq"
   override def format: FeatureFormat = new GeoJsonSeqFormat
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new GeoJsonSeqTable(schema, files, opts, format)
+  override def sink: FeatureSink = GeoJsonSeqSink
 }
 
-class GeoJsonSeqTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("geojsonseq", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GeoJsonSeqWriteBuilder(info)
-}
-
-class GeoJsonSeqWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-  extends org.apache.spark.sql.connector.write.WriteBuilder
-  with org.apache.spark.sql.connector.write.SupportsTruncate {
-  import org.apache.spark.sql.connector.write._
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("geojsonseq write requires a path"))
-      new GeoJsonSeqBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
+object GeoJsonSeqSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".geojsonl")
+  override def writer(part: Part, schema: org.apache.spark.sql.types.StructType,
+      geometry: GeometryColumn, opts: GdalOptions): PartWriter =
+    new TextPart(part.files(0), "", "") {
+      override def write(row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+        GeoJsonRowSerializer.writeFeature(row, schema, geometry, out)
+        out.write("\n")
+        n += 1
+      }
     }
-  }
-}
-
-class GeoJsonSeqBatchWrite(path: String, schema: org.apache.spark.sql.types.StructType,
-    opts: GdalOptions, truncate: Boolean)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new java.io.File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".geojsonl")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    GeoJsonRowSerializer.geometryIndex(schema, opts)
-    new GeoJsonSeqWriterFactory(path, schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    graft.sources.AttemptFile.verifyCommitted(messages)
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class GeoJsonSeqWriterFactory(path: String, schema: org.apache.spark.sql.types.StructType,
-    opts: GdalOptions) extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  import org.apache.spark.sql.connector.write._
-  override def createWriter(partitionId: Int, taskId: Long)
-    : DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    new GeoJsonSeqDataWriter(
-      new java.io.File(path, f"part-$partitionId%05d.geojsonl"), schema, opts, taskId)
-}
-
-class GeoJsonSeqDataWriter(file: java.io.File,
-    schema: org.apache.spark.sql.types.StructType, opts: GdalOptions,
-    taskId: Long)
-  extends org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] {
-  import org.apache.spark.sql.connector.write._
-  private val geomIdx = GeoJsonRowSerializer.geometryIndex(schema, opts)
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-  private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-    new java.io.FileOutputStream(tmp), StandardCharsets.UTF_8))
-
-  override def write(row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
-    GeoJsonRowSerializer.writeFeature(row, schema, geomIdx, opts, out)
-    out.write("\n")
-  }
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    GeoJsonCommit(0, Seq(file.getAbsolutePath))
-  }
-  override def abort(): Unit = { out.close(); tmp.delete(); () }
-  override def close(): Unit = ()
 }

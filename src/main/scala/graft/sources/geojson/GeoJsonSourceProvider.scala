@@ -1,14 +1,5 @@
 package graft.sources.geojson
 
-import java.util
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-
 import graft.sources._
 
 /** `spark.read.format("geojson")` / `df.write.format("geojson")` (S1 + W3,
@@ -16,18 +7,5 @@ import graft.sources._
 class GeoJsonSourceProvider extends WritableFeatureSourceProvider {
   override def shortName(): String = "geojson"
   override def format: FeatureFormat = new GeoJsonFormat
-  protected override def newTable(schema: StructType, files: Seq[String],
-      opts: GdalOptions): Table = new GeoJsonTable(schema, files, opts, format)
-}
-
-class GeoJsonTable(schema: StructType, files: Seq[String], opts: GdalOptions,
-    format: FeatureFormat)
-  extends FeatureTable("geojson", schema, files, opts, format) with SupportsWrite {
-
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GeoJsonWriteBuilder(info)
+  override def sink: FeatureSink = GeoJsonSink
 }

@@ -1,16 +1,13 @@
 package graft.sources.geojson
 
-import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter, Writer}
-import java.nio.charset.StandardCharsets
-import java.util
+import java.io.Writer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, DateTimeUtils}
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
 import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter, TextPart}
 
 /** GeoJSON write path (reference W1/W3 — src/lib.rs:499-573, 629-642),
   * Spark-shaped: each partition writes `part-NNNNN.geojson` (a complete
@@ -25,32 +22,12 @@ import graft.sources.{GdalOptions, GraftError}
   * single-node, W2 parity).
   */
 object GeoJsonRowSerializer {
-  /** Locate + validate the geometry column (reference src/lib.rs:523-525,
-    * 713-733): Binary → WKB, String → WKT or GeoJSON per option. */
-  def geometryIndex(schema: StructType, opts: GdalOptions): Int = {
-    val i = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (i < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(i).dataType match {
-      case BinaryType | StringType => i
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
-  }
-
-  def writeFeature(row: InternalRow, schema: StructType, geomIdx: Int,
-      opts: GdalOptions, out: Writer): Unit = {
+  def writeFeature(row: InternalRow, schema: StructType, geometry: GeometryColumn,
+      out: Writer): Unit = {
+    val geomIdx = geometry.index
     out.write("""{"type":"Feature","geometry":""")
-    if (row.isNullAt(geomIdx)) out.write("null")
-    else schema.fields(geomIdx).dataType match {
-      case BinaryType => out.write(GeomCodec.wkbToGeoJson(row.getBinary(geomIdx)))
-      case StringType =>
-        val s = row.getUTF8String(geomIdx).toString
-        val wkb = opts.geometryFormat match {
-          case "geojson" => GeomCodec.geoJsonToWkb(s)
-          case _ => GeomCodec.wktToWkb(s) // wkt is the string default
-        }
-        out.write(GeomCodec.wkbToGeoJson(wkb))
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
+    val g = geometry.read(row)
+    out.write(if (g == null) "null" else GeomCodec.toGeoJson(g))
     out.write(""","properties":{""")
     var first = true
     var i = 0
@@ -123,70 +100,17 @@ object GeoJsonRowSerializer {
   }
 }
 
-class GeoJsonWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("geojson write requires a path"))
-      new GeoJsonBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
+/** `part-NNNNN.geojson`: one FeatureCollection per part. */
+object GeoJsonSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".geojson")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter =
+    new TextPart(part.files(0), """{"type":"FeatureCollection","features":[""", "\n]}\n") {
+      override def write(row: InternalRow): Unit = {
+        if (n > 0) out.write(",")
+        out.write("\n")
+        GeoJsonRowSerializer.writeFeature(row, schema, geometry, out)
+        n += 1
+      }
     }
-  }
-}
-
-case class GeoJsonCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class GeoJsonBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".geojson")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    GeoJsonRowSerializer.geometryIndex(schema, opts) // fail fast on the driver
-    new GeoJsonWriterFactory(path, graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    val total = messages.map { case GeoJsonCommit(n, _) => n }.sum
-    if (total == 0L) throw new GraftError.EmptyDataframe // ref src/lib.rs:509-511
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class GeoJsonWriterFactory(path: String, stem: String, schema: StructType, opts: GdalOptions)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GeoJsonDataWriter(new File(path, f"$stem%s-$partitionId%05d.geojson"), schema, opts, taskId)
-}
-
-class GeoJsonDataWriter(file: File, schema: StructType, opts: GdalOptions,
-    taskId: Long)
-  extends DataWriter[InternalRow] {
-  private val geomIdx = GeoJsonRowSerializer.geometryIndex(schema, opts)
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-  private val out = new BufferedWriter(
-    new OutputStreamWriter(new FileOutputStream(tmp), StandardCharsets.UTF_8))
-  private var n = 0L
-  out.write("""{"type":"FeatureCollection","features":[""")
-
-  override def write(row: InternalRow): Unit = {
-    if (n > 0) out.write(",")
-    out.write("\n")
-    GeoJsonRowSerializer.writeFeature(row, schema, geomIdx, opts, out)
-    n += 1
-  }
-  override def commit(): WriterCommitMessage = {
-    out.write("\n]}\n")
-    out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    GeoJsonCommit(n, Seq(file.getAbsolutePath))
-  }
-  override def abort(): Unit = { out.close(); tmp.delete(); () }
-  override def close(): Unit = ()
 }

@@ -91,20 +91,5 @@ class GpkgFormat extends SqliteVectorFormat {
 class GpkgSourceProvider extends WritableFeatureSourceProvider {
   override def format: FeatureFormat = new GpkgFormat
   override def shortName(): String = "gpkg"
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new GpkgTable(schema, files, opts, format)
-}
-
-class GpkgTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("gpkg", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new GpkgWriteBuilder(info)
+  override def sink: FeatureSink = GpkgSink
 }

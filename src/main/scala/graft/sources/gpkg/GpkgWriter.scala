@@ -3,11 +3,9 @@ package graft.sources.gpkg
 import java.io.{File, FileOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter}
 import graft.sources.spatialite.SqliteWriter
 
 /** GeoPackage write path: per-partition `part-NNNNN.gpkg`, each a
@@ -18,52 +16,11 @@ import graft.sources.spatialite.SqliteWriter
   * Readable by our own reader, GDAL, and plain sqlite3. Rows buffer per
   * partition file because b-tree construction needs the full
   * rowid-ordered set; partitions are executor-sized, not corpus-sized. */
-class GpkgWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("gpkg write requires a path"))
-      new GpkgBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
-    }
-  }
-}
+object GpkgSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".gpkg")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter = new GpkgPart(part.files(0), schema, geometry, opts)
 
-case class GpkgCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class GpkgBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".gpkg")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    val gi = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (gi < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(gi).dataType match {
-      case BinaryType | StringType => ()
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
-    new GpkgWriterFactory(path,
-      graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    if (messages.map { case GpkgCommit(n, _) => n }.sum == 0L)
-      throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class GpkgWriterFactory(path: String, stem: String, schema: StructType,
-    opts: GdalOptions) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GpkgDataWriter(new File(path, f"$stem%s-$partitionId%05d.gpkg"), schema, opts, taskId)
-}
-
-object GpkgDataWriter {
   /** Deterministic last_change (the spec's column is NOT NULL; a wall
     * clock would make writes non-reproducible). */
   val LastChange = "2000-01-01T00:00:00.000Z"
@@ -85,13 +42,11 @@ object GpkgDataWriter {
   }
 }
 
-class GpkgDataWriter(file: File, schema: StructType, opts: GdalOptions,
-    taskId: Long)
-  extends DataWriter[InternalRow] {
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-  import GpkgDataWriter._
+private final class GpkgPart(file: File, schema: StructType, geometry: GeometryColumn,
+    opts: GdalOptions) extends PartWriter {
+  import GpkgSink._
 
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
+  private val geomIdx = geometry.index
   private val geomName = opts.geometryColumnName
   private val table = opts.layerName.getOrElse("layer")
   private val propFields = schema.fields.zipWithIndex.filter(_._2 != geomIdx)
@@ -103,7 +58,7 @@ class GpkgDataWriter(file: File, schema: StructType, opts: GdalOptions,
     case _ => "TEXT"
   }
 
-  private val rows = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+  private val records = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
   private var firstGeomClass = 0
   private var minX = Double.NaN
   private var minY = Double.NaN
@@ -120,13 +75,10 @@ class GpkgDataWriter(file: File, schema: StructType, opts: GdalOptions,
   }.getOrElse(4326)
 
   override def write(row: InternalRow): Unit = {
+    val g = geometry.read(row)
     val geomBlob: Array[Byte] =
-      if (row.isNullAt(geomIdx)) null
+      if (g == null) null
       else {
-        val g = schema.fields(geomIdx).dataType match {
-          case BinaryType => GeomCodec.fromWkb(row.getBinary(geomIdx))
-          case _ => GeomCodec.fromWkt(row.getUTF8String(geomIdx).toString)
-        }
         if (firstGeomClass == 0) firstGeomClass = g match {
           case _: org.locationtech.jts.geom.Point => 1
           case _: org.locationtech.jts.geom.LineString => 2
@@ -156,17 +108,18 @@ class GpkgDataWriter(file: File, schema: StructType, opts: GdalOptions,
         case dt => row.get(i, dt).toString
       }
     }.toSeq
-    rows += (vals :+ geomBlob)
+    records += (vals :+ geomBlob)
   }
 
   private val typeName = Map(1 -> "POINT", 2 -> "LINESTRING", 3 -> "POLYGON",
     4 -> "MULTIPOINT", 5 -> "MULTILINESTRING", 6 -> "MULTIPOLYGON")
 
-  override def commit(): WriterCommitMessage = {
+  override def rows: Long = records.length.toLong
+  override def finish(): Unit = {
     val w = new SqliteWriter()
     def n(d: Double): Any = if (d.isNaN) null else Double.box(d)
     // fid lives in the rowid (INTEGER PRIMARY KEY → null in the record)
-    val dataRoot = w.buildTableBtree(rows.zipWithIndex.map { case (vals, i) =>
+    val dataRoot = w.buildTableBtree(records.zipWithIndex.map { case (vals, i) =>
       (i + 1L, w.encodeRecord(null +: (vals.last +: vals.dropRight(1))))
     }.toSeq)
     val srsRows = (Seq(
@@ -200,11 +153,7 @@ class GpkgDataWriter(file: File, schema: StructType, opts: GdalOptions,
       ("gpkg_geometry_columns", "gpkg_geometry_columns", gcRoot,
         "CREATE TABLE gpkg_geometry_columns(table_name TEXT, column_name TEXT, " +
           "geometry_type_name TEXT, srs_id INTEGER, z TINYINT, m TINYINT)")))
-    val out = new FileOutputStream(tmp)
-    try out.write(GpkgDataWriter.stampHeader(bytes)) finally out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    GpkgCommit(rows.length.toLong, Seq(file.getAbsolutePath))
+    val out = new FileOutputStream(file)
+    try out.write(stampHeader(bytes)) finally out.close()
   }
-  override def abort(): Unit = { tmp.delete(); () }
-  override def close(): Unit = ()
 }

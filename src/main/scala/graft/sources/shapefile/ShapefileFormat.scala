@@ -155,20 +155,5 @@ class ShapefileFormat extends FeatureFormat {
 class ShapefileSourceProvider extends WritableFeatureSourceProvider {
   override def shortName(): String = "shapefile"
   override def format: FeatureFormat = new ShapefileFormat
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new ShapefileTable(schema, files, opts, format)
-}
-
-class ShapefileTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("shapefile", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new ShapefileWriteBuilder(info)
+  override def sink: FeatureSink = ShapefileSink
 }

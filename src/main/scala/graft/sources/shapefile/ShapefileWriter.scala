@@ -4,82 +4,23 @@ import java.io.File
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter}
 
 /** Shapefile write path (reference W1 for the ESRI driver): each partition
-  * emits a `part-NNNNN.shp/.shx/.dbf` triple; unsupported column types are
-  * silently filtered like the reference (src/lib.rs:514-521); the geometry
-  * column is required and must be WKB Binary or WKT String
-  * (CannotFindGeometryColumn / GeometryColumnWrongType parity). Coalesce
-  * to one partition for a classic single-shapefile dataset. */
-class ShapefileWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("shapefile write requires a path"))
-      new ShapefileBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
-    }
-  }
+  * emits a `part-NNNNN.shp/.shx/.dbf` triple, plus a `.prj` when `srs` is
+  * set; unsupported column types are silently filtered like the reference
+  * (src/lib.rs:514-521). Coalesce to one partition for a classic
+  * single-shapefile dataset. */
+object ShapefileSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".shp", ".shx", ".dbf", ".prj")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter = new ShapefilePart(part.files, schema, geometry, opts)
 }
 
-case class ShpCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class ShapefileBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles()
-      .filter(f => Seq(".shp", ".shx", ".dbf", ".prj").exists(f.getName.endsWith)).foreach(_.delete())
-    if (truncate) {
-      val ip = new java.io.File(dir, ".inprogress")
-      Option(ip.listFiles()).toSeq.flatten.foreach(_.delete())
-    }
-    val gi = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (gi < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(gi).dataType match {
-      case BinaryType | StringType => ()
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
-    new ShapefileWriterFactory(path, graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    if (messages.map { case ShpCommit(n, _) => n }.sum == 0L)
-      throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class ShapefileWriterFactory(path: String, stem: String, schema: StructType, opts: GdalOptions)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShapefileDataWriter(new File(path, f"$stem%s-$partitionId%05d").getAbsolutePath,
-      schema, opts, taskId)
-}
-
-/** Task-attempt isolated like every other writer, but with the sidecar
-  * twist: the temp names must NOT end in .shp/.dbf (extension-based
-  * discovery would pick them up), so each attempt writes its whole
-  * .shp/.shx/.dbf(.prj) set inside a hidden `.inprogress/` subdirectory
-  * (file listings are non-recursive) and commit() renames the set into
-  * place. */
-class ShapefileDataWriter(base: String, schema: StructType, opts: GdalOptions,
-    taskId: Long) extends DataWriter[InternalRow] {
-  private val attemptBase = {
-    val f = new File(base)
-    val d = new File(f.getParentFile, ".inprogress")
-    d.mkdirs()
-    new File(d, s"${f.getName}.t$taskId").getAbsolutePath
-  }
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
+private final class ShapefilePart(files: IndexedSeq[File], schema: StructType,
+    geometry: GeometryColumn, opts: GdalOptions) extends PartWriter {
   private val fields = ShpWriter.dbfFields(schema, opts.geometryColumnName)
   private val fieldIdx = fields.map(f => schema.fieldNames.indexOf(f.name))
   private val forcedType = opts.geometryType.map {
@@ -90,16 +31,11 @@ class ShapefileDataWriter(base: String, schema: StructType, opts: GdalOptions,
     case other => throw new IllegalArgumentException(
       s"unsupported shapefile geometryType '$other'")
   }.getOrElse(0)
-  private val writer = new ShpWriter(attemptBase, fields, forcedType)
+  private val writer = new ShpWriter(files(0), files(1), files(2), fields, forcedType)
   private var n = 0L
 
   override def write(row: InternalRow): Unit = {
-    val geom =
-      if (row.isNullAt(geomIdx)) null
-      else schema.fields(geomIdx).dataType match {
-        case BinaryType => GeomCodec.fromWkb(row.getBinary(geomIdx))
-        case _ => GeomCodec.fromWkt(row.getUTF8String(geomIdx).toString)
-      }
+    val geom = geometry.read(row)
     val values = fieldIdx.map { i =>
       if (row.isNullAt(i)) null
       else schema.fields(i).dataType match {
@@ -117,28 +53,12 @@ class ShapefileDataWriter(base: String, schema: StructType, opts: GdalOptions,
     writer.write(geom, values)
     n += 1
   }
-  override def commit(): WriterCommitMessage = {
+
+  override def rows: Long = n
+  override def finish(): Unit = {
     writer.close()
     // reference WriteParams.srs (src/lib.rs:106,544): the ESRI sidecar
-    opts.srs.foreach { s =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(attemptBase + ".prj"), ShpWriter.prjWkt(s))
-    }
-    val promoted = Seq(".shp", ".shx", ".dbf", ".prj").flatMap { ext =>
-      val t = new File(attemptBase + ext)
-      if (t.exists()) {
-        val f = new File(base + ext)
-        graft.sources.AttemptFile.promote(t, f)
-        Some(f.getAbsolutePath)
-      } else None
-    }
-    ShpCommit(n, promoted)
+    opts.srs.foreach(s => java.nio.file.Files.writeString(files(3).toPath, ShpWriter.prjWkt(s)))
   }
-  override def abort(): Unit = {
-    writer.close()
-    Seq(".shp", ".shx", ".dbf", ".prj")
-      .foreach(ext => new File(attemptBase + ext).delete())
-    ()
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = writer.close()
 }

@@ -13,11 +13,11 @@ import org.locationtech.jts.geom.impl.CoordinateArraySequence
   * the 2D types: Point, MultiPoint, PolyLine (Line/MultiLineString),
   * Polygon (Polygon/MultiPolygon; shells forced clockwise, holes
   * counter-clockwise per spec). */
-final class ShpWriter(basePath: String, fields: Seq[Dbf.Field],
+final class ShpWriter(shpFile: File, shxFile: File, dbfFile: File, fields: Seq[Dbf.Field],
     forcedShapeType: Int = 0) {
-  private val shp = new RandomAccessFile(basePath + ".shp", "rw")
-  private val shx = new RandomAccessFile(basePath + ".shx", "rw")
-  private val dbf = new RandomAccessFile(basePath + ".dbf", "rw")
+  private val shp = new RandomAccessFile(shpFile, "rw")
+  private val shx = new RandomAccessFile(shxFile, "rw")
+  private val dbf = new RandomAccessFile(dbfFile, "rw")
   shp.setLength(0); shx.setLength(0); dbf.setLength(0)
 
   private var recNum = 0

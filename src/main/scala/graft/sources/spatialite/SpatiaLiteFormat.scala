@@ -181,20 +181,5 @@ class SpatiaLiteFormat extends SqliteVectorFormat {
 class SpatiaLiteSourceProvider extends WritableFeatureSourceProvider {
   override def format: FeatureFormat = new SpatiaLiteFormat
   override def shortName(): String = "spatialite"
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new SpatiaLiteTable(schema, files, opts, format)
-}
-
-class SpatiaLiteTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("spatialite", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new SpatiaLiteWriteBuilder(info)
+  override def sink: FeatureSink = SpatiaLiteSink
 }

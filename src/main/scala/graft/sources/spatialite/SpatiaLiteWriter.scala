@@ -3,11 +3,9 @@ package graft.sources.spatialite
 import java.io.{File, FileOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter}
 
 /** SpatiaLite write path: per-partition `part-NNNNN.sqlite`, each a
   * self-contained database (sqlite_master + geometry_columns + the data
@@ -17,57 +15,15 @@ import graft.sources.{GdalOptions, GraftError}
   * comes from `layerName` (default "layer"). Rows buffer per partition
   * file because b-tree construction needs the full rowid-ordered set;
   * partitions are executor-sized, not corpus-sized. */
-class SpatiaLiteWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("spatialite write requires a path"))
-      new SpatiaLiteBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
-    }
-  }
+object SpatiaLiteSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".sqlite")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter = new SpatiaLitePart(part.files(0), schema, geometry, opts)
 }
 
-case class SpatiaLiteCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class SpatiaLiteBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".sqlite")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    val gi = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (gi < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(gi).dataType match {
-      case BinaryType | StringType => ()
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
-    new SpatiaLiteWriterFactory(path,
-      graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    if (messages.map { case SpatiaLiteCommit(n, _) => n }.sum == 0L)
-      throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class SpatiaLiteWriterFactory(path: String, stem: String, schema: StructType,
-    opts: GdalOptions) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SpatiaLiteDataWriter(new File(path, f"$stem%s-$partitionId%05d.sqlite"), schema, opts, taskId)
-}
-
-class SpatiaLiteDataWriter(file: File, schema: StructType, opts: GdalOptions,
-    taskId: Long)
-  extends DataWriter[InternalRow] {
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
+private final class SpatiaLitePart(file: File, schema: StructType, geometry: GeometryColumn,
+    opts: GdalOptions) extends PartWriter {
+  private val geomIdx = geometry.index
   private val geomName = opts.geometryColumnName
   private val table = opts.layerName.getOrElse("layer")
   private val propFields = schema.fields.zipWithIndex.filter(_._2 != geomIdx)
@@ -79,7 +35,7 @@ class SpatiaLiteDataWriter(file: File, schema: StructType, opts: GdalOptions,
     case _ => "TEXT"
   }
 
-  private val rows = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+  private val records = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
   private var firstGeomClass = 0
   // reference WriteParams.srs (src/lib.rs:106): SpatiaLite stores an
   // integer srid, so only "EPSG:nnnn" or a bare number is representable —
@@ -93,13 +49,10 @@ class SpatiaLiteDataWriter(file: File, schema: StructType, opts: GdalOptions,
   }.getOrElse(4326)
 
   override def write(row: InternalRow): Unit = {
+    val g = geometry.read(row)
     val geomBlob: Array[Byte] =
-      if (row.isNullAt(geomIdx)) null
+      if (g == null) null
       else {
-        val g = schema.fields(geomIdx).dataType match {
-          case BinaryType => GeomCodec.fromWkb(row.getBinary(geomIdx))
-          case _ => GeomCodec.fromWkt(row.getUTF8String(geomIdx).toString)
-        }
         if (firstGeomClass == 0) firstGeomClass = g match {
           case _: org.locationtech.jts.geom.Point => 1
           case _: org.locationtech.jts.geom.LineString => 2
@@ -124,13 +77,14 @@ class SpatiaLiteDataWriter(file: File, schema: StructType, opts: GdalOptions,
         case dt => row.get(i, dt).toString
       }
     }.toSeq
-    rows += (vals :+ geomBlob)
+    records += (vals :+ geomBlob)
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def rows: Long = records.length.toLong
+  override def finish(): Unit = {
     val w = new SqliteWriter()
     // data table b-tree
-    val dataRoot = w.buildTableBtree(rows.zipWithIndex.map { case (vals, i) =>
+    val dataRoot = w.buildTableBtree(records.zipWithIndex.map { case (vals, i) =>
       (i + 1L, w.encodeRecord(vals))
     }.toSeq)
     // geometry_columns metadata (what our reader and GDAL list as layers)
@@ -144,11 +98,7 @@ class SpatiaLiteDataWriter(file: File, schema: StructType, opts: GdalOptions,
         "CREATE TABLE geometry_columns(f_table_name TEXT, f_geometry_column TEXT, " +
           "geometry_type INTEGER, coord_dimension INTEGER, srid INTEGER, " +
           "spatial_index_enabled INTEGER)")))
-    val out = new FileOutputStream(tmp)
+    val out = new FileOutputStream(file)
     try out.write(bytes) finally out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    SpatiaLiteCommit(rows.length.toLong, Seq(file.getAbsolutePath))
   }
-  override def abort(): Unit = { tmp.delete(); () }
-  override def close(): Unit = ()
 }

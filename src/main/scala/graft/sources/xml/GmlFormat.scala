@@ -246,20 +246,5 @@ class GmlFormat extends FeatureFormat {
 class GmlSourceProvider extends WritableFeatureSourceProvider {
   override def format: FeatureFormat = new GmlFormat
   override def shortName(): String = "gml"
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new GmlTable(schema, files, opts, format)
-}
-
-class GmlTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("gml", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new GmlWriteBuilder(info)
+  override def sink: FeatureSink = GmlSink
 }

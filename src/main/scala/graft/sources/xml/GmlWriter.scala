@@ -1,16 +1,13 @@
 package graft.sources.xml
 
-import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter, Writer}
-import java.nio.charset.StandardCharsets
+import java.io.Writer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.locationtech.jts.geom._
 
-import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter, TextPart}
 
 /** GML write path (the [[GmlFormat]] reader's inverse, completing the
   * read/write matrix for the WFS/INSPIRE interchange format): each
@@ -76,8 +73,9 @@ object GmlSerializer {
   /** One featureMember. `gml_id` (when present and non-null) becomes the
     * gml:id attribute; other non-null, non-binary properties become
     * child elements (nulls skipped — the reader's ragged contract). */
-  def writeFeature(row: InternalRow, schema: StructType, geomIdx: Int,
+  def writeFeature(row: InternalRow, schema: StructType, geom: GeometryColumn,
       typeName: String, fallbackId: String, out: Writer): Unit = {
+    val geomIdx = geom.index
     val idIdx = schema.fieldNames.indexOf("gml_id")
     val id =
       if (idIdx >= 0 && idIdx != geomIdx && !row.isNullAt(idIdx))
@@ -93,11 +91,8 @@ object GmlSerializer {
         out.write(KmlSerializer.xml(valueString(row, i, schema.fields(i).dataType)))
         out.write(s"</app:${n}>")
       }
-    if (!row.isNullAt(geomIdx)) {
-      val g = schema.fields(geomIdx).dataType match {
-        case BinaryType => GeomCodec.fromWkb(row.getBinary(geomIdx))
-        case _ => GeomCodec.fromWkt(row.getUTF8String(geomIdx).toString)
-      }
+    val g = geom.read(row)
+    if (g != null) {
       out.write("<app:geom>")
       geometry(g, out)
       out.write("</app:geom>")
@@ -118,91 +113,35 @@ object GmlSerializer {
   }
 }
 
-class GmlWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("gml write requires a path"))
-      new GmlBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
-    }
-  }
-}
+object GmlSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".gml")
 
-case class GmlCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class GmlBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".gml")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    val gi = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (gi < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(gi).dataType match {
-      case BinaryType | StringType => ()
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
+  override def check(schema: StructType, geometryIndex: Int, opts: GdalOptions): Unit = {
     // every column emitted as an element name must be a valid XML NCName
     // (no colons/spaces/leading digits) or the produced document is
     // malformed and GmlFormat cannot read it back — fail fast at plan
-    // time, mirroring the geometry-column checks above
+    // time, like the geometry-column checks
     val ncName = "^[\\p{L}_][\\p{L}\\p{N}._\\-]*$".r
     val elementCols = schema.fields.zipWithIndex.collect {
-      case (f, i) if i != gi && f.name != "gml_id" && f.dataType != BinaryType => f.name
+      case (f, i) if i != geometryIndex && f.name != "gml_id" && f.dataType != BinaryType => f.name
     }
     val bad = (elementCols :+ opts.layerName.getOrElse("feature"))
       .filterNot(n => ncName.matches(n))
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"gml write: column/layer names must be XML NCNames (letter/_ start, no colons or spaces): ${bad.mkString(", ")}")
-    new GmlWriterFactory(path, graft.sources.LayerWrite.stem(dir, opts, truncate),
-      schema, opts)
   }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    if (messages.map { case GmlCommit(n, _) => n }.sum == 0L)
-      throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
 
-class GmlWriterFactory(path: String, stem: String, schema: StructType, opts: GdalOptions)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GmlDataWriter(new File(path, f"$stem%s-$partitionId%05d.gml"), schema, opts,
-      partitionId, taskId)
-}
-
-/** Task-attempt isolated: each attempt streams into its own
-  * `<final>.t<taskId>.inprogress` sibling (an extension the reader's
-  * discovery never matches), promoted to the final name only in
-  * commit() — a speculative duplicate or failed attempt can neither
-  * interleave bytes with the winner nor leave a truncated .gml a later
-  * read would parse. */
-class GmlDataWriter(file: File, schema: StructType, opts: GdalOptions, pid: Int,
-    taskId: Long) extends DataWriter[InternalRow] {
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
-  private val typeName = opts.layerName.getOrElse("feature")
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-  private val out = new BufferedWriter(
-    new OutputStreamWriter(new FileOutputStream(tmp), StandardCharsets.UTF_8))
-  private var n = 0L
-  out.write("""<?xml version="1.0" encoding="UTF-8"?>""")
-  out.write("\n<gml:FeatureCollection xmlns:gml=\"http://www.opengis.net/gml\" xmlns:app=\"http://graft.example/app\">\n")
-
-  override def write(row: InternalRow): Unit = {
-    GmlSerializer.writeFeature(row, schema, geomIdx, typeName, s"f$pid-$n", out)
-    n += 1
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter = {
+    val typeName = opts.layerName.getOrElse("feature")
+    new TextPart(part.files(0),
+      "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<gml:FeatureCollection " +
+        "xmlns:gml=\"http://www.opengis.net/gml\" xmlns:app=\"http://graft.example/app\">\n",
+      "</gml:FeatureCollection>\n") {
+      override def write(row: InternalRow): Unit = {
+        GmlSerializer.writeFeature(row, schema, geometry, typeName, s"f${part.id}-$n", out)
+        n += 1
+      }
+    }
   }
-  override def commit(): WriterCommitMessage = {
-    out.write("</gml:FeatureCollection>\n")
-    out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    GmlCommit(n, Seq(file.getAbsolutePath))
-  }
-  override def abort(): Unit = { out.close(); tmp.delete(); () }
-  override def close(): Unit = ()
 }

@@ -185,20 +185,5 @@ class GpxFormat extends FeatureFormat {
 class GpxSourceProvider extends WritableFeatureSourceProvider {
   override def format: FeatureFormat = new GpxFormat
   override def shortName(): String = "gpx"
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new GpxTable(schema, files, opts, format)
-}
-
-class GpxTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("gpx", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new GpxWriteBuilder(info)
+  override def sink: FeatureSink = GpxSink
 }

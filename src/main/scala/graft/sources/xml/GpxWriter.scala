@@ -1,14 +1,11 @@
 package graft.sources.xml
 
-import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter}
-import java.nio.charset.StandardCharsets
+import java.io.File
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
-import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter, TextPart}
 
 /** GPX write path — the waypoints layer (any-driver W1/W3 parity; the
   * reader's inverse for GDAL's default GPX layer): one `<wpt lat lon>`
@@ -19,73 +16,27 @@ import graft.sources.{GdalOptions, GraftError}
   * points — GPX routes/tracks carry structure (rte/trk nesting) that a
   * flat DataFrame write cannot express without a layer contract, so
   * non-point geometries error loudly. */
-class GpxWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("gpx write requires a path"))
-      new GpxBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
-    }
-  }
+object GpxSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".gpx")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter = new GpxPart(part.files(0), schema, geometry)
 }
 
-case class GpxCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class GpxBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".gpx")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    val gi = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (gi < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(gi).dataType match {
-      case BinaryType | StringType => ()
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
-    new GpxWriterFactory(path, graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    if (messages.map { case GpxCommit(n, _) => n }.sum == 0L)
-      throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class GpxWriterFactory(path: String, stem: String, schema: StructType, opts: GdalOptions)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GpxDataWriter(new File(path, f"$stem%s-$partitionId%05d.gpx"), schema, opts, taskId)
-}
-
-class GpxDataWriter(file: File, schema: StructType, opts: GdalOptions,
-    taskId: Long)
-  extends DataWriter[InternalRow] {
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
+private final class GpxPart(file: File, schema: StructType, geometry: GeometryColumn)
+  extends TextPart(file,
+    "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<gpx version=\"1.1\" creator=\"graft\" " +
+      "xmlns=\"http://www.topografix.com/GPX/1/1\">\n",
+    "</gpx>\n") {
   // GPX-schema child order matters for validity: ele, time, then the rest
   private val childOrder = Seq("ele", "time", "name", "cmt", "desc", "sym", "type")
   private val childIdx = childOrder.flatMap { n =>
     val i = schema.fieldNames.indexOf(n)
-    if (i >= 0 && i != geomIdx) Some((n, i)) else None
+    if (i >= 0 && i != geometry.index) Some((n, i)) else None
   }
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-  private val out = new BufferedWriter(
-    new OutputStreamWriter(new FileOutputStream(tmp), StandardCharsets.UTF_8))
-  private var n = 0L
-  out.write("""<?xml version="1.0" encoding="UTF-8"?>""")
-  out.write("\n<gpx version=\"1.1\" creator=\"graft\" xmlns=\"http://www.topografix.com/GPX/1/1\">\n")
 
   override def write(row: InternalRow): Unit = {
-    if (!row.isNullAt(geomIdx)) {
-      val g = schema.fields(geomIdx).dataType match {
-        case BinaryType => GeomCodec.fromWkb(row.getBinary(geomIdx))
-        case _ => GeomCodec.fromWkt(row.getUTF8String(geomIdx).toString)
-      }
+    val g = geometry.read(row)
+    if (g != null) {
       val p = g match {
         case pt: org.locationtech.jts.geom.Point => pt
         case other => throw new IllegalStateException(
@@ -114,12 +65,4 @@ class GpxDataWriter(file: File, schema: StructType, opts: GdalOptions,
       n += 1
     }
   }
-  override def commit(): WriterCommitMessage = {
-    out.write("</gpx>\n")
-    out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    GpxCommit(n, Seq(file.getAbsolutePath))
-  }
-  override def abort(): Unit = { out.close(); tmp.delete(); () }
-  override def close(): Unit = ()
 }

@@ -141,20 +141,5 @@ class KmlFormat extends FeatureFormat {
 class KmlSourceProvider extends WritableFeatureSourceProvider {
   override def format: FeatureFormat = new KmlFormat
   override def shortName(): String = "kml"
-  protected override def newTable(schema: org.apache.spark.sql.types.StructType,
-      files: Seq[String], opts: GdalOptions): org.apache.spark.sql.connector.catalog.Table =
-    new KmlTable(schema, files, opts, format)
-}
-
-class KmlTable(schema: org.apache.spark.sql.types.StructType, files: Seq[String],
-    opts: GdalOptions, format: FeatureFormat)
-  extends FeatureTable("kml", schema, files, opts, format)
-  with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  import org.apache.spark.sql.connector.catalog.TableCapability
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-    : org.apache.spark.sql.connector.write.WriteBuilder = new KmlWriteBuilder(info)
+  override def sink: FeatureSink = KmlSink
 }

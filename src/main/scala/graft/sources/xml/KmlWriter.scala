@@ -1,16 +1,13 @@
 package graft.sources.xml
 
-import java.io.{BufferedWriter, File, FileOutputStream, OutputStreamWriter, Writer}
-import java.nio.charset.StandardCharsets
+import java.io.Writer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.locationtech.jts.geom._
 
-import graft.geom.GeomCodec
-import graft.sources.{GdalOptions, GraftError}
+import graft.sources.{FeatureSink, GdalOptions, GeometryColumn, Part, PartWriter, TextPart}
 
 /** KML write path (any-driver W1/W3 parity; the reader's inverse): each
   * partition emits a `part-NNNNN.kml` Document of Placemarks. A `name`
@@ -62,8 +59,9 @@ object KmlSerializer {
   /** One Placemark. `name` (when present and non-null) becomes <name>;
     * other non-null properties become ExtendedData Data/value pairs
     * (null props skipped, reference src/lib.rs:562-567). */
-  def writeFeature(row: InternalRow, schema: StructType, geomIdx: Int,
-      opts: GdalOptions, out: Writer): Unit = {
+  def writeFeature(row: InternalRow, schema: StructType, geom: GeometryColumn,
+      out: Writer): Unit = {
+    val geomIdx = geom.index
     out.write("<Placemark>")
     val nameIdx = schema.fieldNames.indexOf("name")
     if (nameIdx >= 0 && nameIdx != geomIdx && !row.isNullAt(nameIdx))
@@ -80,13 +78,8 @@ object KmlSerializer {
       }
       out.write("</ExtendedData>")
     }
-    if (!row.isNullAt(geomIdx)) {
-      val g = schema.fields(geomIdx).dataType match {
-        case BinaryType => GeomCodec.fromWkb(row.getBinary(geomIdx))
-        case _ => GeomCodec.fromWkt(row.getUTF8String(geomIdx).toString)
-      }
-      geometry(g, out)
-    }
+    val g = geom.read(row)
+    if (g != null) geometry(g, out)
     out.write("</Placemark>\n")
   }
 
@@ -103,71 +96,16 @@ object KmlSerializer {
   }
 }
 
-class KmlWriteBuilder(info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val path = Option(info.options.get("path"))
-        .getOrElse(throw new IllegalArgumentException("kml write requires a path"))
-      new KmlBatchWrite(path, info.schema(), GdalOptions(info.options), doTruncate)
+object KmlSink extends FeatureSink {
+  override def extensions: Seq[String] = Seq(".kml")
+  override def writer(part: Part, schema: StructType, geometry: GeometryColumn,
+      opts: GdalOptions): PartWriter =
+    new TextPart(part.files(0),
+      "<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<kml xmlns=\"http://www.opengis.net/kml/2.2\"><Document>\n",
+      "</Document></kml>\n") {
+      override def write(row: InternalRow): Unit = {
+        KmlSerializer.writeFeature(row, schema, geometry, out)
+        n += 1
+      }
     }
-  }
-}
-
-case class KmlCommit(rows: Long, committedPaths: Seq[String] = Nil)
-  extends WriterCommitMessage with graft.sources.CommittedFiles
-
-class KmlBatchWrite(path: String, schema: StructType, opts: GdalOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val dir = new File(path)
-    if (!dir.exists()) dir.mkdirs()
-    if (truncate) dir.listFiles().filter(_.getName.endsWith(".kml")).foreach(_.delete())
-    if (truncate) graft.sources.AttemptFile.cleanDebris(dir)
-    val gi = schema.fieldNames.indexOf(opts.geometryColumnName)
-    if (gi < 0) throw new GraftError.CannotFindGeometryColumn(opts.geometryColumnName)
-    schema.fields(gi).dataType match {
-      case BinaryType | StringType => ()
-      case _ => throw new GraftError.GeometryColumnWrongType(opts.geometryColumnName)
-    }
-    new KmlWriterFactory(path, graft.sources.LayerWrite.stem(dir, opts, truncate), schema, opts)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    graft.sources.AttemptFile.verifyCommitted(messages)
-    if (messages.map { case KmlCommit(n, _) => n }.sum == 0L)
-      throw new GraftError.EmptyDataframe
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class KmlWriterFactory(path: String, stem: String, schema: StructType, opts: GdalOptions)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KmlDataWriter(new File(path, f"$stem%s-$partitionId%05d.kml"), schema, opts, taskId)
-}
-
-class KmlDataWriter(file: File, schema: StructType, opts: GdalOptions,
-    taskId: Long)
-  extends DataWriter[InternalRow] {
-  private val geomIdx = schema.fieldNames.indexOf(opts.geometryColumnName)
-  private val tmp = graft.sources.AttemptFile.temp(file, taskId)
-  private val out = new BufferedWriter(
-    new OutputStreamWriter(new FileOutputStream(tmp), StandardCharsets.UTF_8))
-  private var n = 0L
-  out.write("""<?xml version="1.0" encoding="UTF-8"?>""")
-  out.write("\n<kml xmlns=\"http://www.opengis.net/kml/2.2\"><Document>\n")
-
-  override def write(row: InternalRow): Unit = {
-    KmlSerializer.writeFeature(row, schema, geomIdx, opts, out)
-    n += 1
-  }
-  override def commit(): WriterCommitMessage = {
-    out.write("</Document></kml>\n")
-    out.close()
-    graft.sources.AttemptFile.promote(tmp, file)
-    KmlCommit(n, Seq(file.getAbsolutePath))
-  }
-  override def abort(): Unit = { out.close(); tmp.delete(); () }
-  override def close(): Unit = ()
 }

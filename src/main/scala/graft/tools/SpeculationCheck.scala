@@ -73,18 +73,12 @@ object SpeculationCheck {
     for ((dir, fmt) <- Seq(s"$out/gp.d" -> "geoparquet", s"$out/shp.d" -> "shapefile")) {
       // The zombie original is killed when the stage completes; its abort
       // (attempt-file cleanup) races this sweep — give it a grace window.
-      // The empty `.inprogress/` SUBDIRECTORY itself is shapefile's
-      // intentional attempt staging area (readers list non-recursively);
-      // only files left INSIDE it, or attempt-suffixed/tmp files at the
-      // top level, are leaks.
-      def leaks(): Seq[String] = {
-        val top = new java.io.File(dir).listFiles().toSeq
-        val staged = top.filter(f => f.isDirectory && f.getName == ".inprogress")
-          .flatMap(d => Option(d.listFiles()).toSeq.flatten)
-        (top.filter(f => f.isFile && (f.getName.endsWith(".inprogress") ||
-          f.getName.startsWith(".tmp-") || f.getName.startsWith(".old-") ||
-          f.getName.matches(".*-a\\d+\\.[a-z]+$"))) ++ staged).map(_.getName)
-      }
+      def leaks(): Seq[String] =
+        new java.io.File(dir).listFiles().toSeq.filter { f =>
+          val n = f.getName
+          n.endsWith(".inprogress") || f.isFile && (n.startsWith(".tmp-") ||
+            n.startsWith(".old-") || n.matches(".*-a\\d+\\.[a-z]+$"))
+        }.map(_.getName)
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (leaks().nonEmpty && System.nanoTime() < deadline) Thread.sleep(500)
       val leaked = leaks()

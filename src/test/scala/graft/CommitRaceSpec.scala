@@ -22,7 +22,7 @@ class CommitRaceSpec extends AnyFunSuite {
     extends WriterCommitMessage with CommittedFiles
 
   test("promote: rename-first wins without deleting the destination") {
-    val dir = Files.createTempDirectory("race").toFile
+    val dir = TempDirs.untilExit("race")
     val tmp = new java.io.File(dir, ".part-00000.geojsonl.t1.inprogress")
     val fin = new java.io.File(dir, "part-00000.geojsonl")
     Files.writeString(tmp.toPath, "winner")
@@ -33,7 +33,7 @@ class CommitRaceSpec extends AnyFunSuite {
   }
 
   test("verifyCommitted passes when every reported file exists") {
-    val dir = Files.createTempDirectory("race").toFile
+    val dir = TempDirs.untilExit("race")
     val a = new java.io.File(dir, "part-00000.fgb")
     val b = new java.io.File(dir, "part-00001.fgb")
     Files.writeString(a.toPath, "x"); Files.writeString(b.toPath, "y")
@@ -42,7 +42,7 @@ class CommitRaceSpec extends AnyFunSuite {
   }
 
   test("verifyCommitted fails loudly when a committed file was lost") {
-    val dir = Files.createTempDirectory("race").toFile
+    val dir = TempDirs.untilExit("race")
     val a = new java.io.File(dir, "part-00000.fgb")
     Files.writeString(a.toPath, "x")
     // simulate the zombie: the winner committed part-00001, then a killed
@@ -62,7 +62,7 @@ class CommitRaceSpec extends AnyFunSuite {
   }
 
   test("end-to-end: DSv2 writes still commit clean and carry their paths") {
-    val out = Files.createTempDirectory("race").toString
+    val out = TempDirs.untilExit("race").toString
     val src = spark.read.format("geojson")
       .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
     val expected = src.count()

@@ -7,7 +7,7 @@ class CsvGeoWriteSpec extends AnyFunSuite {
   import TestSpark._
 
   test("csvgeo write -> read round trip with WKT geometry column") {
-    val out = java.nio.file.Files.createTempDirectory("graft_csvw_").toString
+    val out = TempDirs.untilExit("graft_csvw_").toString
     val src = spark.read.format("csvgeo").load(s"$fixtures/lat_lon_countries.csv")
     src.coalesce(2).write.format("csvgeo").mode("overwrite").save(out)
     val back = spark.read.format("csvgeo").load(out)
@@ -23,7 +23,7 @@ class CsvGeoWriteSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     import graft.functions.GraftFunctions._
-    val out = java.nio.file.Files.createTempDirectory("graft_csvq_").toString
+    val out = TempDirs.untilExit("graft_csvq_").toString
     val df = Seq(("has,comma", 1.0, 2.0), ("has\"quote", 3.0, 4.0))
       .toDF("label", "lon", "lat")
       .withColumn("geometry", st_point($"lon", $"lat"))

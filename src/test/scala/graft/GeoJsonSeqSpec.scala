@@ -7,7 +7,7 @@ class GeoJsonSeqSpec extends AnyFunSuite {
   import TestSpark._
 
   test("geojsonseq: write then read back across partitions") {
-    val out = java.nio.file.Files.createTempDirectory("graft_seq_").toString
+    val out = TempDirs.untilExit("graft_seq_").toString
     val src = spark.read.format("geojson")
       .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
       .select("name", "iso_3166_2", "scalerank", "geometry")
@@ -21,7 +21,7 @@ class GeoJsonSeqSpec extends AnyFunSuite {
   }
 
   test("geojsonseq: filters and limit flow through the scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft_seq2_").toString
+    val out = TempDirs.untilExit("graft_seq2_").toString
     spark.read.format("geojson")
       .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
       .select("name", "geometry")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +19,7 @@ class GpkgSpec extends AnyFunSuite {
       (51006L, "Capolona", 0.0, "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)))"))
       .toDF("code", "name", "score", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")
-    val out = Files.createTempDirectory("graft_gpkg_").toString
+    val out = TempDirs.untilExit("graft_gpkg_").toString
     df.coalesce(1).write.format("gpkg")
       .option("layerName", "towns").mode("overwrite").save(out)
     val f = new java.io.File(out).listFiles().find(_.getName.endsWith(".gpkg")).get
@@ -121,7 +119,7 @@ class GpkgSpec extends AnyFunSuite {
     val df = (1 to 3000).map(i => (i.toLong, s"row_$i", s"POINT ($i ${i % 90})"))
       .toDF("id", "tag", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")
-    val out = Files.createTempDirectory("graft_gpkg_split_").toString
+    val out = TempDirs.untilExit("graft_gpkg_split_").toString
     df.coalesce(1).write.format("gpkg")
       .option("layerName", "big").mode("overwrite").save(out)
     val file = new java.io.File(out).listFiles().find(_.getName.endsWith(".gpkg")).get

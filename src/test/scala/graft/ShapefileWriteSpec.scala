@@ -8,7 +8,7 @@ class ShapefileWriteSpec extends AnyFunSuite {
   import TestSpark._
 
   test("shapefile write -> read round trip (points + string fields)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shpw_").toString
+    val out = TempDirs.untilExit("graft_shpw_").toString
     val src = spark.read.format("shapefile").load(s"$fixtures/stations.shp")
     src.coalesce(1).write.format("shapefile").mode("overwrite").save(out)
     assert(new java.io.File(out).listFiles().map(_.getName).count(_.endsWith(".shp")) === 1)
@@ -21,13 +21,14 @@ class ShapefileWriteSpec extends AnyFunSuite {
     val wa = src.selectExpr("st_aswkt(geometry) w").collect().map(_.getString(0)).sorted
     val wb = back.selectExpr("st_aswkt(geometry) w").collect().map(_.getString(0)).sorted
     assert(wa.toSeq === wb.toSeq)
-    // attempt isolation left no in-progress sidecars behind
-    val ip = new java.io.File(out, ".inprogress")
-    assert(!ip.exists() || ip.listFiles().isEmpty)
+    // attempt isolation left no in-progress file or directory behind
+    val names = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+    try assert(!names.anyMatch(_.getFileName.toString.endsWith(".inprogress")))
+    finally names.close()
   }
 
   test("shapefile write: srs emits a .prj sidecar, geometryType overrides autodetect") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shpsrs_").toString
+    val out = TempDirs.untilExit("graft_shpsrs_").toString
     spark.read.format("shapefile").load(s"$fixtures/stations.shp")
       .coalesce(1).write.format("shapefile").mode("overwrite")
       .option("srs", "EPSG:4326").option("geometryType", "point")
@@ -52,7 +53,7 @@ class ShapefileWriteSpec extends AnyFunSuite {
   test("shapefile write: polygons with numeric/bool fields round trip") {
     val s = spark; import s.implicits._
     import graft.functions.GraftFunctions._
-    val out = java.nio.file.Files.createTempDirectory("graft_shpp_").toString
+    val out = TempDirs.untilExit("graft_shpp_").toString
     val df = Seq(
       ("alpha", 3L, 1.25, true, "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"),
       ("beta", -7L, -2.5, false,

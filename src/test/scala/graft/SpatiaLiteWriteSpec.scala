@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +19,7 @@ class SpatiaLiteWriteSpec extends AnyFunSuite {
       (51006L, "Capolona", 0.0, "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)))"))
       .toDF("code", "name", "score", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")
-    val out = Files.createTempDirectory("graft_slw_").toString
+    val out = TempDirs.untilExit("graft_slw_").toString
     df.coalesce(1).write.format("spatialite")
       .option("layerName", "towns").mode("overwrite").save(out)
     val f = new java.io.File(out).listFiles().find(_.getName.endsWith(".sqlite")).get
@@ -31,7 +29,7 @@ class SpatiaLiteWriteSpec extends AnyFunSuite {
   test("spatialite write: srs option lands as the stored srid") {
     val s = spark; import s.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val out = Files.createTempDirectory("graft_slsrs_").toString
+    val out = TempDirs.untilExit("graft_slsrs_").toString
     Seq((1L, "POINT (500000 4649776)")).toDF("id", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")
       .coalesce(1).write.format("spatialite")
@@ -90,7 +88,7 @@ class SpatiaLiteWriteSpec extends AnyFunSuite {
     }.mkString("POLYGON ((", ", ", s", ${math.cos(0.0)} ${math.sin(0.0)}))")
     val df = Seq((1L, ring)).toDF("id", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")
-    val out = Files.createTempDirectory("graft_slo_").toString
+    val out = TempDirs.untilExit("graft_slo_").toString
     df.write.format("spatialite").option("layerName", "big").mode("overwrite").save(out)
     val back = spark.read.format("spatialite").load(out)
     assert(back.selectExpr("st_npoints(geometry)").collect()(0).getInt(0) === 2001)
