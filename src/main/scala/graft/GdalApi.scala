@@ -72,6 +72,11 @@ object GdalRead {
 }
 
 object GdalWrite {
+  /** The modification time every entry of a zipped `toBytes` result
+    * carries (1980-01-01T00:00 local, the earliest a zip entry holds). */
+  val ZipEntryTime: Long =
+    java.time.LocalDateTime.of(1980, 1, 1, 0, 0).atZone(java.time.ZoneId.systemDefault).toInstant.toEpochMilli
+
   /** Serialize a DataFrame to bytes in the given driver format —
     * "geojson" (single FeatureCollection, the default), "csvgeo" (one
     * CSV with WKT geometry), "shapefile" (a zip of the .shp/.shx/.dbf
@@ -252,7 +257,9 @@ object GdalWrite {
         val bos = new java.io.ByteArrayOutputStream()
         val zos = new java.util.zip.ZipOutputStream(bos)
         produced.filter(_.getName.startsWith(prefix)).foreach { f =>
-          zos.putNextEntry(new java.util.zip.ZipEntry(f.getName))
+          val entry = new java.util.zip.ZipEntry(f.getName)
+          entry.setTime(GdalWrite.ZipEntryTime) // not the wall clock: the same frame gives the same bytes
+          zos.putNextEntry(entry)
           zos.write(Files.readAllBytes(f.toPath))
           zos.closeEntry()
         }

@@ -38,11 +38,15 @@ case class SplitSpec(path: String, startRecord: Long, numRecords: Long,
   * Implementations must be Serializable (shipped to executors inside the
   * reader factory).
   *
-  * The per-row work downstream of a reader is linear in row width when the
-  * reader keeps each file's props in a stable order under the same name
-  * instances (see [[RawFeature]]); [[open]] and [[openTypes]] should build
-  * each row's props straight into an array, with no per-row collections
-  * or parse trees beyond what the values need.
+  * A format is read one of two ways. A [[ColumnarFormat]] has one decode
+  * loop that writes into a [[ValueSink]]: the scan runs it into a
+  * [[ColumnSink]] (Spark column vectors, no [[RawFeature]] in between), and
+  * its [[open]] runs it into a [[FeatureBuilder]]. Any other format
+  * implements [[open]] and is scanned through [[RowConverter]]; its per-row
+  * work is linear in row width when it keeps each file's props in a
+  * stable order under the same name instances (see [[RawFeature]]), built
+  * straight into an array, with no per-row collections or parse trees
+  * beyond what the values need.
   */
 trait FeatureFormat extends Serializable {
   /** File extensions this format claims (for directory expansion). */
@@ -96,6 +100,15 @@ object FeatureFormat {
       case None => afterOffset
     }
   }
+
+  /** Whether a feature's geometry (WKB; null for none) has an envelope
+    * that meets `q`: the bbox test for formats that do not enforce the
+    * option themselves. A feature without geometry never matches. */
+  def bboxHit(q: graft.sources.flatgeobuf.FgbIndex.Box, wkb: Array[Byte]): Boolean =
+    wkb != null && {
+      val e = graft.geom.GeomCodec.fromWkb(wkb).getEnvelopeInternal
+      q.intersects(graft.sources.flatgeobuf.FgbIndex.Box(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
+    }
 
   /** Expand a user path: directory → contained files matching the format's
     * extensions (sorted for determinism); file → itself. */

@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Generic DSv2 wiring shared by all feature formats (SURVEY.md §3.1's
   * Spark lifecycle: inferSchema on the driver → ScanBuilder with pushdown →
@@ -161,6 +162,11 @@ class FeatureScan(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FeatureReaderFactory(schema, opts, format, filters, limit)
+
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = format match {
+    case _: ColumnarFormat => Scan.ColumnarSupportMode.SUPPORTED
+    case _ => Scan.ColumnarSupportMode.UNSUPPORTED
+  }
 }
 
 class FeatureReaderFactory(
@@ -173,6 +179,14 @@ class FeatureReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val split = partition.asInstanceOf[FeaturePartition].split
     new FeaturePartitionReader(split, schema, opts, format, filters, limit)
+  }
+
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    format.isInstanceOf[ColumnarFormat]
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val split = partition.asInstanceOf[FeaturePartition].split
+    new ColumnarFeatureReader(split, schema, opts, format.asInstanceOf[ColumnarFormat], filters, limit)
   }
 }
 
@@ -199,18 +213,13 @@ class FeaturePartitionReader(
   private val boxed = opts.bbox match {
     case None => underlying
     case Some(_) if format.handlesBbox => underlying
-    case Some(q) => underlying.filter { f =>
-      f.geomWkb != null && {
-        val e = graft.geom.GeomCodec.fromWkb(f.geomWkb).getEnvelopeInternal
-        q.intersects(graft.sources.flatgeobuf.FgbIndex.Box(
-          e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
-      }
-    }
+    case Some(q) => underlying.filter(f => FeatureFormat.bboxHit(q, f.geomWkb))
   }
   private val windowed = FeatureFormat.window(boxed, opts)
   private val schemaNames = schema.fieldNames.toSet
+  private def propOf(field: String): String = SchemaInference.propOf(field, opts)
   // every prop the filters name, read in one walk over a row's props
-  private val filterProps = new FirstValues(filters.toSeq.flatMap(_.references).map(FilterEval.unquote))
+  private val filterProps = new FirstValues(filters.toSeq.flatMap(_.references).map(n => propOf(FilterEval.unquote(n))))
   private val filtered =
     if (filters.isEmpty) windowed
     else windowed.filter { f =>
@@ -221,7 +230,7 @@ class FeaturePartitionReader(
         // this arm it resolved through the absent-field rule to Some(null)
         // and IsNotNull(geometry) pruned EVERY row
         else if (name == opts.geometryColumnName) Some(f.geomWkb)
-        else firsts(filterProps.slotOf(name)) match {
+        else firsts(filterProps.slotOf(propOf(name))) match {
           case FirstValues.Absent if schemaNames.contains(name) => Some(null) // absent field = null
           case FirstValues.Absent => None // unknown column: keep row, residual decides
           case v => Some(v)

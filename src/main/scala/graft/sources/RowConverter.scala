@@ -12,25 +12,22 @@ import graft.geom.GeomCodec
   * the executor-side half of the reference's read loop: fixed schema, nulls
   * for missing fields (SURVEY.md §3.1 Spark lifecycle equivalent). Each
   * field's conversion is chosen once, here, from its data type; a row
-  * costs one walk over its props plus one call per field. */
+  * costs one walk over its props plus one call per field. The row path,
+  * for formats without a [[ValueSink]] decode loop (KML, GPX, GML); the
+  * columnar formats convert into vectors in [[ColumnSink]], by the same
+  * rules. */
 final class RowConverter(
     readSchema: StructType,
     opts: GdalOptions) extends Serializable {
   import RowConverter._
 
   private val geomName = opts.geometryColumnName
-  private val reserved = Set(geomName) ++ opts.fidColumnName
 
   // For each output field: a getter tag. 0=fid, 1=geometry, 2=data prop.
   private val tags = readSchema.fields.map { f =>
     if (opts.fidColumnName.contains(f.name)) 0 else if (f.name == geomName) 1 else 2
   }
-  // rename rule 5 inverse: field `x_original` reads prop `x`
-  private val propNames = readSchema.fields.map { f =>
-    if (f.name.endsWith("_original") && reserved.contains(f.name.stripSuffix("_original")))
-      f.name.stripSuffix("_original")
-    else f.name
-  }
+  private val propNames = readSchema.fields.map(f => SchemaInference.propOf(f.name, opts))
   private val props = new FirstValues(propNames.indices.collect {
     case i if tags(i) == 2 => propNames(i) })
   private val slots = propNames.indices.map(i =>

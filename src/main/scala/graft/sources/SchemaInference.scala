@@ -9,6 +9,12 @@ import org.apache.spark.sql.types._
   * Double, Boolean, String, java.sql.Date, java.sql.Timestamp,
   * Seq[Int|Long|Double|String].
   *
+  * The [[FeatureFormat.open]] view of a file. The columnar formats build
+  * it with a [[FeatureBuilder]] over their one decode loop, only for
+  * `open`; their scans put values straight into column vectors
+  * ([[ColumnSink]]). The row formats (KML, GPX, GML) build it themselves,
+  * and their scans convert it with [[RowConverter]].
+  *
   * Readers should give every feature of a file its props in one stable
   * order, using the same `String` instance for a name each time (a header
   * or column array, the parser's canonical names): row conversion, scan
@@ -99,6 +105,15 @@ object SchemaInference {
         }
         scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
       }
+  }
+
+  /** The property a read-schema field holds: rule 5 inverted, so field
+    * `x_original` holds prop `x` where `x` names the geometry or fid
+    * column; any other field holds the prop of its own name. */
+  def propOf(field: String, opts: GdalOptions): String = {
+    val prop = field.stripSuffix("_original")
+    if (field.endsWith("_original") && (prop == opts.geometryColumnName || opts.fidColumnName.contains(prop))) prop
+    else field
   }
 
   def infer(features: Iterator[RawFeature], opts: GdalOptions): StructType =

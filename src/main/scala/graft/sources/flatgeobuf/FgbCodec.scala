@@ -137,6 +137,17 @@ object FgbCodec {
 
   private val factory = new GeometryFactory()
 
+  /** [[readGeometry]] as WKB; a point's bytes are written directly (as
+    * [[graft.geom.GeomCodec.point]]). */
+  def readWkb(t: FbTab, headerType: Int): Array[Byte] = {
+    val gt = t.byteField(GType, 0) match { case 0 => headerType; case x => x }
+    t.vector(GXy) match {
+      case (start, n) if gt == GtPoint && n >= 2 =>
+        graft.geom.GeomCodec.point(t.bb.getDouble(start), t.bb.getDouble(start + 8))
+      case _ => graft.geom.GeomCodec.toWkb(readGeometry(t, headerType))
+    }
+  }
+
   def readGeometry(t: FbTab, headerType: Int): Geometry = {
     val gt = t.byteField(GType, 0) match {
       case 0 => headerType
@@ -316,28 +327,60 @@ object FgbCodec {
     bos.toByteArray
   }
 
-  /** Decode packed properties into per-column values (null = absent). */
-  def unpackProperties(columns: Seq[FgbColumn], bytes: Array[Byte],
-      off: Int, len: Int): Array[Any] = {
-    val out = new Array[Any](columns.length)
-    val bb = ByteBuffer.wrap(bytes, off, len).order(ByteOrder.LITTLE_ENDIAN)
-    while (bb.remaining() >= 2) {
-      val i = bb.getShort() & 0xFFFF
-      val col = columns(i)
-      out(i) = col.colType match {
-        case CtBool => bb.get() != 0
-        case CtInt => bb.getInt()
-        case CtLong => bb.getLong()
-        case CtDouble => bb.getDouble()
+  /** Puts packed properties into `sink`, column `i` into `slots(i)`
+    * (skipped where -1); a column the feature lacks is not put. Strings go
+    * in as their UTF-8 bytes. */
+  def putProperties(columns: Seq[FgbColumn], bytes: Array[Byte], off: Int, len: Int,
+      slots: Array[Int], sink: graft.sources.ValueSink): Unit = {
+    val end = off + len
+    def need(p: Int, n: Int): Unit =
+      if (n < 0 || p + n > end) throw new java.nio.BufferUnderflowException
+    var p = off
+    while (end - p >= 2) {
+      val i = (bytes(p) & 0xFF) | ((bytes(p + 1) & 0xFF) << 8)
+      p += 2
+      val s = slots(i)
+      columns(i).colType match {
+        case CtBool =>
+          need(p, 1)
+          if (s >= 0) sink.putBoolean(s, bytes(p) != 0)
+          p += 1
+        case CtInt =>
+          need(p, 4)
+          if (s >= 0) sink.putInt(s, le32(bytes, p))
+          p += 4
+        case CtLong =>
+          need(p, 8)
+          if (s >= 0) sink.putLong(s, le64(bytes, p))
+          p += 8
+        case CtDouble =>
+          need(p, 8)
+          if (s >= 0) sink.putDouble(s, java.lang.Double.longBitsToDouble(le64(bytes, p)))
+          p += 8
         case CtString =>
-          val n = bb.getInt()
-          val s = new Array[Byte](n)
-          bb.get(s)
-          new String(s, "UTF-8")
+          need(p, 4)
+          val n = le32(bytes, p)
+          p += 4
+          need(p, n)
+          if (s >= 0) sink.putUtf8(s, bytes, p, n)
+          p += n
         case other => throw new IllegalStateException(s"unsupported FGB column type $other")
       }
     }
-    out
+  }
+
+  private def le32(b: Array[Byte], p: Int): Int =
+    (b(p) & 0xFF) | ((b(p + 1) & 0xFF) << 8) | ((b(p + 2) & 0xFF) << 16) | ((b(p + 3) & 0xFF) << 24)
+  private def le64(b: Array[Byte], p: Int): Long =
+    (le32(b, p).toLong & 0xFFFFFFFFL) | (le32(b, p + 4).toLong << 32)
+
+  /** Packed properties as per-column values (null = absent), boxed as
+    * [[graft.sources.FeatureBuilder]] boxes them. */
+  def unpackProperties(columns: Seq[FgbColumn], bytes: Array[Byte],
+      off: Int, len: Int): Array[Any] = {
+    val builder = new graft.sources.FeatureBuilder
+    putProperties(columns, bytes, off, len, builder.bind(columns.map(_.name).toIndexedSeq), builder)
+    builder.props().iterator.map(_._2).toArray
   }
 
   /** The Spark type of the values [[unpackProperties]] decodes for a
@@ -352,27 +395,6 @@ object FgbCodec {
       case CtString => StringType
       case _ => NullType
     }
-  }
-
-  /** Which columns packed properties hold a value for — the walk of
-    * [[unpackProperties]] that skips each value instead of decoding it. */
-  def presentColumns(columns: Seq[FgbColumn], bytes: Array[Byte],
-      off: Int, len: Int): Array[Boolean] = {
-    val out = new Array[Boolean](columns.length)
-    val bb = ByteBuffer.wrap(bytes, off, len).order(ByteOrder.LITTLE_ENDIAN)
-    while (bb.remaining() >= 2) {
-      val i = bb.getShort() & 0xFFFF
-      val skip = columns(i).colType match {
-        case CtBool => 1
-        case CtInt => 4
-        case CtLong | CtDouble => 8
-        case CtString => bb.getInt()
-        case other => throw new IllegalStateException(s"unsupported FGB column type $other")
-      }
-      bb.position(bb.position() + skip)
-      out(i) = true
-    }
-    out
   }
 
   // -------------------------------------------------------- header write

@@ -17,7 +17,7 @@ import graft.sources._
   * which must see the whole stream) fall back to a streaming
   * envelope-intersects filter. FIDs always remain the feature's position
   * in the file, matching GDAL's spatial-filter semantics. */
-class FgbFormat extends FeatureFormat {
+class FgbFormat extends ColumnarFormat {
   override def extensions: Seq[String] = Seq(".fgb")
   override def handlesBbox: Boolean = true // index splits or streamed envelope test
 
@@ -39,7 +39,7 @@ class FgbFormat extends FeatureFormat {
 
   /** Bbox split planning: search the packed R-tree on the driver, one
     * split per contiguous candidate run (Hilbert clustering keeps runs
-    * few). No index → defer to the streaming filter in [[open]]. */
+    * few). No index → defer to the streaming filter of a whole-file scan. */
   override def planSplits(path: String, opts: GdalOptions): Seq[SplitSpec] =
     opts.bbox match {
       case Some(q) =>
@@ -69,39 +69,34 @@ class FgbFormat extends FeatureFormat {
       case None => Seq(SplitSpec(path, 0L, -1L))
     }
 
-  override def openSplit(spec: SplitSpec, opts: GdalOptions): FeatureIterator =
-    if (spec.startRecord == 0L && spec.numRecords == -1L) open(spec.path, opts)
-    else {
-      // index-planned byte-range run: candidates are exact envelope hits,
-      // no re-filtering needed
-      val (header, _) = headerInfo(spec.path)
-      val in = new DataInputStream(new BufferedInputStream(
-        new FileInputStream(spec.path), 1 << 16))
-      var toSkip = spec.byteStart
+  /** A whole file streams its features, under the envelope test when a
+    * bbox is set; an index-planned byte-range run holds exact envelope
+    * hits only, so it needs no re-test. */
+  override def cursor(spec: SplitSpec, opts: GdalOptions, sink: ValueSink): FeatureCursor = {
+    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(spec.path), 1 << 16))
+    try {
+      val magic = new Array[Byte](8)
+      in.readFully(magic)
+      require(magic.take(3).sameElements(FgbCodec.Magic.take(3)),
+        s"${spec.path} is not a FlatGeobuf file")
+      val headerBytes = readPrefixed(in)
+      val header = FgbCodec.readHeader(headerBytes)
+      val featuresStart = 8L + 4L + headerBytes.length +
+        FgbCodec.indexSize(header.featuresCount, header.indexNodeSize)
+      val whole = spec.startRecord == 0L && spec.numRecords == -1L
+      var toSkip = (if (whole) featuresStart else spec.byteStart) - (12L + headerBytes.length)
       while (toSkip > 0) toSkip -= in.skip(toSkip)
-      featureIterator(in, header, firstFid = spec.startRecord,
-        maxCount = spec.numRecords, bbox = None)
-    }
-
-  override def open(path: String, opts: GdalOptions): FeatureIterator = {
-    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path), 1 << 16))
-    val magic = new Array[Byte](8)
-    in.readFully(magic)
-    require(magic.take(3).sameElements(FgbCodec.Magic.take(3)),
-      s"$path is not a FlatGeobuf file")
-    val header = FgbCodec.readHeader(readPrefixed(in))
-    // skip the index region if present
-    val idx = FgbCodec.indexSize(header.featuresCount, header.indexNodeSize)
-    var toSkip = idx
-    while (toSkip > 0) toSkip -= in.skip(toSkip)
-    featureIterator(in, header, firstFid = 0L, maxCount = -1L, bbox = opts.bbox)
+      if (whole) new Features(in, header, 0L, -1L, opts.bbox, sink)
+      else new Features(in, header, spec.startRecord, spec.numRecords, None, sink)
+    } catch { case e: Throwable => in.close(); throw e }
   }
 
   /** Types from the header columns plus a presence-only walk of each
     * feature's property buffer, until every column is settled (see
     * [[SchemaInference.HeaderTypes]]); geometry is never decoded. With a
     * bbox the packed R-tree picks the features, as it does for the scan;
-    * a file without an index falls back to [[open]]'s envelope test. */
+    * a file without an index falls back to the whole-file scan's envelope
+    * test. */
   override def openTypes(path: String, opts: GdalOptions): TypeIterator = {
     val (header, featuresStart) = headerInfo(path)
     val runs: Seq[(Long, Long)] = opts.bbox match {
@@ -113,6 +108,8 @@ class FgbFormat extends FeatureFormat {
     }
     val types = new SchemaInference.HeaderTypes(
       header.columns.map(c => (c.name, FgbCodec.sparkType(c.colType))).toIndexedSeq)
+    val presence = new Presence(header.columns.length)
+    val slots = presence.bind(header.columns.map(_.name).toIndexedSeq)
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path), 1 << 16))
     var pos = 0L
     var unread = opts.offset // the window drops these before inference reads them
@@ -125,8 +122,15 @@ class FgbFormat extends FeatureFormat {
         else FgbCodec.rootTable(bytes).vector(1) match {
           case null => IndexedSeq.empty
           case (start, len) =>
-            lazy val present = FgbCodec.presentColumns(header.columns, bytes, start, len)
-            types.next(present(_))
+            var walked = false
+            types.next { c =>
+              if (!walked) {
+                presence.clear()
+                FgbCodec.putProperties(header.columns, bytes, start, len, slots, presence)
+                walked = true
+              }
+              presence.present(c)
+            }
         }
       }
     }
@@ -140,58 +144,56 @@ class FgbFormat extends FeatureFormat {
     TypeIterator(it, () => in.close())
   }
 
-  /** Decode size-prefixed features from the current stream position.
-    * `bbox` applies GDAL spatial-filter semantics: non-intersecting (and
-    * geometry-less) features are skipped but still advance the FID. */
-  private def featureIterator(in: DataInputStream, header: FgbCodec.FgbHeader,
-      firstFid: Long, maxCount: Long, bbox: Option[FgbIndex.Box]): FeatureIterator = {
-    var fid = firstFid - 1
-    var remaining = maxCount
-    val it = new Iterator[RawFeature] {
-      private var nextF: RawFeature = advance()
+  /** The size-prefixed features from the stream's position on: at most
+    * `maxCount` (-1 = all), numbered from `firstFid`. `bbox` applies GDAL
+    * spatial-filter semantics: non-intersecting (and geometry-less)
+    * features are skipped but still advance the FID. */
+  private final class Features(in: DataInputStream, header: FgbCodec.FgbHeader,
+      firstFid: Long, maxCount: Long, bbox: Option[FgbIndex.Box], sink: ValueSink) extends FeatureCursor {
+    private val slots = sink.bind(header.columns.map(_.name).toIndexedSeq)
+    private var fid = firstFid - 1
+    private var remaining = maxCount
 
-      @annotation.tailrec
-      private def advance(): RawFeature = {
-        if (remaining == 0) return null
+    override def sizeHint: Long =
+      if (maxCount >= 0) maxCount else if (header.featuresCount > 0) header.featuresCount else -1L
+
+    override def next(): Boolean = {
+      while (remaining != 0) {
         val bytes = try readPrefixed(in) catch { case _: EOFException => null }
-        if (bytes == null) null
-        else {
-          fid += 1
-          if (remaining > 0) remaining -= 1
-          val t = FgbCodec.rootTable(bytes)
-          val geomPos = t.indirect(0)
-          val geom =
-            if (geomPos < 0) null
-            else FgbCodec.readGeometry(new FgbCodec.FbTab(t.bb, geomPos), header.geometryType)
-          val keep = bbox match {
-            case None => true
+        if (bytes == null) return false
+        fid += 1
+        if (remaining > 0) remaining -= 1
+        val t = FgbCodec.rootTable(bytes)
+        val geomPos = t.indirect(0)
+        var keep = bbox.isEmpty
+        var wkb: Array[Byte] = null
+        if (geomPos >= 0) {
+          val g = new FgbCodec.FbTab(t.bb, geomPos)
+          bbox match {
+            case None => wkb = FgbCodec.readWkb(g, header.geometryType)
             case Some(q) =>
-              geom != null && !geom.isEmpty && {
+              val geom = FgbCodec.readGeometry(g, header.geometryType)
+              keep = !geom.isEmpty && {
                 val e = geom.getEnvelopeInternal
                 q.intersects(FgbIndex.Box(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
               }
-          }
-          if (!keep) advance()
-          else {
-            val props = t.vector(1) match {
-              case null => IndexedSeq.empty[(String, Any)]
-              case (start, len) =>
-                val vals = FgbCodec.unpackProperties(header.columns, bytes, start, len)
-                header.columns.indices.map(i => header.columns(i).name -> vals(i)).toIndexedSeq
-            }
-            RawFeature(fid, if (geom == null) null else GeomCodec.toWkb(geom), props)
+              if (keep) wkb = GeomCodec.toWkb(geom)
           }
         }
+        if (keep) {
+          sink.fid(fid)
+          sink.geometry(wkb)
+          t.vector(1) match {
+            case null => ()
+            case (start, len) => FgbCodec.putProperties(header.columns, bytes, start, len, slots, sink)
+          }
+          return true
+        }
       }
-
-      override def hasNext: Boolean = nextF != null
-      override def next(): RawFeature = {
-        val f = nextF
-        nextF = advance()
-        f
-      }
+      false
     }
-    FeatureIterator(it, () => in.close())
+
+    override def close(): Unit = in.close()
   }
 
   /** Read a size-prefixed flatbuffer (uint32 LE length + body); EOF at a

@@ -2,31 +2,47 @@ package graft.sources.geojson
 
 import scala.collection.immutable.ArraySeq
 
-import com.fasterxml.jackson.core.{JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonParser, JsonToken, StreamReadFeature}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import graft.geom.GeomCodec
-import graft.sources.{NameSlots, RawFeature}
+import graft.sources.{NameSlots, ValueSink}
 
 /** Decodes GeoJSON Feature objects straight off a Jackson parser's tokens
-  * into the [[RawFeature]] that a Jackson tree of the feature gives: the
-  * last `id`, `geometry` and `properties` member wins, a property key that
-  * repeats keeps its first position and takes its last value, JSON ints
-  * are Int or Long by magnitude, floats are Double, arrays are lists and
-  * nested objects are their JSON text. Only the geometry and nested-object
-  * values are read into (small) trees. One per reader; not thread-safe. */
-private[geojson] final class GeoJsonFeatures {
+  * into a [[ValueSink]], as a Jackson tree of the feature reads: the last
+  * `id`, `geometry` and `properties` member wins, a property key that
+  * repeats keeps its last value, JSON ints are Int or Long by magnitude,
+  * floats are Double, arrays are lists and nested objects are their JSON
+  * text. Property names map to the sink's slots through a [[NameSlots]]
+  * memo; a property the sink does not read is skipped undecoded. Only the
+  * geometry and nested-object values are read into (small) trees. One per
+  * reader; not thread-safe. */
+private[geojson] final class GeoJsonFeatures(sink: ValueSink) {
   import GeoJsonFeatures._
 
-  private val members = new Members[Any]
+  private val names = NameSlots.growing()
+  private var slots = Array.fill(16)(Unresolved) // the sink's slot by name slot
+
+  private def slotAt(pos: Int, name: String): Int = {
+    val id = names.slotAt(pos, name)
+    if (id >= slots.length) {
+      val grown = Array.fill(math.max(id + 1, slots.length * 2))(Unresolved)
+      System.arraycopy(slots, 0, grown, 0, slots.length)
+      slots = grown
+    }
+    if (slots(id) == Unresolved) slots(id) = sink.slot(name)
+    slots(id)
+  }
 
   /** The Feature object `p` stands on (START_OBJECT), read up to its
-    * END_OBJECT; its geometry is decoded by [[Tokens.feature]]. */
+    * END_OBJECT, its properties put into the sink; its id and geometry
+    * come back in the [[Tokens]], the geometry not yet decoded. */
   def read(p: JsonParser): Tokens = {
     var hasId = false
     var id = 0L
-    var geometry: JsonNode = null
-    var props: IndexedSeq[(String, Any)] = IndexedSeq.empty
+    var geometry: Tokens.Geometry = null
+    var props = false
     while (p.nextToken() == JsonToken.FIELD_NAME) {
       val key = p.currentName
       val t = p.nextToken()
@@ -41,31 +57,109 @@ private[geojson] final class GeoJsonFeatures {
           case _ => p.skipChildren()
         }
       } else if (key == "geometry")
-        geometry = if (t == JsonToken.VALUE_NULL) null else mapper.readTree[JsonNode](p)
+        geometry =
+          if (t == JsonToken.VALUE_NULL) null
+          else if (t == JsonToken.START_OBJECT) readGeometry(p)
+          else new Tokens.Geometry(mapper.readTree[JsonNode](p))
       else if (key == "properties") {
-        if (t == JsonToken.START_OBJECT) props = members.read(p)(value)
-        else {
-          props = IndexedSeq.empty
-          p.skipChildren()
-        }
+        if (props) sink.clearProps()
+        props = true
+        if (t == JsonToken.START_OBJECT) {
+          var pos = 0
+          while (p.nextToken() == JsonToken.FIELD_NAME) {
+            val name = p.currentName
+            p.nextToken()
+            val s = slotAt(pos, name)
+            if (s < 0) p.skipChildren() else put(p, s)
+            pos += 1
+          }
+        } else p.skipChildren()
       } else p.skipChildren()
     }
-    new Tokens(hasId, id, geometry, props)
+    new Tokens(hasId, id, geometry)
+  }
+
+  private var coords = new Array[Double](4)
+
+  /** The geometry object `p` stands on (START_OBJECT), read up to its
+    * END_OBJECT. A Point whose `coordinates` are plain numbers is kept as
+    * its x and y, with no tree; any other geometry becomes the Jackson tree
+    * of the object (the members read so far rebuilt as nodes that decode
+    * alike), decoded, or found malformed, only when its WKB is asked for. */
+  private def readGeometry(p: JsonParser): Tokens.Geometry = {
+    var typ: String = null
+    var n = -1 // the numbers of a plain `coordinates` array; -1 for none
+    var node: ObjectNode = null
+    def tree(): ObjectNode = {
+      if (node == null) {
+        node = mapper.createObjectNode()
+        if (typ != null) node.put("type", typ)
+        if (n >= 0) { val a = node.putArray("coordinates"); (0 until n).foreach(i => a.add(coords(i))) }
+      }
+      node
+    }
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val key = p.currentName
+      val t = p.nextToken()
+      if (node == null && key == "type" && t == JsonToken.VALUE_STRING) typ = p.getText
+      else if (node == null && key == "coordinates" && t == JsonToken.START_ARRAY) {
+        n = 0
+        var e = p.nextToken()
+        while (e == JsonToken.VALUE_NUMBER_INT || e == JsonToken.VALUE_NUMBER_FLOAT) {
+          if (n == coords.length) coords = java.util.Arrays.copyOf(coords, n * 2)
+          coords(n) = p.getDoubleValue
+          n += 1
+          e = p.nextToken()
+        }
+        if (e != JsonToken.END_ARRAY) { // not plain numbers: the rest as trees
+          val a = tree().get("coordinates").asInstanceOf[ArrayNode]
+          while (e != JsonToken.END_ARRAY && e != null) { a.add(mapper.readTree[JsonNode](p)); e = p.nextToken() }
+        }
+      } else tree().set[JsonNode](key, mapper.readTree[JsonNode](p))
+    }
+    if (node == null && n >= 2 && typ == "Point") new Tokens.Geometry(null, coords(0), coords(1))
+    else new Tokens.Geometry(tree())
+  }
+
+  /** Puts the value whose first token `p` stands on; leaves `p` on the
+    * value's last token. */
+  private def put(p: JsonParser, s: Int): Unit = p.currentToken match {
+    case JsonToken.VALUE_NULL => sink.putNull(s)
+    case JsonToken.VALUE_NUMBER_INT => p.getNumberType match { // by magnitude
+      case JsonParser.NumberType.INT => sink.putInt(s, p.getIntValue)
+      case JsonParser.NumberType.LONG => sink.putLong(s, p.getLongValue)
+      case _ => sink.putLong(s, p.getBigIntegerValue.longValue) // a tree's `asLong`: the low 64 bits
+    }
+    case JsonToken.VALUE_NUMBER_FLOAT => sink.putDouble(s, p.getDoubleValue)
+    case JsonToken.VALUE_TRUE => sink.putBoolean(s, true)
+    case JsonToken.VALUE_FALSE => sink.putBoolean(s, false)
+    case JsonToken.START_ARRAY => sink.putList(s, value(p).asInstanceOf[Seq[Any]])
+    case JsonToken.START_OBJECT => sink.putString(s, mapper.readTree[JsonNode](p).toString)
+    case _ => sink.putString(s, p.getText)
   }
 }
 
 private[geojson] object GeoJsonFeatures {
-  /** Every GeoJSON reader's parsers come from this mapper's factory. */
-  val mapper = new ObjectMapper
+  /** Every GeoJSON reader's parsers come from this mapper's factory. Its
+    * doubles go through Jackson's fast parser, which rounds as
+    * `Double.parseDouble` does. */
+  val mapper = new ObjectMapper(
+    new JsonFactoryBuilder().enable(StreamReadFeature.USE_FAST_DOUBLE_PARSER).build())
 
-  /** A Feature read off its tokens, with its geometry not yet decoded. */
-  final class Tokens(hasId: Boolean, id: Long, geometry: JsonNode,
-      props: IndexedSeq[(String, Any)]) {
-    /** The feature, numbered `idx` unless it has an integral `id`. */
-    def feature(idx: Long): RawFeature =
-      RawFeature(if (hasId) id else idx,
-        if (geometry == null) null else GeomCodec.geoJsonNodeToWkb(geometry),
-        props)
+  private final val Unresolved = -2
+
+  /** A Feature's id and its geometry, not yet decoded. */
+  final class Tokens(hasId: Boolean, id: Long, geometry: Tokens.Geometry) {
+    /** The feature's fid: its integral `id`, else `idx`. */
+    def fid(idx: Long): Long = if (hasId) id else idx
+    def wkb: Array[Byte] = if (geometry == null) null else geometry.wkb
+  }
+
+  object Tokens {
+    /** A geometry member: a Point's x and y, or else the member's tree. */
+    final class Geometry(node: JsonNode, x: Double = 0.0, y: Double = 0.0) {
+      def wkb: Array[Byte] = if (node == null) GeomCodec.point(x, y) else GeomCodec.geoJsonNodeToWkb(node)
+    }
   }
 
   /** The value whose first token `p` stands on; leaves `p` on the value's
@@ -90,8 +184,9 @@ private[geojson] object GeoJsonFeatures {
   }
 }
 
-/** One JSON object's members in the order a Jackson tree keeps them: a key
-  * that repeats keeps its first position and takes its last value. Keys
+/** One JSON object's members in the order a Jackson tree keeps them (the
+  * type pass's view of `properties`): a key that repeats keeps its first
+  * position and takes its last value. Keys
   * are told apart by slots in a table shared by all the objects a reader
   * sees ([[NameSlots]]), so an object whose keys come in the previous
   * one's order costs no hashing. Not thread-safe. */

@@ -1,7 +1,7 @@
 package graft.sources.geojson
 
 import java.io.File
-import com.fasterxml.jackson.core.JsonToken
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 
 import graft.sources._
 
@@ -16,7 +16,7 @@ import graft.sources._
   * text, arrays → typed lists (the reference left list columns
   * `unimplemented!` — src/unprocessed_series.rs:172 — we support them).
   */
-class GeoJsonFormat extends FeatureFormat {
+class GeoJsonFormat extends ColumnarFormat {
   private def factory = GeoJsonFeatures.mapper.getFactory
 
   override def extensions: Seq[String] = Seq(".json", ".geojson")
@@ -24,7 +24,7 @@ class GeoJsonFormat extends FeatureFormat {
   /** Advance `parser` into the top-level "features" array (or a bare
     * feature array / single Feature object). True if positioned inside
     * the array. */
-  private def seekFeatures(parser: com.fasterxml.jackson.core.JsonParser): Boolean = {
+  private def seekFeatures(parser: JsonParser): Boolean = {
     var inFeatures = false
     var t = parser.nextToken()
     if (t == JsonToken.START_ARRAY) inFeatures = true // bare array of features
@@ -44,38 +44,78 @@ class GeoJsonFormat extends FeatureFormat {
     inFeatures
   }
 
-  /** Stream RawFeatures off a parser positioned inside a features array.
-    * `firstIdx` seeds the default-FID counter (split-stable). Each feature's
-    * tokens are read one feature ahead; its geometry is decoded when it is
-    * returned. */
-  private def featureIterator(parser: com.fasterxml.jackson.core.JsonParser,
-      inFeatures: Boolean, firstIdx: Long): FeatureIterator = {
-    val features = new GeoJsonFeatures
-    var idx = firstIdx - 1
-    val it = new Iterator[RawFeature] {
-      private var pending: GeoJsonFeatures.Tokens = advance()
+  /** A parser positioned inside the features array of `spec` (a byte
+    * range is wrapped in `[...]` so its comma-separated span is a valid
+    * array), and whether it is inside one. */
+  private def parserFor(spec: SplitSpec): (JsonParser, Boolean) =
+    if (spec.byteStart < 0) {
+      val parser = factory.createParser(new File(spec.path))
+      try (parser, seekFeatures(parser))
+      catch { case e: Throwable => parser.close(); throw e }
+    } else {
+      val fis = new java.io.FileInputStream(spec.path)
+      var toSkip = spec.byteStart
+      while (toSkip > 0) toSkip -= fis.skip(toSkip)
+      val bounded = new BoundedInputStream(fis, spec.byteEnd - spec.byteStart)
+      val stream = new java.io.SequenceInputStream(
+        java.util.Collections.enumeration(java.util.Arrays.asList[java.io.InputStream](
+          new java.io.ByteArrayInputStream("[".getBytes),
+          bounded,
+          new java.io.ByteArrayInputStream("]".getBytes))))
+      val parser = factory.createParser(stream)
+      try (parser, parser.nextToken() == JsonToken.START_ARRAY)
+      catch { case e: Throwable => parser.close(); throw e }
+    }
 
-      private def advance(): GeoJsonFeatures.Tokens =
+  /** Features in document order; `startRecord` seeds the default-FID
+    * counter (split-stable). */
+  override def cursor(spec: SplitSpec, opts: GdalOptions, sink: ValueSink): FeatureCursor = {
+    val (parser, inFeatures) = parserFor(spec)
+    val features = new GeoJsonFeatures(sink)
+    var idx = spec.startRecord - 1
+    var more = inFeatures
+    new FeatureCursor {
+      override def next(): Boolean = more && (parser.nextToken() match {
+        case JsonToken.START_OBJECT =>
+          val t = features.read(parser)
+          idx += 1
+          sink.fid(t.fid(idx))
+          sink.geometry(t.wkb)
+          true
+        case _ => more = false; false // END_ARRAY or EOF
+      })
+      override def sizeHint: Long = spec.numRecords
+      override def close(): Unit = parser.close()
+    }
+  }
+
+  /** The features of [[cursor]], each one's tokens read one feature ahead
+    * and its geometry decoded when it is returned (so a malformed geometry
+    * fails at its own feature, a syntax error one feature earlier). */
+  override def openSplit(spec: SplitSpec, opts: GdalOptions): FeatureIterator = {
+    val (parser, inFeatures) = parserFor(spec)
+    val builder = new FeatureBuilder
+    val features = new GeoJsonFeatures(builder)
+    var idx = spec.startRecord - 1
+    val it = new Iterator[RawFeature] {
+      private var pending: (GeoJsonFeatures.Tokens, IndexedSeq[(String, Any)]) = advance()
+
+      private def advance(): (GeoJsonFeatures.Tokens, IndexedSeq[(String, Any)]) =
         if (!inFeatures) null
         else parser.nextToken() match {
-          case JsonToken.START_OBJECT => features.read(parser)
+          case JsonToken.START_OBJECT => (features.read(parser), builder.props())
           case _ => null // END_ARRAY or EOF
         }
 
       override def hasNext: Boolean = pending != null
       override def next(): RawFeature = {
-        val tokens = pending
+        val (tokens, props) = pending
         pending = advance()
         idx += 1
-        tokens.feature(idx)
+        RawFeature(tokens.fid(idx), tokens.wkb, props)
       }
     }
     FeatureIterator(it, () => parser.close())
-  }
-
-  override def open(path: String, opts: GdalOptions): FeatureIterator = {
-    val parser = factory.createParser(new File(path))
-    featureIterator(parser, seekFeatures(parser), 0L)
   }
 
   /** Types from a token walk (see [[GeoJsonTypes]]): no trees, no
@@ -91,64 +131,14 @@ class GeoJsonFormat extends FeatureFormat {
   }
 
   /** One big FeatureCollection file no longer serializes the whole scan:
-    * the driver token-scans the file once (skipChildren — no trees),
-    * records each feature's byte span, and groups features into
-    * ~`splitBytes` ranges. Executors then parse only their byte range
-    * (wrapped in `[...]` so the comma-separated span is a valid array).
-    * Files under 8 MB keep the single-partition fast path; geojsonseq
-    * remains the zero-scan splittable format. */
-  override def planSplits(path: String, opts: GdalOptions): Seq[SplitSpec] = {
-    val f = new File(path)
-    val minSplittable = 8L << 20
-    val targetBytes = 32L << 20
-    if (f.length < minSplittable) return Seq(SplitSpec(path, 0L, -1L))
-    val parser = factory.createParser(f)
-    try {
-      if (!seekFeatures(parser)) return Seq(SplitSpec(path, 0L, -1L))
-      val splits = scala.collection.mutable.ArrayBuffer.empty[SplitSpec]
-      var chunkStart = -1L
-      var chunkFirstIdx = 0L
-      var chunkCount = 0L
-      var idx = 0L
-      var lastEnd = -1L
-      var t = parser.nextToken()
-      while (t == JsonToken.START_OBJECT) {
-        val start = parser.currentTokenLocation().getByteOffset
-        parser.skipChildren()
-        lastEnd = parser.currentLocation().getByteOffset
-        if (chunkStart < 0) { chunkStart = start; chunkFirstIdx = idx; chunkCount = 0L }
-        chunkCount += 1
-        if (lastEnd - chunkStart >= targetBytes || chunkCount >= opts.splitRecords) {
-          splits += SplitSpec(path, chunkFirstIdx, chunkCount, chunkStart, lastEnd)
-          chunkStart = -1L
-        }
-        idx += 1
-        t = parser.nextToken()
-      }
-      if (chunkStart >= 0)
-        splits += SplitSpec(path, chunkFirstIdx, chunkCount, chunkStart, lastEnd)
-      if (splits.isEmpty) Seq(SplitSpec(path, 0L, -1L)) else splits.toSeq
-    } finally parser.close()
-  }
-
-  override def openSplit(spec: SplitSpec, opts: GdalOptions): FeatureIterator = {
-    if (spec.byteStart < 0) open(spec.path, opts)
-    else {
-      val fis = new java.io.FileInputStream(spec.path)
-      var toSkip = spec.byteStart
-      while (toSkip > 0) toSkip -= fis.skip(toSkip)
-      val bounded = new BoundedInputStream(fis, spec.byteEnd - spec.byteStart)
-      val stream = new java.io.SequenceInputStream(
-        java.util.Collections.enumeration(java.util.Arrays.asList[java.io.InputStream](
-          new java.io.ByteArrayInputStream("[".getBytes),
-          bounded,
-          new java.io.ByteArrayInputStream("]".getBytes))))
-      val parser = factory.createParser(stream)
-      val in = parser.nextToken() == JsonToken.START_ARRAY
-      featureIterator(parser, in, spec.startRecord)
-    }
-  }
-
+    * the driver finds each feature's byte span ([[GeoJsonSpans]]) and
+    * groups features into ~32 MB (or `splitRecords`-feature) ranges.
+    * Executors then parse only their byte range. Files under 8 MB keep
+    * the single-partition fast path; geojsonseq remains the zero-scan
+    * splittable format. */
+  override def planSplits(path: String, opts: GdalOptions): Seq[SplitSpec] =
+    if (new File(path).length < (8L << 20)) Seq(SplitSpec(path, 0L, -1L))
+    else GeoJsonSpans.splits(path, 32L << 20, opts.splitRecords)
 }
 
 /** Reads at most `limit` bytes of `in`, then reports EOF (split ranges). */

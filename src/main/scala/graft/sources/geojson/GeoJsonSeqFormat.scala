@@ -13,20 +13,26 @@ import graft.sources._
   * directory of .geojsonl part files (what our writer emits) parallelizes
   * perfectly, and single large files could be byte-range split on newlines
   * (same model as Spark's text sources). */
-class GeoJsonSeqFormat extends FeatureFormat {
+class GeoJsonSeqFormat extends ColumnarFormat {
   override def extensions: Seq[String] = Seq(".geojsonl", ".ndjson", ".geojsons")
 
-  override def open(path: String, opts: GdalOptions): FeatureIterator = {
-    val features = new GeoJsonFeatures
+  override def cursor(spec: SplitSpec, opts: GdalOptions, sink: ValueSink): FeatureCursor = {
+    val features = new GeoJsonFeatures(sink)
     var idx = -1L
-    val lines = new GeoJsonSeqFormat.Lines(new FileInputStream(path))
-    val it = lines.map { p =>
-      if (p.currentToken != JsonToken.START_OBJECT)
-        throw new IllegalArgumentException(s"$path: not a GeoJSON Feature object: ${lines.text}")
-      idx += 1
-      features.read(p).feature(idx)
+    val lines = new GeoJsonSeqFormat.Lines(new FileInputStream(spec.path))
+    new FeatureCursor {
+      override def next(): Boolean = lines.hasNext && {
+        val p = lines.next()
+        if (p.currentToken != JsonToken.START_OBJECT)
+          throw new IllegalArgumentException(s"${spec.path}: not a GeoJSON Feature object: ${lines.text}")
+        idx += 1
+        val t = features.read(p)
+        sink.fid(t.fid(idx))
+        sink.geometry(t.wkb)
+        true
+      }
+      override def close(): Unit = lines.close()
     }
-    FeatureIterator(it, () => lines.close())
   }
 
   /** Types from a token walk of each line (see [[GeoJsonTypes]]): no
@@ -48,27 +54,22 @@ object GeoJsonSeqFormat {
     * stands on the line's first token (read by `next`, so a malformed line
     * fails there, as a per-line parse in `map` would); a line's parser is
     * closed when the next line is asked for, or on [[close]]. Lines split
-    * where `BufferedReader.readLine` splits them (`\n`, `\r`, `\r\n`);
-    * every RFC 8142 record separator (RS, 0x1E) is dropped and the line is
+    * where `BufferedReader.readLine` splits them ([[ByteLines]]); every
+    * RFC 8142 record separator (RS, 0x1E) is dropped and the line is
     * trimmed like `String.trim`; a line left empty is skipped; whatever
     * follows the line's first JSON value is ignored.
     *
-    * Lines are split as bytes, and a line that starts with `{` and is
-    * plain UTF-8 (no NUL, no malformed sequence) is parsed in place. Any
-    * other line is decoded to a string first, with malformed bytes
-    * replaced, so it parses to what a character reader would give. */
+    * A line that starts with `{` and is plain UTF-8 (no NUL, no malformed
+    * sequence) is parsed in place. Any other line is decoded to a string
+    * first, with malformed bytes replaced, so it parses to what a
+    * character reader would give. */
   private[geojson] final class Lines(in: java.io.InputStream)
       extends Iterator[JsonParser] with AutoCloseable {
     private val factory = GeoJsonFeatures.mapper.getFactory
-    private var buf = new Array[Byte](1 << 16)
-    private var start = 0 // first byte not yet split off
-    private var end = 0 // end of the bytes read so far
-    private var eof = false
-    private var lineStart = 0 // the line last split off
-    private var lineEnd = 0
+    private val lines = new ByteLines(in)
     private var parser: JsonParser = null
     private var ready = false
-    // the current line: its string, or null and its span in `buf`
+    // the current line: its string, or null and its span in `lines.buf`
     private var lineString: String = null
     private var textFrom = 0
     private var textLen = 0
@@ -76,13 +77,13 @@ object GeoJsonSeqFormat {
     /** The current line's text, after the RS strip and the trim. */
     def text: String =
       if (lineString != null) lineString
-      else new String(buf, textFrom, textLen, StandardCharsets.UTF_8)
+      else new String(lines.buf, textFrom, textLen, StandardCharsets.UTF_8)
 
     override def hasNext: Boolean = {
       if (!ready) {
         if (parser != null) { parser.close(); parser = null }
         ready = true
-        while (parser == null && splitLine()) parseLine(lineStart, lineEnd)
+        while (parser == null && lines.next()) parseLine(lines.buf, lines.start, lines.end)
       }
       parser != null
     }
@@ -94,49 +95,11 @@ object GeoJsonSeqFormat {
       parser
     }
 
-    override def close(): Unit = try if (parser != null) parser.close() finally in.close()
+    override def close(): Unit = try if (parser != null) parser.close() finally lines.close()
 
-    /** Splits the next line off into `[lineStart, lineEnd)`; false at the end. */
-    private def splitLine(): Boolean = {
-      var i = start
-      while (true) {
-        while (i < end && buf(i) != '\n' && buf(i) != '\r') i += 1
-        if (i < end && !(buf(i) == '\r' && i + 1 == end && !eof)) {
-          lineStart = start
-          lineEnd = i
-          start = if (buf(i) == '\r' && i + 1 < end && buf(i + 1) == '\n') i + 2 else i + 1
-          return true
-        }
-        if (eof) {
-          if (start == end) return false
-          lineStart = start
-          lineEnd = end
-          start = end
-          return true
-        }
-        i -= fill()
-      }
-      false
-    }
-
-    /** Reads more bytes after `end`, first moving the unsplit bytes to the
-      * front (growing the buffer if they fill it); returns how far they
-      * moved. */
-    private def fill(): Int = {
-      val moved = start
-      if (moved > 0) {
-        System.arraycopy(buf, start, buf, 0, end - start)
-        end -= start
-        start = 0
-      } else if (end == buf.length) buf = Array.copyOf(buf, buf.length * 2)
-      val n = in.read(buf, end, buf.length - end)
-      if (n < 0) eof = true else end += n
-      moved
-    }
-
-    /** Sets `parser` to a parser of the line `[from, to)`, or leaves it
+    /** Sets `parser` to a parser of the line `buf[from, to)`, or leaves it
       * null for a blank line. */
-    private def parseLine(from: Int, to: Int): Unit = {
+    private def parseLine(buf: Array[Byte], from: Int, to: Int): Unit = {
       var a = from
       var b = to
       while (a < b && (buf(a) & 0xFF) <= 0x20) a += 1
@@ -152,7 +115,7 @@ object GeoJsonSeqFormat {
         if (c > 0x1E) i += 1
         else if (c > 0) { rs |= c == 0x1E; i += 1 }
         else if (c == 0) plain = false
-        else { val n = utf8Length(i, b); if (n == 0) plain = false else i += n }
+        else { val n = ByteLines.utf8Length(buf, i, b); if (n == 0) plain = false else i += n }
       }
       if (plain) {
         if (rs) { // drop the RS bytes inside the line, in place
@@ -172,24 +135,6 @@ object GeoJsonSeqFormat {
         lineString = line
         parser = factory.createParser(line)
       }
-    }
-
-    /** The length of the well-formed multi-byte UTF-8 sequence at `i`
-      * (before `to`); 0 for a malformed one. */
-    private def utf8Length(i: Int, to: Int): Int = {
-      def cont(j: Int, lo: Int, hi: Int): Boolean =
-        j < to && (buf(j) & 0xFF) >= lo && (buf(j) & 0xFF) <= hi
-      val c = buf(i) & 0xFF
-      if (c >= 0xC2 && c <= 0xDF) { if (cont(i + 1, 0x80, 0xBF)) 2 else 0 }
-      else if (c >= 0xE0 && c <= 0xEF) {
-        val lo = if (c == 0xE0) 0xA0 else 0x80
-        val hi = if (c == 0xED) 0x9F else 0xBF
-        if (cont(i + 1, lo, hi) && cont(i + 2, 0x80, 0xBF)) 3 else 0
-      } else if (c >= 0xF0 && c <= 0xF4) {
-        val lo = if (c == 0xF0) 0x90 else 0x80
-        val hi = if (c == 0xF4) 0x8F else 0xBF
-        if (cont(i + 1, lo, hi) && cont(i + 2, 0x80, 0xBF) && cont(i + 3, 0x80, 0xBF)) 4 else 0
-      } else 0
     }
   }
 }

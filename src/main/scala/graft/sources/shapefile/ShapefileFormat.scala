@@ -3,10 +3,7 @@ package graft.sources.shapefile
 import java.io.{File, FileOutputStream}
 import java.util.zip.ZipInputStream
 
-import scala.collection.immutable.ArraySeq
-
 import graft.TempDirs
-import graft.geom.GeomCodec
 import graft.sources._
 
 /** Shapefile reader (S1 for the ESRI Shapefile driver; zipped shapefiles
@@ -15,12 +12,9 @@ import graft.sources._
   * records with .dbf attribute rows; FID is the 0-based record index
   * (GDAL's shapefile FID convention).
   */
-class ShapefileFormat extends FeatureFormat {
+class ShapefileFormat extends ColumnarFormat {
   override def extensions: Seq[String] = Seq(".shp", ".shp.zip", ".zip")
   override def handlesBbox: Boolean = true // record-box skip on every path
-
-  override def open(path: String, opts: GdalOptions): FeatureIterator =
-    openRange(path, 0L, -1L, bbox = opts.bbox)
 
   /** One huge .shp parallelizes across executors via .shx record-range
     * splits (`splitRecords` option, default 65536 records/partition) —
@@ -42,58 +36,29 @@ class ShapefileFormat extends FeatureFormat {
     }
   }
 
-  override def openSplit(spec: SplitSpec, opts: GdalOptions): FeatureIterator =
-    if (spec.startRecord == 0L && spec.numRecords == -1L) open(spec.path, opts)
+  override def cursor(spec: SplitSpec, opts: GdalOptions, sink: ValueSink): FeatureCursor =
+    if (spec.startRecord == 0L && spec.numRecords == -1L)
+      cursorOf(spec.path, 0L, -1L, 100L, opts.bbox, sink)
     else {
       val startByte = Shp.shxOffsets(spec.path.replaceAll("\\.shp$", ".shx"))(spec.startRecord.toInt)
-      openRange(spec.path, spec.startRecord, spec.numRecords, startByte, opts.bbox)
+      cursorOf(spec.path, spec.startRecord, spec.numRecords, startByte, opts.bbox, sink)
     }
 
-  private def openRange(path: String, startRec: Long, numRec: Long,
-      startByte: Long = 100L,
-      bbox: Option[graft.sources.flatgeobuf.FgbIndex.Box] = None): FeatureIterator =
+  private def cursorOf(path: String, startRec: Long, numRec: Long, startByte: Long,
+      bbox: Option[graft.sources.flatgeobuf.FgbIndex.Box], sink: ValueSink): FeatureCursor =
     if (isZip(path)) {
       val dir = unzipToTemp(path)
-      val it = try openRange(shpIn(dir, path), startRec, -1L, bbox = bbox)
+      val c = try cursorOf(shpIn(dir, path), startRec, -1L, 100L, bbox, sink)
       catch { case e: Throwable => TempDirs.deleteTree(dir); throw e }
-      FeatureIterator(it, () => try it.close() finally TempDirs.deleteTree(dir))
-    } else {
-      val dbfPath = path.replaceAll("\\.shp$", ".dbf")
-      val raw = Shp.rawRecords(path, startByte, numRec)
-      val dbf =
-        try if (new File(dbfPath).exists) new Dbf.Reader(dbfPath, startRec, numRec) else null
-        catch { case e: Throwable => raw.close(); throw e }
-      val names = if (dbf == null) Array.empty[String] else dbf.fields.map(_.name).toArray
-
-      // the DBF row is consumed for every .shp record — bbox skipping must
-      // keep the two streams aligned and the FID = file record index
-      var idx = startRec - 1
-      val it = raw.flatMap { case (_, content) =>
-        idx += 1
-        val rec = if (dbf != null && dbf.hasNext) dbf.next() else null
-        if (bbox.exists(q => !Shp.boxIntersects(content, q))) None
-        else {
-          val attrs: IndexedSeq[(String, Any)] =
-            if (rec == null) IndexedSeq.empty
-            else {
-              val deleted = dbf.deleted(rec)
-              val props = new Array[(String, Any)](names.length)
-              var c = 0
-              while (c < names.length) {
-                props(c) = (names(c), if (deleted) null else dbf.cell(rec, c))
-                c += 1
-              }
-              ArraySeq.unsafeWrapArray(props)
-            }
-          val geom = Shp.parseShape(content)
-          Some(RawFeature(idx, if (geom == null) null else GeomCodec.toWkb(geom), attrs))
-        }
+      new FeatureCursor {
+        override def next(): Boolean = c.next()
+        override def sizeHint: Long = c.sizeHint
+        override def close(): Unit = try c.close() finally TempDirs.deleteTree(dir)
       }
-      FeatureIterator(it, () => try raw.close() finally if (dbf != null) dbf.close())
-    }
+    } else new ShapefileFormat.Records(path, startRec, numRec, startByte, bbox, sink)
 
   /** Types from the DBF alone: header types, with each column's cells
-    * parsed only until its first non-null one (see
+    * decoded only until its first non-null one (see
     * [[SchemaInference.HeaderTypes]]). The features are the .shp records,
     * as in [[open]]: walked for their record boxes, never parsed. */
   override def openTypes(path: String, opts: GdalOptions): TypeIterator =
@@ -110,13 +75,18 @@ class ShapefileFormat extends FeatureFormat {
       val dbf = new Dbf.Reader(dbfPath, 0L, -1L)
       val types = new SchemaInference.HeaderTypes(
         dbf.fields.map(f => (f.name, Dbf.sparkType(f))))
+      val presence = new Presence(dbf.fields.length)
       var unread = opts.offset // the window drops these before inference reads them
       val it = shp.flatMap { case (_, content) =>
         val rec = if (dbf.hasNext) dbf.next() else null
         if (opts.bbox.exists(q => !Shp.boxIntersects(content, q))) None
         else if (unread > 0) { unread -= 1; Some(IndexedSeq.empty) }
         else if (rec == null) Some(IndexedSeq.empty)
-        else Some(types.next(c => !dbf.deleted(rec) && dbf.cell(rec, c) != null))
+        else Some(types.next { c =>
+          presence.present(c) = false
+          dbf.putCell(rec, c, presence, c)
+          presence.present(c)
+        })
       }
       TypeIterator(it, () => { dbf.close(); shp.close() })
     }
@@ -149,6 +119,42 @@ class ShapefileFormat extends FeatureFormat {
     dir.listFiles().find(_.getName.toLowerCase.endsWith(".shp"))
       .getOrElse(throw new IllegalArgumentException(s"No .shp member in $zipPath"))
       .getAbsolutePath
+}
+
+object ShapefileFormat {
+  /** The .shp records of a range, each paired with its DBF row (consumed
+    * for every record, so bbox skipping keeps the two streams aligned and
+    * the FID is the file record index). */
+  private final class Records(path: String, startRec: Long, numRec: Long, startByte: Long,
+      bbox: Option[graft.sources.flatgeobuf.FgbIndex.Box], sink: ValueSink) extends FeatureCursor {
+    private val raw = Shp.rawRecords(path, startByte, numRec)
+    private val dbf = {
+      val dbfPath = path.replaceAll("\\.shp$", ".dbf")
+      try if (new File(dbfPath).exists) new Dbf.Reader(dbfPath, startRec, numRec) else null
+      catch { case e: Throwable => raw.close(); throw e }
+    }
+    private val slots = if (dbf == null) Array.empty[Int] else sink.bind(dbf.fields.map(_.name))
+    private var idx = startRec - 1
+
+    override def sizeHint: Long = if (dbf != null) dbf.records else numRec
+
+    override def next(): Boolean = {
+      while (raw.hasNext) {
+        val content = raw.next()._2
+        idx += 1
+        val rec = if (dbf != null && dbf.hasNext) dbf.next() else null
+        if (!bbox.exists(q => !Shp.boxIntersects(content, q))) {
+          sink.fid(idx)
+          if (rec != null) dbf.put(rec, sink, slots)
+          sink.geometry(Shp.wkb(content))
+          return true
+        }
+      }
+      false
+    }
+
+    override def close(): Unit = try raw.close() finally if (dbf != null) dbf.close()
+  }
 }
 
 /** `spark.read.format("shapefile")` / `df.write.format("shapefile")` */

@@ -49,6 +49,16 @@ object Shp {
     }
   }
 
+  /** The record's geometry as WKB, null for a Null shape; a point's
+    * bytes are written directly (as [[graft.geom.GeomCodec.point]]). */
+  def wkb(b: ByteBuffer): Array[Byte] = b.getInt(0) match {
+    case 0 => null
+    case 1 | 11 | 21 => graft.geom.GeomCodec.point(b.getDouble(4), b.getDouble(12))
+    case _ =>
+      val g = parseShape(b)
+      if (g == null) null else graft.geom.GeomCodec.toWkb(g)
+  }
+
   /** Stream (recordNumber, geometry-or-null) pairs. */
   def records(path: String, startByte: Long = 100L,
       maxRecords: Long = -1L): Iterator[(Int, Geometry)] =

@@ -16,7 +16,7 @@ import graft.sources._
   * each subtree is an independent InputPartition streaming its leaves, so
   * one big database table parallelizes without a full-file scan per task.
   */
-abstract class SqliteVectorFormat extends FeatureFormat {
+abstract class SqliteVectorFormat extends ColumnarFormat {
 
   protected case class Layer(table: String, geomCol: Option[String], rootPage: Int,
       cols: IndexedSeq[(String, Boolean)]) {
@@ -45,40 +45,44 @@ abstract class SqliteVectorFormat extends FeatureFormat {
     }
   }
 
-  /** Each row's props in column order (the geometry column left out),
-    * under the layer's own name instances; a record shorter than the
-    * column list reads null for the missing cells. */
-  private def rowsOf(f: SqliteFile, layer: Layer,
-      roots: Seq[Int]): Iterator[RawFeature] = {
-    val names = layer.cols.map(_._1).toArray
-    val ipk = layer.cols.map(_._2).toArray
+  /** Opens `roots`' rows of `layer` for a decode loop into `sink`. */
+  private def rows(f: SqliteFile, layer: Layer, roots: Seq[Int], sink: ValueSink): FeatureCursor = {
+    val cols = layer.cols
     val geomIdx = layer.geomIdx
-    val width = if (geomIdx >= 0) names.length - 1 else names.length
-    roots.iterator.flatMap(f.scanCells).map { case (rowid, payload) =>
-      val vals = f.decodeValues(payload)
-      val props = new Array[(String, Any)](width)
-      var i = 0
-      var k = 0
-      while (i < names.length) {
-        if (i != geomIdx) {
-          // a non-geometry blob stays a BinaryType value
-          props(k) = (names(i), if (ipk(i)) rowid else if (i < vals.length) vals(i) else null)
-          k += 1
-        }
-        i += 1
+    val props = cols.indices.filter(_ != geomIdx)
+    val bound = sink.bind(props.map(cols(_)._1))
+    val slots = Array.fill(cols.length)(-1)
+    props.indices.foreach(k => slots(props(k)) = bound(k))
+    val ipk = cols.map(_._2).toArray
+    val cells = roots.iterator.flatMap(f.scanCells)
+    new FeatureCursor {
+      override def next(): Boolean = cells.hasNext && {
+        val (rowid, payload) = cells.next()
+        sink.fid(rowid)
+        val blob = f.putRecord(payload, rowid, slots, ipk, geomIdx, sink)
+        sink.geometry(if (blob == null) null else blobToWkb(blob))
+        true
       }
-      val wkb = if (geomIdx >= 0 && geomIdx < vals.length) vals(geomIdx) match {
-        case b: Array[Byte] => blobToWkb(b)
-        case _ => null
-      } else null
-      RawFeature(rowid, wkb, ArraySeq.unsafeWrapArray(props))
+      // known without a scan only for a table that fits its root page
+      override def sizeHint: Long = if (roots.length == 1) f.leafCells(roots.head) else -1L
+      override def close(): Unit = f.close()
     }
   }
 
-  override def open(path: String, opts: GdalOptions): FeatureIterator = {
-    val f = new SqliteFile(path)
-    val layer = selectLayer(f, path, opts)
-    FeatureIterator(rowsOf(f, layer, Seq(layer.rootPage)), () => f.close())
+  /** Each row's props in column order (the geometry column left out),
+    * under the layer's own name instances; a record shorter than the
+    * column list reads null for the missing cells. A split's rows are
+    * the leaves under its b-tree children. */
+  override def cursor(spec: SplitSpec, opts: GdalOptions, sink: ValueSink): FeatureCursor = {
+    val f = new SqliteFile(spec.path)
+    try {
+      val layer = selectLayer(f, spec.path, opts)
+      val roots =
+        if (spec.startRecord == 0L && spec.numRecords == -1L) Seq(layer.rootPage)
+        else f.childPages(layer.rootPage).slice(spec.startRecord.toInt,
+          (spec.startRecord + spec.numRecords).toInt)
+      rows(f, layer, roots, sink)
+    } catch { case e: Throwable => f.close(); throw e }
   }
 
   /** Types from the record headers' serial types alone — the storage
@@ -115,18 +119,6 @@ abstract class SqliteVectorFormat extends FeatureFormat {
       if (children.isEmpty) Seq(SplitSpec(path, 0L, -1L))
       else children.indices.map(i => SplitSpec(path, i.toLong, 1L))
     } finally f.close()
-  }
-
-  override def openSplit(spec: SplitSpec, opts: GdalOptions): FeatureIterator = {
-    if (spec.startRecord == 0L && spec.numRecords == -1L) open(spec.path, opts)
-    else {
-      val f = new SqliteFile(spec.path)
-      val layer = selectLayer(f, spec.path, opts)
-      val children = f.childPages(layer.rootPage)
-      val slice = children.slice(spec.startRecord.toInt,
-        (spec.startRecord + spec.numRecords).toInt)
-      FeatureIterator(rowsOf(f, layer, slice), () => f.close())
-    }
   }
 }
 

@@ -88,6 +88,13 @@ final class SqliteFile(path: String) extends AutoCloseable {
     }
   }
 
+  /** The cell count of page `pageNo` if it is a table leaf, else -1. */
+  def leafCells(pageNo: Int): Int = {
+    val p = page(pageNo)
+    val base = if (pageNo == 1) 100 else 0
+    if ((p(base) & 0xFF) == 0x0D) ((p(base + 3) & 0xFF) << 8) | (p(base + 4) & 0xFF) else -1
+  }
+
   /** Stream (rowid, payload) of every leaf cell under `root`, in key
     * order. Payloads spanning overflow chains are reassembled. */
   def scanCells(root: Int): Iterator[(Long, Array[Byte])] = scanLeaves(root)(readLeafCell)
@@ -199,42 +206,72 @@ final class SqliteFile(path: String) extends AutoCloseable {
   def decodeRecord(payload: Array[Byte]): IndexedSeq[Any] =
     scala.collection.immutable.ArraySeq.unsafeWrapArray(decodeValues(payload))
 
-  /** [[decodeRecord]] into a fresh array: one pass over the header's
-    * serial types and the body. */
+  /** [[decodeRecord]] into a fresh array, through [[putRecord]]. */
   def decodeValues(payload: Array[Byte]): Array[Any] = {
-    val types = serialTypes(payload, 0)
-    val out = new Array[Any](types.length)
-    var body = varintValue(payload, 0).toInt
+    val n = serialTypes(payload, 0).length
+    val builder = new graft.sources.FeatureBuilder
+    val slots = builder.bind(IndexedSeq.fill(n)(""))
+    putRecord(payload, 0L, slots, new Array[Boolean](n), -1, builder)
+    builder.props().iterator.map(_._2).toArray
+  }
+
+  /** Puts the columns of a record payload into `sink` in one pass over
+    * its header's serial types and its body: column `i` into `slots(i)`
+    * (skipped where -1), an INTEGER PRIMARY KEY column (`ipk(i)`) as
+    * `rowid`, and a column past the record's end as null. Integers are
+    * Long, TEXT goes in as its UTF-8 bytes, a BLOB as a copy. Returns the
+    * BLOB of column `geomIdx`, or null where it holds no BLOB. */
+  def putRecord(payload: Array[Byte], rowid: Long, slots: Array[Int], ipk: Array[Boolean],
+      geomIdx: Int, sink: graft.sources.ValueSink): Array[Byte] = {
+    val headerEnd = varintValue(payload, 0).toInt
+    var at = varintLen(payload, 0)
+    var body = headerEnd
+    var geom: Array[Byte] = null
     var i = 0
-    while (i < types.length) {
-      out(i) = decodeValue(payload, body, types(i))
-      body += valueSize(types(i))
+    while (i < slots.length) {
+      val serial = if (at < headerEnd) varintValue(payload, at) else -1L
+      if (at < headerEnd) at += varintLen(payload, at)
+      if (i == geomIdx) {
+        if (serial >= 12 && serial % 2 == 0) geom = blob(payload, body, serial)
+      } else {
+        val s = slots(i)
+        if (s >= 0) {
+          if (ipk(i)) sink.putLong(s, rowid)
+          else if (serial < 0) sink.putNull(s)
+          else putValue(payload, body, serial, sink, s)
+        }
+      }
+      if (serial > 0) body += valueSize(serial)
       i += 1
     }
+    geom
+  }
+
+  private def blob(b: Array[Byte], off: Int, serial: Long): Array[Byte] = {
+    val len = ((serial - 12) / 2).toInt
+    val out = new Array[Byte](len)
+    System.arraycopy(b, off, out, 0, len)
     out
   }
 
-  private def decodeValue(b: Array[Byte], off: Int, serial: Long): Any = serial match {
-    case 0 => null
-    case 1 => b(off).toLong
-    case 2 => ((b(off) << 8) | (b(off + 1) & 0xFF)).toLong
-    case 3 => ((b(off) << 16) | ((b(off + 1) & 0xFF) << 8) | (b(off + 2) & 0xFF)).toLong
-    case 4 => int32(b, off).toLong
-    case 5 => (int32(b, off).toLong << 16) | (((b(off + 4) & 0xFF) << 8) | (b(off + 5) & 0xFF)).toLong
-    case 6 => (int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL)
-    case 7 =>
-      java.lang.Double.longBitsToDouble(
-        (int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL))
-    case 8 => 0L
-    case 9 => 1L
-    case t if t >= 12 && t % 2 == 0 =>
-      val len = ((t - 12) / 2).toInt
-      val out = new Array[Byte](len)
-      System.arraycopy(b, off, out, 0, len)
-      out
-    case t if t >= 13 => new String(b, off, ((t - 13) / 2).toInt, "UTF-8")
-    case t => throw new IllegalStateException(s"reserved serial type $t")
-  }
+  private def putValue(b: Array[Byte], off: Int, serial: Long, sink: graft.sources.ValueSink, s: Int): Unit =
+    serial match {
+      case 0 => sink.putNull(s)
+      case 1 => sink.putLong(s, b(off).toLong)
+      case 2 => sink.putLong(s, ((b(off) << 8) | (b(off + 1) & 0xFF)).toLong)
+      case 3 => sink.putLong(s, ((b(off) << 16) | ((b(off + 1) & 0xFF) << 8) | (b(off + 2) & 0xFF)).toLong)
+      case 4 => sink.putLong(s, int32(b, off).toLong)
+      case 5 => sink.putLong(s, (int32(b, off).toLong << 16) | (((b(off + 4) & 0xFF) << 8) | (b(off + 5) & 0xFF)).toLong)
+      case 6 => sink.putLong(s, (int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL))
+      case 7 =>
+        sink.putDouble(s, java.lang.Double.longBitsToDouble(
+          (int32(b, off).toLong << 32) | (int32(b, off + 4).toLong & 0xFFFFFFFFL)))
+      case 8 => sink.putLong(s, 0L)
+      case 9 => sink.putLong(s, 1L)
+      case t if t >= 12 && t % 2 == 0 => sink.putBinary(s, blob(b, off, t))
+      case t if t >= 13 => sink.putUtf8(s, b, off, ((t - 13) / 2).toInt)
+      case t => throw new IllegalStateException(s"reserved serial type $t")
+    }
 
   /** Body bytes of a value of serial type `serial`. */
   private def valueSize(serial: Long): Int = serial match {

@@ -1,0 +1,261 @@
+package graft
+
+import java.io.File
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+import java.util.ServiceLoader
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.connector.catalog.SupportsRead
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec}
+import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.geom.GeomCodec
+import graft.sources._
+
+/** The columnar scan of the seven hot formats must give the rows the row
+  * path gives — `RowConverter` over the format's `open`, behind the row
+  * reader's bbox test, window, pushed filters and pushed limit — split by
+  * split, under column pruning, pushed filters, bbox, offset, limit and
+  * maxFeatures, the fid and geometry options and their `_original`
+  * renames, and all three geometry formats; and Spark must plan those
+  * scans as `ColumnarToRow` with no `Project`. */
+class ColumnarScanSpec extends AnyFunSuite {
+  import TestSpark._
+
+  private val dir = TempDirs.untilExit("graft_columnar_")
+
+  private def provider(fmt: String): FeatureSourceProvider =
+    ServiceLoader.load(classOf[DataSourceRegister]).asScala
+      .collectFirst { case p: FeatureSourceProvider if p.shortName == fmt => p }.get
+
+  private def norm(v: Any, dt: DataType): Any = (v, dt) match {
+    case (null, _) => null
+    case (s: UTF8String, _) => s.toString
+    case (b: Array[Byte], _) => ("bytes", b.toSeq)
+    case (d: Double, _) => ("double", java.lang.Double.doubleToLongBits(d))
+    case (a: ArrayData, ArrayType(et, _)) => ("array", (0 until a.numElements).map(i =>
+      if (a.isNullAt(i)) null else norm(a.get(i, et), et)))
+    case (o, _) => o
+  }
+  private def row(r: InternalRow, schema: StructType): Seq[Any] =
+    schema.fields.indices.map(i => if (r.isNullAt(i)) null else norm(r.get(i, schema(i).dataType), schema(i).dataType))
+
+  /** Each path's rows, split by split, or the class of its error; and the
+    * batches the columnar path returned. */
+  private def scan(fmt: String, path: String, o: Map[String, String], columns: Option[Seq[String]] = None,
+      filters: Array[Filter] = Array.empty, limit: Option[Int] = None): (Any, Any, Int) = {
+    val options = new CaseInsensitiveStringMap((o + ("path" -> path)).asJava)
+    val p = provider(fmt)
+    // the schema of a load without maxFeatures, so the scan is what meets it
+    val full = p.inferSchema(new CaseInsensitiveStringMap((o - "maxFeatures" + ("path" -> path)).asJava))
+    val table = p.getTable(full, Array.empty, options.asCaseSensitiveMap).asInstanceOf[SupportsRead]
+    val builder = table.newScanBuilder(options).asInstanceOf[FeatureScanBuilder]
+    // as Spark prunes: the columns a filter names are read too (filters stay residual)
+    columns.map(_ ++ filters.toSeq.flatMap(_.references.toSeq)).foreach(cs =>
+      builder.pruneColumns(StructType(full.fields.filter(f => cs.contains(f.name)))))
+    builder.pushFilters(filters)
+    limit.foreach(builder.pushLimit)
+    val s = builder.build()
+    val schema = s.readSchema()
+    val batch = s.toBatch
+    val factory = batch.createReaderFactory()
+    val parts = batch.planInputPartitions().toSeq
+    assert(parts.forall(factory.supportColumnarReads), s"$fmt is not columnar")
+    var batches = 0
+    def drain[T](open: InputPartition => PartitionReader[T])(rows: T => Iterator[Seq[Any]]) =
+      Try(parts.map { part =>
+        val r = open(part)
+        try { val out = Seq.newBuilder[Seq[Any]]; while (r.next()) out ++= rows(r.get()); out.result() }
+        finally r.close()
+      }) match { case Success(v) => Right(v); case Failure(e) => Left(e.getClass.getName) }
+    val rowPath = drain(factory.createReader)(r => Iterator(row(r, schema)))
+    val colPath = drain(factory.createColumnarReader) { b =>
+      batches += 1
+      b.rowIterator().asScala.map(row(_, schema)).toList.iterator
+    }
+    (rowPath, colPath, batches)
+  }
+
+  private def assertSame(fmt: String, path: String, o: Map[String, String], columns: Option[Seq[String]] = None,
+      filters: Array[Filter] = Array.empty, limit: Option[Int] = None): (Any, Int) = {
+    val (rows, cols, batches) = scan(fmt, path, o, columns, filters, limit)
+    if (cols != rows) {
+      val diff = (rows, cols) match {
+        case (Right(r: Seq[Seq[Any]] @unchecked), Right(c: Seq[Seq[Any]] @unchecked)) =>
+          val (a, b) = (r.flatten, c.flatten)
+          val i = a.indices.find(i => i >= b.length || a(i) != b(i)).getOrElse(a.length)
+          s"${a.length} vs ${b.length} rows; first difference at row $i: " +
+            s"${a.lift(i).toString.take(400)} vs ${b.lift(i).toString.take(400)}"
+        case _ => s"${rows.toString.take(400)} vs ${cols.toString.take(400)}"
+      }
+      fail(s"$fmt $path $o columns=$columns filters=${filters.toSeq} limit=$limit: $diff")
+    }
+    (rows, batches)
+  }
+
+  // ------------------------------------------------------------- inputs
+
+  private def text(name: String, s: String): String = {
+    val f = new File(dir, name)
+    Files.write(f.toPath, s.getBytes(StandardCharsets.UTF_8))
+    f.getAbsolutePath
+  }
+
+  private def write(df: org.apache.spark.sql.DataFrame, fmt: String, name: String): String = {
+    val out = new File(dir, name)
+    df.coalesce(1).write.format(fmt).mode("overwrite").save(out.getPath)
+    val ext = Map("geojson" -> ".geojson", "geojsonseq" -> ".geojsonl", "shapefile" -> ".shp",
+      "flatgeobuf" -> ".fgb", "gpkg" -> ".gpkg", "spatialite" -> ".sqlite", "csvgeo" -> ".csv")(fmt)
+    out.listFiles().filter(_.getName.endsWith(ext)).head.getAbsolutePath
+  }
+
+  private val formats = Seq("geojson", "geojsonseq", "shapefile", "flatgeobuf", "gpkg", "spatialite", "csvgeo")
+
+  /** 5,000 typed points with nulls and a late column: more than one batch. */
+  private lazy val big = {
+    val schema = StructType(Seq(StructField("i", IntegerType), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("s", StringType), StructField("b", BooleanType),
+      StructField("t", DateType), StructField("late", StringType), StructField("geometry", BinaryType)))
+    val rnd = new scala.util.Random(7)
+    val rows = (0 until 5000).map { i =>
+      def v[T](x: T): Any = if (i > 0 && rnd.nextInt(20) == 0) null else x
+      Row(v(rnd.nextInt(1000) - 500), v(3000000000L + i), v(rnd.nextInt(100000) / 1000.0),
+        v(s"w${rnd.nextInt(50)} é"), v(rnd.nextBoolean()), v(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(rnd.nextInt(20000)))),
+        if (i > 4500) s"late$i" else null,
+        GeomCodec.point(rnd.nextInt(2000) / 100.0, rnd.nextInt(1000) / 100.0))
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+
+  private lazy val stations = spark.read.format("shapefile").load(new File(fixtures, "stations.shp").getPath)
+
+  /** (format, path) of every input: the fixtures, the fixture frames
+    * written in the formats without a fixture, the big frame in all
+    * seven, and GeoJSON and CSV with mixed types and reserved names. */
+  private lazy val inputs: Seq[(String, String)] = {
+    def fx(n: String) = new File(fixtures, n).getAbsolutePath
+    val states = spark.read.format("geojson").load(fx("us_states.feature_collection.implicit_4326.json"))
+    Seq("geojson" -> fx("us_states.feature_collection.implicit_4326.json"),
+      "geojson" -> fx("global_large_lakes.feature_collection.implicit_4326.json"),
+      "shapefile" -> fx("stations.shp"), "shapefile" -> fx("stations_shapefile.shp.zip"),
+      "spatialite" -> fx("test_spatialite.sqlite"), "csvgeo" -> fx("lat_lon_countries.csv")) ++
+      Seq("gpkg", "geojsonseq", "flatgeobuf").flatMap(f =>
+        Seq(f -> write(stations, f, s"stations_$f"), f -> write(states, f, s"states_$f"))) ++
+      formats.map(f => f -> write(big, f, s"big_$f")) ++
+      Seq("geojson" -> text("mixed.geojson", """{"type":"FeatureCollection","features":[
+        |{"type":"Feature","id":7,"geometry":{"type":"Point","coordinates":[1,2]},"properties":{"a":1,"b":1,"c":1,"geometry":"g","fid":5,"lst":[1,2],"o":{"k":[1]}}},
+        |{"type":"Feature","geometry":null,"properties":{"a":"x","b":2.5,"c":3000000000,"lst":[1.5,null],"dup":1,"dup":"two"}},
+        |{"type":"Feature","geometry":{"type":"Point","coordinates":[3,4]},"properties":{"a":true,"lst":null},"properties":{"c":-1,"geometry":null}},
+        |{"type":"Feature","id":"s","geometry":{"type":"LineString","coordinates":[[0,0],[5,5]]},"properties":{"a":2.5,"b":null,"lst":["q"],"nested":[[1],[2,3]]}}
+        |]}""".stripMargin),
+        "csvgeo" -> text("reserved.csv", "fid,name,lon,lat,n\n1,a,1.5,2.5,10\n2,\"b,\"\"c\"\"\",x,3,\n\n3,,0,0,1e3\n"))
+  }
+
+  /** A bbox over the middle of a frame's geometry extent. */
+  private def middle(fmt: String, path: String): String = {
+    val env = new org.locationtech.jts.geom.Envelope()
+    val it = provider(fmt).format
+    FeatureFormat.expand(Seq(path), it).foreach { f =>
+      val fs = it.open(f, GdalOptions.from(Map.empty))
+      try fs.foreach(x => if (x.geomWkb != null) env.expandToInclude(GeomCodec.fromWkb(x.geomWkb).getEnvelopeInternal))
+      finally fs.close()
+    }
+    val (w, h) = (env.getWidth / 4, env.getHeight / 4)
+    s"${env.getMinX + w},${env.getMinY + h},${env.getMaxX - w},${env.getMaxY - h}"
+  }
+
+  private val variants: Seq[Map[String, String]] = Seq(
+    Map.empty,
+    Map("offset" -> "2", "limit" -> "5"),
+    Map("offset" -> "3"),
+    Map("limit" -> "0"),
+    Map("maxFeatures" -> "3"),
+    Map("maxFeatures" -> "100000"),
+    Map("fidColumnName" -> "fid"),
+    Map("fidColumnName" -> "fid", "geometryColumnName" -> "name"),
+    Map("geometryFormat" -> "wkt"),
+    Map("geometryFormat" -> "geojson", "geometryColumnName" -> "geom"),
+    Map("splitRecords" -> "1000"))
+
+  test("every input reads the same rows on both paths under every option variant") {
+    for ((fmt, path) <- inputs) {
+      val bbox = middle(fmt, path)
+      val extra = Seq(Map("bbox" -> bbox), Map("bbox" -> bbox, "offset" -> "1", "limit" -> "3"),
+        Map("bbox" -> bbox, "geometryFormat" -> "wkt")) ++
+        (if (fmt == "csvgeo") Seq(Map("autodetectTypes" -> "true"), Map("autodetectTypes" -> "true", "fidColumnName" -> "fid")) else Nil)
+      for (o <- variants ++ extra) assertSame(fmt, path, o)
+    }
+  }
+
+  test("column pruning, pushed filters and the pushed limit give the same rows on both paths") {
+    for ((fmt, path) <- inputs; o <- Seq(Map.empty[String, String], Map("offset" -> "1", "limit" -> "40"),
+        Map("fidColumnName" -> "fid", "geometryFormat" -> "wkt"))) {
+      val schema = spark.read.format(fmt).options(o).load(path).schema
+      val names = schema.fieldNames.toSeq
+      val str = schema.fields.find(f => f.dataType == StringType && f.name != "geometry").map(_.name)
+      val num = schema.fields.find(f => Seq(IntegerType, LongType, DoubleType).contains(f.dataType)).map(_.name)
+      val filters: Seq[Array[Filter]] = Seq(
+        Array(IsNotNull("geometry")),
+        str.toArray.map(s => Or(StringStartsWith(s, "A"), IsNull(s)): Filter),
+        str.toArray.map(s => Not(EqualTo(s, "x")): Filter) ++ num.map(n => GreaterThan(n, 0)),
+        num.toArray.map(n => LessThanOrEqual(n, 10): Filter),
+        Array(EqualTo("fid", 3L), IsNotNull("nope")))
+      for (cs <- Seq(None, Some(names.take(names.length / 2)), Some(Seq.empty), Some(Seq("geometry")),
+          Some(names.reverse.take(2))))
+        assertSame(fmt, path, o, cs)
+      for (f <- filters) assertSame(fmt, path, o, None, f)
+      assertSame(fmt, path, o, Some(names.drop(1)), filters(2), Some(3))
+      assertSame(fmt, path, o, None, Array.empty, Some(1))
+    }
+  }
+
+  test("a split of more than 4096 rows fills several batches; a small split sizes its batch to fit") {
+    for (fmt <- formats) {
+      val path = inputs.find { case (f, p) => f == fmt && p.contains("big_") }.get._2
+      val (rows, batches) = assertSame(fmt, path, Map.empty)
+      assert(rows.asInstanceOf[Either[String, Seq[Seq[Seq[Any]]]]].map(_.map(_.length).sum) === Right(5000))
+      assert(batches >= 2, fmt)
+    }
+  }
+
+  test("the hot formats plan ColumnarToRow with no Project; KML, GPX, GML and Arrow still read") {
+    for ((fmt, path) <- inputs.filter(_._2.contains("big_"))) {
+      for (df <- Seq(spark.read.format(fmt).load(path), spark.read.format(fmt).load(path).select("s", "geometry"),
+          spark.read.format(fmt).load(path).filter("l > 3000004000"))) {
+        val plan = df.queryExecution.executedPlan
+        assert(plan.collect { case c: ColumnarToRowExec => c }.nonEmpty, s"$fmt\n$plan")
+        assert(plan.collect { case p: ProjectExec => p }.isEmpty, s"$fmt\n$plan")
+      }
+      assert(spark.read.format(fmt).load(path).count() === 5000L)
+      assert(spark.read.format(fmt).load(path).filter("l > 3000004000").count() ===
+        big.filter("l > 3000004000").count(), fmt)
+    }
+    for (fmt <- Seq("kml", "gpx", "gml")) {
+      val out = new File(dir, s"stations_$fmt").getPath
+      stations.coalesce(1).write.format(fmt).mode("overwrite").save(out)
+      val df = spark.read.format(fmt).load(out)
+      assert(df.count() === stations.count(), fmt)
+      assert(df.queryExecution.executedPlan.collect { case c: ColumnarToRowExec => c }.isEmpty, fmt)
+    }
+    assert(graft.sources.arrow.ArrowRead.fromFile(spark, new File(fixtures, "cities.arrow").getPath).count() === 202L)
+  }
+
+  test("a pushed filter on a renamed _original column keeps its matching rows") {
+    val path = inputs.find(_._2.endsWith("mixed.geojson")).get._2
+    val df = spark.read.format("geojson").option("fidColumnName", "fid").load(path)
+    assert(df.schema.fieldNames.toSeq.contains("fid_original"))
+    assert(df.filter("fid_original = 5").count() === 1L)
+    assert(df.filter("geometry_original = 'g'").count() === 1L)
+  }
+}

@@ -71,4 +71,16 @@ class ShapefileWriteSpec extends AnyFunSuite {
     assert(rows(1).getLong(1) === -7L && !rows(1).getBoolean(3) &&
       rows(1).getDouble(4) === 96.0) // 100 - 4 hole
   }
+
+  test("toBytes(shapefile) is reproducible: every zip entry carries the fixed time") {
+    val df = spark.read.format("shapefile").load(s"$fixtures/stations.shp").limit(3)
+    val first = GdalWrite.toBytes(df, format = "shapefile")
+    Thread.sleep(2100) // past the 2 s resolution of a zip entry's time
+    assert(GdalWrite.toBytes(df, format = "shapefile").toSeq === first.toSeq)
+    val zin = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(first))
+    try {
+      val times = Iterator.continually(zin.getNextEntry).takeWhile(_ != null).map(_.getTime).toList
+      assert(times.length >= 3 && times.forall(_ == GdalWrite.ZipEntryTime), times)
+    } finally zin.close()
+  }
 }

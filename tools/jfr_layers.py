@@ -16,14 +16,23 @@ ends right after it), and charges each sample to one layer:
   parse.<fmt>      a reader's own classes; `sqlite` for the gpkg/spatialite
                    shared SQLite code, resolved to gpkg or spatialite when a
                    frame further up names one
-  convert          RowConverter / FirstValues
+  convert          RowConverter / FirstValues (the row path's conversion)
+  columnar         the columnar scan's ColumnSink (value conversion into the
+                   column vectors, the row decisions) and ColumnarFeatureReader
   digest           iobench's digest fold (the harness; a control)
   projection       Spark's generated unsafe projection
+  rowcopy          the copy of scanned rows into UnsafeRows: Spark's
+                   ColumnarToRow, a whole-stage generated `processNext`, the
+                   UnsafeRow writers and the ColumnarBatch row view
   reader           the DSv2 partition reader's own window/filter code
   other            none of these (Spark scheduling, JIT'd library code, ...)
 
-A sample in library code (String.hashCode, HashMap.get, JTS, Jackson) is
-charged to the innermost layer frame above it. With several dumps, the
+A sample in library code (String.hashCode, HashMap.get, JTS, Jackson, an
+OnHeapColumnVector getter or setter) is charged to the innermost layer
+frame above it: a vector write under ColumnSink is `columnar`, a vector
+read under generated code is `rowcopy`. Without `rowcopy`, the copy into
+UnsafeRows ran inside the digest fold's iterator and was charged to
+`digest`, which skewed the per-digest control. With several dumps, the
 table has one column per dump, in the order given; each cell is the
 layer's share of the dump's samples and, in brackets, its sample count
 and its count per 100 `digest` samples. The digest fold does the same
@@ -61,6 +70,14 @@ READERS = [
     ("graft.geom.", None),  # codecs: charged to the reader that calls them
 ]
 SPECIFIC = {"gpkg", "spatialite"}
+COLUMNAR = ("graft.sources.ColumnSink", "graft.sources.ColumnarFeatureReader")
+ROWCOPY = (
+    "org.apache.spark.sql.execution.ColumnarToRowExec",
+    "org.apache.spark.sql.catalyst.expressions.codegen.UnsafeWriter",
+    "org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter",
+    "org.apache.spark.sql.vectorized.ColumnarBatchRow",
+    "org.apache.spark.sql.vectorized.ColumnarBatch$",
+)
 
 
 def events(path):
@@ -150,10 +167,14 @@ def layer(stack):
             return "parse." + (fmt_from(stack, i) or "shared")
         if fr.startswith(("graft.sources.RowConverter", "graft.sources.FirstValues")):
             return "convert"
+        if fr.startswith(COLUMNAR):
+            return "columnar"
         if fr.startswith("iobench.Digest"):
             return "digest"
         if "SpecificUnsafeProjection" in fr or "UnsafeProjection" in fr:
             return "projection"
+        if fr.startswith(ROWCOPY) or ("GeneratedIteratorForCodegenStage" in fr and fr.endswith(".processNext")):
+            return "rowcopy"
         if fr.startswith("graft.sources.FeaturePartitionReader"):
             return "reader"
     return "other"
