@@ -24,11 +24,11 @@ import graft.geom.GeomCodec
   *     field `x_original` reads property `x` where `x` names one of them;
   *   - a field never put for a feature is null.
   *
-  * [[commit]] then decides, in the row reader's order, whether the
-  * feature becomes a row: the bbox re-check (for formats that do not
-  * enforce it), `maxFeatures`, `offset` and `limit`, the pushed filters
-  * (on the row's converted values; the fid and geometry columns read as
-  * the feature's fid and WKB) and the pushed limit. A dropped feature
+  * [[commit]] then decides, in this order, whether the feature becomes a
+  * row: the bbox re-check (for formats that do not enforce it),
+  * `maxFeatures`, `offset` and `limit`, the pushed filters (on the row's
+  * converted values; the fid and geometry columns read as the feature's
+  * fid and WKB) and the pushed limit. A dropped feature
   * leaves nothing behind: the next one overwrites its row. Not
   * thread-safe; one per split. */
 final class ColumnSink(schema: StructType, opts: GdalOptions, checkBbox: Boolean,
@@ -150,6 +150,11 @@ final class ColumnSink(schema: StructType, opts: GdalOptions, checkBbox: Boolean
     case KString => text(s, java.time.LocalDate.ofEpochDay(days).toString)
     case _ => putNull(s)
   }
+  override def putTimestamp(s: Int, micros: Long): Unit = kinds(s) match {
+    case KTimestamp => vectors(s).putLong(row, micros); mark(s)
+    case KString => text(s, DateTimeUtils.toJavaTimestamp(micros).toString)
+    case _ => putNull(s)
+  }
   override def putList(s: Int, v: Seq[Any]): Unit =
     if (v == null) putNull(s)
     else kinds(s) match {
@@ -197,9 +202,9 @@ final class ColumnSink(schema: StructType, opts: GdalOptions, checkBbox: Boolean
     nextFeature()
   }
 
-  /** A filter's view of the row being committed, as the row reader gives
-    * it: None for a name that is no column, or a column of a type no
-    * feature value converts to. */
+  /** A filter's view of the row being committed: None for a name that is
+    * no column, or a column of a type no feature value converts to (the
+    * residual filter then decides). */
   private def filterValue(name: String): Option[Any] =
     if (opts.fidColumnName.contains(name)) Some(fidV)
     else if (name == geomName) Some(wkb)
@@ -278,15 +283,15 @@ object ColumnSink {
   }
 }
 
-/** The columnar scan of one split of a [[ColumnarFormat]]: the format's
-  * decode loop fills a [[ColumnSink]] batch by batch. The first batch
-  * holds up to 4096 rows, fewer where the split, `limit` or the pushed
-  * limit caps the count lower. */
+/** The scan of one split, for every format: the format's
+  * [[FeatureFormat.cursor]] fills a [[ColumnSink]] batch by batch. The
+  * first batch holds up to 4096 rows, fewer where the split, `limit` or
+  * the pushed limit caps the count lower. */
 final class ColumnarFeatureReader(
     split: SplitSpec,
     schema: StructType,
     opts: GdalOptions,
-    format: ColumnarFormat,
+    format: FeatureFormat,
     filters: Array[Filter],
     limit: Option[Int]) extends PartitionReader[ColumnarBatch] {
 

@@ -38,15 +38,13 @@ case class SplitSpec(path: String, startRecord: Long, numRecords: Long,
   * Implementations must be Serializable (shipped to executors inside the
   * reader factory).
   *
-  * A format is read one of two ways. A [[ColumnarFormat]] has one decode
-  * loop that writes into a [[ValueSink]]: the scan runs it into a
-  * [[ColumnSink]] (Spark column vectors, no [[RawFeature]] in between), and
-  * its [[open]] runs it into a [[FeatureBuilder]]. Any other format
-  * implements [[open]] and is scanned through [[RowConverter]]; its per-row
-  * work is linear in row width when it keeps each file's props in a
-  * stable order under the same name instances (see [[RawFeature]]), built
-  * straight into an array, with no per-row collections or parse trees
-  * beyond what the values need.
+  * Every scan runs [[cursor]] into a [[ColumnSink]]: Spark column vectors,
+  * filled by one conversion implementation for every format. A
+  * [[ColumnarFormat]] (the seven hot formats) has one decode loop that
+  * writes into a [[ValueSink]]: its cursor is that loop, and its [[open]]
+  * runs the same loop into a [[FeatureBuilder]]. Any other format (KML,
+  * GPX, GML) implements [[open]], and the default [[cursor]] puts each
+  * [[RawFeature]] it yields into the sink.
   */
 trait FeatureFormat extends Serializable {
   /** File extensions this format claims (for directory expansion). */
@@ -75,10 +73,21 @@ trait FeatureFormat extends Serializable {
     if (spec.startRecord == 0L && spec.numRecords == -1L) open(spec.path, opts)
     else throw new UnsupportedOperationException(s"$this cannot open ranged split $spec")
 
+  /** Opens `spec` for a decode loop into `sink`. The default drains
+    * [[openSplit]], putting each feature with [[ValueSink.putFeature]]; a
+    * [[ColumnarFormat]] overrides it with its own loop. */
+  def cursor(spec: SplitSpec, opts: GdalOptions, sink: ValueSink): FeatureCursor = {
+    val it = openSplit(spec, opts)
+    new FeatureCursor {
+      override def next(): Boolean = it.hasNext && { sink.putFeature(it.next()); true }
+      override def close(): Unit = it.close()
+    }
+  }
+
   /** True when the format fully enforces `opts.bbox` itself (native index
-    * or in-parser envelope test on every path). The generic reader then
-    * skips its per-row WKB-decode re-check — index-less formats leave
-    * this false and get the filter applied by `FeaturePartitionReader`. */
+    * or in-parser envelope test on every path). The scan then skips its
+    * per-row WKB-decode re-check ([[ColumnSink.commit]]); index-less
+    * formats leave this false and get the test there. */
   def handlesBbox: Boolean = false
 }
 

@@ -19,8 +19,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *
   * Scale notes: partition granularity is per-file — directories of many
   * files parallelize across executors. Column pruning and filter evaluation
-  * happen inside the reader (before row materialization), and pushed limits
-  * stop the file stream early.
+  * happen inside the reader (before a row is committed to its batch), and
+  * pushed limits stop the file stream early.
   */
 abstract class FeatureSourceProvider extends TableProvider with DataSourceRegister {
   def format: FeatureFormat
@@ -163,12 +163,11 @@ class FeatureScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new FeatureReaderFactory(schema, opts, format, filters, limit)
 
-  override def columnarSupportMode(): Scan.ColumnarSupportMode = format match {
-    case _: ColumnarFormat => Scan.ColumnarSupportMode.SUPPORTED
-    case _ => Scan.ColumnarSupportMode.UNSUPPORTED
-  }
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
 }
 
+/** Every scan is columnar: [[ColumnarFeatureReader]] runs the format's
+  * cursor into a [[ColumnSink]], whatever the format. */
 class FeatureReaderFactory(
     schema: StructType,
     opts: GdalOptions,
@@ -176,74 +175,13 @@ class FeatureReaderFactory(
     filters: Array[Filter],
     limit: Option[Int]) extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val split = partition.asInstanceOf[FeaturePartition].split
-    new FeaturePartitionReader(split, schema, opts, format, filters, limit)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("feature scans are columnar only")
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    format.isInstanceOf[ColumnarFormat]
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val split = partition.asInstanceOf[FeaturePartition].split
-    new ColumnarFeatureReader(split, schema, opts, format.asInstanceOf[ColumnarFormat], filters, limit)
+    new ColumnarFeatureReader(split, schema, opts, format, filters, limit)
   }
-}
-
-class FeaturePartitionReader(
-    split: SplitSpec,
-    schema: StructType,
-    opts: GdalOptions,
-    format: FeatureFormat,
-    filters: Array[Filter],
-    limit: Option[Int]) extends PartitionReader[InternalRow] {
-
-  private val converter = new RowConverter(schema, opts)
-  private val underlying = format.openSplit(split, opts)
-  // The bbox contract holds on EVERY format: formats with a native index
-  // (FGB R-tree, shapefile boxes) enforce it in their own readers and
-  // declare handlesBbox, so they skip this re-check (it would decode WKB
-  // per row just to re-test an envelope the index already tested) —
-  // index-less formats (geojson, csvgeo, kml, …) get the filter enforced
-  // here instead of silently ignoring the option. Applied BEFORE
-  // windowing: GDAL sets the spatial filter on the layer, so
-  // offset/limit/maxFeatures count filtered features (reference
-  // src/lib.rs:316-319 + 360-375 composition). Features without geometry
-  // never match a spatial filter.
-  private val boxed = opts.bbox match {
-    case None => underlying
-    case Some(_) if format.handlesBbox => underlying
-    case Some(q) => underlying.filter(f => FeatureFormat.bboxHit(q, f.geomWkb))
-  }
-  private val windowed = FeatureFormat.window(boxed, opts)
-  private val schemaNames = schema.fieldNames.toSet
-  private def propOf(field: String): String = SchemaInference.propOf(field, opts)
-  // every prop the filters name, read in one walk over a row's props
-  private val filterProps = new FirstValues(filters.toSeq.flatMap(_.references).map(n => propOf(FilterEval.unquote(n))))
-  private val filtered =
-    if (filters.isEmpty) windowed
-    else windowed.filter { f =>
-      val firsts = filterProps.read(f.props)
-      def get(name: String): Option[Any] =
-        if (opts.fidColumnName.contains(name)) Some(f.fid)
-        // the geometry column lives on the feature, not in props — without
-        // this arm it resolved through the absent-field rule to Some(null)
-        // and IsNotNull(geometry) pruned EVERY row
-        else if (name == opts.geometryColumnName) Some(f.geomWkb)
-        else firsts(filterProps.slotOf(propOf(name))) match {
-          case FirstValues.Absent if schemaNames.contains(name) => Some(null) // absent field = null
-          case FirstValues.Absent => None // unknown column: keep row, residual decides
-          case v => Some(v)
-        }
-      filters.forall(FilterEval.eval(_, get))
-    }
-  private val capped = limit.map(filtered.take).getOrElse(filtered)
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (capped.hasNext) { current = converter.convert(capped.next()); true } else false
-
-  override def get(): InternalRow = current
-  override def close(): Unit = underlying.close()
 }

@@ -82,7 +82,7 @@ object GdalOptions {
 /** Error taxonomy parity (reference src/error.rs:6-55). The reference's
   * GeometryColumnCollision/FidColumnCollision variants are dead code there
   * (rename wins, src/lib.rs:453-463) — we keep the rename behavior. */
-sealed abstract class GraftError(msg: String) extends RuntimeException(msg)
+sealed abstract class GraftError(msg: String, cause: Throwable = null) extends RuntimeException(msg, cause)
 object GraftError {
   final class EmptyData extends GraftError("Unable to read from empty data") // src/error.rs:16-18
   final class FeatureLimitReached(n: Long)
@@ -94,6 +94,14 @@ object GraftError {
   final class EmptyDataframe extends GraftError("Cannot write an empty dataframe") // src/error.rs:48-50
   final class CannotFindGeometryColumn(name: String)
     extends GraftError(s"Cannot find geometry column '$name'") // src/error.rs:52-54
+  /** Input whose framing or content a reader cannot decode: a truncated
+    * record, a length past the end of the file. The analogue of the
+    * reference's passthrough of GDAL's own errors (src/error.rs:6-14);
+    * `offset` is the byte of the file where the reader found the fault,
+    * and `cause` the decode failure behind it, if any. */
+  final class MalformedInput(val format: String, val path: String, val offset: Long, val detail: String,
+      cause: Throwable = null)
+    extends GraftError(s"Malformed $format input $path at byte $offset: $detail", cause)
   /** NOT in the reference taxonomy: its bytes writer (src/lib.rs:586-611)
     * is single-process by nature and can't overcommit a driver. Ours can —
     * toBytes collects through one JVM — so the size gate fails loudly

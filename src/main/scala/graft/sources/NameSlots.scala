@@ -15,13 +15,10 @@ package graft.sources
   * repeated, missing or equal-but-new names, get the same slots, only
   * slower.
   *
-  * A fixed table knows only the names it was built with (others read -1);
-  * a growing one gives an unseen name the next free slot. Not thread-safe:
-  * one table per reader, asked a row's names in order from position 0. */
-final class NameSlots private (fixed: Seq[String]) extends Serializable {
+  * An unseen name gets the next free slot. Not thread-safe: one table per
+  * reader, asked a row's names in order from position 0. */
+final class NameSlots {
   private val index = new java.util.HashMap[String, Integer]()
-  private val growing = fixed == null
-  if (!growing) fixed.foreach(n => if (!index.containsKey(n)) index.put(n, index.size))
 
   // by position: the name seen there last and its slot
   private var atName = new Array[String](16)
@@ -32,18 +29,7 @@ final class NameSlots private (fixed: Seq[String]) extends Serializable {
   private var nextSlot = new Array[Int](16)
   private var prev = -1
 
-  /** Slots given out so far; every slot is below this. */
-  def size: Int = index.size
-
-  /** The slot of `name`, or -1 if it has none; a plain lookup that
-    * neither uses nor sets the memo. */
-  def slotOf(name: String): Int = {
-    val known = index.get(name)
-    if (known == null) -1 else known.intValue
-  }
-
-  /** The slot of `name`, seen at position `pos` of a row; -1 for a name a
-    * fixed table lacks. */
+  /** The slot of `name`, seen at position `pos` of a row. */
   def slotAt(pos: Int, name: String): Int = {
     val after = if (pos == 0) 0 else prev + 1
     val slot =
@@ -54,8 +40,7 @@ final class NameSlots private (fixed: Seq[String]) extends Serializable {
           else {
             val known = index.get(name)
             if (known != null) known.intValue
-            else if (growing) { val n = index.size; index.put(name, n); n }
-            else -1
+            else { val n = index.size; index.put(name, n); n }
           }
         if (pos >= atName.length) {
           atName = java.util.Arrays.copyOf(atName, math.max(pos + 1, atName.length * 2))
@@ -74,11 +59,4 @@ final class NameSlots private (fixed: Seq[String]) extends Serializable {
     prev = slot
     slot
   }
-}
-
-object NameSlots {
-  /** Slots `0 until names.distinct.size` for `names`, in first-seen order. */
-  def fixed(names: Seq[String]): NameSlots = new NameSlots(names)
-  /** An empty table that adds each new name. */
-  def growing(): NameSlots = new NameSlots(null)
 }

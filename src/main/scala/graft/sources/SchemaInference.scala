@@ -9,19 +9,19 @@ import org.apache.spark.sql.types._
   * Double, Boolean, String, java.sql.Date, java.sql.Timestamp,
   * Seq[Int|Long|Double|String].
   *
-  * The [[FeatureFormat.open]] view of a file. The columnar formats build
-  * it with a [[FeatureBuilder]] over their one decode loop, only for
-  * `open`; their scans put values straight into column vectors
-  * ([[ColumnSink]]). The row formats (KML, GPX, GML) build it themselves,
-  * and their scans convert it with [[RowConverter]].
+  * The [[FeatureFormat.open]] view of a file. A [[ColumnarFormat]] builds
+  * it with a [[FeatureBuilder]] over its one decode loop, only for
+  * `open`; its scans put values straight into column vectors
+  * ([[ColumnSink]]). The other formats (KML, GPX, GML) build it
+  * themselves, and their scans put it into the same sink
+  * ([[ValueSink.putFeature]]).
   *
   * Readers should give every feature of a file its props in one stable
   * order, using the same `String` instance for a name each time (a header
-  * or column array, the parser's canonical names): row conversion, scan
-  * filters and schema inference then find each name's slot by position,
-  * with no hashing ([[NameSlots]]). Props in any other order, repeated,
-  * missing or under equal but distinct strings still give the same rows
-  * and schemas, only slower. */
+  * or column array, the parser's canonical names): schema inference then
+  * finds each name's slot by position, with no hashing ([[NameSlots]]).
+  * Props in any other order, repeated, missing or under equal but
+  * distinct strings still give the same schemas, only slower. */
 final case class RawFeature(
     fid: Long,
     geomWkb: Array[Byte],
@@ -121,7 +121,7 @@ object SchemaInference {
 
   def inferTypes(features: Iterator[FeatureTypes], opts: GdalOptions): StructType = {
     // slot s holds the s-th name seen and its type so far
-    val slots = NameSlots.growing()
+    val slots = new NameSlots
     val order = mutable.ArrayBuffer[String]()
     val types = mutable.ArrayBuffer[DataType]()
     var n = 0L

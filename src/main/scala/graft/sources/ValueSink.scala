@@ -20,7 +20,8 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
   *
   * Values come typed as the format decodes them, and each sink converts
   * them into what it holds: [[ColumnSink]] into Spark column vectors,
-  * [[FeatureBuilder]] into a [[RawFeature]] — the `open` adapter. */
+  * [[FeatureBuilder]] into a [[RawFeature]] — the `open` adapter. A
+  * [[RawFeature]] goes into any sink through [[putFeature]]. */
 abstract class ValueSink {
   /** The slot for property `name`; -1 if this sink does not read it. */
   def slot(name: String): Int
@@ -47,6 +48,8 @@ abstract class ValueSink {
   def putBinary(s: Int, v: Array[Byte]): Unit
   /** A date as days since 1970-01-01 (proleptic Gregorian). */
   def putDate(s: Int, days: Int): Unit
+  /** A timestamp as microseconds since 1970-01-01T00:00:00Z. */
+  def putTimestamp(s: Int, micros: Long): Unit
   /** A list of Int, Long, Double, Boolean, String, null or nested lists. */
   def putList(s: Int, v: Seq[Any]): Unit
 
@@ -63,9 +66,25 @@ abstract class ValueSink {
     case b: Boolean => putBoolean(s, b)
     case t: String => putString(s, t)
     case d: java.sql.Date => putDate(s, DateTimeUtils.fromJavaDate(d))
+    case t: java.sql.Timestamp => putTimestamp(s, DateTimeUtils.fromJavaTimestamp(t))
     case b: Array[Byte] => putBinary(s, b)
     case l: Seq[_] => putList(s, l)
     case other => putString(s, other.toString)
+  }
+
+  /** A [[RawFeature]]: its fid, its geometry, then each prop by name. A
+    * name repeated in the props reads as its first value: the props go
+    * last to first, and a property put twice keeps the last value. */
+  final def putFeature(f: RawFeature): Unit = {
+    fid(f.fid)
+    geometry(f.geomWkb)
+    var i = f.props.length - 1
+    while (i >= 0) {
+      val (name, v) = f.props(i)
+      val s = slot(name)
+      if (s >= 0) putAny(s, v)
+      i -= 1
+    }
   }
 }
 
@@ -79,13 +98,10 @@ trait FeatureCursor extends AutoCloseable {
   def sizeHint: Long = -1L
 }
 
-/** A format whose decode loop writes into a [[ValueSink]]. Its scans are
-  * columnar ([[ColumnSink]]); [[open]] and [[openSplit]] run the same loop
-  * into a [[FeatureBuilder]]. */
+/** A format whose own decode loop writes into a [[ValueSink]]: it
+  * overrides [[cursor]] with that loop, and [[open]] and [[openSplit]] run
+  * the same loop into a [[FeatureBuilder]]. */
 trait ColumnarFormat extends FeatureFormat {
-  /** Opens `spec` for a decode loop into `sink`. */
-  def cursor(spec: SplitSpec, opts: GdalOptions, sink: ValueSink): FeatureCursor
-
   override def open(path: String, opts: GdalOptions): FeatureIterator =
     openSplit(SplitSpec(path, 0L, -1L), opts)
 
@@ -110,10 +126,11 @@ trait ColumnarFormat extends FeatureFormat {
 
 /** The sink behind [[FeatureFormat.open]]: each feature becomes a
   * [[RawFeature]] with its values boxed — numbers as Int, Long or Double,
-  * text as String, dates as `java.sql.Date`. Columns bound with [[bind]]
-  * appear in every feature, in file order, null where nothing was put;
-  * names from [[slot]] appear in the order they were first put, once each.
-  * Not thread-safe. */
+  * text as String, dates as `java.sql.Date`, timestamps as
+  * `java.sql.Timestamp`. Columns bound with [[bind]] appear in every
+  * feature, in file order, null where nothing was put; names from
+  * [[slot]] appear in the order they were first put, once each. Not
+  * thread-safe. */
 final class FeatureBuilder extends ValueSink {
   private val index = new java.util.HashMap[String, Integer]()
   private var names = new Array[String](16)
@@ -171,6 +188,7 @@ final class FeatureBuilder extends ValueSink {
     set(s, new String(b, off, len, StandardCharsets.UTF_8))
   override def putBinary(s: Int, v: Array[Byte]): Unit = set(s, v)
   override def putDate(s: Int, days: Int): Unit = set(s, DateTimeUtils.toJavaDate(days))
+  override def putTimestamp(s: Int, micros: Long): Unit = set(s, DateTimeUtils.toJavaTimestamp(micros))
   override def putList(s: Int, v: Seq[Any]): Unit = set(s, v)
   override def clearProps(): Unit = {
     if (feature < Int.MaxValue) feature += 1
@@ -212,6 +230,7 @@ final class Presence(width: Int) extends ValueSink {
   override def putUtf8(s: Int, b: Array[Byte], off: Int, len: Int): Unit = present(s) = true
   override def putBinary(s: Int, v: Array[Byte]): Unit = present(s) = v != null
   override def putDate(s: Int, days: Int): Unit = present(s) = true
+  override def putTimestamp(s: Int, micros: Long): Unit = present(s) = true
   override def putList(s: Int, v: Seq[Any]): Unit = present(s) = v != null
   override def clearProps(): Unit = clear()
 }

@@ -21,7 +21,7 @@ import graft.sources.{NameSlots, ValueSink}
 private[geojson] final class GeoJsonFeatures(sink: ValueSink) {
   import GeoJsonFeatures._
 
-  private val names = NameSlots.growing()
+  private val names = new NameSlots
   private var slots = Array.fill(16)(Unresolved) // the sink's slot by name slot
 
   private def slotAt(pos: Int, name: String): Int = {
@@ -191,7 +191,7 @@ private[geojson] object GeoJsonFeatures {
   * sees ([[NameSlots]]), so an object whose keys come in the previous
   * one's order costs no hashing. Not thread-safe. */
 private[geojson] final class Members[V] {
-  private val slots = NameSlots.growing()
+  private val slots = new NameSlots
   private var stamp = new Array[Int](16) // the object that last used a slot
   private var at = new Array[Int](16) // the slot's position in that object
   private var objects = 0

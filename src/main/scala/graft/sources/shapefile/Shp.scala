@@ -18,27 +18,53 @@ object Shp {
     * optionally starting at a byte offset (from the .shx index) and capped
     * at maxRecords — the record-range split path. Content buffers are
     * little-endian-ordered at position 0, ready for [[parseShape]] or the
-    * positionless [[boxIntersects]] peek. */
+    * positionless [[boxIntersects]] peek.
+    *
+    * A file shorter than its header's file length, a record cut anywhere
+    * after its first byte, and a content length below 0 or past the end of
+    * the file throw [[graft.sources.GraftError.MalformedInput]]: a
+    * truncated file fails, it never reads short. */
   def rawRecords(path: String, startByte: Long = 100L,
       maxRecords: Long = -1L): Iterator[(Int, ByteBuffer)] with AutoCloseable = {
+    val fileSize = new java.io.File(path).length
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path)))
-    var toSkip = startByte // header is 100 bytes; splits pass .shx offsets
-    while (toSkip > 0) toSkip -= in.skip(toSkip)
+    def malformed(at: Long, detail: String, cause: Throwable = null): Nothing = {
+      in.close()
+      throw new graft.sources.GraftError.MalformedInput("shapefile", path, at, detail, cause)
+    }
+    val head = new Array[Byte](8) // a record header, after the file header's first 28 bytes
+    try {
+      in.skipNBytes(24)
+      in.readFully(head, 0, 4)
+      val declared = ByteBuffer.wrap(head).getInt(0).toLong * 2 // big-endian, in 16-bit words
+      if (fileSize < declared)
+        malformed(fileSize, s"the file ends at byte $fileSize; its header gives $declared bytes")
+      in.skipNBytes(startByte - 28) // header is 100 bytes; splits pass .shx offsets
+    } catch {
+      case e: EOFException => malformed(fileSize, s"the file ends before byte ${math.max(startByte, 28L)}", e)
+    }
+    val headBuf = ByteBuffer.wrap(head) // big-endian
+    var pos = startByte
     var remaining = maxRecords
     new Iterator[(Int, ByteBuffer)] with AutoCloseable {
       private var nextRec: (Int, ByteBuffer) = advance()
 
       private def advance(): (Int, ByteBuffer) =
         if (remaining == 0) { in.close(); null }
-        else try {
-          val recNum = in.readInt() // big-endian
-          val contentWords = in.readInt() // length in 16-bit words
-          val content = new Array[Byte](contentWords * 2)
-          in.readFully(content)
+        else {
+          val got = in.readNBytes(head, 0, 8)
+          if (got == 0) { in.close(); return null }
+          if (got < 8) malformed(pos, s"a record header ends after $got of 8 bytes")
+          val recNum = headBuf.getInt(0)
+          val length = headBuf.getInt(4).toLong * 2 // content length in 16-bit words
+          if (length < 0 || pos + 8 + length > fileSize)
+            malformed(pos, s"record $recNum has content length $length; the file ends at byte $fileSize")
+          val content = new Array[Byte](length.toInt)
+          try in.readFully(content)
+          catch { case e: EOFException => malformed(pos, s"record $recNum ends early", e) }
+          pos += 8 + length
           if (remaining > 0) remaining -= 1
           (recNum, ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN))
-        } catch {
-          case _: EOFException => in.close(); null
         }
 
       override def hasNext: Boolean = nextRec != null
@@ -58,11 +84,6 @@ object Shp {
       val g = parseShape(b)
       if (g == null) null else graft.geom.GeomCodec.toWkb(g)
   }
-
-  /** Stream (recordNumber, geometry-or-null) pairs. */
-  def records(path: String, startByte: Long = 100L,
-      maxRecords: Long = -1L): Iterator[(Int, Geometry)] =
-    rawRecords(path, startByte, maxRecords).map { case (n, b) => (n, parseShape(b)) }
 
   /** Cheap bbox test against the record's stored extent — absolute reads
     * only, so the buffer stays ready for [[parseShape]]. Points test x/y

@@ -23,9 +23,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.geom.GeomCodec
 import graft.sources._
 
-/** The columnar scan of the seven hot formats must give the rows the row
-  * path gives — `RowConverter` over the format's `open`, behind the row
-  * reader's bbox test, window, pushed filters and pushed limit — split by
+/** The scan of every format must give the rows the row path gives — the
+  * test-scope [[FeaturePartitionReader]] over the format's `open`, with
+  * its own bbox test, window, pushed filters and pushed limit — split by
   * split, under column pruning, pushed filters, bbox, offset, limit and
   * maxFeatures, the fid and geometry options and their `_original`
   * renames, and all three geometry formats; and Spark must plan those
@@ -72,6 +72,8 @@ class ColumnarScanSpec extends AnyFunSuite {
     val factory = batch.createReaderFactory()
     val parts = batch.planInputPartitions().toSeq
     assert(parts.forall(factory.supportColumnarReads), s"$fmt is not columnar")
+    val opts = GdalOptions(options)
+    val pushed = builder.pushedFilters()
     var batches = 0
     def drain[T](open: InputPartition => PartitionReader[T])(rows: T => Iterator[Seq[Any]]) =
       Try(parts.map { part =>
@@ -79,7 +81,8 @@ class ColumnarScanSpec extends AnyFunSuite {
         try { val out = Seq.newBuilder[Seq[Any]]; while (r.next()) out ++= rows(r.get()); out.result() }
         finally r.close()
       }) match { case Success(v) => Right(v); case Failure(e) => Left(e.getClass.getName) }
-    val rowPath = drain(factory.createReader)(r => Iterator(row(r, schema)))
+    val rowPath = drain(part => new FeaturePartitionReader(part.asInstanceOf[FeaturePartition].split,
+      schema, opts, p.format, pushed, limit))(r => Iterator(row(r, schema)))
     val colPath = drain(factory.createColumnarReader) { b =>
       batches += 1
       b.rowIterator().asScala.map(row(_, schema)).toList.iterator
@@ -116,7 +119,8 @@ class ColumnarScanSpec extends AnyFunSuite {
     val out = new File(dir, name)
     df.coalesce(1).write.format(fmt).mode("overwrite").save(out.getPath)
     val ext = Map("geojson" -> ".geojson", "geojsonseq" -> ".geojsonl", "shapefile" -> ".shp",
-      "flatgeobuf" -> ".fgb", "gpkg" -> ".gpkg", "spatialite" -> ".sqlite", "csvgeo" -> ".csv")(fmt)
+      "flatgeobuf" -> ".fgb", "gpkg" -> ".gpkg", "spatialite" -> ".sqlite", "csvgeo" -> ".csv",
+      "kml" -> ".kml", "gpx" -> ".gpx", "gml" -> ".gml")(fmt)
     out.listFiles().filter(_.getName.endsWith(ext)).head.getAbsolutePath
   }
 
@@ -140,10 +144,33 @@ class ColumnarScanSpec extends AnyFunSuite {
 
   private lazy val stations = spark.read.format("shapefile").load(new File(fixtures, "stations.shp").getPath)
 
-  /** (format, path) of every input: the fixtures, the fixture frames
-    * written in the formats without a fixture, the big frame in all
-    * seven, and GeoJSON and CSV with mixed types and reserved names. */
-  private lazy val inputs: Seq[(String, String)] = {
+  /** The stations as GPX: each a waypoint (most with an elevation), in
+    * routes of 20 points and in a track of 30-point segments. */
+  private lazy val stationsGpx = {
+    def esc(t: String) = t.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+    val pts = stations.collect().toSeq.map(r =>
+      (GeomCodec.fromWkb(r.getAs[Array[Byte]]("geometry")).getCoordinate, esc(r.getAs[String]("name"))))
+    def pt(tag: String, i: Int) = {
+      val (c, name) = pts(i)
+      s"""<$tag lat="${c.y}" lon="${c.x}">""" + (if (i % 5 == 0) "" else s"<ele>${i * 1.5}</ele>") +
+        s"<name>$name</name></$tag>"
+    }
+    text("stations_layers.gpx", """<?xml version="1.0" encoding="UTF-8"?>
+      |<gpx version="1.1" creator="graft" xmlns="http://www.topografix.com/GPX/1/1">
+      |""".stripMargin +
+      pts.indices.map(pt("wpt", _)).mkString("\n") +
+      pts.indices.grouped(20).map(g => s"<rte><name>r${g.head}</name>" + g.map(pt("rtept", _)).mkString + "</rte>")
+        .mkString("\n", "\n", "\n") +
+      "<trk><name>t</name>" + pts.indices.grouped(30).map(g => "<trkseg>" + g.map(pt("trkpt", _)).mkString + "</trkseg>")
+        .mkString + "</trk>\n</gpx>\n")
+  }
+
+  /** (format, path, base options) of every input: the fixtures, the
+    * fixture frames written in the formats without a fixture, the big
+    * frame in all seven hot formats, GeoJSON and CSV with mixed types and
+    * reserved names, the stations in KML, GML and three GPX layers, and a
+    * KML whose placemark repeats a `SimpleData` name. */
+  private lazy val inputs: Seq[(String, String, Map[String, String])] = {
     def fx(n: String) = new File(fixtures, n).getAbsolutePath
     val states = spark.read.format("geojson").load(fx("us_states.feature_collection.implicit_4326.json"))
     Seq("geojson" -> fx("us_states.feature_collection.implicit_4326.json"),
@@ -159,15 +186,27 @@ class ColumnarScanSpec extends AnyFunSuite {
         |{"type":"Feature","geometry":{"type":"Point","coordinates":[3,4]},"properties":{"a":true,"lst":null},"properties":{"c":-1,"geometry":null}},
         |{"type":"Feature","id":"s","geometry":{"type":"LineString","coordinates":[[0,0],[5,5]]},"properties":{"a":2.5,"b":null,"lst":["q"],"nested":[[1],[2,3]]}}
         |]}""".stripMargin),
-        "csvgeo" -> text("reserved.csv", "fid,name,lon,lat,n\n1,a,1.5,2.5,10\n2,\"b,\"\"c\"\"\",x,3,\n\n3,,0,0,1e3\n"))
-  }
+        "csvgeo" -> text("reserved.csv", "fid,name,lon,lat,n\n1,a,1.5,2.5,10\n2,\"b,\"\"c\"\"\",x,3,\n\n3,,0,0,1e3\n")) ++
+      Seq("kml", "gml", "gpx").map(f => f -> write(stations, f, s"stations_$f")) ++
+      Seq("kml" -> text("repeated.kml", """<?xml version="1.0" encoding="UTF-8"?>
+        |<kml xmlns="http://www.opengis.net/kml/2.2"><Document>
+        |<Placemark><name>one</name><ExtendedData><SchemaData>
+        |  <SimpleData name="a">first</SimpleData><SimpleData name="b">7</SimpleData><SimpleData name="a">second</SimpleData>
+        |</SchemaData></ExtendedData><Point><coordinates>1,2</coordinates></Point></Placemark>
+        |<Placemark><name>two</name><ExtendedData><SchemaData>
+        |  <SimpleData name="b">8</SimpleData><SimpleData name="a">third</SimpleData><SimpleData name="name">shadow</SimpleData>
+        |</SchemaData></ExtendedData><Point><coordinates>3,4</coordinates></Point></Placemark>
+        |<Placemark><name>three</name><LineString><coordinates>0,0 5,5</coordinates></LineString></Placemark>
+        |</Document></kml>""".stripMargin))
+  }.map { case (f, p) => (f, p, Map.empty[String, String]) } ++
+    Seq("waypoints", "routes", "track_points").map(l => ("gpx", stationsGpx, Map("layerName" -> l)))
 
   /** A bbox over the middle of a frame's geometry extent. */
-  private def middle(fmt: String, path: String): String = {
+  private def middle(fmt: String, path: String, base: Map[String, String]): String = {
     val env = new org.locationtech.jts.geom.Envelope()
     val it = provider(fmt).format
     FeatureFormat.expand(Seq(path), it).foreach { f =>
-      val fs = it.open(f, GdalOptions.from(Map.empty))
+      val fs = it.open(f, GdalOptions.from(base))
       try fs.foreach(x => if (x.geomWkb != null) env.expandToInclude(GeomCodec.fromWkb(x.geomWkb).getEnvelopeInternal))
       finally fs.close()
     }
@@ -189,18 +228,19 @@ class ColumnarScanSpec extends AnyFunSuite {
     Map("splitRecords" -> "1000"))
 
   test("every input reads the same rows on both paths under every option variant") {
-    for ((fmt, path) <- inputs) {
-      val bbox = middle(fmt, path)
+    for ((fmt, path, base) <- inputs) {
+      val bbox = middle(fmt, path, base)
       val extra = Seq(Map("bbox" -> bbox), Map("bbox" -> bbox, "offset" -> "1", "limit" -> "3"),
         Map("bbox" -> bbox, "geometryFormat" -> "wkt")) ++
         (if (fmt == "csvgeo") Seq(Map("autodetectTypes" -> "true"), Map("autodetectTypes" -> "true", "fidColumnName" -> "fid")) else Nil)
-      for (o <- variants ++ extra) assertSame(fmt, path, o)
+      for (o <- variants ++ extra) assertSame(fmt, path, base ++ o)
     }
   }
 
   test("column pruning, pushed filters and the pushed limit give the same rows on both paths") {
-    for ((fmt, path) <- inputs; o <- Seq(Map.empty[String, String], Map("offset" -> "1", "limit" -> "40"),
+    for ((fmt, path, base) <- inputs; o0 <- Seq(Map.empty[String, String], Map("offset" -> "1", "limit" -> "40"),
         Map("fidColumnName" -> "fid", "geometryFormat" -> "wkt"))) {
+      val o = base ++ o0
       val schema = spark.read.format(fmt).options(o).load(path).schema
       val names = schema.fieldNames.toSeq
       val str = schema.fields.find(f => f.dataType == StringType && f.name != "geometry").map(_.name)
@@ -222,15 +262,15 @@ class ColumnarScanSpec extends AnyFunSuite {
 
   test("a split of more than 4096 rows fills several batches; a small split sizes its batch to fit") {
     for (fmt <- formats) {
-      val path = inputs.find { case (f, p) => f == fmt && p.contains("big_") }.get._2
+      val path = inputs.find { case (f, p, _) => f == fmt && p.contains("big_") }.get._2
       val (rows, batches) = assertSame(fmt, path, Map.empty)
       assert(rows.asInstanceOf[Either[String, Seq[Seq[Seq[Any]]]]].map(_.map(_.length).sum) === Right(5000))
       assert(batches >= 2, fmt)
     }
   }
 
-  test("the hot formats plan ColumnarToRow with no Project; KML, GPX, GML and Arrow still read") {
-    for ((fmt, path) <- inputs.filter(_._2.contains("big_"))) {
+  test("every format plans ColumnarToRow with no Project; Arrow still reads") {
+    for ((fmt, path, _) <- inputs.filter(_._2.contains("big_"))) {
       for (df <- Seq(spark.read.format(fmt).load(path), spark.read.format(fmt).load(path).select("s", "geometry"),
           spark.read.format(fmt).load(path).filter("l > 3000004000"))) {
         val plan = df.queryExecution.executedPlan
@@ -246,9 +286,23 @@ class ColumnarScanSpec extends AnyFunSuite {
       stations.coalesce(1).write.format(fmt).mode("overwrite").save(out)
       val df = spark.read.format(fmt).load(out)
       assert(df.count() === stations.count(), fmt)
-      assert(df.queryExecution.executedPlan.collect { case c: ColumnarToRowExec => c }.isEmpty, fmt)
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case c: ColumnarToRowExec => c }.nonEmpty, s"$fmt\n$plan")
+      assert(plan.collect { case p: ProjectExec => p }.isEmpty, s"$fmt\n$plan")
     }
     assert(graft.sources.arrow.ArrowRead.fromFile(spark, new File(fixtures, "cities.arrow").getPath).count() === 202L)
+  }
+
+  test("KML, GML and the GPX layers read their features; a repeated SimpleData name reads its first value") {
+    val n = stations.count()
+    def load(fmt: String, path: String, o: Map[String, String] = Map.empty) = spark.read.format(fmt).options(o).load(path)
+    for ((fmt, path, base) <- inputs if Seq("kml", "gml", "gpx").contains(fmt) && !path.endsWith("repeated.kml")) {
+      val want = base.get("layerName") match { case Some("routes") => 5L; case _ => n }
+      assert(load(fmt, path, base).count() === want, s"$fmt $base")
+    }
+    val kml = load("kml", inputs.find(_._2.endsWith("repeated.kml")).get._2)
+    assert(kml.select("name", "a", "b").collect().toSeq.map(_.toSeq) ===
+      Seq(Seq("one", "first", "7"), Seq("two", "third", "8"), Seq("three", null, null)))
   }
 
   test("a pushed filter on a renamed _original column keeps its matching rows") {

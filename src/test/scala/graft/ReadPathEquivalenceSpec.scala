@@ -217,20 +217,6 @@ class ReadPathEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("FirstValues: the positional memo reads what a plain first-match lookup reads") {
-    for (seed <- 1 to 5; asked <- Seq(Seq("a", "c", "zz"), Seq("f", "a", "b", "c", "d", "e"), Seq("b", "b"))) {
-      val fv = new FirstValues(asked)
-      for (row <- rows(seed)) {
-        val got = fv.read(row)
-        for (name <- asked.distinct) {
-          val want = row.find(_._1 == name).map(_._2).getOrElse(FirstValues.Absent)
-          assert(got(fv.slotOf(name)) === want, s"seed $seed, $name in $row")
-        }
-      }
-      assert(fv.slotOf("nope") === -1)
-    }
-  }
-
   test("inferTypes: slots by position give the map's first-seen order and widening") {
     def widen(a: DataType, b: DataType): DataType = (a, b) match {
       case (x, y) if x == y => x

@@ -16,15 +16,13 @@ ends right after it), and charges each sample to one layer:
   parse.<fmt>      a reader's own classes; `sqlite` for the gpkg/spatialite
                    shared SQLite code, resolved to gpkg or spatialite when a
                    frame further up names one
-  convert          RowConverter / FirstValues (the row path's conversion)
-  columnar         the columnar scan's ColumnSink (value conversion into the
-                   column vectors, the row decisions) and ColumnarFeatureReader
+  columnar         the scan's ColumnSink (value conversion into the column
+                   vectors, the row decisions) and ColumnarFeatureReader
   digest           iobench's digest fold (the harness; a control)
   projection       Spark's generated unsafe projection
   rowcopy          the copy of scanned rows into UnsafeRows: Spark's
                    ColumnarToRow, a whole-stage generated `processNext`, the
                    UnsafeRow writers and the ColumnarBatch row view
-  reader           the DSv2 partition reader's own window/filter code
   other            none of these (Spark scheduling, JIT'd library code, ...)
 
 A sample in library code (String.hashCode, HashMap.get, JTS, Jackson, an
@@ -165,8 +163,6 @@ def layer(stack):
         known, _ = reader_of(fr)
         if known:
             return "parse." + (fmt_from(stack, i) or "shared")
-        if fr.startswith(("graft.sources.RowConverter", "graft.sources.FirstValues")):
-            return "convert"
         if fr.startswith(COLUMNAR):
             return "columnar"
         if fr.startswith("iobench.Digest"):
@@ -175,8 +171,6 @@ def layer(stack):
             return "projection"
         if fr.startswith(ROWCOPY) or ("GeneratedIteratorForCodegenStage" in fr and fr.endswith(".processNext")):
             return "rowcopy"
-        if fr.startswith("graft.sources.FeaturePartitionReader"):
-            return "reader"
     return "other"
 
 
