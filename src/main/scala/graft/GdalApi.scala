@@ -189,6 +189,12 @@ object GdalWrite {
     sb.toString.getBytes(StandardCharsets.UTF_8)
   }
 
+  /** The EmptyDataframe a write raised at job commit, under Spark's
+    * wrapping of it. */
+  private def emptyWrite(e: Throwable): Option[GraftError.EmptyDataframe] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
+      .collectFirst { case x: GraftError.EmptyDataframe => x }
+
   private def dirBytes(f: File): Long = {
     val kids = f.listFiles()
     if (kids == null) 0L
@@ -201,7 +207,6 @@ object GdalWrite {
     * the sink's part has more than one file (shapefile). */
   private def fileBytes(df: DataFrame, provider: WritableFeatureSourceProvider,
       options: Map[String, String], cap: Long): Array[Byte] = {
-    if (df.isEmpty) throw new GraftError.EmptyDataframe
     val fmt = provider.shortName()
     val mainExt = provider.sink.extensions.head
     val dir = Files.createTempDirectory("graft_bytes_out_").toFile
@@ -236,6 +241,7 @@ object GdalWrite {
         } catch {
           case _: Throwable if trippedAt >= 0 =>
             throw new GraftError.DriverBytesTooLarge(BigInt(trippedAt), cap)
+          case e: Throwable => throw emptyWrite(e).getOrElse(e) // unwrapped (ref src/lib.rs:509-511)
         } finally sc.clearJobGroup()
       } finally watchdog.interrupt()
       val produced = dir.listFiles().filter(_.isFile)

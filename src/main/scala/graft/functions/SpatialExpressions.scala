@@ -202,15 +202,20 @@ abstract class BinarySpatial extends BinaryExpression {
   * fields (the registration builder folds the literal arguments), which
   * keeps codegen unary AND lets [[graft.plans.BboxPushdownRule]] read the
   * box straight off the expression to turn it into a scan-level `bbox`
-  * option (FGB packed R-tree / shapefile record boxes). */
+  * option (FGB packed R-tree / shapefile record boxes). Generated code
+  * reads the box as a reference object, not as literals in the source:
+  * every window over one plan shape shares one compiled class, and an
+  * infinite bound compiles. */
 case class StIntersectsBbox(child: Expression, minX: Double, minY: Double,
     maxX: Double, maxY: Double) extends UnarySpatial {
   protected def fn: String = "intersectsBbox"
   override def dataType: DataType = BooleanType
   override def prettyName: String = "st_intersects_bbox"
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val box = ctx.addReferenceObj("bbox", Array(minX, minY, maxX, maxY), "double[]")
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SpatialFns.intersectsBbox($c, ${minX}D, ${minY}D, ${maxX}D, ${maxY}D)")
+      s"graft.functions.SpatialFns.intersectsBbox($c, $box[0], $box[1], $box[2], $box[3])")
+  }
   protected override def nullSafeEval(i: Any): Any =
     SpatialFns.intersectsBbox(i.asInstanceOf[Array[Byte]], minX, minY, maxX, maxY)
   protected override def withNewChildInternal(c: Expression): StIntersectsBbox = copy(child = c)

@@ -26,12 +26,17 @@ object TypeIterator {
     }
 }
 
-/** A contiguous record range of one file — the input-partition unit.
+/** A record range of one file — the input-partition unit.
   * `startRecord = 0 && numRecords = -1` means the whole file. Formats
   * that split by byte position (single-file GeoJSON) also carry the
-  * record range's byte span; -1 means "not byte-addressed". */
+  * record range's byte span; -1 means "not byte-addressed". A split of
+  * several disjoint record runs (FlatGeobuf index hits) lists them in
+  * `runs` as (first record, record count, byte offset of the first), in
+  * file order; `startRecord`, `numRecords` and `byteStart` then give the
+  * first run's record, the total count and the first run's offset. */
 case class SplitSpec(path: String, startRecord: Long, numRecords: Long,
-    byteStart: Long = -1L, byteEnd: Long = -1L) extends Serializable
+    byteStart: Long = -1L, byteEnd: Long = -1L,
+    runs: Seq[(Long, Long, Long)] = Nil) extends Serializable
 
 /** A vector format parser — the pluggable core mirroring the reference's
   * per-driver read loop seam (`df_from_layer`, reference src/lib.rs:332-485).

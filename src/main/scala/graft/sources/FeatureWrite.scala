@@ -110,15 +110,23 @@ class WritableFeatureTable(source: String, schema: StructType, files: Seq[String
   * partition writes one part, `<stem>-NNNNN` plus the sink's extensions.
   *
   * On the driver, before any task: the geometry-column checks and the
-  * sink's own, then the target directory; overwrite deletes the format's
-  * files and attempt debris, and [[LayerWrite.stem]] names the parts. Each
-  * task stages its part in [[AttemptFile]]s and promotes them on task
-  * commit. Job commit verifies every promoted file and raises
-  * EmptyDataframe (src/lib.rs:509-511) when no part wrote a feature. */
+  * sink's own, then the target directory; overwrite clears attempt
+  * debris, and [[LayerWrite.stem]] names the parts. Each task stages its
+  * part in [[AttemptFile]]s and promotes them on task commit. Job commit
+  * verifies every promoted file and raises EmptyDataframe
+  * (src/lib.rs:509-511) when no part wrote a feature.
+  *
+  * An overwrite promotes its parts under job-scoped hidden names
+  * ([[AttemptFile.staged]]); only a job commit that succeeds deletes the
+  * format's earlier files and renames the staged parts into place, and
+  * abort removes them. A failed overwrite (an empty frame, a task error)
+  * leaves the earlier dataset as it was. */
 class FeatureWrite(source: String, sink: FeatureSink, info: LogicalWriteInfo)
   extends WriteBuilder with SupportsTruncate with Write with BatchWrite {
 
   private var overwrite = false
+  private var dir: File = _
+  private val job = java.util.UUID.randomUUID().toString.take(8)
   override def truncate(): WriteBuilder = { overwrite = true; this }
   override def build(): Write = this
   override def toBatch: BatchWrite = this
@@ -129,36 +137,44 @@ class FeatureWrite(source: String, sink: FeatureSink, info: LogicalWriteInfo)
     val schema = info.schema()
     val opts = GdalOptions(info.options)
     sink.check(schema, GeometryColumn.index(schema, opts), opts)
-    val dir = new File(path)
+    dir = new File(path)
     if (!dir.exists()) dir.mkdirs()
-    if (overwrite) {
-      dir.listFiles().filter(f => sink.extensions.exists(f.getName.endsWith)).foreach(_.delete())
-      AttemptFile.cleanDebris(dir)
-    }
-    new FeatureWrite.Tasks(dir, LayerWrite.stem(dir, opts, overwrite), schema, opts, sink)
+    if (overwrite) AttemptFile.cleanDebris(dir)
+    new FeatureWrite.Tasks(dir, LayerWrite.stem(dir, opts, overwrite),
+      if (overwrite) Some(job) else None, schema, opts, sink)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     AttemptFile.verifyCommitted(messages)
     if (messages.map { case FeatureWrite.Written(n, _) => n }.sum == 0L)
       throw new GraftError.EmptyDataframe
+    if (overwrite) {
+      dir.listFiles().filter(f => sink.extensions.exists(f.getName.endsWith)).foreach(_.delete())
+      AttemptFile.publishStaged(dir, job)
+    }
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    if (overwrite && dir != null) AttemptFile.dropStaged(dir, job)
 }
 
 object FeatureWrite {
   final case class Written(rows: Long, committedPaths: Seq[String])
     extends WriterCommitMessage with CommittedFiles
 
-  class Tasks(dir: File, stem: String, schema: StructType, opts: GdalOptions,
-      sink: FeatureSink) extends DataWriterFactory {
+  /** `staged`: the job tag an overwrite promotes its parts under. */
+  class Tasks(dir: File, stem: String, staged: Option[String], schema: StructType,
+      opts: GdalOptions, sink: FeatureSink) extends DataWriterFactory {
     override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-      new Task(dir, f"$stem%s-$partitionId%05d", partitionId, taskId, schema, opts, sink)
+      new Task(dir, f"$stem%s-$partitionId%05d", partitionId, taskId, staged, schema, opts, sink)
   }
 
-  class Task(dir: File, name: String, partitionId: Int, taskId: Long, schema: StructType,
-      opts: GdalOptions, sink: FeatureSink) extends DataWriter[InternalRow] {
-    private val finals = sink.extensions.map(e => new File(dir, name + e)).toIndexedSeq
+  class Task(dir: File, name: String, partitionId: Int, taskId: Long, staged: Option[String],
+      schema: StructType, opts: GdalOptions, sink: FeatureSink) extends DataWriter[InternalRow] {
+    private val finals = sink.extensions.map { e =>
+      val f = new File(dir, name + e)
+      staged.fold(f)(AttemptFile.staged(f, _))
+    }.toIndexedSeq
     private val temps = finals.map(AttemptFile.temp(_, taskId))
     private val part = sink.writer(Part(name, partitionId, temps), schema,
       GeometryColumn(schema, opts), opts)
@@ -228,12 +244,32 @@ object AttemptFile {
     }
   }
 
+  private val StagedSuffix = ".staged"
+
   /** Overwrite-mode cleanup of debris from crashed prior jobs (only on
     * truncate — a concurrent append job's in-flight attempts must not be
     * swept). */
   def cleanDebris(dir: File): Unit =
     Option(dir.listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".inprogress")).foreach(_.delete())
+      .filter(f => f.getName.endsWith(".inprogress") || f.getName.endsWith(StagedSuffix))
+      .foreach(_.delete())
+
+  /** Where overwrite job `job` promotes `finalFile`: a hidden sibling no
+    * format's discovery matches, until [[publishStaged]]. */
+  def staged(finalFile: File, job: String): File =
+    new File(finalFile.getParentFile, s".${finalFile.getName}.$job$StagedSuffix")
+
+  private def stagedBy(dir: File, job: String): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.filter(_.getName.endsWith(s".$job$StagedSuffix"))
+
+  /** Job commit of an overwrite: each staged part takes its final name. */
+  def publishStaged(dir: File, job: String): Unit =
+    stagedBy(dir, job).foreach { f =>
+      promote(f, new File(dir, f.getName.drop(1).stripSuffix(s".$job$StagedSuffix")))
+    }
+
+  /** Abort of an overwrite: its staged parts go, the earlier files stay. */
+  def dropStaged(dir: File, job: String): Unit = stagedBy(dir, job).foreach(_.delete())
 }
 
 /** Append-a-layer support (reference `gdal_layer_from_df` adds a named

@@ -91,6 +91,9 @@ object SchemaInference {
     private val settled = new Array[Boolean](columns.length)
     private var unsettled = columns.length
 
+    /** Whether every column has met a value: [[next]] asks nothing more. */
+    def settledAll: Boolean = unsettled == 0
+
     /** One feature that has a value slot for every column; `present(c)`
       * is asked only of columns not yet settled. */
     def next(present: Int => Boolean): FeatureTypes =

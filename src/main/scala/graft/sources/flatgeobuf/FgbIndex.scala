@@ -166,9 +166,9 @@ object FgbIndex {
     out.sortBy(_._1).toSeq
   }
 
-  /** Merge index-sorted candidates into contiguous (firstIndex, count,
-    * firstByteOffset) runs — one scan range per run. Hilbert clustering
-    * makes real queries produce few runs. */
+  /** Merge candidates into contiguous (firstIndex, count,
+    * firstByteOffset) runs, in index order — one seek per run. Hilbert
+    * clustering makes real queries produce few runs. */
   def runs(candidates: Seq[(Long, Long)]): Seq[(Long, Long, Long)] = {
     if (candidates.isEmpty) return Seq.empty
     val byIdx = candidates.sortBy(_._2)

@@ -59,8 +59,10 @@ class ShapefileFormat extends ColumnarFormat {
 
   /** Types from the DBF alone: header types, with each column's cells
     * decoded only until its first non-null one (see
-    * [[SchemaInference.HeaderTypes]]). The features are the .shp records,
-    * as in [[open]]: walked for their record boxes, never parsed. */
+    * [[SchemaInference.HeaderTypes]]), and no DBF record read once every
+    * column is settled. The features are the .shp records, as in [[open]]:
+    * their headers walked and their contents skipped, but for the record
+    * box a bbox tests. */
   override def openTypes(path: String, opts: GdalOptions): TypeIterator =
     if (isZip(path)) {
       val dir = unzipToTemp(path)
@@ -71,17 +73,20 @@ class ShapefileFormat extends ColumnarFormat {
       val dbfPath = path.replaceAll("\\.shp$", ".dbf")
       if (!new File(dbfPath).exists) return super.openTypes(path, opts)
 
-      val shp = Shp.rawRecords(path)
+      val shp = Shp.rawRecords(path, keep = if (opts.bbox.isDefined) Shp.BoxBytes else 0)
       val dbf = new Dbf.Reader(dbfPath, 0L, -1L)
       val types = new SchemaInference.HeaderTypes(
         dbf.fields.map(f => (f.name, Dbf.sparkType(f))))
       val presence = new Presence(dbf.fields.length)
       var unread = opts.offset // the window drops these before inference reads them
+      var row = 0L // the record's DBF row, read only while a column is unsettled
       val it = shp.flatMap { case (_, content) =>
-        val rec = if (dbf.hasNext) dbf.next() else null
+        val hasRow = row < dbf.records
+        val rec = if (hasRow && !types.settledAll) dbf.next() else null
+        row += 1
         if (opts.bbox.exists(q => !Shp.boxIntersects(content, q))) None
         else if (unread > 0) { unread -= 1; Some(IndexedSeq.empty) }
-        else if (rec == null) Some(IndexedSeq.empty)
+        else if (!hasRow) Some(IndexedSeq.empty)
         else Some(types.next { c =>
           presence.present(c) = false
           dbf.putCell(rec, c, presence, c)

@@ -23,9 +23,13 @@ object Shp {
     * A file shorter than its header's file length, a record cut anywhere
     * after its first byte, and a content length below 0 or past the end of
     * the file throw [[graft.sources.GraftError.MalformedInput]]: a
-    * truncated file fails, it never reads short. */
-  def rawRecords(path: String, startByte: Long = 100L,
-      maxRecords: Long = -1L): Iterator[(Int, ByteBuffer)] with AutoCloseable = {
+    * truncated file fails, it never reads short.
+    *
+    * `keep` caps the content bytes read of each record, the rest is
+    * skipped: [[BoxBytes]] is enough for [[boxIntersects]], 0 walks the
+    * record headers alone. */
+  def rawRecords(path: String, startByte: Long = 100L, maxRecords: Long = -1L,
+      keep: Int = Int.MaxValue): Iterator[(Int, ByteBuffer)] with AutoCloseable = {
     val fileSize = new java.io.File(path).length
     val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path)))
     def malformed(at: Long, detail: String, cause: Throwable = null): Nothing = {
@@ -59,8 +63,8 @@ object Shp {
           val length = headBuf.getInt(4).toLong * 2 // content length in 16-bit words
           if (length < 0 || pos + 8 + length > fileSize)
             malformed(pos, s"record $recNum has content length $length; the file ends at byte $fileSize")
-          val content = new Array[Byte](length.toInt)
-          try in.readFully(content)
+          val content = new Array[Byte](math.min(length, keep.toLong).toInt)
+          try { in.readFully(content); in.skipNBytes(length - content.length) }
           catch { case e: EOFException => malformed(pos, s"record $recNum ends early", e) }
           pos += 8 + length
           if (remaining > 0) remaining -= 1
@@ -84,6 +88,9 @@ object Shp {
       val g = parseShape(b)
       if (g == null) null else graft.geom.GeomCodec.toWkb(g)
   }
+
+  /** The content bytes [[boxIntersects]] reads: shape type and box. */
+  val BoxBytes = 36
 
   /** Cheap bbox test against the record's stored extent — absolute reads
     * only, so the buffer stays ready for [[parseShape]]. Points test x/y

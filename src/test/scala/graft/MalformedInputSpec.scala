@@ -7,15 +7,17 @@ import java.nio.file.Files
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ColumnarFeatureReader, GdalOptions, GraftError, SplitSpec}
+import graft.sources.{ColumnarFeatureReader, FeatureFormat, GdalOptions, GraftError, SplitSpec}
+import graft.sources.flatgeobuf.{FgbCodec, FgbFormat}
 import graft.sources.shapefile.ShapefileFormat
 
-/** A truncated or mis-framed `.shp` fails with `MalformedInput`; it never
-  * reads short. Each case cuts or patches a copy of the committed
-  * `stations.shp` (86 records) beside the intact `.shx`, `.dbf` and
-  * `.prj`, and reads it twice: a schemaless Spark load (the type pass,
+/** A truncated or mis-framed `.shp` or `.fgb` fails with `MalformedInput`;
+  * it never reads short. Each shapefile case cuts or patches a copy of the
+  * committed `stations.shp` (86 records) beside the intact `.shx`, `.dbf`
+  * and `.prj`, and reads it twice: a schemaless Spark load (the type pass,
   * then the scan) and the scan's partition reader alone, with the schema
-  * given. */
+  * given. Each FlatGeobuf case cuts or patches the stations written as one
+  * indexed `.fgb`, and reads it with and without a bbox. */
 class MalformedInputSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -46,9 +48,10 @@ class MalformedInputSpec extends AnyFunSuite {
   private def malformed(e: Throwable): Option[GraftError.MalformedInput] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst { case m: GraftError.MalformedInput => m }
 
-  private def scanRows(path: String): Long = {
-    val r = new ColumnarFeatureReader(SplitSpec(path, 0L, -1L), schema, GdalOptions.from(Map.empty),
-      new ShapefileFormat, Array.empty, None)
+  private def scanRows(path: String, format: FeatureFormat = new ShapefileFormat,
+      readSchema: StructType = schema, opts: Map[String, String] = Map.empty): Long = {
+    val r = new ColumnarFeatureReader(SplitSpec(path, 0L, -1L), readSchema, GdalOptions.from(opts),
+      format, Array.empty, None)
     try { var rows = 0L; while (r.next()) rows += r.get().numRows; rows } finally r.close()
   }
 
@@ -110,6 +113,87 @@ class MalformedInputSpec extends AnyFunSuite {
         case Left(m) => assert(m.offset === o.toLong, m.getMessage)
         case Right(rows) => fail(s"content length $words at $o read $rows rows")
       }
+    }
+  }
+
+  // ------------------------------------------------------------ FlatGeobuf
+
+  private lazy val fgb: Array[Byte] = {
+    val out = TempDirs.untilExit("graft_malformed_fgb_")
+    spark.read.format("shapefile").load(new File(fixtures, "stations.shp").getPath)
+      .coalesce(1).write.format("flatgeobuf").mode("overwrite").save(out.getPath)
+    Files.readAllBytes(new File(FeatureFormat.expand(Seq(out.getPath), new FgbFormat).head).toPath)
+  }
+  private lazy val fgbSchema: StructType = spark.read.format("flatgeobuf").load(copyFgb(fgb)).schema
+  private val dcBox = Map("bbox" -> "-77.05,38.88,-76.99,38.92") // 19 of the 86 stations
+
+  /** (offset of the size prefix, body length) of the header, then of each feature. */
+  private lazy val frames: Seq[(Int, Int)] = {
+    val b = ByteBuffer.wrap(fgb).order(ByteOrder.LITTLE_ENDIAN)
+    val headerLen = b.getInt(8)
+    val header = FgbCodec.readHeader(java.util.Arrays.copyOfRange(fgb, 12, 12 + headerLen))
+    val first = 12 + headerLen + FgbCodec.indexSize(header.featuresCount, header.indexNodeSize).toInt
+    (8, headerLen) +: Iterator.iterate(first)(o => o + 4 + b.getInt(o)).takeWhile(_ < fgb.length)
+      .map(o => (o, b.getInt(o))).toSeq
+  }
+
+  private def copyFgb(bytes: Array[Byte]): String = {
+    n += 1
+    val f = new File(dir, s"case$n.fgb")
+    Files.write(f.toPath, bytes)
+    f.getPath
+  }
+
+  /** Each read of a FlatGeobuf copy: with `bbox` and without, a schemaless
+    * load, a load with the schema given and the whole-file partition
+    * reader (the streamed envelope test under a bbox). */
+  private def fgbReads(path: String): Seq[(Long, Either[GraftError.MalformedInput, Long])] =
+    for {
+      (opts, whole) <- Seq((Map.empty[String, String], 86L), (dcBox, 19L))
+      read <- Seq[() => Long](
+        () => spark.read.format("flatgeobuf").options(opts).load(path).collect().length.toLong,
+        () => spark.read.format("flatgeobuf").schema(fgbSchema).options(opts).load(path).collect().length.toLong,
+        () => scanRows(path, new FgbFormat, fgbSchema, opts))
+    } yield whole -> (try Right(read())
+      catch { case e: Throwable => malformed(e).map(Left(_)).getOrElse(throw e) })
+
+  /** Every read gave all its rows or a `MalformedInput`, and the reads
+    * without a bbox failed. */
+  private def assertWholeOrMalformed(got: Seq[(Long, Either[GraftError.MalformedInput, Long])],
+      what: String): Unit = {
+    assert(got.take(3).forall(_._2.isLeft), s"$what: $got")
+    for ((whole, read) <- got) read match {
+      case Left(m) =>
+        assert(m.format === "flatgeobuf" && m.path.endsWith(".fgb"), s"$what: $m")
+        assert(m.offset >= 0 && m.offset <= fgb.length, s"$what: $m")
+      case Right(rows) => assert(rows === whole, s"$what read $rows rows")
+    }
+  }
+
+  test("the stations FGB walks as a header and 86 features and reads whole") {
+    assert(frames.length === 87)
+    assert(frames.last._1 + 4 + frames.last._2 === fgb.length)
+    assert(fgbReads(copyFgb(fgb)).map(_._2) === Seq(Right(86L), Right(86L), Right(86L),
+      Right(19L), Right(19L), Right(19L)))
+  }
+
+  test("fgb: a cut at every feature boundary and inside every feature fails, never reads short") {
+    val cuts = frames.flatMap { case (o, len) => Seq(o, o + 2, o + 4, o + 4 + len / 2) } ++
+      Seq(0, 5, frames(1)._1 - 40)
+    for (cut <- cuts.distinct.sorted) {
+      assertWholeOrMalformed(fgbReads(copyFgb(java.util.Arrays.copyOf(fgb, cut))),
+        s"a cut at byte $cut of ${fgb.length}")
+    }
+  }
+
+  test("fgb: a negative, overflowing or too long size prefix fails with MalformedInput") {
+    for ((o, _) <- Seq(frames.head, frames(1), frames(41), frames.last);
+         prefix <- Seq(-1, Int.MinValue, Int.MaxValue, fgb.length - o - 4 + 1)) {
+      val bytes = fgb.clone()
+      ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).putInt(o, prefix)
+      val got = fgbReads(copyFgb(bytes))
+      assertWholeOrMalformed(got, s"size prefix $prefix at $o")
+      for ((_, Left(m)) <- got) assert(m.offset === o.toLong, m.getMessage)
     }
   }
 }

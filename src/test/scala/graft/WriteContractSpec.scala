@@ -88,6 +88,25 @@ class WriteContractSpec extends AnyFunSuite {
       assert(debris(out).isEmpty, debris(out))
     }
 
+    test(s"$fmt: an overwrite that fails keeps the earlier files byte for byte") {
+      val out = TempDirs.untilExit(s"graft_wc_keep_$fmt")
+      def files(d: File): Seq[(String, Seq[Byte])] = d.listFiles().toSeq.sortBy(_.getName)
+        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+      stations.repartition(2).write.format(fmt).mode("overwrite").save(out.getPath)
+      val before = files(out)
+      assert(before.count(_._1.endsWith(ext)) === 2)
+      val e = intercept[Exception] {
+        stations.filter("false").write.format(fmt).mode("overwrite").save(out.getPath)
+      }
+      assert(chain(e).exists(_.isInstanceOf[GraftError.EmptyDataframe]), e)
+      assert(files(out) === before)
+      // an overwrite that succeeds writes the parts a write to a new directory does
+      val fresh = TempDirs.untilExit(s"graft_wc_fresh_$fmt")
+      stations.limit(6).coalesce(1).write.format(fmt).mode("overwrite").save(fresh.getPath)
+      stations.limit(6).coalesce(1).write.format(fmt).mode("overwrite").save(out.getPath)
+      assert(files(out) === files(fresh))
+    }
+
     test(s"$fmt: geometryFormat=geojson reads a GeoJSON string geometry column") {
       // GPX takes points only
       def load(opts: Map[String, String]): DataFrame =

@@ -8,6 +8,8 @@ Reads each dump as a stream (dumps run to hundreds of MB), keeps the Java
 thread samples of its last `--last` seconds (the timed loop of a run that
 ends right after it), and charges each sample to one layer:
 
+  codegen          any frame is Spark's CodeGenerator$.compile or Janino
+                   (compiling generated code, on the driver or in a task)
   planSplits       any frame is a format's planSplits (driver split planning)
   infer.<fmt>      any frame is FeatureSourceProvider.inferSchema (schemaless
                    load); <fmt> from the innermost reader frame, `shared` when
@@ -69,6 +71,11 @@ READERS = [
 ]
 SPECIFIC = {"gpkg", "spatialite"}
 COLUMNAR = ("graft.sources.ColumnSink", "graft.sources.ColumnarFeatureReader")
+CODEGEN = (
+    "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$.compile",
+    "org.codehaus.janino.",
+    "org.codehaus.commons.compiler.",
+)
 ROWCOPY = (
     "org.apache.spark.sql.execution.ColumnarToRowExec",
     "org.apache.spark.sql.catalyst.expressions.codegen.UnsafeWriter",
@@ -152,6 +159,8 @@ def fmt_from(stack, at):
 
 
 def layer(stack):
+    if any(fr.startswith(CODEGEN) for fr in stack):
+        return "codegen"
     if any(".planSplits" in fr for fr in stack):
         return "planSplits"
     if any(fr.startswith("graft.sources.FeatureSourceProvider.inferSchema") for fr in stack):
