@@ -37,26 +37,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Scale-proof shuffle sizing (r11, found by the sf3 rung): start
-      // wide and let AQE coalesce down to the 64 MB advisory size —
-      // small shuffles land exactly where the fixed 32 put them, but a
-      // data-proportional stage (q173's wedge join at sf3) gets smaller
-      // per-task hash state instead of 32 tasks OOMing an 8 GiB heap.
-      // This is how a real cluster sizes shuffles: high initial, AQE
-      // coalesces; a fixed small count is a scale cliff.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     // Local-iteration aid, mirroring Verify: SPARK_GRAFT_ONLY=q100,q98
     // restricts the bench to queries whose name starts with one of the
@@ -66,10 +48,14 @@ object Bench {
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
     val names = ordered.map(_._1)
 
+    // A query that throws in any run is reported under `failed` (name ->
+    // exception class) and left out of `total` and `queries`.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
+        failed.getOrElseUpdate(name, e.getClass.getName)
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
@@ -145,26 +131,29 @@ object Bench {
     val gcSecs = (gcMillis - gcBefore) / 1e3
     val loadAfter = loadAvg
 
-    val best = names.map(n => n -> sweepResults.map(_(n)).min).toMap
-    val spread = names.map(n => n -> (sweepResults.map(_(n)).max - sweepResults.map(_(n)).min)).toMap
+    val passed = names.filterNot(failed.contains)
+    val best = passed.map(n => n -> sweepResults.map(_(n)).min).toMap
+    val spread = passed.map(n => n -> (sweepResults.map(_(n)).max - sweepResults.map(_(n)).min)).toMap
     val total = best.values.sum
 
     // 4. tripwire vs the committed baseline (loaded above).
-    val regressions = names.filter { n =>
+    val regressions = passed.filter { n =>
       baseline.get(n).exists(b => b > 0 && best(n) > 2.5 * b)
     }
 
     def ms3(v: Double): String = // locale-proof %.3f (no comma separators)
       java.lang.String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def fmt(m: Map[String, Double], key: String => String, v: Double => String): String =
-      names.map(n => "\"" + key(n) + "\":" + v(m(n))).mkString("{", ",", "}")
+      passed.map(n => "\"" + key(n) + "\":" + v(m(n))).mkString("{", ",", "}")
     val full = (v: Double) => v.toString
     val telemetry =
       s""""telemetry":{"sweeps":$sweeps,"warmup":${warmup.size},"wall_sec":${ms3(wallSecs)},"gc_sec":${ms3(gcSecs)},""" +
       s""""load_before":${ms3(loadBefore)},"load_after":${ms3(loadAfter)},""" +
-      s""""cpus":"$cpus","avail_procs":${Runtime.getRuntime.availableProcessors},""" +
+      s""""cpus":"${GraftSession.cpus}","avail_procs":${Runtime.getRuntime.availableProcessors},""" +
       s""""heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)}}"""
     val regJson = regressions.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def failedJson(key: String => String): String =
+      failed.map { case (n, c) => "\"" + key(n) + "\":\"" + c + "\"" }.mkString("{", ",", "}")
 
     // Full-precision detail (all sweeps + spread + telemetry, full query
     // names) goes to a file: the driver's capture keeps only the LAST
@@ -176,6 +165,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",
          |$telemetry,
          |"regressions":$regJson,
+         |"failed":${failedJson(identity)},
          |"queries":${fmt(best, identity, full)},
          |$sweepJsons,
          |"spread":${fmt(spread, identity, full)}}""".stripMargin.replace("\n", "")
@@ -192,7 +182,7 @@ object Bench {
       if (n.startsWith("q") && i > 1 && n.substring(1, i).forall(_.isDigit)) n.substring(0, i)
       else n
     }
-    println(s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":${fmt(best, short, ms3)},"sf":"$sfDir","regressions":$regJson,$telemetry,"detail":"BENCH_DETAIL.json"}""")
+    println(s"""{"metric":"total","value":${ms3(total)},"unit":"sec","queries":${fmt(best, short, ms3)},"sf":"$sfDir","regressions":$regJson,"failed":${failedJson(short)},$telemetry,"detail":"BENCH_DETAIL.json"}""")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end demo of the GDAL-parity surface: the reference README's
   * examples (read, SQL filter, geometry projections, bytes round-trip)
   * re-expressed against this engine. Run:
@@ -10,13 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val fixtures = args.headOption.getOrElse(Fixtures.dir)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
 
     // Example 1: read a GeoJSON resource (reference README.md:17-31)
     val states = spark.read.format("geojson")
@@ -46,7 +39,7 @@ object Demo {
     println(s"[demo] stations zip bytes: ${GdalRead.fromBytes(spark, zipBytes, Some("stations.shp.zip")).count()} rows")
 
     // Newline-delimited GeoJSON round trip (splittable write path)
-    val seqOut = java.nio.file.Files.createTempDirectory("demo_seq_").toString
+    val seqOut = TempDirs.untilExit("demo_seq_").toString
     states.select("name", "geometry").repartition(3)
       .write.format("geojsonseq").mode("overwrite").save(seqOut)
     println(s"[demo] geojsonseq round trip: " +
@@ -58,7 +51,7 @@ object Demo {
 
     // Spatial filter pushdown: stations -> indexed FlatGeobuf -> bbox read
     // served from the packed Hilbert R-tree (byte-range splits)
-    val fgbOut = java.nio.file.Files.createTempDirectory("demo_fgb_").toString
+    val fgbOut = TempDirs.untilExit("demo_fgb_").toString
     stations.coalesce(1).write.format("flatgeobuf").mode("overwrite").save(fgbOut)
     val boxed = spark.read.format("flatgeobuf")
       .option("bbox", "-77.05,38.88,-76.99,38.92").load(fgbOut)
@@ -116,7 +109,7 @@ object Demo {
         println(s"[demo] kmeans(4) sizes: $sizes; semantic dedup keeps $kept of ${emb.count()}")
       }
 
-      val gpqDir = java.nio.file.Files.createTempDirectory("graft_demo_gpq").toString
+      val gpqDir = TempDirs.untilExit("graft_demo_gpq").toString
       graft.sources.geoparquet.GeoParquet.write(
         stations.select(col("name"), col("geometry")), gpqDir)
       val gpqMeta = graft.sources.geoparquet.GeoParquet.meta(spark, gpqDir)

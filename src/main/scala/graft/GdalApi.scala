@@ -1,13 +1,11 @@
 package graft
 
 import java.io.File
-import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{GdalOptions, GeometryColumn, GraftError, WritableFeatureSourceProvider}
-import graft.sources.geojson.GeoJsonRowSerializer
+import graft.sources.{GraftError, WritableFeatureSourceProvider}
 
 /** Byte-level entry points mirroring the reference's `df_from_bytes` /
   * `gdal_bytes_from_df` (S2/W2 — reference src/lib.rs:174-259, 586-611).
@@ -84,9 +82,10 @@ object GdalWrite {
     * (one indexed .fgb), "spatialite" (one SQLite database), "kml",
     * "gpx" (waypoints) or "geojsonseq" (newline-delimited). Reference
     * W2 accepts any GDAL driver (src/lib.rs:586-611); these are the
-    * drivers our source surface round-trips. Collect-based by design: a
-    * bytes result is inherently single-node; the scalable path is
-    * `df.write.format(fmt)`. */
+    * drivers our source surface round-trips. Every file format writes
+    * one part through the DSv2 writer and returns its bytes; "arrow"
+    * writes Arrow IPC in one pass. A bytes result is inherently
+    * single-node; the scalable path is `df.write.format(fmt)`. */
   def toBytes(df: DataFrame, options: Map[String, String] = Map.empty,
       format: String = "geojson"): Array[Byte] = {
     // W2 is inherently driver-side (ref parity src/lib.rs:586-611): the
@@ -97,8 +96,8 @@ object GdalWrite {
     // inherit child size without CBO, and stats-less sources default to
     // spark.sql.defaultSizeInBytes (Long.MaxValue), so those shapes are
     // exempt from the pre-check rather than spuriously rejected;
-    // (2) run-time, exact, enforced while serializing (char counter /
-    // output-file length) before any full byte buffer is materialized —
+    // (2) run-time, exact, enforced while writing (output-file length /
+    // Arrow stream length) before any full byte buffer is materialized —
     // so a runaway result still fails loudly instead of OOMing even
     // when the estimate lied low or was exempt.
     val cap = options.get("maxBytes").map(_.toLong).getOrElse(1L << 30)
@@ -116,7 +115,7 @@ object GdalWrite {
 
   private def toBytesCapped(df: DataFrame, options: Map[String, String],
       format: String, cap: Long): Array[Byte] = format.toLowerCase match {
-    case "geojson" => geoJsonBytes(df, options, cap)
+    case "geojson" => fileBytes(df, new sources.geojson.GeoJsonSourceProvider, options, cap)
     case "csvgeo" | "csv" => fileBytes(df, new sources.csvgeo.CsvGeoSourceProvider, options, cap)
     case "shapefile" | "shp" | "shp.zip" =>
       fileBytes(df, new sources.shapefile.ShapefileSourceProvider, options, cap)
@@ -129,64 +128,10 @@ object GdalWrite {
     case "gpx" => fileBytes(df, new sources.xml.GpxSourceProvider, options, cap)
     case "geojsonseq" | "geojsonl" | "ndjson" =>
       fileBytes(df, new sources.geojson.GeoJsonSeqSourceProvider, options, cap)
-    case "arrow" | "ipc" =>
-      if (df.isEmpty) throw new GraftError.EmptyDataframe
-      graft.sources.arrow.ArrowWrite.toBytes(df)
+    case "arrow" | "ipc" => graft.sources.arrow.ArrowWrite.toBytes(df, cap)
     case other => throw new IllegalArgumentException(
       s"unsupported bytes format '$other' " +
         "(geojson|csvgeo|shapefile|flatgeobuf|spatialite|gpkg|kml|gml|gpx|geojsonseq|arrow)")
-  }
-
-  private def geoJsonBytes(df: DataFrame, options: Map[String, String],
-      cap: Long): Array[Byte] = {
-    val opts = GdalOptions.from(options)
-    val schema = df.schema
-    val geometry = GeometryColumn(schema, opts)
-    val sb = new java.io.StringWriter
-    sb.write("""{"type":"FeatureCollection","features":[""")
-    var n = 0L
-    // exact runtime cap in ENCODED UTF-8 BYTES (not UTF-16 chars — a
-    // multibyte-heavy result can sit under a char cap yet be ~3× the cap
-    // in bytes): each row's appended region is scanned allocation-free
-    // and its exact UTF-8 length accumulated, so the check fires before
-    // the full byte buffer materializes in getBytes
-    var scanned = 0
-    var utf8 = 0L
-    def countNewUtf8(): Unit = {
-      val buf = sb.getBuffer
-      val len = buf.length
-      var i = scanned
-      while (i < len) {
-        val c = buf.charAt(i)
-        utf8 +=
-          (if (c < 0x80) 1
-          else if (c < 0x800) 2
-          else if (Character.isHighSurrogate(c) && i + 1 < len &&
-            Character.isLowSurrogate(buf.charAt(i + 1))) { i += 1; 4 }
-          else 3) // incl. unpaired surrogate (encodes as 1-byte '?': safe over-count)
-        i += 1
-      }
-      scanned = len
-    }
-    countNewUtf8()
-    // the scan reuses one row object per partition: copy each row before
-    // a partition is collected, or every feature repeats its last row
-    val it = df.queryExecution.toRdd.map(_.copy()).toLocalIterator
-    while (it.hasNext) {
-      if (n > 0) sb.write(",")
-      sb.write("\n")
-      GeoJsonRowSerializer.writeFeature(it.next(), schema, geometry, sb)
-      n += 1
-      countNewUtf8()
-      if (utf8 > cap)
-        throw new GraftError.DriverBytesTooLarge(BigInt(utf8), cap)
-    }
-    if (n == 0) throw new GraftError.EmptyDataframe // ref src/lib.rs:509-511
-    sb.write("\n]}\n")
-    countNewUtf8()
-    if (utf8 > cap)
-      throw new GraftError.DriverBytesTooLarge(BigInt(utf8), cap)
-    sb.toString.getBytes(StandardCharsets.UTF_8)
   }
 
   /** The EmptyDataframe a write raised at job commit, under Spark's

@@ -1,10 +1,5 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
 /** The user-facing operator API: every pipeline primitive the query corpus
   * exercises, parameterized for arbitrary inputs. All operators are pure
   * DataFrame→DataFrame transforms (lazy, Catalyst-optimized, no driver-side
@@ -16,19 +11,4 @@ object Graft
   with GraftClustering
   with GraftGraphLayout
   with GraftStatsEval
-  with GraftCausalTraining {
-
-  /** Plan-evidence hook (r14): operators that end in an eager
-    * `localCheckpoint` call [[planProbe]] on the DataFrame FEEDING each
-    * checkpoint, so `tools.PlanDump` can capture the real physical plan
-    * instead of the post-checkpoint `Scan ExistingRDD` stub (the r13
-    * plan dumps for q147/q173/q187/q310 were truncated this way). The
-    * hook is None in every query path — a pure debugging seam with zero
-    * cost when unset. */
-  @volatile private[graft] var planHook: Option[(String, DataFrame) => Unit] =
-    None
-  private[graft] def planProbe(label: String, df: DataFrame): DataFrame = {
-    planHook.foreach(h => h(label, df))
-    df
-  }
-}
+  with GraftCausalTraining

@@ -1300,7 +1300,7 @@ private[api] trait GraftGraphLayout { this: Graft.type =>
     // without the width loss. `degrees` optionally supplies the
     // matching (u, deg) table, skipping the doubled-adjacency degree
     // aggregate.
-    val e = Graft.planProbe("linkPrediction.e",
+    val e = (
       if (canonicalEdges)
         edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
           .repartition(col("a"), col("b"))
@@ -1368,8 +1368,7 @@ private[api] trait GraftGraphLayout { this: Graft.type =>
     // TakeOrderedAndProject over cand; the k-row cut also drops every
     // reference to the edge-sized checkpoint RDDs so the ContextCleaner
     // reclaims them at the next GC (review finding).
-    val top = Graft.planProbe("linkPrediction.top",
-        cand.orderBy(col("__aa_q").desc, col("x"), col("y")).limit(topK))
+    val top = cand.orderBy(col("__aa_q").desc, col("x"), col("y")).limit(topK)
       .localCheckpoint()
     broadcast(top)
       .join(deg.select(col("u").as("x"), col("deg").as("degx")), "x")

@@ -456,7 +456,6 @@ object Analytics {
     // quantized to integer units so every cross-row moment is an exact
     // decimal sum. Reported variance reduction = ρ²(x, y). ----
     "q225_cuped" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val ev = t(s, dir, "events").filter(col("value").isNotNull)
         .select(col("user_id"),
           expr("unix_micros(ts) div 86400000000").as("day"),
@@ -1141,7 +1140,6 @@ object Analytics {
     // is an exact integer until one division per curve. The oracle
     // replays the full 8-level rotate-flip walk as a CTE chain. ----
     "q219_hilbert_locality" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val pts = t(s, dir, "part").select(col("p_partkey"),
           (col("p_size").cast(LongType) % 256L).as("x"),
           (round(col("p_retailprice") * 100.0).cast(LongType) % 256L)
@@ -1391,7 +1389,6 @@ object Analytics {
     // outcome per user, ONE conditional aggregate for all eight cells,
     // exact integer counts, fixed double chains (sqrt only). ----
     "q353_placebo_evalue" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s) // md5_lower64
       val u = t(s, dir, "events").groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("conv"))
@@ -2679,7 +2676,6 @@ object Analytics {
     // aggregate; z is a fixed IEEE double chain over exact counts, so
     // both engines produce the identical bits. ----
     "q152_ab_ztest" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val units = t(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase", 1L)

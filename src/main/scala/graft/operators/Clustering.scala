@@ -190,7 +190,6 @@ object Clustering {
     // sums; per-feature terms pico-quantized before the final sum. ----
     "q287_mmd_drift" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val nFeat = 16
       val dDim = emb.agg(max(size(col("embedding"))).as("d")).head.getInt(0)
@@ -305,7 +304,6 @@ object Clustering {
     // ----
     "q321_hubness_audit" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val D = DecimalType(38, 0)
       val e = t(s, dir, "embeddings").select($"vec_id", $"embedding".as("v"))
         .withColumn("nrm", sqrt(expr("vec_dot(v, v)")))
@@ -457,7 +455,6 @@ object Clustering {
     // rounded in both engines) at nano; the exp term is
     // micro-quantized (the q253 grain). ----
     "q297_alignment_uniformity" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val dec = DecimalType(38, 0)
       val emb = t(s, dir, "embeddings")
       val bDf = emb.agg(expr("greatest(count(1) div 40, 1L)").as("nb"))

@@ -25,7 +25,6 @@ object Corpus {
     // the only window is partitioned by (epoch, shard), i.e. 16
     // independent rank sequences. ----
     "q208_epoch_shuffle" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("epoch"), col("shard")).orderBy(col("h"), col("doc_id"))
       t(s, dir, "documents").select(col("doc_id"))
@@ -55,7 +54,6 @@ object Corpus {
     // slice (what you lose outright if the source is dropped). Shares
     // nano-quantized (round(1e9/k)) before the order-free sum. ----
     "q290_shapley_coverage" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val st = t(s, dir, "documents")
         .select(col("source"),
           explode(expr("shingle_set(text, 3)")).as("tok"))
@@ -89,7 +87,6 @@ object Corpus {
     // work per round, covered-set state is a types-table, never driver
     // state. Exact integer gains; coverage is the one division. ----
     "q291_greedy_coverage" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val dt = t(s, dir, "documents")
         .select(col("doc_id"),
           explode(expr("shingle_set(text, 3)")).as("tok"))
@@ -221,7 +218,6 @@ object Corpus {
     // shuffle + broadcast eval set. ----
     "q203_corpus_yield" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       // materialize the fingerprinted projection ONCE: four consumer
       // subtrees (canonical rule, kept join probe, eval slice, raw
       // counts) would otherwise each re-scan the corpus and re-md5
@@ -300,7 +296,6 @@ object Corpus {
     // IEEE sqrt is correctly rounded in BOTH engines, unlike pow, so
     // the quantized weights replay bit-for-bit. ----
     "q251_weighted_negative_sampling" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val toks = t(s, dir, "documents").select(
           explode(split(lower(col("text")), "[^a-z0-9]+")).as("__t"))
         .filter(col("__t") =!= "")

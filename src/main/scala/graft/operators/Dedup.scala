@@ -328,7 +328,6 @@ object Dedup {
     // by construction). Components from the q54 machinery; singleton
     // docs are their own component; split = md5(component) bucket. ----
     "q138_leakage_safe_split" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val pairs = minhashPairs(docs, "text", "doc_id", 4, 5)
         .select(col("da"), col("db"))
@@ -578,7 +577,6 @@ object Dedup {
     // `md5_number_lower`, so the oracle reproduces the signature exactly
     // and this query is hash-checked, not rows-only.
     "q26_dedup_simhash" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       // SIGNATURE-LEVEL COLLAPSE (r8, sf1 ladder): identical texts have
       // identical simhashes, so the 4×16-bit pigeonhole chunk joins run
       // over DISTINCT signatures only; member pairs re-expand afterwards

@@ -384,7 +384,6 @@ object Events {
     // and the audit reports exact p50/p95/p99 lateness under that
     // arrival log plus the p99 as the suggested watermark delay. ----
     "q246_disorder_audit" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val e = t(s, dir, "events")
         .withColumn("arr", call_function("md5_lower64",
           col("event_id").cast(StringType)).bitwiseAND(lit(Long.MaxValue)))

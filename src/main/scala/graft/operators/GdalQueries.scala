@@ -35,7 +35,6 @@ object GdalQueries {
     if (!gmlFixtureDone) gmlFixtureLock.synchronized {
       if (!gmlFixtureDone) {
         graft.TempDirs.deleteAtExit(new java.io.File(path))
-        GraftFunctions.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .orderBy(col("name"), col("x"))
         s.read.format("shapefile").load(s"$fixtures/stations.shp")
@@ -63,7 +62,6 @@ object GdalQueries {
     // (tools/make_golden_us_states.py; every fixture ring is closed, so
     // raw coordinate counts equal st_npoints).
     "gdal_read_geojson" -> ((s, _) => {
-      GraftFunctions.register(s)
       s.read.format("geojson")
         .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
         .select(col("name"), col("iso_3166_2"),
@@ -78,7 +76,6 @@ object GdalQueries {
     // coordinates through the WKB → st_x/st_y round trip must hash-match
     // DuckDB re-reading the golden file.
     "gdal_read_shapefile" -> ((s, _) => {
-      GraftFunctions.register(s)
       s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .select(col("name"), col("marker-sym"),
           GraftFunctions.st_x(col("geometry")).as("x"),
@@ -95,7 +92,6 @@ object GdalQueries {
     // count, and area-weighted centroid; the fixture has duplicate-code
     // rows, so fid is the tie-break in both orderings.
     "gdal_read_spatialite" -> ((s, _) => {
-      GraftFunctions.register(s)
       s.read.format("spatialite")
         .option("layerName", "comuni")
         .option("fidColumnName", "fid")
@@ -121,7 +117,6 @@ object GdalQueries {
     }),
 
     "gdal_read_csvgeo" -> ((s, _) => {
-      GraftFunctions.register(s)
       s.read.format("csvgeo").load(s"$fixtures/lat_lon_countries.csv")
         .select(col("Country"),
           GraftFunctions.st_x(col("geometry")).as("lon"),
@@ -137,7 +132,6 @@ object GdalQueries {
     // meters rounded to mm so sub-ulp libm differences cannot surface.
     // Poles clamp (|φ| ≥ 90 is outside the projection's domain). ----
     "gdal_webmercator" -> ((s, _) => {
-      GraftFunctions.register(s)
       val R = 6378137.0
       val df = s.read.format("csvgeo").load(s"$fixtures/lat_lon_countries.csv")
         .select(col("Country"),
@@ -168,7 +162,6 @@ object GdalQueries {
     // exact test, so DuckDB filtering the golden coordinates with the
     // same inclusive bbox fully oracles the R-tree-pruned read.
     "gdal_read_fgb_bbox" -> ((s, _) => {
-      GraftFunctions.register(s)
       val out = graft.TempDirs.untilExit("graft_q_fgbbox_").toString
       s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .write.format("flatgeobuf").mode("overwrite").save(out)
@@ -209,7 +202,6 @@ object GdalQueries {
     // must reproduce the independently-parsed attributes and EXACT IEEE
     // coordinates, putting both halves of the format under the hash gate.
     "gdal_convert_shapefile_to_fgb" -> ((s, _) => {
-      GraftFunctions.register(s)
       val out = graft.TempDirs.untilExit("graft_q_fgb_").toString
       s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .write.format("flatgeobuf").mode("overwrite").save(out)
@@ -229,7 +221,6 @@ object GdalQueries {
     // coordinates survive text → double → text → double bit-exactly
     // (shortest-round-trip formatting on both sides).
     "gdal_read_gml" -> ((s, _) => {
-      GraftFunctions.register(s)
       s.read.format("gml").load(ensureGmlFixture(s))
         .select(col("gml_id"), col("name"),
           GraftFunctions.st_x(col("geometry")).as("x"),
@@ -245,7 +236,6 @@ object GdalQueries {
     // hash-compared, so the writer's pages/footers and the read path are
     // value-verified by a second engine, not just round-tripped. ----
     "gdal_geoparquet_roundtrip" -> ((s, _) => {
-      GraftFunctions.register(s)
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_q_geoparquet"
       val src = s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .select(col("name"), col("marker-sym"), col("geometry"))
@@ -262,7 +252,6 @@ object GdalQueries {
     // make envelope == exact, so DuckDB re-reading the same files with
     // the same covering predicate is a FULL oracle for the pruned read.
     "gdal_geoparquet_bbox" -> ((s, _) => {
-      GraftFunctions.register(s)
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_q_geoparquet_bbox"
       val src = s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .select(col("name"), col("geometry"))
@@ -311,7 +300,6 @@ object GdalQueries {
     }),
 
     "gdal_spatial_join_tiled" -> ((s, _) => {
-      GraftFunctions.register(s)
       val states = s.read.format("geojson")
         .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
         .select(col("name"), col("geometry"))
@@ -333,7 +321,6 @@ object GdalQueries {
     // GeoPackage SQLite container (fid column dropped — it numbers rows
     // in partition-write order, which the golden file cannot know).
     "gdal_convert_shapefile_to_gpkg" -> ((s, _) => {
-      GraftFunctions.register(s)
       val out = graft.TempDirs.untilExit("graft_q_gpkg_").toString
       s.read.format("shapefile").load(s"$fixtures/stations.shp")
         .write.format("gpkg").option("layerName", "stations")

@@ -80,7 +80,6 @@ object Pipeline {
     // windowable, unlike bin-packing heuristics.
     "q59_pack_sequences" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val toks = t(s, dir, "documents")
         .withColumn("ts", expr("text_stats(text)"))
         .select($"source", $"doc_id", $"ts.ws_tokens".cast(LongType).as("n_tokens"))
@@ -98,7 +97,6 @@ object Pipeline {
     // source to cut first. ----
     "q223_source_ablation" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val toks = t(s, dir, "documents")
         .select($"source",
           expr("text_stats(text).ws_tokens").cast(LongType).as("n_tokens"))
@@ -119,7 +117,6 @@ object Pipeline {
     // ONCE (localCheckpoint) for all three rankings. ----
     "q216_padding_waste" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val toks = t(s, dir, "documents")
         .select($"doc_id", md5($"doc_id".cast(StringType)).as("h"),
           expr("text_stats(text).ws_tokens").cast(LongType).as("n_tokens"))
@@ -152,7 +149,6 @@ object Pipeline {
     // broadcast eval set — nothing quadratic, nothing driver-resident.
     "q61_corpus_pipeline" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       // 1. quality gate on token count (one text_stats scan)
       val quality = docs
@@ -185,7 +181,6 @@ object Pipeline {
     // shuffle + semi-join for spans, one window on the cleaned-text hash.
     "q100_corpus_pipeline_v2" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
         .withColumn("norm",
           trim(regexp_replace(lower(expr("nfc_normalize(text)")), "\\s+", " ")))
@@ -214,7 +209,6 @@ object Pipeline {
     "q105_length_buckets" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val toks = t(s, dir, "documents")
         .withColumn("ts", expr("text_stats(text)"))
         .select($"source", $"doc_id", $"ts.ws_tokens".cast(LongType).as("n_tokens"))

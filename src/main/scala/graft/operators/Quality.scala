@@ -32,7 +32,6 @@ object Quality {
     // aggregate + a projection; the ln output is micro-quantized (the
     // q297 libm lesson: transcendental OUTPUTS need the grain). ----
     "q300_dp_release" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val eps = 0.5
       val counts = t(s, dir, "documents").groupBy(col("source"))
         .agg(count(lit(1)).as("true_count"))
@@ -150,7 +149,6 @@ object Quality {
     // (java.text.Normalizer); DuckDB replays with utf8proc's
     // nfc_normalize — agreement IS the gate. ----
     "q264_unicode_hygiene" -> ((s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val d = t(s, dir, "documents")
         .withColumn("t2", regexp_replace(
           regexp_replace(col("text"), "a", "á"), "e", "е"))

@@ -77,7 +77,6 @@ object Sampling {
     // repeat factors — the step before q208's epoch shuffle. ----
     "q213_mix_plan" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val toks = t(s, dir, "documents")
         .withColumn("ts", expr("text_stats(text)"))
         .select($"source", $"ts.ws_tokens".cast(LongType).as("n_tok"))

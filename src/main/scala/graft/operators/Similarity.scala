@@ -131,7 +131,6 @@ object Similarity {
     // picks 10 results that are relevant AND mutually distinct. ----
     "q234_mmr_rerank" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val e = t(s, dir, "embeddings").select($"vec_id", $"embedding".as("v"))
         .withColumn("nrm", sqrt(expr(norm2Expr)))
       val q = e.filter($"vec_id" === 0L)
@@ -193,7 +192,6 @@ object Similarity {
     // ---- q27: brute-force cosine top-10 per query vector ----
     "q27_knn_cosine" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val e = t(s, dir, "embeddings")
         .select($"vec_id", $"embedding".as("v"))
         .withColumn("nrm", sqrt(expr(norm2Expr)))
@@ -228,7 +226,6 @@ object Similarity {
     // ~10 of them, each fully parallel until the cumsum tail). ----
     "q331_knn_shapley" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val e = t(s, dir, "embeddings")
         .select($"vec_id", $"embedding".as("v"), $"label")
         .withColumn("nrm", sqrt(expr(norm2Expr)))
@@ -355,7 +352,6 @@ object Similarity {
     // aggregation anywhere. ----
     "q262_matryoshka_recall" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val dims = Seq(64, 32, 16, 8)
       // ONE brute-force pass scores all four prefix dots (a prefix dot
       // costs a slice, not a second corpus scan); the checkpointed

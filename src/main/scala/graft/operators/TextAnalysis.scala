@@ -263,7 +263,6 @@ object TextAnalysis {
     // (shingle_set) cannot change the cross-doc distinct. ----
     "q207_source_diversity" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val docs = t(s, dir, "documents")
       val totals = docs.select($"source",
           greatest(size(split(trim($"text"), " ")) - 1, lit(0))
@@ -1108,7 +1107,6 @@ object TextAnalysis {
     // semantics, not implementation.
     "q30_text_quality" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("ts", expr("text_stats(text)"))
         .select($"doc_id", $"ts.ws_tokens".as("n_tokens"), $"ts.n_punct",
@@ -1129,7 +1127,6 @@ object TextAnalysis {
     // divisions of exact longs. ----
     "q211_tokenizer_fertility" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("ts", expr("text_stats(text)"))
         .groupBy($"lang")
@@ -1149,7 +1146,6 @@ object TextAnalysis {
     // computed by the one-pass text_stats kernel) ----
     "q31_token_count" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("ts", expr("text_stats(text)"))
         .select($"doc_id", $"ts.ws_tokens".as("ws_tokens"),
@@ -1194,7 +1190,6 @@ object TextAnalysis {
     // the oracle matches bit-for-bit without rounding. ----
     "q53_text_repetition" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("n_ngrams",
           greatest(size(split(trim($"text"), "\\s+")) - 2, lit(0)).cast(LongType))
@@ -1293,7 +1288,6 @@ object TextAnalysis {
     // skeleton. ----
     "q333_winnowing" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       val wCnt = org.apache.spark.sql.expressions.Window
         .partitionBy($"doc_id")
       val wMin = org.apache.spark.sql.expressions.Window
@@ -1344,7 +1338,6 @@ object TextAnalysis {
     // lower/regex/trim plumbing). ----
     "q99_normalize_text" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("norm",
           trim(regexp_replace(lower(expr("nfc_normalize(text)")), "\\s+", " ")))
@@ -1363,7 +1356,6 @@ object TextAnalysis {
     // hash-checked real BPE. Pure projection, no shuffle. ----
     "q103_bpe_tokens" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.GraftFunctions.register(s)
       t(s, dir, "documents")
         .select($"doc_id", expr("bpe_count(text)").as("bpe_tokens"))
         .orderBy($"doc_id")

@@ -12,6 +12,8 @@ import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
+import graft.sources.GraftError
+
 /** Arrow IPC file writer — the write half of [[ArrowRead]], completing
   * the read/write matrix for the reference's interchange format (its
   * test builds a DataFrame FROM Arrow, ref src/test.rs:123-158; we also
@@ -28,16 +30,31 @@ object ArrowWrite {
   }
 
   /** In-memory Arrow IPC bytes (the `gdal_bytes_from_df` surface for this
-    * format). */
-  def toBytes(df: DataFrame): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
+    * format), in one pass over `df`: fails with `DriverBytesTooLarge` as
+    * soon as the output passes `cap` bytes, and with `EmptyDataframe`
+    * when `df` has no rows. */
+  def toBytes(df: DataFrame, cap: Long): Array[Byte] = {
+    val bos = new ByteArrayOutputStream() {
+      // once over the cap, later writes (the footer that closing the
+      // writer adds) are dropped so the cap error is the one raised
+      private var over = false
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = if (!over) {
+        if (count + len.toLong > cap) {
+          over = true
+          throw new GraftError.DriverBytesTooLarge(BigInt(count) + len, cap)
+        }
+        super.write(b, off, len)
+      }
+    }
     val ch = java.nio.channels.Channels.newChannel(bos)
-    try writeChannel(df, ch) finally ch.close()
+    val rows = try writeChannel(df, ch) finally ch.close()
+    if (rows == 0) throw new GraftError.EmptyDataframe
     bos.toByteArray
   }
 
+  /** Writes `df` as one Arrow IPC file; returns the number of rows. */
   private def writeChannel(df: DataFrame,
-      channel: java.nio.channels.WritableByteChannel): Unit = {
+      channel: java.nio.channels.WritableByteChannel): Long = {
     val sparkSchema = df.schema
     val arrowFields = sparkSchema.fields.map { f =>
       new Field(f.name, FieldType.nullable(sparkToArrow(f)), null)
@@ -51,6 +68,7 @@ object ArrowWrite {
       // reader's contract); 1<<16 rows per batch keeps buffers bounded
       val it = df.toLocalIterator()
       val batch = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+      var rows = 0L
       def flush(): Unit = if (batch.nonEmpty) {
         root.allocateNew()
         var r = 0
@@ -65,6 +83,7 @@ object ArrowWrite {
         }
         root.setRowCount(batch.length)
         writer.writeBatch()
+        rows += batch.length
         batch.clear()
       }
       while (it.hasNext) {
@@ -73,6 +92,7 @@ object ArrowWrite {
       }
       flush()
       writer.end()
+      rows
     } finally {
       writer.close()
       root.close()

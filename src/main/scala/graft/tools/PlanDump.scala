@@ -1,65 +1,81 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
-/** Plan-evidence capture (round 14, VERDICT #3): dumps
-  * `.explain("formatted")` for named queries INCLUDING the subplans that
-  * feed eager `localCheckpoint` calls — the r13 before/after pairs for
-  * q147/q173/q187/q310 were byte-identical `Scan ExistingRDD` stubs
-  * because the dump ran downstream of the checkpoint. Operators
-  * cooperate via [[graft.api.Graft.planProbe]]: building the query with
-  * the hook set hands every checkpoint's INPUT DataFrame to this tool
-  * before it is pinned.
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Plan-evidence capture: dumps `.explain("formatted")` for named queries
+  * together with the executed plan that fed each eager checkpoint the
+  * query ran while it was built. Without the checkpoint plans, a dump
+  * downstream of a checkpoint shows only a `Scan ExistingRDD` stub.
+  * Spark runs `Dataset.localCheckpoint`/`checkpoint` as a named action,
+  * so a [[QueryExecutionListener]] sees each of those plans with no code
+  * in the operators.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <query>...
   * writes <outDir>/<query>_<tag>.txt (final plan first, then each
-  * probed subplan). */
+  * checkpoint's plan in the order they ran). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val tag = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
-      val probes = Seq.newBuilder[(String, String)]
-      graft.api.Graft.planHook = Some { (label, df) =>
-        probes += label -> df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      }
       try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val finalPlan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val (finalPlan, plans) = checkpointPlans(spark) {
+          graft.SparkEntry.queries(name)(spark, sfDir)
+            .queryExecution.explainString(FormattedMode)
+        }
         val body = new StringBuilder
         body ++= s"== $name ($tag) — final plan ==\n"
         body ++= finalPlan
-        for ((label, plan) <- probes.result()) {
-          body ++= s"\n== $name ($tag) — pre-checkpoint subplan: $label ==\n"
+        for ((plan, i) <- plans.zipWithIndex) {
+          body ++= s"\n== $name ($tag) — checkpoint ${i + 1} input plan ==\n"
           body ++= plan
         }
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"),
           body.toString.getBytes("UTF-8"))
-        println(s"[plandump] wrote $outDir/${name}_$tag.txt " +
-          s"(${probes.result().size} probed subplans)")
+        println(s"[plandump] wrote $outDir/${name}_$tag.txt (${plans.size} checkpoint plans)")
       } catch { case e: Throwable =>
         println(s"[plandump] $name FAILED: ${e.getMessage}")
-      } finally graft.api.Graft.planHook = None
+      }
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
     spark.stop()
+  }
+
+  /** Runs `build` and returns its result with the formatted executed plan
+    * of every checkpoint it ran on `spark`, in the order they ran.
+    * Listener events arrive asynchronously and in order, so a marker
+    * action run after `build` is waited for (at most a minute): once it
+    * arrives, every checkpoint before it has been seen. */
+  def checkpointPlans[A](spark: SparkSession)(build: => A): (A, Seq[String]) = {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val marker = spark.range(1)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe eq marker.queryExecution) markerSeen.countDown()
+        else if (funcName == "localCheckpoint" || funcName == "checkpoint")
+          plans.add(qe.explainString(FormattedMode))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = build
+      marker.collect()
+      if (!markerSeen.await(1, TimeUnit.MINUTES))
+        throw new IllegalStateException("checkpoint plans did not arrive within a minute")
+      (result, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

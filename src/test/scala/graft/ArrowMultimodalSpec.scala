@@ -20,7 +20,7 @@ class ArrowMultimodalSpec extends AnyFunSuite {
   }
 
   test("arrow -> geojson write round trip (reference test_gdal_layer_from_df)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_arrow_").toString
+    val out = TempDirs.untilExit("graft_arrow_").toString
     val df = ArrowRead.fromFile(spark, s"$fixtures/cities.arrow")
     df.write.format("geojson").mode("overwrite").save(out)
     val back = spark.read.format("geojson").load(out)
@@ -32,7 +32,7 @@ class ArrowMultimodalSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     // fixture round trip: every value and the WKB geometry survive
     val df = ArrowRead.fromFile(spark, s"$fixtures/cities.arrow")
-    val path = java.nio.file.Files.createTempFile("graft_arrow_w_", ".arrow").toString
+    val path = TempDirs.untilExit("graft_arrow_w_").toPath.resolve("cities.arrow").toString
     ArrowWrite.toFile(df, path)
     val back = ArrowRead.fromFile(spark, path)
     assert(back.schema === df.schema)
@@ -47,8 +47,8 @@ class ArrowMultimodalSpec extends AnyFunSuite {
       (1L, Some("a"), Some(1.5), Some(true), Some(Array[Byte](1, 2))),
       (2L, None, None, None, None)
     ).toDF("id", "s", "d", "b", "bin")
-    val bytes = ArrowWrite.toBytes(mixed)
-    val tmp = java.nio.file.Files.createTempFile("graft_arrow_b_", ".arrow")
+    val bytes = ArrowWrite.toBytes(mixed, Long.MaxValue)
+    val tmp = TempDirs.untilExit("graft_arrow_b_").toPath.resolve("mixed.arrow")
     java.nio.file.Files.write(tmp, bytes)
     val back2 = ArrowRead.fromFile(spark, tmp.toString).orderBy("id").collect()
     assert(back2(0).getLong(0) === 1L && back2(0).getString(1) === "a" &&
@@ -62,6 +62,23 @@ class ArrowMultimodalSpec extends AnyFunSuite {
     val rt = GdalRead.fromBytes(spark,
       GdalWrite.toBytes(mixed, format = "arrow"), Some("x.arrow"))
     assert(rt.count() === 2)
+  }
+
+  test("toBytes(arrow) caps the written bytes at run time, also where the plan check is exempt") {
+    import org.apache.spark.sql.functions._
+    // an aggregate's size estimate is not credible, so only the run-time
+    // cap can stop it
+    val agg = spark.range(0, 2000, 1, 4).groupBy((col("id") % 50).as("k"))
+      .agg(count(lit(1)).as("n"))
+    val full = GdalWrite.toBytes(agg, format = "arrow")
+    val f = TempDirs.untilExit("graft_arrow_cap_").toPath.resolve("agg.arrow")
+    java.nio.file.Files.write(f, full)
+    assert(ArrowRead.fromFile(spark, f.toString).count() === 50)
+    intercept[graft.sources.GraftError.DriverBytesTooLarge] {
+      GdalWrite.toBytes(agg, Map("maxBytes" -> (full.length - 1).toString), format = "arrow")
+    }
+    assert(GdalWrite.toBytes(agg, Map("maxBytes" -> full.length.toString), format = "arrow")
+      .length === full.length)
   }
 
   test("multimodal stub decode: deterministic features over binary media") {

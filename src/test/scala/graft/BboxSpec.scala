@@ -57,7 +57,7 @@ class BboxSpec extends AnyFunSuite {
 
   private lazy val fgbDir: String = {
     graft.functions.GraftFunctions.register(spark)
-    val out = Files.createTempDirectory("graft_bbox_fgb_").toString
+    val out = TempDirs.untilExit("graft_bbox_fgb_").toString
     spark.read.format("shapefile").load(s"$fixtures/stations.shp")
       .coalesce(1).write.format("flatgeobuf").mode("overwrite").save(out)
     out
@@ -98,7 +98,7 @@ class BboxSpec extends AnyFunSuite {
   test("fgb bbox over a multi-file directory: per-file prune + per-file index") {
     // 3 part files, each with its own R-tree and envelope; the bbox read
     // must union per-file candidates and envelope-prune files that miss
-    val out = Files.createTempDirectory("graft_bbox_multi_").toString
+    val out = TempDirs.untilExit("graft_bbox_multi_").toString
     spark.read.format("shapefile").load(s"$fixtures/stations.shp")
       .repartition(3).write.format("flatgeobuf").mode("overwrite").save(out)
     assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".fgb")) === 3)
@@ -113,7 +113,7 @@ class BboxSpec extends AnyFunSuite {
 
   test("fgb without geometry keeps the index-less layout and still reads") {
     val s = spark; import s.implicits._
-    val out = Files.createTempDirectory("graft_bbox_nulls_").toString
+    val out = TempDirs.untilExit("graft_bbox_nulls_").toString
     Seq((1L, Some("POINT (0 0)")), (2L, None), (3L, Some("POINT (5 5)")))
       .toDF("id", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")

@@ -18,7 +18,7 @@ class BucketedJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val restoreBroadcast = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bktspec_").toString
+      val tmp = TempDirs.untilExit("graft_bktspec_").toString
       val orders = s.read.parquet(s"$sf0001/orders.parquet")
       val lineitem = s.read.parquet(s"$sf0001/lineitem.parquet")
       Graft.writeBucketed(orders, "bktspec_orders", "o_orderkey", 8,
@@ -43,7 +43,7 @@ class BucketedJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("bucketed groupBy on the bucket key also avoids the shuffle") {
     val s = spark
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bktspec2_").toString
+    val tmp = TempDirs.untilExit("graft_bktspec2_").toString
     val orders = s.read.parquet(s"$sf0001/orders.parquet")
     Graft.writeBucketed(orders, "graft_bktspec2_orders", "o_orderkey", 8,
       Some(s"$tmp/orders"))

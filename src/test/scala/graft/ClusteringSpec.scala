@@ -156,7 +156,7 @@ class ClusteringSpec extends AnyFunSuite {
 
   test("embeddingCovariance matches the hand-computed sample covariance") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cov").toString
+    val dir = TempDirs.untilExit("graft_cov").toString
     val rows = Seq(
       Array(1.0f, 2.0f, 0.5f),
       Array(3.0f, 4.0f, -0.5f),
@@ -226,7 +226,7 @@ class ClusteringSpec extends AnyFunSuite {
     val e = Seq((1L, Seq(1.0f, 0.5f, 0.5f)), (2L, Seq(-1.0f, 0.5f, 0.5f)),
       (3L, Seq(2.0f, 0.5f, 0.5f)), (4L, Seq(-2.0f, 0.5f, 0.5f)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_isotropy_")
+    val dir = TempDirs.untilExit("graft_isotropy_").toPath
       .toString
     e.withColumn("label", lit(0))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

@@ -99,7 +99,7 @@ class EventsAnalyticsSpec extends AnyFunSuite {
     // run the registered query shape against a temp dir is not needed -
     // replicate through the same SparkEntry body requires a dir; instead
     // write the frame to a temp parquet 'events' table
-    val dir = java.nio.file.Files.createTempDirectory("graft_botscreen_").toString
+    val dir = TempDirs.untilExit("graft_botscreen_").toString
     df.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = graft.SparkEntry.queries("q200_bot_screen")(s, dir)
       .collect().map(r => r.getLong(0) ->

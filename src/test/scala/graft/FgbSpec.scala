@@ -96,7 +96,7 @@ class FgbSpec extends AnyFunSuite {
     val df = wkts.toDF("id", "name", "score", "flag", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")
     graft.functions.GraftFunctions.register(spark)
-    val out = Files.createTempDirectory("graft_fgb_").toString
+    val out = TempDirs.untilExit("graft_fgb_").toString
     df.coalesce(1).write.format("flatgeobuf").mode("overwrite").save(out)
 
     val back = spark.read.format("flatgeobuf").load(out)
@@ -120,7 +120,7 @@ class FgbSpec extends AnyFunSuite {
     val df = Seq((1L, Some("a"), Some("POINT (0 0)")), (2L, None, None))
       .toDF("id", "name", "wkt")
       .withColumn("geometry", expr("st_geomfromwkt(wkt)")).drop("wkt")
-    val out = Files.createTempDirectory("graft_fgbn_").toString
+    val out = TempDirs.untilExit("graft_fgbn_").toString
     df.coalesce(1).write.format("flatgeobuf").mode("overwrite").save(out)
     val rows = spark.read.format("flatgeobuf").load(out)
       .orderBy("id").collect()

@@ -10,9 +10,7 @@ class GeoParquetSpec extends AnyFunSuite {
   import TestSpark._
 
   private def tmpDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_gpq_$tag").toFile
-    d.deleteOnExit()
-    d.toString
+    TempDirs.untilExit(s"graft_gpq_$tag").toString
   }
 
   test("round-trips geometry, props, and nulls across partitions") {

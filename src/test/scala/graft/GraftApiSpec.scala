@@ -333,7 +333,7 @@ class GraftApiSpec extends AnyFunSuite {
     val s = spark; import s.implicits._
     val edges = Seq(("a", "c", 1L), ("b", "c", 1L), ("c", "a", 1L))
       .toDF("src", "dst", "w")
-    val dir = java.nio.file.Files.createTempDirectory("prckpt").toString
+    val dir = TempDirs.untilExit("prckpt").toString
     val pr = Graft.pageRank(edges, "src", "dst", "w", iterations = 5,
       checkpointDir = Some(dir))
     // lineage is cut at a reliable checkpoint: the final plan scans RDD
@@ -1332,7 +1332,7 @@ class GraftApiSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     def withDir(f: String => Unit): Unit = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
+      val dir = TempDirs.untilExit("graft_ckpt_")
       try f(dir.getAbsolutePath)
       finally {
         // files must actually have landed: the durability contract is

@@ -26,8 +26,7 @@ import graft.sources.spatialite.{SpatiaLiteFormat, SqliteWriter}
 class InferenceEquivalenceSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val dir = Files.createTempDirectory("graft_infer_eq_").toFile
-  dir.deleteOnExit()
+  private val dir = TempDirs.untilExit("graft_infer_eq_")
 
   private def file(name: String, bytes: Array[Byte]): String = {
     val f = new File(dir, name)

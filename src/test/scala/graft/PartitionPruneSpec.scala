@@ -12,7 +12,7 @@ class PartitionPruneSpec extends AnyFunSuite {
 
   test("filter on the partition column prunes directories at plan time") {
     val s = spark; import s.implicits._
-    val outDir = java.nio.file.Files.createTempDirectory("graft_prune_")
+    val outDir = TempDirs.untilExit("graft_prune_").toPath
     val out = outDir.toString
     try {
     s.read.parquet(s"$sf0001/orders.parquet")

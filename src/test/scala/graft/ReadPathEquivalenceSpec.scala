@@ -27,12 +27,10 @@ import graft.sources.spatialite.{SpatiaLiteFormat, SpatiaLiteGeom, SqliteWriter}
 class ReadPathEquivalenceSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val dir = Files.createTempDirectory("graft_read_eq_").toFile
-  dir.deleteOnExit()
+  private val dir = TempDirs.untilExit("graft_read_eq_")
 
   private def file(name: String, bytes: Array[Byte]): String = {
     val f = new File(dir, name)
-    f.deleteOnExit()
     Files.write(f.toPath, bytes)
     f.getAbsolutePath
   }

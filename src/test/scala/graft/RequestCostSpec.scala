@@ -117,7 +117,7 @@ class RequestCostSpec extends AnyFunSuite {
       .filter(_.startsWith("graft_bytes_out_")).toSet
 
   for (fmt <- Seq("geojson", "csvgeo", "shapefile", "flatgeobuf", "spatialite", "gpkg",
-      "kml", "gml", "gpx", "geojsonseq")) {
+      "kml", "gml", "gpx", "geojsonseq", "arrow")) {
     test(s"toBytes($fmt) of an empty frame throws EmptyDataframe and leaves no temp dir") {
       val empty = spark.read.format("shapefile").load(s"$fixtures/stations.shp").filter(lit(false))
       val before = bytesDirs()

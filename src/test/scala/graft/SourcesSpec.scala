@@ -162,7 +162,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("geojson roundtrip: write then read back") {
-    val out = Files.createTempDirectory("graft_w_").toString
+    val out = TempDirs.untilExit("graft_w_").toString
     val src = spark.read.format("geojson")
       .load(s"$fixtures/global_large_lakes.feature_collection.implicit_4326.json")
     src.coalesce(2).write.format("geojson").mode("overwrite").save(out)
@@ -176,7 +176,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("geojson write: empty dataframe errors (EmptyDataframe parity)") {
-    val out = Files.createTempDirectory("graft_we_").toString
+    val out = TempDirs.untilExit("graft_we_").toString
     val src = spark.read.format("geojson")
       .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
       .filter(col("name") === "NoSuchState")
@@ -230,7 +230,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("geojson append mode adds a named layer to an existing dataset (gdal_layer_from_df parity)") {
-    val out = Files.createTempDirectory("graft_layers_").toString
+    val out = TempDirs.untilExit("graft_layers_").toString
     val states = spark.read.format("geojson")
       .load(s"$fixtures/us_states.feature_collection.implicit_4326.json")
       .select("name", "geometry")
@@ -270,6 +270,23 @@ class SourcesSpec extends AnyFunSuite {
     assert(pts.rdd.getNumPartitions === 3)
     val back = GdalRead.fromBytes(spark, GdalWrite.toBytes(pts, format = "geojson"), Some("pts.geojson"))
     assert(back.select("n").collect().map(_.getInt(0)).sorted.toSeq === (0 until 12))
+  }
+
+  test("geojson toBytes is the FeatureCollection the DSv2 writer writes, byte for byte") {
+    val df = spark.range(0, 12, 1, 3).selectExpr("id AS n",
+      "concat('café ü € \uD83C\uDF0D ', CAST(id AS STRING)) AS name",
+      "CAST(id AS DOUBLE) / 4 AS x", "IF(id % 4 = 0, NULL, 'São') AS tag",
+      "st_point(CAST(id AS DOUBLE), -1.5D) AS geometry")
+    assert(df.rdd.getNumPartitions === 3)
+    val bytes = GdalWrite.toBytes(df)
+    val out = TempDirs.untilExit("graft_gj_bytes_")
+    df.coalesce(1).write.format("geojson").mode("overwrite").save(out.getPath)
+    val parts = out.listFiles().filter(_.getName.endsWith(".geojson"))
+    assert(parts.length === 1)
+    assert(bytes.toSeq === Files.readAllBytes(parts.head.toPath).toSeq)
+    val text = new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    assert(text.startsWith("{\"type\":\"FeatureCollection\",\"features\":[\n{") && text.endsWith("}}\n]}\n"))
+    assert(text.split(",\n").length === 12 && text.contains("São") && text.contains("\uD83C\uDF0D"))
   }
 
   test("toBytes gates driver memory on the plan-stats estimate before any compute") {
@@ -334,7 +351,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("geojson: one multi-MB FeatureCollection file splits into byte-range partitions") {
     // Inflate to >8MB so the splitter engages: 2500 padded point features.
-    val out = Files.createTempFile("graft_big_", ".geojson")
+    val out = TempDirs.untilExit("graft_big_").toPath.resolve("big.geojson")
     val w = new java.io.BufferedWriter(new java.io.FileWriter(out.toFile))
     w.write("""{"type":"FeatureCollection","features":[""")
     val pad = "x" * 4000
@@ -396,7 +413,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("shapefile geometryType mismatch fails loudly instead of corrupting the file") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shpmis_").toString
+    val out = TempDirs.untilExit("graft_shpmis_").toString
     val e = intercept[Exception] {
       spark.read.format("shapefile").load(s"$fixtures/stations.shp") // points
         .coalesce(1).write.format("shapefile").mode("overwrite")
@@ -437,7 +454,7 @@ class SourcesSpec extends AnyFunSuite {
     val gj = """{"type":"FeatureCollection","features":[
       |{"type":"Feature","properties":{"n":"a"},"geometry":{"type":"Point","coordinates":[1,2]}},
       |{"type":"Feature","properties":{"n":"b"},"geometry":null}]}""".stripMargin
-    val p = java.nio.file.Files.createTempFile("graft_nullgeom_", ".json")
+    val p = TempDirs.untilExit("graft_nullgeom_").toPath.resolve("nullgeom.json")
     java.nio.file.Files.writeString(p, gj)
     val df = spark.read.format("geojson").load(p.toString)
     assert(df.filter(col("geometry").isNotNull).count() === 1)

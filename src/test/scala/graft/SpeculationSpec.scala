@@ -32,7 +32,7 @@ class SpeculationSpec extends AnyFunSuite {
       .split(java.io.File.pathSeparator)
       .find(_.replace('\\', '/').endsWith("scala-2.13/classes"))
       .getOrElse(fail("compiled classes dir not on the test classpath"))
-    val work = java.nio.file.Files.createTempDirectory("graft-spec-cluster").toString
+    val work = TempDirs.untilExit("graft-spec-cluster").toString
     val baseEnv = Seq("SPARK_LOG_DIR" -> s"$work/logs", "SPARK_PID_DIR" -> s"$work/pids")
     def sh(cmd: Seq[String], extraEnv: (String, String)*): Int =
       Process(cmd, None, (baseEnv ++ extraEnv): _*)

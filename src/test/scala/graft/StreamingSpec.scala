@@ -467,7 +467,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sc = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_cdc").toString
+    val dir = TempDirs.untilExit("graft_stream_cdc").toString
     Seq((1L, "one", 10.0), (2L, "two", 20.0)).toDF("k", "name", "bal")
       .write.mode("overwrite").parquet(s"$dir/snap-0")
     // versioned read-v/write-v+1 per micro-batch: the self-overwrite-safe
@@ -499,7 +499,7 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     implicit val sc = s.sqlContext
     graft.functions.GraftFunctions.register(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_gpq").toString
+    val dir = TempDirs.untilExit("graft_stream_gpq").toString
     val mem = MemoryStream[(Long, Double, Double)]
     mem.addData((1L, 10.0, 20.0), (2L, -77.0, 38.9))
     val pts = mem.toDF.toDF("id", "lon", "lat")
@@ -622,8 +622,8 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val sc = s.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_recov_out_").toString
+    val ckpt = TempDirs.untilExit("graft_ckpt_").toString
+    val outDir = TempDirs.untilExit("graft_recov_out_").toString
     val mem = MemoryStream[Ev]
     val agg = EventStreams.tumblingCounts(mem.toDF)
     // file sink, NOT memory: the memory sink is explicitly not
@@ -661,7 +661,7 @@ class StreamingSpec extends AnyFunSuite {
     // is event-time order and the 2h watermark can never drop a row).
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fstream_").toFile
+    val dir = TempDirs.untilExit("graft_fstream_")
     val ev = graft.operators.Util.t(s, sf0001, "events")
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
     val parts = Seq(

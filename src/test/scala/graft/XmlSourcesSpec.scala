@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class XmlSourcesSpec extends AnyFunSuite {
   import TestSpark._
 
+  private val dir = TempDirs.untilExit("graft_xml_").toPath
+
   private def write(suffix: String, content: String): String = {
-    val f = Files.createTempFile("graft_xml_", suffix)
+    val f = Files.createTempFile(dir, "doc_", suffix)
     Files.writeString(f, content)
     f.toString
   }
@@ -238,7 +240,7 @@ class XmlSourcesSpec extends AnyFunSuite {
       .toDF("ele", "name", "wkt")
       .withColumn("geometry", org.apache.spark.sql.functions.expr("st_geomfromwkt(wkt)"))
       .drop("wkt")
-    val out = java.nio.file.Files.createTempDirectory("graft_gpxw_").toString
+    val out = TempDirs.untilExit("graft_gpxw_").toString
     df.coalesce(1).write.format("gpx").mode("overwrite").save(out)
     val back = spark.read.format("gpx").load(out) // waypoints is the default layer
     assert(back.count() === 2)
@@ -253,7 +255,7 @@ class XmlSourcesSpec extends AnyFunSuite {
       .drop("wkt")
     val e = intercept[Exception] {
       bad.coalesce(1).write.format("gpx").mode("overwrite")
-        .save(java.nio.file.Files.createTempDirectory("graft_gpxbad_").toString)
+        .save(TempDirs.untilExit("graft_gpxbad_").toString)
     }
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
@@ -276,7 +278,7 @@ class XmlSourcesSpec extends AnyFunSuite {
     val df = wkts.toDF("id", "name", "wkt")
       .withColumn("geometry", org.apache.spark.sql.functions.expr("st_geomfromwkt(wkt)"))
       .drop("wkt")
-    val out = java.nio.file.Files.createTempDirectory("graft_kmlw_").toString
+    val out = TempDirs.untilExit("graft_kmlw_").toString
     df.coalesce(1).write.format("kml").mode("overwrite").save(out)
 
     val back = spark.read.format("kml").load(out)
@@ -310,7 +312,7 @@ class XmlSourcesSpec extends AnyFunSuite {
     val df = wkts.toDF("gml_id", "name", "wkt")
       .withColumn("geometry", org.apache.spark.sql.functions.expr("st_geomfromwkt(wkt)"))
       .drop("wkt")
-    val out = java.nio.file.Files.createTempDirectory("graft_gmlw_").toString
+    val out = TempDirs.untilExit("graft_gmlw_").toString
     df.coalesce(1).write.format("gml").option("layerName", "spot")
       .mode("overwrite").save(out)
     val back = spark.read.format("gml").load(out)
@@ -331,7 +333,7 @@ class XmlSourcesSpec extends AnyFunSuite {
     val df = Seq(("a", "POINT (1 2)")).toDF("bad name", "wkt")
       .withColumn("geometry", org.apache.spark.sql.functions.expr("st_geomfromwkt(wkt)"))
       .drop("wkt")
-    val out = java.nio.file.Files.createTempDirectory("graft_gmlnc_").toString
+    val out = TempDirs.untilExit("graft_gmlnc_").toString
     val e = intercept[Exception] {
       df.write.format("gml").mode("overwrite").save(out)
     }

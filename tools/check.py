@@ -13,6 +13,12 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fails = ok = 0
+# Verify writes an oracle only for the queries it ran, so an oracle with no
+# output dir is a query that failed.
+for name in sorted(oracle):
+    if not os.path.isdir(os.path.join(outdir, name)):
+        fails += 1
+        print(f"{name}: FAIL  NO-OUTPUT (the query failed in Verify)")
 for name in sorted(os.listdir(outdir)):
     d = os.path.join(outdir, name)
     if not os.path.isdir(d):
