@@ -22,8 +22,8 @@ import graft.sources.{FeatureTable, GdalOptions}
   * and shapefile scans prune whole files by header extent and records by
   * stored box before geometry parse. The original predicate STAYS in the
   * plan — scan-level pruning is envelope-level and strictly an
-  * optimization, the residual keeps exact semantics (same contract as
-  * FilterEval's non-exclusive pushdown).
+  * optimization; Spark's `Filter` above the scan keeps exact semantics,
+  * as it does for every other predicate (the scan pushes none).
   *
   * Runs as an injected optimizer rule (operator-optimization batch), i.e.
   * before V2ScanRelationPushDown turns the relation into a scan. */

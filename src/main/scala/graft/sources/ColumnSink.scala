@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
@@ -26,13 +25,11 @@ import graft.geom.GeomCodec
   *
   * [[commit]] then decides, in this order, whether the feature becomes a
   * row: the bbox re-check (for formats that do not enforce it),
-  * `maxFeatures`, `offset` and `limit`, the pushed filters (on the row's
-  * converted values; the fid and geometry columns read as the feature's
-  * fid and WKB) and the pushed limit. A dropped feature
-  * leaves nothing behind: the next one overwrites its row. Not
-  * thread-safe; one per split. */
+  * `maxFeatures`, `offset` and `limit`, and the pushed limit; filters
+  * are Spark's, above the scan. A dropped feature leaves nothing behind:
+  * the next one overwrites its row. Not thread-safe; one per split. */
 final class ColumnSink(schema: StructType, opts: GdalOptions, checkBbox: Boolean,
-    filters: Array[Filter], limit: Option[Int]) extends ValueSink with AutoCloseable {
+    limit: Option[Int]) extends ValueSink with AutoCloseable {
   import ColumnSink._
 
   private val fields = schema.fields
@@ -43,8 +40,6 @@ final class ColumnSink(schema: StructType, opts: GdalOptions, checkBbox: Boolean
   private val propCols = fields.indices.filter(i => !fidCols.contains(i) && !geomCols.contains(i)).toArray
   private val kinds = fields.map(f => kindOf(f.dataType))
   private val byProp = new java.util.HashMap[String, Integer]()
-  private val byField = new java.util.HashMap[String, Integer]()
-  for (i <- fields.indices if !byField.containsKey(fields(i).name)) byField.put(fields(i).name, i)
   for (i <- propCols) byProp.putIfAbsent(SchemaInference.propOf(fields(i).name, opts), i)
   private val toGeometry: Array[Byte] => Array[Byte] = opts.geometryFormat match {
     case "wkb" => wkb => wkb
@@ -189,8 +184,6 @@ final class ColumnSink(schema: StructType, opts: GdalOptions, checkBbox: Boolean
       if (written(i) != feature) putNull(i)
       k += 1
     }
-    if (filters.nonEmpty && !filters.forall(FilterEval.eval(_, filterValue))) return nextFeature()
-    // the geometry's text is made only for a row that is kept
     k = 0
     while (k < geomCols.length) {
       if (wkb == null) putNull(geomCols(k))
@@ -200,33 +193,6 @@ final class ColumnSink(schema: StructType, opts: GdalOptions, checkBbox: Boolean
     kept += 1
     row += 1
     nextFeature()
-  }
-
-  /** A filter's view of the row being committed: None for a name that is
-    * no column, or a column of a type no feature value converts to (the
-    * residual filter then decides). */
-  private def filterValue(name: String): Option[Any] =
-    if (opts.fidColumnName.contains(name)) Some(fidV)
-    else if (name == geomName) Some(wkb)
-    else {
-      val i = byField.get(name)
-      if (i == null || kinds(i) == KOther) None else Some(valueAt(i.intValue))
-    }
-
-  private def valueAt(i: Int): Any = {
-    val v = vectors(i)
-    if (v.isNullAt(row)) null
-    else kinds(i) match {
-      case KInt => v.getInt(row)
-      case KLong => v.getLong(row)
-      case KDouble => v.getDouble(row)
-      case KBoolean => v.getBoolean(row)
-      case KString => v.getUTF8String(row).toString
-      case KBinary => v.getBinary(row)
-      case KDate => DateTimeUtils.toJavaDate(v.getInt(row))
-      case KTimestamp => DateTimeUtils.toJavaTimestamp(v.getLong(row))
-      case _ => v.getArray(row)
-    }
   }
 }
 
@@ -292,11 +258,9 @@ final class ColumnarFeatureReader(
     schema: StructType,
     opts: GdalOptions,
     format: FeatureFormat,
-    filters: Array[Filter],
     limit: Option[Int]) extends PartitionReader[ColumnarBatch] {
 
-  private val sink = new ColumnSink(schema, opts,
-    opts.bbox.isDefined && !format.handlesBbox, filters, limit)
+  private val sink = new ColumnSink(schema, opts, opts.bbox.isDefined && !format.handlesBbox, limit)
   private val cursor = format.cursor(split, opts, sink)
   locally {
     val caps = Seq(4096L, opts.limit.getOrElse(Long.MaxValue), limit.fold(Long.MaxValue)(_.toLong),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -18,9 +18,11 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * reference's read loop against the fixed schema).
   *
   * Scale notes: partition granularity is per-file — directories of many
-  * files parallelize across executors. Column pruning and filter evaluation
-  * happen inside the reader (before a row is committed to its batch), and
-  * pushed limits stop the file stream early.
+  * files parallelize across executors. Column pruning happens inside the
+  * reader (only the read schema's fields are converted), and pushed limits
+  * stop the file stream early. Filters are never pushed: Spark evaluates
+  * every predicate in its own `Filter` above the scan, as the reference
+  * hands all filtering to OGR SQL.
   */
 abstract class FeatureSourceProvider extends TableProvider with DataSourceRegister {
   def format: FeatureFormat
@@ -108,11 +110,9 @@ class FeatureScanBuilder(
     files: Seq[String],
     opts: GdalOptions,
     format: FeatureFormat)
-  extends ScanBuilder with SupportsPushDownRequiredColumns
-  with SupportsPushDownFilters with SupportsPushDownLimit {
+  extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
 
   private var readSchema: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
   private var limit: Option[Int] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
@@ -121,15 +121,9 @@ class FeatureScanBuilder(
     readSchema = StructType(fullSchema.fields.filter(f => names.contains(f.name)))
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(FilterEval.supported)
-    filters // all stay residual: we prune early but never claim exclusivity
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
   override def pushLimit(l: Int): Boolean = { limit = Some(l); false /* keep plan limit too */ }
 
-  override def build(): Scan = new FeatureScan(readSchema, files, opts, format, pushed, limit)
+  override def build(): Scan = new FeatureScan(readSchema, files, opts, format, limit)
 }
 
 case class FeaturePartition(split: SplitSpec, index: Int) extends InputPartition
@@ -139,14 +133,12 @@ class FeatureScan(
     files: Seq[String],
     opts: GdalOptions,
     format: FeatureFormat,
-    filters: Array[Filter],
     limit: Option[Int]) extends Scan with Batch {
 
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft ${format.getClass.getSimpleName} files=${files.size} " +
-      s"PushedFilters=[${filters.mkString(", ")}] limit=$limit" +
+    s"graft ${format.getClass.getSimpleName} files=${files.size} limit=$limit" +
       opts.bbox.fold("")(b => s" bbox=[${b.minX},${b.minY},${b.maxX},${b.maxY}]")
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -161,7 +153,7 @@ class FeatureScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FeatureReaderFactory(schema, opts, format, filters, limit)
+    new FeatureReaderFactory(schema, opts, format, limit)
 
   override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
 }
@@ -172,7 +164,6 @@ class FeatureReaderFactory(
     schema: StructType,
     opts: GdalOptions,
     format: FeatureFormat,
-    filters: Array[Filter],
     limit: Option[Int]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -182,6 +173,6 @@ class FeatureReaderFactory(
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
     val split = partition.asInstanceOf[FeaturePartition].split
-    new ColumnarFeatureReader(split, schema, opts, format, filters, limit)
+    new ColumnarFeatureReader(split, schema, opts, format, limit)
   }
 }

@@ -8,13 +8,13 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Converts one [[RawFeature]] at a time onto the read schema, by the
   * scan's own rules: the feature goes into a one-row [[ColumnSink]]
-  * through [[ValueSink.putFeature]], with no window, bbox or filters, and
+  * through [[ValueSink.putFeature]], with no window, bbox or limit, and
   * comes back as a copy of that row. No scan uses it; iobench's
   * `sources.convert_ns_per_row` times it, and the tests compare it with
   * a per-cell conversion. */
 final class RowConverter(readSchema: StructType, opts: GdalOptions) {
   private val sink = new ColumnSink(readSchema,
-    opts.copy(offset = 0L, limit = None, maxFeatures = None, bbox = None), false, Array.empty, None)
+    opts.copy(offset = 0L, limit = None, maxFeatures = None, bbox = None), false, None)
   sink.allocate(1)
   private val types = readSchema.fields.map(_.dataType)
 

@@ -33,7 +33,12 @@ object Dbf {
 
   /** The raw records of a ranged read, one reused buffer per record, with
     * the header's fields and the cell decode. The file closes when the
-    * records run out, or on [[close]]. */
+    * records run out, or on [[close]].
+    *
+    * A header under 33 bytes, a record length other than 1 + the sum of
+    * the field lengths, and a file shorter than the header and records
+    * its header gives throw [[graft.sources.GraftError.MalformedInput]]
+    * on open: a truncated table fails, it never reads short. */
   final class Reader(path: String, startRec: Long, maxRecords: Long)
       extends Iterator[Array[Byte]] with AutoCloseable {
     private val charset = cpgCharset(path)
@@ -43,12 +48,22 @@ object Dbf {
       java.util.Arrays.equals(new String(probe, charset).getBytes(StandardCharsets.ISO_8859_1), probe)
     }
     private val utf8 = charset == StandardCharsets.UTF_8
+    private val fileSize = new java.io.File(path).length
     private val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path)))
+    private def malformed(at: Long, detail: String): Nothing = {
+      in.close()
+      throw new graft.sources.GraftError.MalformedInput("shapefile", path, at, detail)
+    }
     private val header = new Array[Byte](32)
+    if (fileSize < 32) malformed(fileSize, s"the file ends at byte $fileSize, inside its 32-byte header")
     in.readFully(header)
-    private val totalRecords = le32(header, 4)
+    private val totalRecords = Integer.toUnsignedLong(le32(header, 4))
     private val headerLen = le16(header, 8)
     private val recordLen = le16(header, 10)
+    if (headerLen < 33) malformed(8, s"the header length is $headerLen bytes, under 33")
+    if (fileSize < headerLen + totalRecords * recordLen)
+      malformed(fileSize, s"the file ends at byte $fileSize; its header gives $headerLen header bytes " +
+        s"and $totalRecords records of $recordLen bytes")
 
     private val nFields = (headerLen - 33) / 32
     val fields: Vector[Field] = Vector.tabulate(nFields) { _ =>
@@ -60,6 +75,8 @@ object Dbf {
     }
     private val types = fields.map(_.typ).toArray
     private val lengths = fields.map(_.length).toArray
+    if (recordLen != 1 + lengths.sum)
+      malformed(10, s"the record length is $recordLen bytes; its fields give ${1 + lengths.sum}")
     private val integral = fields.map(f => f.typ == 'N' && f.decimals == 0).toArray
     private val offsets = fields.scanLeft(1)(_ + _.length).toArray
     in.skipBytes(headerLen - 32 - nFields * 32) // terminator byte (+ any fill)

@@ -122,11 +122,19 @@ object Shp {
 
   /** Byte offset of each record in the .shp, read from the .shx index
     * (header 100 bytes, then one (offset-in-words, length-in-words)
-    * big-endian pair per record). */
+    * big-endian pair per record). An index under 100 bytes, or of another
+    * size than its header's file length, throws
+    * [[graft.sources.GraftError.MalformedInput]]: a cut index fails, it
+    * never plans a short read. */
   def shxOffsets(shxPath: String): Array[Long] = {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(shxPath))
-    val n = (bytes.length - 100) / 8
     val bb = ByteBuffer.wrap(bytes)
+    val declared = if (bytes.length < 100) -1L else bb.getInt(24).toLong * 2 // in 16-bit words
+    if (declared != bytes.length)
+      throw new graft.sources.GraftError.MalformedInput("shapefile", shxPath, bytes.length,
+        if (declared < 0) s"the index ends at byte ${bytes.length}, inside its 100-byte header"
+        else s"the index ends at byte ${bytes.length}; its header gives $declared bytes")
+    val n = (bytes.length - 100) / 8
     Array.tabulate(n) { i => bb.getInt(100 + i * 8).toLong * 2 }
   }
 

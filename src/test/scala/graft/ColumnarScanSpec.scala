@@ -8,13 +8,14 @@ import java.util.ServiceLoader
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.SupportsRead
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, ProjectExec}
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,11 +26,12 @@ import graft.sources._
 
 /** The scan of every format must give the rows the row path gives — the
   * test-scope [[FeaturePartitionReader]] over the format's `open`, with
-  * its own bbox test, window, pushed filters and pushed limit — split by
-  * split, under column pruning, pushed filters, bbox, offset, limit and
-  * maxFeatures, the fid and geometry options and their `_original`
-  * renames, and all three geometry formats; and Spark must plan those
-  * scans as `ColumnarToRow` with no `Project`. */
+  * its own bbox test, window and pushed limit — split by split, under
+  * column pruning, bbox, offset, limit and maxFeatures, the fid and
+  * geometry options and their `_original` renames, and all three
+  * geometry formats; a Spark filter over the scan must keep the rows it
+  * keeps over the row path's rows; and Spark must plan those scans as
+  * `ColumnarToRow` with no `Project`. */
 class ColumnarScanSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -54,17 +56,14 @@ class ColumnarScanSpec extends AnyFunSuite {
   /** Each path's rows, split by split, or the class of its error; and the
     * batches the columnar path returned. */
   private def scan(fmt: String, path: String, o: Map[String, String], columns: Option[Seq[String]] = None,
-      filters: Array[Filter] = Array.empty, limit: Option[Int] = None): (Any, Any, Int) = {
+      limit: Option[Int] = None): (Any, Any, Int) = {
     val options = new CaseInsensitiveStringMap((o + ("path" -> path)).asJava)
     val p = provider(fmt)
     // the schema of a load without maxFeatures, so the scan is what meets it
     val full = p.inferSchema(new CaseInsensitiveStringMap((o - "maxFeatures" + ("path" -> path)).asJava))
     val table = p.getTable(full, Array.empty, options.asCaseSensitiveMap).asInstanceOf[SupportsRead]
     val builder = table.newScanBuilder(options).asInstanceOf[FeatureScanBuilder]
-    // as Spark prunes: the columns a filter names are read too (filters stay residual)
-    columns.map(_ ++ filters.toSeq.flatMap(_.references.toSeq)).foreach(cs =>
-      builder.pruneColumns(StructType(full.fields.filter(f => cs.contains(f.name)))))
-    builder.pushFilters(filters)
+    columns.foreach(cs => builder.pruneColumns(StructType(full.fields.filter(f => cs.contains(f.name)))))
     limit.foreach(builder.pushLimit)
     val s = builder.build()
     val schema = s.readSchema()
@@ -73,7 +72,6 @@ class ColumnarScanSpec extends AnyFunSuite {
     val parts = batch.planInputPartitions().toSeq
     assert(parts.forall(factory.supportColumnarReads), s"$fmt is not columnar")
     val opts = GdalOptions(options)
-    val pushed = builder.pushedFilters()
     var batches = 0
     def drain[T](open: InputPartition => PartitionReader[T])(rows: T => Iterator[Seq[Any]]) =
       Try(parts.map { part =>
@@ -82,7 +80,7 @@ class ColumnarScanSpec extends AnyFunSuite {
         finally r.close()
       }) match { case Success(v) => Right(v); case Failure(e) => Left(e.getClass.getName) }
     val rowPath = drain(part => new FeaturePartitionReader(part.asInstanceOf[FeaturePartition].split,
-      schema, opts, p.format, pushed, limit))(r => Iterator(row(r, schema)))
+      schema, opts, p.format, limit))(r => Iterator(row(r, schema)))
     val colPath = drain(factory.createColumnarReader) { b =>
       batches += 1
       b.rowIterator().asScala.map(row(_, schema)).toList.iterator
@@ -91,8 +89,8 @@ class ColumnarScanSpec extends AnyFunSuite {
   }
 
   private def assertSame(fmt: String, path: String, o: Map[String, String], columns: Option[Seq[String]] = None,
-      filters: Array[Filter] = Array.empty, limit: Option[Int] = None): (Any, Int) = {
-    val (rows, cols, batches) = scan(fmt, path, o, columns, filters, limit)
+      limit: Option[Int] = None): (Any, Int) = {
+    val (rows, cols, batches) = scan(fmt, path, o, columns, limit)
     if (cols != rows) {
       val diff = (rows, cols) match {
         case (Right(r: Seq[Seq[Any]] @unchecked), Right(c: Seq[Seq[Any]] @unchecked)) =>
@@ -102,7 +100,7 @@ class ColumnarScanSpec extends AnyFunSuite {
             s"${a.lift(i).toString.take(400)} vs ${b.lift(i).toString.take(400)}"
         case _ => s"${rows.toString.take(400)} vs ${cols.toString.take(400)}"
       }
-      fail(s"$fmt $path $o columns=$columns filters=${filters.toSeq} limit=$limit: $diff")
+      fail(s"$fmt $path $o columns=$columns limit=$limit: $diff")
     }
     (rows, batches)
   }
@@ -237,26 +235,65 @@ class ColumnarScanSpec extends AnyFunSuite {
     }
   }
 
-  test("column pruning, pushed filters and the pushed limit give the same rows on both paths") {
-    for ((fmt, path, base) <- inputs; o0 <- Seq(Map.empty[String, String], Map("offset" -> "1", "limit" -> "40"),
-        Map("fidColumnName" -> "fid", "geometryFormat" -> "wkt"))) {
+  private val pushdownVariants = Seq(Map.empty[String, String], Map("offset" -> "1", "limit" -> "40"),
+    Map("fidColumnName" -> "fid", "geometryFormat" -> "wkt"))
+
+  test("column pruning and the pushed limit give the same rows on both paths") {
+    for ((fmt, path, base) <- inputs; o0 <- pushdownVariants) {
       val o = base ++ o0
-      val schema = spark.read.format(fmt).options(o).load(path).schema
-      val names = schema.fieldNames.toSeq
-      val str = schema.fields.find(f => f.dataType == StringType && f.name != "geometry").map(_.name)
-      val num = schema.fields.find(f => Seq(IntegerType, LongType, DoubleType).contains(f.dataType)).map(_.name)
-      val filters: Seq[Array[Filter]] = Seq(
-        Array(IsNotNull("geometry")),
-        str.toArray.map(s => Or(StringStartsWith(s, "A"), IsNull(s)): Filter),
-        str.toArray.map(s => Not(EqualTo(s, "x")): Filter) ++ num.map(n => GreaterThan(n, 0)),
-        num.toArray.map(n => LessThanOrEqual(n, 10): Filter),
-        Array(EqualTo("fid", 3L), IsNotNull("nope")))
+      val names = spark.read.format(fmt).options(o).load(path).schema.fieldNames.toSeq
       for (cs <- Seq(None, Some(names.take(names.length / 2)), Some(Seq.empty), Some(Seq("geometry")),
           Some(names.reverse.take(2))))
         assertSame(fmt, path, o, cs)
-      for (f <- filters) assertSame(fmt, path, o, None, f)
-      assertSame(fmt, path, o, Some(names.drop(1)), filters(2), Some(3))
-      assertSame(fmt, path, o, None, Array.empty, Some(1))
+      assertSame(fmt, path, o, Some(names.drop(1)), Some(3))
+      assertSame(fmt, path, o, None, Some(1))
+    }
+  }
+
+  /** The row path's rows of a whole load, as a frame Spark filters by itself. */
+  private def rowPathFrame(fmt: String, path: String, o: Map[String, String]): DataFrame = {
+    val options = new CaseInsensitiveStringMap((o + ("path" -> path)).asJava)
+    val p = provider(fmt)
+    val full = p.inferSchema(options)
+    val scan = p.getTable(full, Array.empty, options.asCaseSensitiveMap).asInstanceOf[SupportsRead]
+      .newScanBuilder(options).build()
+    val toRow = CatalystTypeConverters.createToScalaConverter(full)
+    val rows = scan.toBatch.planInputPartitions().toSeq.flatMap { part =>
+      val r = new FeaturePartitionReader(part.asInstanceOf[FeaturePartition].split, full, GdalOptions(options),
+        p.format, None)
+      try { val out = Seq.newBuilder[Row]; while (r.next()) out += toRow(r.get()).asInstanceOf[Row]; out.result() }
+      finally r.close()
+    }
+    spark.createDataFrame(rows.asJava, full)
+  }
+
+  private def normValue(v: Any): Any = v match {
+    case b: Array[Byte] => ("bytes", b.toSeq)
+    case d: Double => ("double", java.lang.Double.doubleToLongBits(d))
+    case s: scala.collection.Seq[_] => s.map(normValue)
+    case o => o
+  }
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map(normValue))
+
+  test("a Spark filter over the scan keeps the rows it keeps over the row path's rows") {
+    for ((fmt, path, base) <- inputs; o0 <- pushdownVariants) {
+      val o = base ++ o0
+      val df = spark.read.format(fmt).options(o).load(path)
+      val oracle = rowPathFrame(fmt, path, o)
+      val schema = df.schema
+      val str = schema.fields.find(f => f.dataType == StringType && f.name != "geometry").map(_.name)
+      val num = schema.fields.find(f => Seq(IntegerType, LongType, DoubleType).contains(f.dataType)).map(_.name)
+      val filters: Seq[Column] = Seq(
+        Seq(col("geometry").isNotNull),
+        str.toSeq.map(s => col(s).startsWith("A") || col(s).isNull),
+        str.toSeq.map(s => col(s) =!= "x") ++ num.map(n => col(n) > 0),
+        num.toSeq.map(n => col(n) <= 10),
+        schema.fieldNames.find(_ == "fid").toSeq.map(f => col(f) === 3L)
+      ).map(_.reduceOption(_ && _).getOrElse(lit(true)))
+      for (f <- filters) assert(rowsOf(df.filter(f)) === rowsOf(oracle.filter(f)), s"$fmt $path $o $f")
+      val cols = schema.fieldNames.toSeq.drop(1).map(col)
+      assert(rowsOf(df.filter(filters(2)).select(cols: _*).limit(3)) ===
+        rowsOf(oracle.filter(filters(2)).select(cols: _*).limit(3)), s"$fmt $path $o")
     }
   }
 

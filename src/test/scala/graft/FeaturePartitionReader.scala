@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,16 +12,15 @@ import graft.sources._
 /** The row path the scans took before every scan went through
   * `ColumnSink`, kept as the oracle `ColumnarScanSpec` checks the scan
   * against. It reads the format's `openSplit` feature by feature and
-  * applies the bbox test, the window, the pushed filters and the pushed
-  * limit itself; a prop is looked up by a plain first-match `find` and
-  * converted per cell by [[TreeReaders.toCatalyst]], so it shares no
-  * conversion or lookup code with the scan. */
+  * applies the bbox test, the window and the pushed limit itself; a prop
+  * is looked up by a plain first-match `find` and converted per cell by
+  * [[TreeReaders.toCatalyst]], so it shares no conversion or lookup code
+  * with the scan. */
 final class FeaturePartitionReader(
     split: SplitSpec,
     schema: StructType,
     opts: GdalOptions,
     format: FeatureFormat,
-    filters: Array[Filter],
     limit: Option[Int]) extends PartitionReader[InternalRow] {
 
   private val underlying = format.openSplit(split, opts)
@@ -37,23 +35,9 @@ final class FeaturePartitionReader(
     case Some(q) => underlying.filter(f => FeatureFormat.bboxHit(q, f.geomWkb))
   }
   private val windowed = FeatureFormat.window(boxed, opts)
-  private val schemaNames = schema.fieldNames.toSet
   private def propOf(field: String): String = SchemaInference.propOf(field, opts)
   private def first(f: RawFeature, prop: String): Option[Any] = f.props.find(_._1 == prop).map(_._2)
-  private val filtered =
-    if (filters.isEmpty) windowed
-    else windowed.filter { f =>
-      def get(name: String): Option[Any] =
-        if (opts.fidColumnName.contains(name)) Some(f.fid)
-        else if (name == opts.geometryColumnName) Some(f.geomWkb)
-        else first(f, propOf(name)) match {
-          case None if schemaNames.contains(name) => Some(null) // absent field = null
-          case None => None // unknown column: keep row, residual decides
-          case v => v
-        }
-      filters.forall(FilterEval.eval(_, get))
-    }
-  private val capped = limit.map(filtered.take).getOrElse(filtered)
+  private val capped = limit.map(windowed.take).getOrElse(windowed)
 
   private def geometry(wkb: Array[Byte]): Any =
     if (wkb == null) null

@@ -11,13 +11,14 @@ import graft.sources.{ColumnarFeatureReader, FeatureFormat, GdalOptions, GraftEr
 import graft.sources.flatgeobuf.{FgbCodec, FgbFormat}
 import graft.sources.shapefile.ShapefileFormat
 
-/** A truncated or mis-framed `.shp` or `.fgb` fails with `MalformedInput`;
-  * it never reads short. Each shapefile case cuts or patches a copy of the
-  * committed `stations.shp` (86 records) beside the intact `.shx`, `.dbf`
-  * and `.prj`, and reads it twice: a schemaless Spark load (the type pass,
-  * then the scan) and the scan's partition reader alone, with the schema
-  * given. Each FlatGeobuf case cuts or patches the stations written as one
-  * indexed `.fgb`, and reads it with and without a bbox. */
+/** A truncated or mis-framed `.shp`, `.shx`, `.dbf` or `.fgb` fails with
+  * `MalformedInput`; it never reads short. Each shapefile case cuts or
+  * patches a copy of one file of the committed `stations` shapefile (86
+  * records) beside intact copies of the others, and reads it twice: a
+  * schemaless Spark load (the type pass, then the scan) and the scan's
+  * partition reader alone, with the schema given. Each FlatGeobuf case
+  * cuts or patches the stations written as one indexed `.fgb`, and reads
+  * it with and without a bbox. */
 class MalformedInputSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -34,15 +35,15 @@ class MalformedInputSpec extends AnyFunSuite {
   }
 
   private var n = 0
-  private def copyWith(bytes: Array[Byte]): String = {
+  /** The path of a `stations.shp` whose `ext` file holds `bytes`. */
+  private def copyWith(bytes: Array[Byte], ext: String = ".shp"): String = {
     n += 1
     val d = new File(dir, s"case$n")
     d.mkdirs()
-    for (ext <- Seq(".shx", ".dbf", ".prj"))
-      Files.copy(new File(fixtures, s"stations$ext").toPath, new File(d, s"stations$ext").toPath)
-    val f = new File(d, "stations.shp")
-    Files.write(f.toPath, bytes)
-    f.getPath
+    for (e <- Seq(".shp", ".shx", ".dbf", ".prj") if e != ext)
+      Files.copy(new File(fixtures, s"stations$e").toPath, new File(d, s"stations$e").toPath)
+    Files.write(new File(d, s"stations$ext").toPath, bytes)
+    new File(d, "stations.shp").getPath
   }
 
   private def malformed(e: Throwable): Option[GraftError.MalformedInput] =
@@ -51,14 +52,15 @@ class MalformedInputSpec extends AnyFunSuite {
   private def scanRows(path: String, format: FeatureFormat = new ShapefileFormat,
       readSchema: StructType = schema, opts: Map[String, String] = Map.empty): Long = {
     val r = new ColumnarFeatureReader(SplitSpec(path, 0L, -1L), readSchema, GdalOptions.from(opts),
-      format, Array.empty, None)
+      format, None)
     try { var rows = 0L; while (r.next()) rows += r.get().numRows; rows } finally r.close()
   }
 
   /** The row counts of a schemaless load and of the scan alone, each Left
     * for a `MalformedInput`; any other error fails the test. */
-  private def reads(path: String): Seq[Either[GraftError.MalformedInput, Long]] =
-    Seq(() => spark.read.format("shapefile").load(path).collect().length.toLong, () => scanRows(path))
+  private def reads(path: String, opts: Map[String, String] = Map.empty): Seq[Either[GraftError.MalformedInput, Long]] =
+    Seq(() => spark.read.format("shapefile").options(opts).load(path).collect().length.toLong,
+      () => scanRows(path, opts = opts))
       .map { read =>
         try Right(read())
         catch { case e: Throwable => malformed(e).map(Left(_)).getOrElse(throw e) }
@@ -112,6 +114,49 @@ class MalformedInputSpec extends AnyFunSuite {
       for (got <- reads(copyWith(bytes))) got match {
         case Left(m) => assert(m.offset === o.toLong, m.getMessage)
         case Right(rows) => fail(s"content length $words at $o read $rows rows")
+      }
+    }
+  }
+
+  test("a .shx cut anywhere fails a split read with MalformedInput, never reads short") {
+    val shx = Files.readAllBytes(new File(fixtures, "stations.shx").toPath)
+    assert(shx.length === 100 + 8 * 86)
+    for (cut <- (Seq(0, 27, 50, 99) ++ (100 to shx.length by 8)).distinct) {
+      val got = reads(copyWith(java.util.Arrays.copyOf(shx, cut), ".shx"), Map("splitRecords" -> "10"))
+      got.foreach {
+        case Left(m) => assert(m.format === "shapefile" && m.path.endsWith("stations.shx"), s"cut at $cut: $m")
+        case Right(rows) => assert(rows === 86L, s"a cut of the .shx at byte $cut of ${shx.length}")
+      }
+      if (cut < shx.length) assert(got.head.isLeft, s"a cut of the .shx at byte $cut read ${got.head}")
+    }
+  }
+
+  test("a .dbf cut at every record boundary and inside a record fails with MalformedInput") {
+    val dbf = Files.readAllBytes(new File(fixtures, "stations.dbf").toPath)
+    val b = ByteBuffer.wrap(dbf).order(ByteOrder.LITTLE_ENDIAN)
+    val (headerLen, recordLen) = (b.getShort(8).toInt, b.getShort(10).toInt)
+    assert(b.getInt(4) === 86 && dbf.length === headerLen + 86 * recordLen + 1) // + the 0x1A end marker
+    val cuts = Seq(0, 5, 31, 32, 40, headerLen - 1) ++
+      (0 to 86).flatMap(r => Seq(headerLen + r * recordLen, headerLen + r * recordLen + recordLen / 2))
+    for (cut <- cuts.distinct.filter(_ <= dbf.length)) {
+      val got = reads(copyWith(java.util.Arrays.copyOf(dbf, cut), ".dbf"))
+      got.foreach {
+        case Left(m) => assert(m.format === "shapefile" && m.path.endsWith("stations.dbf"), s"cut at $cut: $m")
+        case Right(rows) => assert(rows === 86L && cut >= headerLen + 86 * recordLen,
+          s"a cut of the .dbf at byte $cut of ${dbf.length} read $rows rows")
+      }
+    }
+  }
+
+  test("a .dbf whose record length is not its fields' fails with MalformedInput") {
+    val dbf = Files.readAllBytes(new File(fixtures, "stations.dbf").toPath)
+    for (delta <- Seq(-1, -16)) { // the file stays long enough for the records the header gives
+      val bytes = dbf.clone()
+      val b = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      b.putShort(10, (b.getShort(10) + delta).toShort)
+      for (got <- reads(copyWith(bytes, ".dbf"))) got match {
+        case Left(m) => assert(m.offset === 10L, m.getMessage)
+        case Right(rows) => fail(s"a record length $delta off read $rows rows")
       }
     }
   }
